@@ -113,11 +113,25 @@ object Dedup {
   def stageMinhashSignatures(df: DataFrame, idCol: Column, textCol: Column,
                              stagePath: String, numHashes: Int = 8,
                              shingleN: Int = 3): Unit =
-    df.select(idCol.as("id"),
+    graft.tables.Staging.writePartitioned(
+      sigRows(df, idCol, textCol, numHashes, shingleN), "sb", stagePath)
+
+  /** The (id, sig, sb) rows of the signature stage; ids are stored as
+    * LONG (numeric throughout the engine), so the stage reads with the
+    * declared [[SigSchema]] instead of inferring it on every read.
+    */
+  private def sigRows(df: DataFrame, idCol: Column, textCol: Column,
+                      numHashes: Int, shingleN: Int): DataFrame =
+    df.select(idCol.cast("long").as("id"),
         minhashSignature(textCol, numHashes, shingleN).as("sig"))
       .withColumn("sb", sbCol(col("id")))
-      .repartition(col("sb")) // one file per partition — small-files guard
-      .write.mode("overwrite").partitionBy("sb").parquet(stagePath)
+
+  private val SigSchema = {
+    import org.apache.spark.sql.types._
+    StructType(Seq(StructField("id", LongType),
+      StructField("sig", ArrayType(StringType)),
+      StructField("sb", IntegerType)))
+  }
 
   /** Absorb a gated batch into the staged signature table: append the
     * accepted rows' signatures (the same hashing as
@@ -129,11 +143,9 @@ object Dedup {
   def absorbSignatures(df: DataFrame, idCol: Column, textCol: Column,
                        stagePath: String, numHashes: Int = 8,
                        shingleN: Int = 3): Unit =
-    df.select(idCol.as("id"),
-        minhashSignature(textCol, numHashes, shingleN).as("sig"))
-      .withColumn("sb", sbCol(col("id")))
-      .repartition(col("sb"))
-      .write.mode("append").partitionBy("sb").parquet(stagePath)
+    graft.tables.Staging.writePartitioned(
+      sigRows(df, idCol, textCol, numHashes, shingleN), "sb", stagePath,
+      "append")
 
   /** DELETE documents from the staged signature table — the missing
     * twin of [[absorbSignatures]]: without it, GDPR-deleted or
@@ -174,7 +186,8 @@ object Dedup {
   /** The signature-stage read every consumer goes through: refuses a
     * stage with an unfinished maintenance commit (writer crashed
     * mid-apply or still running) instead of silently serving a
-    * half-deleted stage.
+    * half-deleted stage. Declared schema: no inference job per gate
+    * micro-batch.
     */
   private def readSigStage(spark: org.apache.spark.sql.SparkSession,
                            stagePath: String): DataFrame = {
@@ -182,7 +195,7 @@ object Dedup {
       throw new IllegalStateException(
         s"$stagePath has an unfinished maintenance commit (_COMMIT intent " +
           "present) — heal with Dedup.recoverSignatures()")
-    spark.read.parquet(stagePath)
+    graft.tables.Staging.readLayout(spark, stagePath, Some(SigSchema))
   }
 
   /** Heal the signature stage after a crashed writer — stale lock

@@ -204,12 +204,11 @@ object GraphAnnIndex {
 
   private def writeIds(ids: DataFrame, path: String,
                        overwrite: Boolean): Unit = {
-    ids.select(col("id").cast("long").as("id"),
-        col("bucket").cast("int").as("bucket"))
-      .withColumn("ib", ibCol(col("id")))
-      .repartition(col("ib")) // small-files guard, cf. the nodes write
-      .write.mode(if (overwrite) "overwrite" else "append")
-      .partitionBy("ib").parquet(s"$path/ids")
+    graft.tables.Staging.writePartitioned(
+      ids.select(col("id").cast("long").as("id"),
+          col("bucket").cast("int").as("bucket"))
+        .withColumn("ib", ibCol(col("id"))),
+      "ib", s"$path/ids", if (overwrite) "overwrite" else "append")
     if (!java.nio.file.Files.exists(idsMarker(path)))
       java.nio.file.Files.createFile(idsMarker(path))
   }
@@ -223,12 +222,10 @@ object GraphAnnIndex {
             dim: Int = 64, probeBits: Int = 2): Unit = {
     val spark = corpus.sparkSession
     deleteRec(path)
-    corpus.select(idCol.as("id"), vecCol.as("vec"),
-        Ann.bucketOf(vecCol, numPlanes, dim).as("bucket"))
-      .repartition(col("bucket")) // one task per bucket -> one file per
-      // dir, not one per (task, bucket) pair — the small-files guard
-      // every partitioned index write here applies
-      .write.mode("overwrite").partitionBy("bucket").parquet(s"$path/nodes")
+    graft.tables.Staging.writePartitioned(
+      corpus.select(idCol.as("id"), vecCol.as("vec"),
+        Ann.bucketOf(vecCol, numPlanes, dim).as("bucket")),
+      "bucket", s"$path/nodes")
     val nodes = spark.read.parquet(s"$path/nodes")
     // the three derived relations (sidecar + both adjacency layers) each
     // read only the STAGED nodes and write disjoint directories — run
@@ -246,16 +243,14 @@ object GraphAnnIndex {
         // admission sidecar from the STAGED nodes (no second corpus pass)
         Future(writeIds(nodes.select(col("id"), col("bucket")), path,
           overwrite = true)),
-        Future(Ann.neighborEdges(nodes.filter(col("id") % sampleMod === 0),
-            col("id"), col("vec"), edgesPerBucket, numPlanes, dim, probeBits)
-          .repartition(col("d_bucket"))
-          .write.mode("overwrite").partitionBy("d_bucket")
-          .parquet(s"$path/coarse_adj")),
-        Future(Ann.neighborEdges(nodes, col("id"), col("vec"), edgesPerBucket,
-            numPlanes, dim, probeBits)
-          .repartition(col("d_bucket"))
-          .write.mode("overwrite").partitionBy("d_bucket")
-          .parquet(s"$path/base_adj")))
+        Future(graft.tables.Staging.writePartitioned(
+          Ann.neighborEdges(nodes.filter(col("id") % sampleMod === 0),
+            col("id"), col("vec"), edgesPerBucket, numPlanes, dim, probeBits),
+          "d_bucket", s"$path/coarse_adj")),
+        Future(graft.tables.Staging.writePartitioned(
+          Ann.neighborEdges(nodes, col("id"), col("vec"), edgesPerBucket,
+            numPlanes, dim, probeBits),
+          "d_bucket", s"$path/base_adj")))
       val settled = writes.map(f =>
         scala.util.Try(Await.result(f, Duration.Inf)))
       settled.collectFirst { case scala.util.Failure(e) => throw e }

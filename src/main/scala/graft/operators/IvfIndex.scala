@@ -108,8 +108,7 @@ object IvfIndex {
         .select(col(m.idName).cast("long").as("id"), col("cell"))
         .withColumn("ib", ibCol(col("id")))
       graft.tables.Staging.deleteRec(s"$path/ids")
-      rebuilt.repartition(col("ib"))
-        .write.mode("overwrite").partitionBy("ib").parquet(s"$path/ids")
+      graft.tables.Staging.writePartitioned(rebuilt, "ib", s"$path/ids")
       java.nio.file.Files.createFile(idsMarker(path))
     }
     spark.read.schema(IdsSchema).parquet(s"$path/ids")
@@ -121,15 +120,10 @@ object IvfIndex {
     * filter exists — defeating the pruning this layout exists for.
     * Pre-schema indexes fall back to inference.
     */
-  private def cellsRel(spark: SparkSession, path: String): DataFrame = {
-    val sf = java.nio.file.Paths.get(path, "_IVF_SCHEMA")
-    if (java.nio.file.Files.exists(sf))
-      spark.read.schema(org.apache.spark.sql.types.DataType
-          .fromJson(java.nio.file.Files.readString(sf))
-          .asInstanceOf[org.apache.spark.sql.types.StructType])
-        .parquet(s"$path/cells")
-    else spark.read.parquet(s"$path/cells")
-  }
+  private def cellsRel(spark: SparkSession, path: String): DataFrame =
+    graft.tables.Staging.readLayout(spark, s"$path/cells",
+      graft.tables.Staging.recordedSchema(
+        java.nio.file.Paths.get(path, "_IVF_SCHEMA")))
 
   /** `cell` and `ib` are the index's own partition/sidecar keys: an input
     * that already carries either would be silently overwritten (and `ib`
@@ -152,18 +146,15 @@ object IvfIndex {
     requireNoReservedCols(df)
     graft.tables.Staging.deleteRec(path)
     val withCell = df.withColumn("cell", Ann.cellOf(col(vecName), nlist, dim))
-    withCell
-      .repartition(col("cell")) // one file per partition — small-files guard
-      .write.mode("overwrite").partitionBy("cell").parquet(s"$path/cells")
+    graft.tables.Staging.writePartitioned(withCell, "cell", s"$path/cells")
     // record the cells schema so every reader declares it instead of
     // inferring (inference opens arbitrary footers pre-pruning — cellsRel)
     java.nio.file.Files.writeString(
       java.nio.file.Paths.get(path, "_IVF_SCHEMA"), withCell.schema.json)
-    val staged = cellsRel(spark, path)
-    staged.select(col(idName).cast("long").as("id"), col("cell"))
-      .withColumn("ib", ibCol(col("id")))
-      .repartition(col("ib"))
-      .write.mode("overwrite").partitionBy("ib").parquet(s"$path/ids")
+    graft.tables.Staging.writePartitioned(cellsRel(spark, path)
+        .select(col(idName).cast("long").as("id"), col("cell"))
+        .withColumn("ib", ibCol(col("id"))),
+      "ib", s"$path/ids")
     java.nio.file.Files.createFile(idsMarker(path))
     writeMeta(path, Meta(nlist, dim, idName, vecName))
   }

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 import graft.functions.TextFunctions
+import graft.tables.Staging.{byPartition, writePartitioned}
 
 /** Lexical and hybrid retrieval over a document corpus — the classic
   * complement to the vector path (Rag.retrieve / Knn): BM25 term scoring
@@ -212,12 +213,10 @@ object Retrieval {
     */
   private def readRel(spark: org.apache.spark.sql.SparkSession, path: String,
                       rel: String, marker: java.nio.file.Path): DataFrame =
-    markerProps(marker).get(s"schema.$rel") match {
-      case Some(j) => spark.read.schema(org.apache.spark.sql.types.DataType
-          .fromJson(j).asInstanceOf[org.apache.spark.sql.types.StructType])
-        .parquet(s"$path/$rel")
-      case None => spark.read.parquet(s"$path/$rel")
-    }
+    graft.tables.Staging.readLayout(spark, s"$path/$rel",
+      markerProps(marker).get(s"schema.$rel").map(j =>
+        org.apache.spark.sql.types.DataType.fromJson(j)
+          .asInstanceOf[org.apache.spark.sql.types.StructType]))
 
   /** True iff a completed postings stage exists at `path` (marker is
     * written last).
@@ -253,12 +252,12 @@ object Retrieval {
     * The window keys on (pb, tok), which is semantically identical to
     * (tok) — pb is a pure function of tok — but declares pb so that a
     * pb-partitioned input satisfies the window's clustering requirement:
-    * `repartition(pb) → rank → partitionBy(pb) write` plans ONE exchange
+    * `byPartition(pb) → rank → writePartitioned(pb)` plans ONE exchange
     * end-to-end (guide §2.4 "two operations keyed the same way share one
     * exchange") where the r19 shape paid three (groupBy key, window key,
-    * write key). Callers feed it pb-partitioned rows and write WITHOUT a
-    * further repartition; a pb's rows all sit in one task, so the
-    * one-file-per-partition-dir small-files guard still holds.
+    * write key). Callers feed it rows partitioned by
+    * [[graft.tables.Staging.byPartition]] on pb: the write's identical
+    * exchange is then planned away.
     */
   private def withImpactRank(postings: DataFrame): DataFrame = {
     val pw = org.apache.spark.sql.expressions.Window
@@ -281,28 +280,27 @@ object Retrieval {
     val doclensW = toks.select(col("doc_id"), size(col("tk")).cast("long").as("dl"),
         lit(0L).as("gen"), lit(false).as("tomb"),
         dbCol(col("doc_id")).as("db"))
-    // ONE exchange for the whole postings side (r20, guide §2.4): the
-    // exploded tokens hash-partition by pb once, and because pb rides
-    // every downstream key — the (pb, tok, doc_id) aggregate, the
-    // (pb, tok) rank window, the (pb, tok) dfreq aggregate, the
-    // (doc_id, pb) fwd distinct, and the partitionBy("pb") writes — the
-    // localCheckpoint's preserved outputPartitioning satisfies every
-    // consumer's clustering with NO further shuffle (the r19 shape paid
-    // a groupBy, a window and a write exchange per relation). The
-    // map-side partial agg this forgoes shuffles raw token occurrences
-    // (~1.5x the (tok, doc) pairs) instead of 3x the pairs — strictly
-    // fewer bytes at any tf distribution.
-    val postings = toks.select(col("doc_id"), explode(col("tk")).as("tok"))
-      .withColumn("pb", pbCol(col("tok")))
-      .repartition(col("pb"))
+    // The exploded tokens hash-partition by pb ONCE for the (pb, tok,
+    // doc_id) aggregate (r20, guide §2.4). The localCheckpoint does not
+    // carry that partitioning forward (under AQE it reports none), so
+    // each pb-keyed relation below applies byPartition(pb) once, ahead
+    // of its (pb, tok) rank window or dfreq aggregate, which then share
+    // that exchange with the write (the r19 shape paid a groupBy, a
+    // window and a write exchange per relation). The map-side partial
+    // agg this forgoes shuffles raw token occurrences (~1.5x the
+    // (tok, doc) pairs) instead of 3x the pairs — strictly fewer bytes
+    // at any tf distribution.
+    val postings = byPartition(
+        toks.select(col("doc_id"), explode(col("tk")).as("tok"))
+          .withColumn("pb", pbCol(col("tok"))), "pb")
       .groupBy(col("pb"), col("tok"), col("doc_id"))
       .agg(count(lit(1)).as("tf"))
-      .localCheckpoint() // pb-partitioned: feeds ranked postings, dfreq AND fwd
-    val postingsW = withImpactRank(postings)
+      .localCheckpoint() // feeds ranked postings, dfreq AND fwd
+    val postingsW = withImpactRank(byPartition(postings, "pb"))
       .withColumn("gen", lit(0L)) // LSM generation (see layout comment)
       .select(col("tok"), col("doc_id"), col("tf"), col("rank"), col("gen"),
         col("pb"))
-    val dfreqW = postings.groupBy(col("pb"), col("tok"))
+    val dfreqW = byPartition(postings, "pb").groupBy(col("pb"), col("tok"))
       .agg(count(lit(1)).as("df"))
       .withColumn("gen", lit(0L))
       .select(col("tok"), col("df"), col("gen"), col("pb"))
@@ -315,22 +313,10 @@ object Retrieval {
     // drain this is the first micro-batch's cost (cf. appendImpl)
     @volatile var g0: org.apache.spark.sql.Row = null
     concurrently(
-      () => doclensW
-        .repartition(col("db")) // one task per bucket -> one file per dir,
-        // not one per (task, bucket) pair — the small-files guard every
-        // partitioned stage write here applies
-        .write.mode("overwrite").partitionBy("db").parquet(s"$path/doclens"),
-      // postings/dfreq write WITHOUT a repartition: the checkpointed
-      // relation is already pb-partitioned (one pb wholly inside one
-      // task), so the write is exchange-free and still lands one file
-      // per partition dir
-      () => postingsW
-        .write.mode("overwrite").partitionBy("pb").parquet(s"$path/postings"),
-      () => dfreqW
-        .write.mode("overwrite").partitionBy("pb").parquet(s"$path/dfreq"),
-      () => fwdW
-        .repartition(col("db"))
-        .write.mode("overwrite").partitionBy("db").parquet(s"$path/fwd"),
+      () => writePartitioned(doclensW, "db", s"$path/doclens"),
+      () => writePartitioned(postingsW, "pb", s"$path/postings"),
+      () => writePartitioned(dfreqW, "pb", s"$path/dfreq"),
+      () => writePartitioned(fwdW, "db", s"$path/fwd"),
       // globals computed from the same checkpointed plan that fed the
       // doclens write and committed via the atomic _GEN rename
       () => { g0 = toks.agg(count(lit(1)).as("n_docs"),
@@ -446,22 +432,20 @@ object Retrieval {
       // Crash anywhere: promoted rows sit at the uncommitted gen g,
       // invisible to resolution; recoverPostings GCs them. Same window
       // the checkpointed append already had.
-      // repartition(pb) BEFORE the rank: the (pb, tok) window and the
-      // partitionBy("pb") write then share that one exchange (see
+      // byPartition(pb) BEFORE the rank: the (pb, tok) window and the
+      // pb-partitioned write then share that one exchange (see
       // withImpactRank) — one new file per touched partition as before
-      val rerank = withImpactRank(
+      val rerank = withImpactRank(byPartition(
         st.postings.filter(col("pb").isin(touched: _*))
           .join(toksNew, Seq("tok"), "left_semi")
           .select(col("tok"), col("doc_id"), col("tf"))
           .unionByName(freshPost.select(col("tok"), col("doc_id"), col("tf")))
-          .withColumn("pb", pbCol(col("tok")))
-          .repartition(col("pb")))
+          .withColumn("pb", pbCol(col("tok"))), "pb"))
         .withColumn("gen", lit(g))
       val stg = s"$path/_APPEND_STAGE_postings"
       graft.tables.Staging.deleteRec(stg)
-      rerank.select(col("tok"), col("doc_id"), col("tf"), col("rank"),
-          col("gen"), col("pb"))
-        .write.mode("overwrite").partitionBy("pb").parquet(stg)
+      writePartitioned(rerank.select(col("tok"), col("doc_id"), col("tf"),
+        col("rank"), col("gen"), col("pb")), "pb", stg)
       graft.tables.Staging.moveInto(stg, s"$path/postings", "pb")
       ()
     }
@@ -479,23 +463,17 @@ object Retrieval {
           (coalesce(col("df"), lit(0L)) + col("df_new")).as("df"),
           lit(g).as("gen"),
           pbCol(col("tok")).as("pb"))
-      mergedDf
-        .repartition(col("pb"))
-        .write.mode("append").partitionBy("pb").parquet(s"$path/dfreq")
+      writePartitioned(mergedDf, "pb", s"$path/dfreq", "append")
     }
-    val writeDoclens = () => {
+    val writeDoclens = () => writePartitioned(
       fresh.select(col("doc_id"), size(col("tk")).cast("long").as("dl"),
-          lit(g).as("gen"), lit(false).as("tomb"), col("db"))
-        .repartition(col("db"))
-        .write.mode("append").partitionBy("db").parquet(s"$path/doclens")
-    }
+        lit(g).as("gen"), lit(false).as("tomb"), col("db")),
+      "db", s"$path/doclens", "append")
     // forward sidecar: the batch docs' token buckets — append-only
-    val writeFwd = () => {
+    val writeFwd = () => writePartitioned(
       freshPost.select(col("doc_id"), col("pb")).distinct()
-        .withColumn("db", dbCol(col("doc_id")))
-        .repartition(col("db"))
-        .write.mode("append").partitionBy("db").parquet(s"$path/fwd")
-    }
+        .withColumn("db", dbCol(col("doc_id"))),
+      "db", s"$path/fwd", "append")
     if (touched.nonEmpty)
       concurrently(writePostings, writeDfreq, writeDoclens, writeFwd)
     else concurrently(writeDoclens, writeFwd)
@@ -575,23 +553,21 @@ object Retrieval {
       // remaining rows of the victims' tokens re-rank at generation g —
       // LSM append, cf. appendPostings; a token with NO remaining rows
       // gets its df = 0 death-marker row below
-      val rerank = withImpactRank(
+      val rerank = withImpactRank(byPartition(
         st.postings.filter(col("pb").isin(touched: _*))
           .join(toksGone, Seq("tok"), "left_semi")
           .join(victims.select(col("doc_id")), Seq("doc_id"), "left_anti")
           .select(col("tok"), col("doc_id"), col("tf"))
-          .withColumn("pb", pbCol(col("tok")))
-          .repartition(col("pb"))) // one exchange shared with the rank
-          // window and the partitioned write, cf. withImpactRank
+          .withColumn("pb", pbCol(col("tok"))), "pb")) // one exchange
+          // shared with the rank window and the write, cf. withImpactRank
         .withColumn("gen", lit(g))
       // staged-write + promote, cf. appendImpl's writePostings: one job
       // instead of checkpoint + append, same crash window (uncommitted
       // gen g rows are invisible; recoverPostings GCs them)
       val stg = s"$path/_APPEND_STAGE_postings"
       graft.tables.Staging.deleteRec(stg)
-      rerank.select(col("tok"), col("doc_id"), col("tf"), col("rank"),
-          col("gen"), col("pb"))
-        .write.mode("overwrite").partitionBy("pb").parquet(stg)
+      writePartitioned(rerank.select(col("tok"), col("doc_id"), col("tf"),
+        col("rank"), col("gen"), col("pb")), "pb", stg)
       graft.tables.Staging.moveInto(stg, s"$path/postings", "pb")
       // dfreq: ONE new row per VICTIM token at generation g with the
       // decremented df — df = 0 is the death marker resolution filters
@@ -601,15 +577,12 @@ object Retrieval {
           (col("df") - col("df_gone")).as("df"),
           lit(g).as("gen"),
           col("pb"))
-      mergedDf
-        .repartition(col("pb"))
-        .write.mode("append").partitionBy("pb").parquet(s"$path/dfreq")
+      writePartitioned(mergedDf, "pb", s"$path/dfreq", "append")
     }
     // doclens: one tombstone row per victim — nothing rewritten
-    victims.select(col("doc_id"), col("dl"), lit(g).as("gen"),
-        lit(true).as("tomb"), col("db"))
-      .repartition(col("db"))
-      .write.mode("append").partitionBy("db").parquet(s"$path/doclens")
+    writePartitioned(victims.select(col("doc_id"), col("dl"),
+        lit(g).as("gen"), lit(true).as("tomb"), col("db")),
+      "db", s"$path/doclens", "append")
     writeCommitted(path, g, st.nDocs - vg.getLong(0),
       st.totalDl - vg.getLong(1))
     java.nio.file.Files.delete(intentFile(path))
@@ -1270,15 +1243,9 @@ object Retrieval {
     // dirs, nothing visible before the done marker lands last) — run
     // concurrently, cf. stagePostings
     concurrently(
-      () => dwinW
-        .repartition(col("db")) // small-files guard, cf. stagePostings
-        .write.mode("overwrite").partitionBy("db").parquet(s"$path/dwin"),
-      () => wembW
-        .repartition(col("wb"))
-        .write.mode("overwrite").partitionBy("wb").parquet(s"$path/wemb"),
-      () => wtokW
-        .repartition(col("pb"))
-        .write.mode("overwrite").partitionBy("pb").parquet(s"$path/wtok"))
+      () => writePartitioned(dwinW, "db", s"$path/dwin"),
+      () => writePartitioned(wembW, "wb", s"$path/wemb"),
+      () => writePartitioned(wtokW, "pb", s"$path/wtok"))
     writeWinGen(path, 0L)
     import java.nio.file.{Files, Paths, StandardCopyOption}
     val tmp = Paths.get(path, "_WINDOWS_DONE_TMP")
@@ -1378,23 +1345,18 @@ object Retrieval {
       import scala.concurrent.{Await, duration}
       Await.result(newWinsDone, duration.Duration.Inf)
     }
-    val writeWemb = () => if (!newWins.isEmpty) {
-      newWins.withColumn("wb", pbCol(col("win")))
-        .repartition(col("wb"))
-        .write.mode("append").partitionBy("wb").parquet(s"$path/wemb")
-    }
-    val writeWtok = () => if (!newWins.isEmpty) {
-      newWins.select(col("win"), explode(split(col("win"), " ")).as("tok"))
-        .distinct()
-        .withColumn("pb", pbCol(col("tok")))
-        .repartition(col("pb"))
-        .write.mode("append").partitionBy("pb").parquet(s"$path/wtok")
-    }
-    val writeDwin = () => {
-      fresh.select(col("doc_id"), col("win"), lit(g).as("gen"), col("db"))
-        .repartition(col("db"))
-        .write.mode("append").partitionBy("db").parquet(s"$path/dwin")
-    }
+    val writeWemb = () => if (!newWins.isEmpty)
+      writePartitioned(newWins.withColumn("wb", pbCol(col("win"))),
+        "wb", s"$path/wemb", "append")
+    val writeWtok = () => if (!newWins.isEmpty)
+      writePartitioned(
+        newWins.select(col("win"), explode(split(col("win"), " ")).as("tok"))
+          .distinct()
+          .withColumn("pb", pbCol(col("tok"))),
+        "pb", s"$path/wtok", "append")
+    val writeDwin = () => writePartitioned(
+      fresh.select(col("doc_id"), col("win"), lit(g).as("gen"), col("db")),
+      "db", s"$path/dwin", "append")
     concurrently(writeWemb, writeWtok, writeDwin)
     writeWinGen(path, g)
     java.nio.file.Files.delete(intentFile(path))
@@ -1441,9 +1403,8 @@ object Retrieval {
     // one doc-level TOMBSTONE row per victim — nothing is rewritten; the
     // victims' dwin rows (gen < g) die at the atomic _GEN commit, their
     // vocabulary rows become invisible orphans GC'd by compactWindows
-    victims.select(col("doc_id"), lit(g).as("gen"), col("db"))
-      .repartition(col("db"))
-      .write.mode("append").partitionBy("db").parquet(s"$path/tombs")
+    writePartitioned(victims.select(col("doc_id"), lit(g).as("gen"),
+        col("db")), "db", s"$path/tombs", "append")
     writeWinGen(path, g)
     java.nio.file.Files.delete(intentFile(path))
   }

@@ -40,17 +40,28 @@ object VectorStore {
   def write(df: DataFrame, vecCol: Column, path: String,
             numPlanes: Int = 4, dim: Int = 64,
             retainHistory: Boolean = false): Unit = {
-    df.withColumn("bucket", Ann.bucketOf(vecCol, numPlanes, dim))
-      .repartition(col("bucket")) // one task per bucket -> one file per
-      // dir, not one per (task, bucket) pair — the small-files guard
-      // every partitioned store write here applies
-      .write.mode("overwrite").partitionBy("bucket").parquet(path)
+    val rows = df.withColumn("bucket", Ann.bucketOf(vecCol, numPlanes, dim))
+    graft.tables.Staging.writePartitioned(rows, "bucket", path)
+    graft.tables.Staging.recordSchema(schemaFile(path), rows.schema, "bucket")
     if (retainHistory) {
       java.nio.file.Files.createFile(
         java.nio.file.Paths.get(path, "_RETAIN"))
       writeVersionFile(path, 0L)
     }
   }
+
+  private def schemaFile(path: String) =
+    java.nio.file.Paths.get(path, "_STORE_SCHEMA")
+
+  /** The live-store read every path goes through, with the schema
+    * recorded at write time (`_STORE_SCHEMA`): a request plans without a
+    * schema-inference job, and a store whose every row was deleted reads
+    * as empty. Stores written before the file existed fall back to
+    * inference.
+    */
+  private def readStore(spark: SparkSession, path: String): DataFrame =
+    graft.tables.Staging.readLayout(spark, path,
+      graft.tables.Staging.recordedSchema(schemaFile(path)))
 
   // ---- time travel (versioned stores) ----
 
@@ -150,7 +161,7 @@ object VectorStore {
              dim: Int = 64): Unit = withWriterLock(path) {
     requireNoPendingCommit(path)
     val spark = df.sparkSession
-    val existing = spark.read.parquet(path).select(col(idName))
+    val existing = readStore(spark, path).select(col(idName))
     // Materialize the admitted rows ONCE (lineage cut, cf. Stage.Local)
     // before anything reads them: `fresh` feeds both the affected-bucket
     // list and the staged write, and recomputing a nondeterministic
@@ -162,12 +173,11 @@ object VectorStore {
     val affected = fresh.select(col("bucket")).distinct()
       .collect().map(_.getInt(0)).toSet
     if (affected.nonEmpty) {
-      val store = spark.read.parquet(path)
       val sfx = "__appending"
-      store.filter(col("bucket").isin(affected.toSeq: _*))
-        .unionByName(fresh)
-        .repartition(col("bucket"))
-        .write.mode("overwrite").partitionBy("bucket").parquet(path + sfx)
+      graft.tables.Staging.writePartitioned(readStore(spark, path)
+          .filter(col("bucket").isin(affected.toSeq: _*))
+          .unionByName(fresh),
+        "bucket", path + sfx)
       commitSwap(path, sfx, affected.toSeq.sorted)
     }
   }
@@ -406,7 +416,7 @@ object VectorStore {
     requireNoPendingCommit(path)
     val spark = df.sparkSession
     val updates = df.withColumn("bucket", Ann.bucketOf(vecCol, numPlanes, dim))
-    val store = spark.read.parquet(path)
+    val store = readStore(spark, path)
     // bounded driver collect: bucket ids live in [0, 2^numPlanes) — at
     // the default 4 planes this is ≤ 16 rows regardless of store size
     def bucketsOf(d: DataFrame): Set[Int] =
@@ -416,11 +426,11 @@ object VectorStore {
       bucketsOf(updates)
     if (affected.nonEmpty) {
       val sfx = "__upserting"
-      store.filter(col("bucket").isin(affected.toSeq: _*))
-        .join(updates.select(col(idName)), Seq(idName), "left_anti")
-        .unionByName(updates)
-        .repartition(col("bucket"))
-        .write.mode("overwrite").partitionBy("bucket").parquet(path + sfx)
+      graft.tables.Staging.writePartitioned(
+        store.filter(col("bucket").isin(affected.toSeq: _*))
+          .join(updates.select(col(idName)), Seq(idName), "left_anti")
+          .unionByName(updates),
+        "bucket", path + sfx)
       commitSwap(path, sfx, affected.toSeq.sorted)
     }
   }
@@ -439,24 +449,22 @@ object VectorStore {
   def delete(spark: SparkSession, path: String, ids: DataFrame,
              idName: String = "vec_id"): Unit = withWriterLock(path) {
     requireNoPendingCommit(path)
-    val store = spark.read.parquet(path)
+    val store = readStore(spark, path)
     val victims = ids.select(col(idName))
     val affected = store.join(victims, Seq(idName), "left_semi")
       .select(col("bucket")).distinct().collect().map(_.getInt(0)).toSet
     if (affected.nonEmpty) {
       val sfx = "__deleting"
-      store.filter(col("bucket").isin(affected.toSeq: _*))
-        .join(victims, Seq(idName), "left_anti")
-        .repartition(col("bucket"))
-        .write.mode("overwrite").partitionBy("bucket").parquet(path + sfx)
+      graft.tables.Staging.writePartitioned(
+        store.filter(col("bucket").isin(affected.toSeq: _*))
+          .join(victims, Seq(idName), "left_anti"),
+        "bucket", path + sfx)
       commitSwap(path, sfx, affected.toSeq.sorted)
     }
   }
 
   /** Compact a store in place: rewrite every bucket partition into one
-    * file per bucket (repartition on the bucket column routes each
-    * bucket's rows to a single task, partitionBy keeps the directory
-    * layout). Results and partition pruning are invariant — this is the
+    * file per bucket ([[graft.tables.Staging.writePartitioned]]). Results and partition pruning are invariant — this is the
     * maintenance pass that keeps probe cost flat as streaming appends
     * accumulate small files; per-row work is zero (no re-hash, the bucket
     * is already a column). Committed per bucket via the crash-safe
@@ -468,13 +476,12 @@ object VectorStore {
     */
   def compact(spark: SparkSession, path: String): Unit = withWriterLock(path) {
     requireNoPendingCommit(path)
-    val store = spark.read.parquet(path)
+    val store = readStore(spark, path)
     val affected = store.select(col("bucket")).distinct()
       .collect().map(_.getInt(0)).toSeq.sorted
     if (affected.nonEmpty) {
       val sfx = "__compacting"
-      store.repartition(col("bucket"))
-        .write.mode("overwrite").partitionBy("bucket").parquet(path + sfx)
+      graft.tables.Staging.writePartitioned(store, "bucket", path + sfx)
       commitSwap(path, sfx, affected)
     }
   }
@@ -545,7 +552,7 @@ object VectorStore {
       spark.read.option("basePath", root).parquet(dirs: _*)
     }
     if (frames.isEmpty)
-      spark.read.parquet(path).limit(0)
+      readStore(spark, path).limit(0)
     else frames.reduce(_.unionByName(_))
   }
 
@@ -582,7 +589,7 @@ object VectorStore {
     val probes =
       if (multiProbe) Ann.probesOf(query, numPlanes)
       else Seq(Ann.bucketOfQuery(query, numPlanes))
-    spark.read.parquet(path)
+    readStore(spark, path)
       .filter(col("bucket").isin(probes: _*))
       .filter(where.getOrElse(lit(true)))
       .withColumn("distance", l2(col(vecName), typedlit(query)))
@@ -632,7 +639,7 @@ object VectorStore {
       .collect().map(_.getInt(0)).toSeq // ≤ 2^numPlanes — metadata-sized
     val w = Window.partitionBy(col("q_id"))
       .orderBy(col("distance").asc, col(idName).asc)
-    spark.read.parquet(path)
+    readStore(spark, path)
       .filter(if (probed.size <= pruneLiteralLimit)
         col("bucket").isin(probed: _*) else lit(true))
       .join(broadcast(qprobes), "bucket")

@@ -1,7 +1,6 @@
 package graft.tables
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.functions.col
 
 /** Crash-safe multi-relation partition commit — the ONE write protocol
   * every persisted stage's REWRITING maintenance uses (graph-ANN, IVF,
@@ -105,9 +104,7 @@ object Commit {
       import scala.concurrent.duration.Duration
       implicit val ec: ExecutionContext = ExecutionContext.global
       val staged = ops.zipWithIndex.map { case (op, i) => Future {
-        op.rows.repartition(col(op.partCol)) // one file per partition —
-          // the small-files guard every partitioned stage write applies
-          .write.mode("overwrite").partitionBy(op.partCol).parquet(s"$stg/$i")
+        Staging.writePartitioned(op.rows, op.partCol, s"$stg/$i")
         op match {
           case Replace(_, pc, affected, _) =>
             // explicit empty dir for every affected partition the rewrite

@@ -1,6 +1,12 @@
 package graft.tables
 
-/** One-time staged-layout cache keying.
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.types._
+
+/** Staged layouts: cache keying, the one partitioned layout writer
+  * ([[Staging.writePartitioned]]), declared-schema reads, and the local
+  * filesystem seam.
   *
   * Staged layouts (partitioned tables, vector stores, signature stages) are
   * derived once per source dataset and reused across queries in a run. The
@@ -104,39 +110,90 @@ object Staging {
     }
   }
 
-  /** Dynamic-partition-overwrite `df` into `dir` partitioned by
-    * `partCol`: only the partitions `df` carries rows for are rewritten,
-    * every other partition's files are untouched — the incremental-
-    * maintenance write every staged layout here uses (GraphAnnIndex,
-    * Retrieval's postings stage). The session's overwrite mode is set
-    * for the write and restored after.
+  /** THE partitioned layout write: every staged layout's
+    * `partitionBy(partCol)` parquet write goes through here. `mode` is
+    * "overwrite", "append", or "dynamic" (overwrite only the partitions
+    * `df` carries rows for, leaving every other partition's files
+    * untouched — the per-write `partitionOverwriteMode` option, so no
+    * session-wide setting changes under concurrent writers).
+    *
+    * Rows are hash-partitioned by `partCol` first (see [[byPartition]]),
+    * so each partition value lands in exactly ONE task and every
+    * partition directory gets exactly one new file — the invariant the
+    * fragmentation policies ([[filesPerPartition]]) count on. The task
+    * count is FIXED at the session's shuffle partitions on purpose: a
+    * column-only `repartition(col)` plans a REPARTITION_BY_COL exchange,
+    * which AQE coalesces below its advisory size — a micro-batch's few
+    * hundred rows collapse into ONE task that then creates every one of
+    * the ~55 partition files serially (~13 ms each), the largest job of
+    * a streaming-drain batch. AQE does not coalesce a REPARTITION_BY_NUM
+    * exchange, so the files are created by all cores at once; empty
+    * tasks write nothing.
     */
-  def dynamicOverwrite(df: org.apache.spark.sql.DataFrame,
-                       partCol: String, dir: String): Unit = {
-    val spark = df.sparkSession
-    val key = "spark.sql.sources.partitionOverwriteMode"
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key, "dynamic")
-    try df.repartition(org.apache.spark.sql.functions.col(partCol))
-      .write.mode("overwrite").partitionBy(partCol).parquet(dir)
-    finally prev match {
-      case Some(v) => spark.conf.set(key, v)
-      case None => spark.conf.unset(key)
+  def writePartitioned(df: DataFrame, partCol: String, dir: String,
+                       mode: String = "overwrite"): Unit = {
+    val w = byPartition(df, partCol).write.partitionBy(partCol)
+    mode match {
+      case "overwrite" | "append" => w.mode(mode).parquet(dir)
+      case "dynamic" =>
+        w.mode("overwrite").option("partitionOverwriteMode", "dynamic")
+          .parquet(dir)
+      case other => throw new IllegalArgumentException(
+        s"writePartitioned: unknown mode '$other' " +
+          "(overwrite | append | dynamic)")
     }
   }
 
-  /** Mean parquet files per live partition directory across the given
-    * relation roots — the fragmentation probe behind the compact-if-
-    * fragmented policies. Every staged write here leaves exactly ONE
-    * file per partition (the repartition-on-partition-column guard), and
-    * every LSM/additive append lands exactly one NEW file per touched
-    * partition, so this ratio is precisely 1 + appends-since-compact per
-    * partition: a pure driver-side readdir (no Spark job, no data read)
-    * that measures read amplification the same way the postings stage's
-    * staleFraction measures superseded rows. Relations that don't exist
-    * (or have no partitions yet) contribute nothing; an empty stage
-    * probes as 0.0 so no policy fires on it.
+  /** `df` hash-partitioned by `partCol` into the session's shuffle-
+    * partition count — the exchange [[writePartitioned]] plans. A site
+    * whose exchange also feeds a `partCol`-keyed operator before the
+    * write (a rank window) applies it once, ahead of that operator: the
+    * write's own identical exchange is then planned away, leaving one.
     */
+  def byPartition(df: DataFrame, partCol: String): DataFrame =
+    df.repartition(
+      df.sparkSession.conf.get("spark.sql.shuffle.partitions").toInt,
+      col(partCol))
+
+  /** Read a parquet layout with a declared schema when one is known,
+    * else by inference. Inference costs a Spark job per read (it opens
+    * file footers at planning time, before any partition filter exists)
+    * and refuses a fileless directory; a declared schema does neither,
+    * so an emptied layout reads as an empty frame.
+    */
+  def readLayout(spark: SparkSession, dir: String,
+                 declared: Option[StructType]): DataFrame =
+    declared.fold(spark.read.parquet(dir))(spark.read.schema(_).parquet(dir))
+
+  /** The schema a layout recorded at write time in `file` (see
+    * [[recordSchema]]); None for layouts written before it existed.
+    */
+  def recordedSchema(file: java.nio.file.Path): Option[StructType] =
+    if (!java.nio.file.Files.exists(file)) None
+    else Some(DataType.fromJson(java.nio.file.Files.readString(file))
+      .asInstanceOf[StructType])
+
+  /** Record, in `file`, the schema parquet inference returns for a layout
+    * written from `written` partitioned by `partCol`: the data columns
+    * in order, all nullable, then the partition column as a nullable INT
+    * (partition values here are always integers).
+    */
+  def recordSchema(file: java.nio.file.Path, written: StructType,
+                   partCol: String): Unit = {
+    val data = nullable(StructType(written.filterNot(_.name == partCol)))
+    java.nio.file.Files.writeString(file,
+      data.asInstanceOf[StructType].add(partCol, IntegerType).json)
+  }
+
+  private def nullable(t: DataType): DataType = t match {
+    case s: StructType => StructType(s.fields.map(f =>
+      f.copy(dataType = nullable(f.dataType), nullable = true)))
+    case a: ArrayType => ArrayType(nullable(a.elementType), containsNull = true)
+    case m: MapType => MapType(nullable(m.keyType), nullable(m.valueType),
+      valueContainsNull = true)
+    case other => other
+  }
+
   /** Move a staged partitioned write's data files INTO the live relation
     * dir (the [[Commit]] "add" apply, factored for single-relation LSM
     * appends): every `pc=v/part-*.parquet` under `stagedDir` moves to
@@ -186,6 +243,18 @@ object Staging {
       .toSeq.sorted
   }
 
+  /** Mean parquet files per live partition directory across the given
+    * relation roots — the fragmentation probe behind the compact-if-
+    * fragmented policies. Every staged write here leaves exactly ONE
+    * file per partition (the [[writePartitioned]] guarantee), and
+    * every LSM/additive append lands exactly one NEW file per touched
+    * partition, so this ratio is precisely 1 + appends-since-compact per
+    * partition: a pure driver-side readdir (no Spark job, no data read)
+    * that measures read amplification the same way the postings stage's
+    * staleFraction measures superseded rows. Relations that don't exist
+    * (or have no partitions yet) contribute nothing; an empty stage
+    * probes as 0.0 so no policy fires on it.
+    */
   def filesPerPartition(relDirs: Seq[String]): Double = {
     var parts = 0L
     var files = 0L
@@ -202,7 +271,7 @@ object Staging {
     if (parts == 0L) 0.0 else files.toDouble / parts
   }
 
-  /** [[dynamicOverwrite]] plus the drop-empty audit every exact
+  /** A dynamic [[writePartitioned]] plus the drop-empty audit every exact
     * partition rewrite needs: dynamic overwrite cannot ERASE a partition
     * it writes no rows into, so any of the `affected` integer partitions
     * the rewrite left empty is deleted explicitly — after this, the
@@ -211,11 +280,11 @@ object Staging {
     * (the write and the written-partition audit), and it usually reads
     * from the very directory being overwritten.
     */
-  def overwritePartitionsExact(df: org.apache.spark.sql.DataFrame,
+  def overwritePartitionsExact(df: DataFrame,
                                partCol: String, dir: String,
                                affected: Seq[Int]): Unit = {
-    dynamicOverwrite(df, partCol, dir)
-    val written = df.select(org.apache.spark.sql.functions.col(partCol))
+    writePartitioned(df, partCol, dir, "dynamic")
+    val written = df.select(col(partCol))
       .distinct().collect().map(_.getInt(0)).toSet
     affected.filterNot(written).foreach(b => deleteRec(s"$dir/$partCol=$b"))
   }

@@ -236,8 +236,8 @@ class ScaleLayoutSpec extends SparkSpec {
     import graft.operators.VectorStore
     val out = Files.createTempDirectory("graft_vs_cmp").toFile.getAbsolutePath + "/store"
     val emb = Tables.embeddings(spark, sf0001)
-    // every committed writer routes each bucket to ONE task (repartition
-    // on the partition column), and append/upsert/delete REWRITE their
+    // every committed writer routes each bucket to ONE task
+    // (Staging.writePartitioned), and append/upsert/delete REWRITE their
     // affected buckets — so even 4 incremental appends can never
     // fragment a bucket directory; compaction is a periodic flattener
     // for externally-written stores, not a correctness crutch here
