@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
-import graft.tables.Tables
+import graft.tables.{Staging, Tables}
 import graft.functions.{TextAnalysis, TextFunctions, VectorFunctions}
 import graft.operators.{Ann, Bpe, Dedup, Knn, Multimodal, Pq, Quantize, Rag, TrainData}
 import graft.oracle.OracleGen
@@ -34,7 +34,7 @@ object SparkEntry {
     * regenerated testdata can silently reuse a stale cache (see Staging).
     */
   private def stagedPath(tag: String, dir: String): String =
-    graft.tables.Staging.stagedPath(tag, dir)
+    Staging.stagedPath(tag, dir)
 
   /** DECIMAL-exact discounted price: l_extendedprice * (1 - l_discount). */
   private def discPrice = {
@@ -1368,13 +1368,11 @@ object SparkEntry {
     */
   private def graphAnnIndexPath(s: SparkSession, dir: String): String = {
     val stage = stagedPath("graph_ann_idx_v1", dir)
-    this.synchronized {
-      if (!graft.operators.GraphAnnIndex.exists(stage))
-        graft.operators.GraphAnnIndex.build(Tables.embeddings(s, dir),
-          col("vec_id"), col("embedding"), stage, sampleMod = 16,
-          edgesPerBucket = 3)
+    Staging.once(stage)(graft.operators.GraphAnnIndex.exists(stage)) {
+      graft.operators.GraphAnnIndex.build(Tables.embeddings(s, dir),
+        col("vec_id"), col("embedding"), stage, sampleMod = 16,
+        edgesPerBucket = 3)
     }
-    stage
   }
 
   /** One-time INCREMENTALLY-MAINTAINED graph-ANN index: built on 2/3 of
@@ -1385,31 +1383,17 @@ object SparkEntry {
     * equivalence is hash-checked, not asserted.
     */
   private def graphAnnAppendedPath(s: SparkSession, dir: String): String = {
-    val stage = stagedPath("graph_ann_append_idx_v2", dir)
-    this.synchronized {
-      // marker OUTSIDE the stage dir (build wipes the dir wholesale) and
-      // bracketing the WHOLE build+append sequence: a crash at ANY point
-      // — including after build but before the append — leaves the
-      // marker and forces a redo, so a cached stage can never be a
-      // build-only index (build writes _INDEX_META as its done marker,
-      // so exists() alone can't distinguish "built" from "appended")
-      val pending = java.nio.file.Paths.get(stage + "_APPEND_PENDING")
-      if (!graft.operators.GraphAnnIndex.exists(stage) ||
-          java.nio.file.Files.exists(pending)) {
-        java.nio.file.Files.deleteIfExists(pending)
-        java.nio.file.Files.createFile(pending)
-        val emb = Tables.embeddings(s, dir)
-        graft.operators.GraphAnnIndex.build(
-          emb.filter(pmod(col("vec_id"), lit(3)) =!= 0),
-          col("vec_id"), col("embedding"), stage, sampleMod = 16,
-          edgesPerBucket = 3)
-        graft.operators.GraphAnnIndex.append(
-          emb.filter(pmod(col("vec_id"), lit(3)) === 0),
-          col("vec_id"), col("embedding"), stage)
-        java.nio.file.Files.delete(pending)
-      }
+    val stage = stagedPath("graph_ann_append_idx_v3", dir)
+    Staging.once(stage)(graft.operators.GraphAnnIndex.exists(stage)) {
+      val emb = Tables.embeddings(s, dir)
+      graft.operators.GraphAnnIndex.build(
+        emb.filter(pmod(col("vec_id"), lit(3)) =!= 0),
+        col("vec_id"), col("embedding"), stage, sampleMod = 16,
+        edgesPerBucket = 3)
+      graft.operators.GraphAnnIndex.append(
+        emb.filter(pmod(col("vec_id"), lit(3)) === 0),
+        col("vec_id"), col("embedding"), stage)
     }
-    stage
   }
 
   /** One-time DELETION-maintained graph-ANN index: built on the full
@@ -1420,25 +1404,15 @@ object SparkEntry {
     * that rebuild, so the repair is hash-checked.
     */
   private def graphAnnDeletedPath(s: SparkSession, dir: String): String = {
-    val stage = stagedPath("graph_ann_delete_idx_v2", dir)
-    this.synchronized {
-      // marker OUTSIDE the stage dir, bracketing the whole build+delete
-      // sequence (cf. graphAnnAppendedPath)
-      val pending = java.nio.file.Paths.get(stage + "_DELETE_PENDING")
-      if (!graft.operators.GraphAnnIndex.exists(stage) ||
-          java.nio.file.Files.exists(pending)) {
-        java.nio.file.Files.deleteIfExists(pending)
-        java.nio.file.Files.createFile(pending)
-        val emb = Tables.embeddings(s, dir)
-        graft.operators.GraphAnnIndex.build(emb, col("vec_id"),
-          col("embedding"), stage, sampleMod = 16, edgesPerBucket = 3)
-        graft.operators.GraphAnnIndex.delete(
-          emb.filter(pmod(col("vec_id"), lit(7)) === 0).select(col("vec_id")),
-          stage, idName = "vec_id")
-        java.nio.file.Files.delete(pending)
-      }
+    val stage = stagedPath("graph_ann_delete_idx_v3", dir)
+    Staging.once(stage)(graft.operators.GraphAnnIndex.exists(stage)) {
+      val emb = Tables.embeddings(s, dir)
+      graft.operators.GraphAnnIndex.build(emb, col("vec_id"),
+        col("embedding"), stage, sampleMod = 16, edgesPerBucket = 3)
+      graft.operators.GraphAnnIndex.delete(
+        emb.filter(pmod(col("vec_id"), lit(7)) === 0).select(col("vec_id")),
+        stage, idName = "vec_id")
     }
-    stage
   }
 
   /** One-time AUTO-COMPACTED graph-ANN index: built on 2/3 of the
@@ -1451,35 +1425,25 @@ object SparkEntry {
     * oracle replays the full-corpus build.
     */
   private def graphAnnAutocPath(s: SparkSession, dir: String): String = {
-    val stage = stagedPath("graph_ann_autoc_idx_v1", dir)
-    this.synchronized {
-      // marker OUTSIDE the stage dir, bracketing the whole
-      // build+append+policy sequence (cf. graphAnnAppendedPath)
-      val pending = java.nio.file.Paths.get(stage + "_AUTOC_PENDING")
-      if (!graft.operators.GraphAnnIndex.exists(stage) ||
-          java.nio.file.Files.exists(pending)) {
-        java.nio.file.Files.deleteIfExists(pending)
-        java.nio.file.Files.createFile(pending)
-        val emb = Tables.embeddings(s, dir)
-        graft.operators.GraphAnnIndex.build(
-          emb.filter(pmod(col("vec_id"), lit(3)) =!= 0),
-          col("vec_id"), col("embedding"), stage, sampleMod = 16,
-          edgesPerBucket = 3)
-        require(!graft.operators.GraphAnnIndex.compactIfFragmented(s, stage),
-          "a fresh build is one file per partition — the policy must not fire")
-        Seq(0L, 3L, 6L).foreach { w =>
-          graft.operators.GraphAnnIndex.append(
-            emb.filter(pmod(col("vec_id"), lit(9)) === w),
-            col("vec_id"), col("embedding"), stage)
-        }
-        require(graft.operators.GraphAnnIndex.compactIfFragmented(s, stage),
-          "three append waves must push files-per-partition past the threshold")
-        require(!graft.operators.GraphAnnIndex.compactIfFragmented(s, stage),
-          "a just-compacted index is back at one file per partition")
-        java.nio.file.Files.delete(pending)
+    val stage = stagedPath("graph_ann_autoc_idx_v2", dir)
+    Staging.once(stage)(graft.operators.GraphAnnIndex.exists(stage)) {
+      val emb = Tables.embeddings(s, dir)
+      graft.operators.GraphAnnIndex.build(
+        emb.filter(pmod(col("vec_id"), lit(3)) =!= 0),
+        col("vec_id"), col("embedding"), stage, sampleMod = 16,
+        edgesPerBucket = 3)
+      require(!graft.operators.GraphAnnIndex.compactIfFragmented(s, stage),
+        "a fresh build is one file per partition — the policy must not fire")
+      Seq(0L, 3L, 6L).foreach { w =>
+        graft.operators.GraphAnnIndex.append(
+          emb.filter(pmod(col("vec_id"), lit(9)) === w),
+          col("vec_id"), col("embedding"), stage)
       }
+      require(graft.operators.GraphAnnIndex.compactIfFragmented(s, stage),
+        "three append waves must push files-per-partition past the threshold")
+      require(!graft.operators.GraphAnnIndex.compactIfFragmented(s, stage),
+        "a just-compacted index is back at one file per partition")
     }
-    stage
   }
 
   /** The shared recall-row tail of the graph-ANN queries: visited set →
@@ -1516,12 +1480,10 @@ object SparkEntry {
     */
   private def docPostingsPath(s: SparkSession, dir: String): String = {
     val stage = stagedPath("doc_postings_v4", dir)
-    this.synchronized {
-      if (!graft.operators.Retrieval.postingsExist(stage))
-        graft.operators.Retrieval.stagePostings(Tables.documents(s, dir),
-          col("doc_id"), col("text"), stage)
+    Staging.once(stage)(graft.operators.Retrieval.postingsExist(stage)) {
+      graft.operators.Retrieval.stagePostings(Tables.documents(s, dir),
+        col("doc_id"), col("text"), stage)
     }
-    stage
   }
 
   /** One-time vector store over the HASH-EMBEDDED documents (doc_id ∈
@@ -1531,15 +1493,50 @@ object SparkEntry {
     */
   private def docEmbedStorePath(s: SparkSession, dir: String): String = {
     val path = stagedPath("doc_embed_store_v1", dir)
-    this.synchronized {
-      if (!new java.io.File(path, "_SUCCESS").exists())
-        graft.operators.VectorStore.write(
-          Rag.embedCorpus(Tables.documents(s, dir)
-            .select(col("doc_id"), col("text")), col("text"))
-            .select(col("doc_id"), col("embedding")),
-          col("embedding"), path)
+    Staging.once(path)(Staging.written(path)) {
+      graft.operators.VectorStore.write(
+        Rag.embedCorpus(Tables.documents(s, dir)
+          .select(col("doc_id"), col("text")), col("text"))
+          .select(col("doc_id"), col("embedding")),
+        col("embedding"), path)
     }
-    path
+  }
+
+  /** One-time LSH-bucketed vector store over the embeddings table — the
+    * stage every store probe (single, filtered, batched, streamed,
+    * batch-plan) reads.
+    */
+  private def vectorStorePath(s: SparkSession, dir: String): String = {
+    val path = stagedPath("vector_store_v1", dir)
+    Staging.once(path)(Staging.written(path)) {
+      graft.operators.VectorStore.write(Tables.embeddings(s, dir),
+        col("embedding"), path)
+    }
+  }
+
+  /** One-time MinHash signature stage over the near-dup corpus — the
+    * stage the LSH pair, cluster, dedup-apply, edit-distance and grouped
+    * split queries band.
+    */
+  private def minhashSigsPath(s: SparkSession, dir: String): String = {
+    val stage = stagedPath("minhash_sigs_v2", dir)
+    Staging.once(stage)(Staging.written(stage)) {
+      Dedup.stageMinhashSignatures(nearDupCorpus(s, dir), col("id"),
+        col("text"), stage)
+    }
+  }
+
+  /** One-time signature stage of the streaming gate's reference corpus
+    * (the planted near-dup copies) — screened by both dedup-gate drains.
+    */
+  private def gateRefSigsPath(s: SparkSession, dir: String): String = {
+    val stage = stagedPath("gate_ref_sigs_v2", dir)
+    Staging.once(stage)(Staging.written(stage)) {
+      val ref = Tables.documents(s, dir).filter(col("doc_id") % 10 === 0)
+        .select((col("doc_id") + 100000).as("id"),
+          concat(col("text"), lit(" zz extra token")).as("text"))
+      Dedup.stageMinhashSignatures(ref, col("id"), col("text"), stage)
+    }
   }
 
   /** Deterministic image corpus for the perceptual-hash family: one real
@@ -1630,27 +1627,16 @@ object SparkEntry {
     * replays the full-corpus BM25, so the equivalence is hash-checked.
     */
   private def docPostingsAppendedPath(s: SparkSession, dir: String): String = {
-    val stage = stagedPath("doc_postings_append_v4", dir)
-    this.synchronized {
-      // marker OUTSIDE the stage dir (stagePostings wipes the dir),
-      // bracketing the whole build+append sequence: a crash at any point
-      // forces a redo (cf. docWindowsAppendedPath)
-      val pending = java.nio.file.Paths.get(stage + "_APPEND_PENDING")
-      if (!graft.operators.Retrieval.postingsExist(stage) ||
-          java.nio.file.Files.exists(pending)) {
-        java.nio.file.Files.deleteIfExists(pending)
-        java.nio.file.Files.createFile(pending)
-        val docs = Tables.documents(s, dir)
-        graft.operators.Retrieval.stagePostings(
-          docs.filter(pmod(col("doc_id"), lit(3)) =!= 0),
-          col("doc_id"), col("text"), stage)
-        graft.operators.Retrieval.appendPostings(
-          docs.filter(pmod(col("doc_id"), lit(3)) === 0),
-          col("doc_id"), col("text"), stage)
-        java.nio.file.Files.delete(pending)
-      }
+    val stage = stagedPath("doc_postings_append_v5", dir)
+    Staging.once(stage)(graft.operators.Retrieval.postingsExist(stage)) {
+      val docs = Tables.documents(s, dir)
+      graft.operators.Retrieval.stagePostings(
+        docs.filter(pmod(col("doc_id"), lit(3)) =!= 0),
+        col("doc_id"), col("text"), stage)
+      graft.operators.Retrieval.appendPostings(
+        docs.filter(pmod(col("doc_id"), lit(3)) === 0),
+        col("doc_id"), col("text"), stage)
     }
-    stage
   }
 
   /** One-time INCREMENTALLY-DELETED postings stage: built on the FULL
@@ -1664,25 +1650,15 @@ object SparkEntry {
     * hash-checked end to end.
     */
   private def docPostingsDeletedPath(s: SparkSession, dir: String): String = {
-    val stage = stagedPath("doc_postings_delete_v3", dir)
-    this.synchronized {
-      // marker OUTSIDE the stage dir, bracketing the whole build+delete
-      // sequence (cf. docPostingsAppendedPath)
-      val pending = java.nio.file.Paths.get(stage + "_DELETE_PENDING")
-      if (!graft.operators.Retrieval.postingsExist(stage) ||
-          java.nio.file.Files.exists(pending)) {
-        java.nio.file.Files.deleteIfExists(pending)
-        java.nio.file.Files.createFile(pending)
-        val docs = Tables.documents(s, dir)
-        graft.operators.Retrieval.stagePostings(docs, col("doc_id"),
-          col("text"), stage)
-        graft.operators.Retrieval.deletePostings(
-          docs.filter(pmod(col("doc_id"), lit(3)) === 0).select(col("doc_id")),
-          stage)
-        java.nio.file.Files.delete(pending)
-      }
+    val stage = stagedPath("doc_postings_delete_v4", dir)
+    Staging.once(stage)(graft.operators.Retrieval.postingsExist(stage)) {
+      val docs = Tables.documents(s, dir)
+      graft.operators.Retrieval.stagePostings(docs, col("doc_id"),
+        col("text"), stage)
+      graft.operators.Retrieval.deletePostings(
+        docs.filter(pmod(col("doc_id"), lit(3)) === 0).select(col("doc_id")),
+        stage)
     }
-    stage
   }
 
   /** Deterministic audio corpus for the WAV decode family: one mono
@@ -1726,12 +1702,10 @@ object SparkEntry {
     */
   private def docWindowsPath(s: SparkSession, dir: String): String = {
     val stage = stagedPath("doc_windows_v3", dir)
-    this.synchronized {
-      if (!graft.operators.Retrieval.windowsExist(stage))
-        graft.operators.Retrieval.stageWindows(Tables.documents(s, dir),
-          col("doc_id"), col("text"), stage)
+    Staging.once(stage)(graft.operators.Retrieval.windowsExist(stage)) {
+      graft.operators.Retrieval.stageWindows(Tables.documents(s, dir),
+        col("doc_id"), col("text"), stage)
     }
-    stage
   }
 
   /** One-time INCREMENTALLY-MAINTAINED doc-window stage: built on 2/3
@@ -1741,27 +1715,16 @@ object SparkEntry {
     * the full-corpus pruned MaxSim, so the equivalence is hash-checked.
     */
   private def docWindowsAppendedPath(s: SparkSession, dir: String): String = {
-    val stage = stagedPath("doc_windows_append_v3", dir)
-    this.synchronized {
-      // the in-progress marker lives OUTSIDE the stage dir (stageWindows
-      // wipes the dir) and brackets the WHOLE build+append sequence, so
-      // a crash at any point leaves the marker and forces a redo
-      val pending = java.nio.file.Paths.get(stage + "_APPEND_PENDING")
-      if (!graft.operators.Retrieval.windowsExist(stage) ||
-          java.nio.file.Files.exists(pending)) {
-        java.nio.file.Files.deleteIfExists(pending)
-        java.nio.file.Files.createFile(pending)
-        val docs = Tables.documents(s, dir)
-        graft.operators.Retrieval.stageWindows(
-          docs.filter(pmod(col("doc_id"), lit(3)) =!= 0),
-          col("doc_id"), col("text"), stage)
-        graft.operators.Retrieval.appendWindows(
-          docs.filter(pmod(col("doc_id"), lit(3)) === 0),
-          col("doc_id"), col("text"), stage)
-        java.nio.file.Files.delete(pending)
-      }
+    val stage = stagedPath("doc_windows_append_v4", dir)
+    Staging.once(stage)(graft.operators.Retrieval.windowsExist(stage)) {
+      val docs = Tables.documents(s, dir)
+      graft.operators.Retrieval.stageWindows(
+        docs.filter(pmod(col("doc_id"), lit(3)) =!= 0),
+        col("doc_id"), col("text"), stage)
+      graft.operators.Retrieval.appendWindows(
+        docs.filter(pmod(col("doc_id"), lit(3)) === 0),
+        col("doc_id"), col("text"), stage)
     }
-    stage
   }
 
   /** One-time stage exercising the doc-window DELETE + COMPACT
@@ -1774,26 +1737,16 @@ object SparkEntry {
     * rebuild-on-remaining is hash-checked.
     */
   private def docWindowsDeletedPath(s: SparkSession, dir: String): String = {
-    val stage = stagedPath("doc_windows_delete_v2", dir)
-    this.synchronized {
-      // marker OUTSIDE the stage dir, bracketing the whole
-      // build+delete+compact sequence (cf. docWindowsAppendedPath)
-      val pending = java.nio.file.Paths.get(stage + "_DELETE_PENDING")
-      if (!graft.operators.Retrieval.windowsExist(stage) ||
-          java.nio.file.Files.exists(pending)) {
-        java.nio.file.Files.deleteIfExists(pending)
-        java.nio.file.Files.createFile(pending)
-        val docs = Tables.documents(s, dir)
-        graft.operators.Retrieval.stageWindows(docs,
-          col("doc_id"), col("text"), stage)
-        graft.operators.Retrieval.deleteWindows(
-          docs.filter(pmod(col("doc_id"), lit(3)) === 0)
-            .select(col("doc_id")), stage)
-        graft.operators.Retrieval.compactWindows(s, stage)
-        java.nio.file.Files.delete(pending)
-      }
+    val stage = stagedPath("doc_windows_delete_v3", dir)
+    Staging.once(stage)(graft.operators.Retrieval.windowsExist(stage)) {
+      val docs = Tables.documents(s, dir)
+      graft.operators.Retrieval.stageWindows(docs,
+        col("doc_id"), col("text"), stage)
+      graft.operators.Retrieval.deleteWindows(
+        docs.filter(pmod(col("doc_id"), lit(3)) === 0)
+          .select(col("doc_id")), stage)
+      graft.operators.Retrieval.compactWindows(s, stage)
     }
-    stage
   }
 
   /** Shared DuckDB replay of the inverted-index-pruned MaxSim
@@ -1884,21 +1837,13 @@ object SparkEntry {
     * corpus — q_postings_upsert's oracle replays BM25 over it.
     */
   private def docPostingsUpsertedPath(s: SparkSession, dir: String): String = {
-    val stage = stagedPath("doc_postings_upsert_v3", dir)
-    this.synchronized {
-      val pending = java.nio.file.Paths.get(stage + "_UPSERT_PENDING")
-      if (!graft.operators.Retrieval.postingsExist(stage) ||
-          java.nio.file.Files.exists(pending)) {
-        java.nio.file.Files.deleteIfExists(pending)
-        java.nio.file.Files.createFile(pending)
-        graft.operators.Retrieval.stagePostings(Tables.documents(s, dir),
-          col("doc_id"), col("text"), stage)
-        graft.operators.Retrieval.upsertPostings(upsertDocs(s, dir),
-          col("doc_id"), col("text"), stage)
-        java.nio.file.Files.delete(pending)
-      }
+    val stage = stagedPath("doc_postings_upsert_v4", dir)
+    Staging.once(stage)(graft.operators.Retrieval.postingsExist(stage)) {
+      graft.operators.Retrieval.stagePostings(Tables.documents(s, dir),
+        col("doc_id"), col("text"), stage)
+      graft.operators.Retrieval.upsertPostings(upsertDocs(s, dir),
+        col("doc_id"), col("text"), stage)
     }
-    stage
   }
 
   /** The doc-window twin of [[docPostingsUpsertedPath]]
@@ -1906,21 +1851,13 @@ object SparkEntry {
     * MaxSim over the modified corpus).
     */
   private def docWindowsUpsertedPath(s: SparkSession, dir: String): String = {
-    val stage = stagedPath("doc_windows_upsert_v2", dir)
-    this.synchronized {
-      val pending = java.nio.file.Paths.get(stage + "_UPSERT_PENDING")
-      if (!graft.operators.Retrieval.windowsExist(stage) ||
-          java.nio.file.Files.exists(pending)) {
-        java.nio.file.Files.deleteIfExists(pending)
-        java.nio.file.Files.createFile(pending)
-        graft.operators.Retrieval.stageWindows(Tables.documents(s, dir),
-          col("doc_id"), col("text"), stage)
-        graft.operators.Retrieval.upsertWindows(upsertDocs(s, dir),
-          col("doc_id"), col("text"), stage)
-        java.nio.file.Files.delete(pending)
-      }
+    val stage = stagedPath("doc_windows_upsert_v3", dir)
+    Staging.once(stage)(graft.operators.Retrieval.windowsExist(stage)) {
+      graft.operators.Retrieval.stageWindows(Tables.documents(s, dir),
+        col("doc_id"), col("text"), stage)
+      graft.operators.Retrieval.upsertWindows(upsertDocs(s, dir),
+        col("doc_id"), col("text"), stage)
     }
-    stage
   }
 
   private lazy val maxSimPrunedOracleSql: String =
@@ -1928,23 +1865,20 @@ object SparkEntry {
 
   /** One-time embedded-Derby mirror of the documents table for the JDBC
     * parity path (S2): bulk-loaded once per sf-dir via the batched JDBC
-    * sink; q_jdbc_roundtrip reads it back range-partitioned. Crash
-    * safety comes from writeTable's overwrite semantics (the retry
-    * drops and recreates the table), with the done marker only gating
-    * the happy-path skip — a crash before the marker re-runs the full
-    * overwrite load, never appends onto a half-loaded table.
+    * sink; q_jdbc_roundtrip reads it back range-partitioned. The done
+    * marker sits beside the database dir (Derby owns the dir's
+    * contents); a crash before it re-runs the full load into a fresh
+    * database, never appends onto a half-loaded table.
     */
   private def jdbcDocsUrl(s: SparkSession, dir: String): String = {
     val db = stagedPath("jdbc_derby_v1", dir)
     val url = s"jdbc:derby:$db;create=true"
-    this.synchronized {
-      val done = java.nio.file.Paths.get(db + "_JDBC_DONE")
-      if (!java.nio.file.Files.exists(done)) {
-        graft.sources.Jdbc.writeTable(
-          Tables.documents(s, dir).select(col("doc_id"), col("text")),
-          url, "documents")
-        java.nio.file.Files.writeString(done, "ok")
-      }
+    val done = java.nio.file.Paths.get(db + "_JDBC_DONE")
+    Staging.once(db)(java.nio.file.Files.exists(done)) {
+      graft.sources.Jdbc.writeTable(
+        Tables.documents(s, dir).select(col("doc_id"), col("text")),
+        url, "documents")
+      java.nio.file.Files.writeString(done, "ok")
     }
     url
   }
@@ -2112,12 +2046,11 @@ object SparkEntry {
 
   private def docShingles(s: SparkSession, dir: String): DataFrame = {
     val stage = stagedPath("doc_shingles3_v1", dir)
-    this.synchronized {
-      if (!new java.io.File(stage, "_SUCCESS").exists())
-        Tables.documents(s, dir)
-          .select(col("doc_id").as("id"),
-            TextFunctions.shingles(col("text"), 3, distinct = true).as("tk"))
-          .write.mode("overwrite").parquet(stage)
+    Staging.once(stage)(Staging.written(stage)) {
+      Tables.documents(s, dir)
+        .select(col("doc_id").as("id"),
+          TextFunctions.shingles(col("text"), 3, distinct = true).as("tk"))
+        .write.mode("overwrite").parquet(stage)
     }
     s.read.parquet(stage)
   }
@@ -2293,9 +2226,8 @@ object SparkEntry {
       val out = stagedPath("jsonl_export_v1", dir)
       val d = Tables.documents(s, dir)
         .select(col("doc_id"), col("lang"), col("n_chars"), col("text"))
-      this.synchronized {
-        if (!new java.io.File(out, "_SUCCESS").exists())
-          d.write.mode("overwrite").json(out)
+      Staging.once(out)(Staging.written(out)) {
+        d.write.mode("overwrite").json(out)
       }
       s.read.schema(d.schema).json(out)
         .groupBy(col("lang"))
@@ -2315,9 +2247,8 @@ object SparkEntry {
       val d = Tables.documents(s, dir)
         .select(col("doc_id"), col("lang"), col("source"),
           col("n_chars"), col("text"))
-      this.synchronized {
-        if (!new java.io.File(out, "_SUCCESS").exists())
-          d.write.mode("overwrite").orc(out)
+      Staging.once(out)(Staging.written(out)) {
+        d.write.mode("overwrite").orc(out)
       }
       s.read.orc(out)
         .groupBy(col("lang"), col("source"))
@@ -2573,11 +2504,7 @@ object SparkEntry {
     // banding join reads the stage; hot band buckets above 50 entries are
     // excluded (skew guard, mirrored in the oracle).
     "dedup_minhash" -> ((s, dir) => {
-      val stage = stagedPath("minhash_sigs_v2", dir)
-      this.synchronized {
-        if (!new java.io.File(stage, "_SUCCESS").exists())
-          Dedup.stageMinhashSignatures(nearDupCorpus(s, dir), col("id"), col("text"), stage)
-      }
+      val stage = minhashSigsPath(s, dir)
       Dedup.minhashPairsFromStage(s, stage, maxBucket = 50)
         .orderBy(col("a_id"), col("b_id"))
     }),
@@ -2603,9 +2530,8 @@ object SparkEntry {
             distinct = true).as("tk"))
       val toks = docShingles(s, dir).unionAll(planted).localCheckpoint()
       val stagePath = stagedPath("ppj_ordered_v1", dir)
-      this.synchronized {
-        if (!new java.io.File(stagePath, "_SUCCESS").exists())
-          Dedup.orderedPrefixes(toks).write.mode("overwrite").parquet(stagePath)
+      Staging.once(stagePath)(Staging.written(stagePath)) {
+        Dedup.orderedPrefixes(toks).write.mode("overwrite").parquet(stagePath)
       }
       Dedup.prefixJaccardJoinFromOrdered(toks, s.read.parquet(stagePath),
           threshold = 0.6)
@@ -2618,11 +2544,7 @@ object SparkEntry {
     // an actual dedup decision; transitive near-dups collapse into one
     // cluster. Reuses the staged minhash signatures.
     "dedup_clusters" -> ((s, dir) => {
-      val stage = stagedPath("minhash_sigs_v2", dir)
-      this.synchronized {
-        if (!new java.io.File(stage, "_SUCCESS").exists())
-          Dedup.stageMinhashSignatures(nearDupCorpus(s, dir), col("id"), col("text"), stage)
-      }
+      val stage = minhashSigsPath(s, dir)
       val pairs = Dedup.minhashPairsFromStage(s, stage, maxBucket = 50)
         .select(col("a_id"), col("b_id"))
       Dedup.connectedComponents(pairs)
@@ -2636,11 +2558,7 @@ object SparkEntry {
     // output is the before/after accounting plus an id checksum of the
     // kept set — the end state of the whole dedup pipeline.
     "q_dedup_apply" -> ((s, dir) => {
-      val stage = stagedPath("minhash_sigs_v2", dir)
-      this.synchronized {
-        if (!new java.io.File(stage, "_SUCCESS").exists())
-          Dedup.stageMinhashSignatures(nearDupCorpus(s, dir), col("id"), col("text"), stage)
-      }
+      val stage = minhashSigsPath(s, dir)
       val corpus = nearDupCorpus(s, dir)
       val pairs = Dedup.minhashPairsFromStage(s, stage, maxBucket = 50)
         .select(col("a_id"), col("b_id"))
@@ -2661,11 +2579,10 @@ object SparkEntry {
     // Every new doc must surface its origin.
     "dedup_incremental" -> ((s, dir) => {
       val stage = stagedPath("minhash_sigs_base_v2", dir)
-      this.synchronized {
-        if (!new java.io.File(stage, "_SUCCESS").exists())
-          Dedup.stageMinhashSignatures(
-            Tables.documents(s, dir).select(col("doc_id").as("id"), col("text")),
-            col("id"), col("text"), stage)
+      Staging.once(stage)(Staging.written(stage)) {
+        Dedup.stageMinhashSignatures(
+          Tables.documents(s, dir).select(col("doc_id").as("id"), col("text")),
+          col("id"), col("text"), stage)
       }
       val newBatch = Tables.documents(s, dir).filter(col("doc_id") % 10 === 0)
         .select((col("doc_id") + 100000).as("id"),
@@ -2683,24 +2600,15 @@ object SparkEntry {
     // filtered to the remaining docs: delete-then-gate ≡
     // rebuild-on-remaining, hash-checked.
     "q_dedup_sig_delete" -> ((s, dir) => {
-      val stage = stagedPath("minhash_sigs_del_v1", dir)
-      this.synchronized {
-        // marker OUTSIDE the stage dir, bracketing stage+delete: a crash
-        // at any point forces a redo (cf. docPostingsDeletedPath)
-        val pending = java.nio.file.Paths.get(stage + "_DELETE_PENDING")
-        if (!new java.io.File(stage, "_SUCCESS").exists() ||
-            java.nio.file.Files.exists(pending)) {
-          java.nio.file.Files.deleteIfExists(pending)
-          java.nio.file.Files.createFile(pending)
-          Dedup.stageMinhashSignatures(
-            Tables.documents(s, dir).select(col("doc_id").as("id"), col("text")),
-            col("id"), col("text"), stage)
-          Dedup.deleteSignatures(
-            Tables.documents(s, dir)
-              .filter(pmod(col("doc_id"), lit(3)) === 0)
-              .select(col("doc_id").as("id")), stage)
-          java.nio.file.Files.delete(pending)
-        }
+      val stage = stagedPath("minhash_sigs_del_v2", dir)
+      Staging.once(stage)(Staging.written(stage)) {
+        Dedup.stageMinhashSignatures(
+          Tables.documents(s, dir).select(col("doc_id").as("id"), col("text")),
+          col("id"), col("text"), stage)
+        Dedup.deleteSignatures(
+          Tables.documents(s, dir)
+            .filter(pmod(col("doc_id"), lit(3)) === 0)
+            .select(col("doc_id").as("id")), stage)
       }
       val newBatch = Tables.documents(s, dir).filter(col("doc_id") % 10 === 0)
         .select((col("doc_id") + 100000).as("id"),
@@ -2779,9 +2687,8 @@ object SparkEntry {
     // for dedup_minhash.
     "dedup_simhash_pairs" -> ((s, dir) => {
       val stage = stagedPath("simhash_fps_v1", dir)
-      this.synchronized {
-        if (!new java.io.File(stage, "_SUCCESS").exists())
-          Dedup.stageSimhashFingerprints(nearDupCorpus(s, dir), col("id"), col("text"), stage)
+      Staging.once(stage)(Staging.written(stage)) {
+        Dedup.stageSimhashFingerprints(nearDupCorpus(s, dir), col("id"), col("text"), stage)
       }
       Dedup.simhashPairsFromStage(s, stage, maxBucket = 50)
         .orderBy(col("a_id"), col("b_id"))
@@ -2869,15 +2776,13 @@ object SparkEntry {
       val (ot, ct) = (s"orders_bkt_$tok", s"customer_bkt_$tok")
       val child = s.newSession()
       child.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-      this.synchronized {
-        if (!child.catalog.tableExists(ot)) {
-          Tables.orders(child, dir).write.mode("overwrite")
-            .bucketBy(8, "o_custkey").sortBy("o_custkey")
-            .option("path", s"$path/orders_bkt").saveAsTable(ot)
-          Tables.customer(child, dir).write.mode("overwrite")
-            .bucketBy(8, "c_custkey").sortBy("c_custkey")
-            .option("path", s"$path/customer_bkt").saveAsTable(ct)
-        }
+      Staging.once(path)(child.catalog.tableExists(ot)) {
+        Tables.orders(child, dir).write.mode("overwrite")
+          .bucketBy(8, "o_custkey").sortBy("o_custkey")
+          .option("path", s"$path/orders_bkt").saveAsTable(ot)
+        Tables.customer(child, dir).write.mode("overwrite")
+          .bucketBy(8, "c_custkey").sortBy("c_custkey")
+          .option("path", s"$path/customer_bkt").saveAsTable(ct)
       }
       val df = child.table(ot)
         .join(child.table(ct), col("o_custkey") === col("c_custkey"))
@@ -2902,11 +2807,10 @@ object SparkEntry {
     // index, and probe cost is nprobe/nlist of the store at any scale.
     "q_ivf_layout" -> ((s, dir) => {
       val path = stagedPath("ivf_layout_v1", dir)
-      this.synchronized {
-        if (!new java.io.File(path, "_SUCCESS").exists())
-          Tables.embeddings(s, dir)
-            .withColumn("cell", Ann.cellOf(col("embedding"), 8, 64))
-            .write.mode("overwrite").partitionBy("cell").parquet(path)
+      Staging.once(path)(Staging.written(path)) {
+        Tables.embeddings(s, dir)
+          .withColumn("cell", Ann.cellOf(col("embedding"), 8, 64))
+          .write.mode("overwrite").partitionBy("cell").parquet(path)
       }
       val probes = Ann.ivfProbes(QueryVec.values, 8, 2)
       val df = s.read.parquet(path)
@@ -2929,23 +2833,14 @@ object SparkEntry {
     // Probe-after-append must equal probing a full build — the oracle
     // replays the full-corpus cell assignment + pruned exact top-10.
     "q_ivf_append" -> ((s, dir) => {
-      val path = stagedPath("ivf_idx_append_v1", dir)
-      this.synchronized {
-        // marker OUTSIDE the stage dir, bracketing build+append: a crash
-        // at any point forces a redo (cf. docPostingsAppendedPath)
-        val pending = java.nio.file.Paths.get(path + "_APPEND_PENDING")
-        if (!graft.operators.IvfIndex.exists(path) ||
-            java.nio.file.Files.exists(pending)) {
-          java.nio.file.Files.deleteIfExists(pending)
-          java.nio.file.Files.createFile(pending)
-          val emb = Tables.embeddings(s, dir)
-          graft.operators.IvfIndex.build(
-            emb.filter(pmod(col("vec_id"), lit(3)) =!= 0),
-            "vec_id", "embedding", path, nlist = 8, dim = 64)
-          graft.operators.IvfIndex.append(
-            emb.filter(pmod(col("vec_id"), lit(3)) === 0), path)
-          java.nio.file.Files.delete(pending)
-        }
+      val path = stagedPath("ivf_idx_append_v2", dir)
+      Staging.once(path)(graft.operators.IvfIndex.exists(path)) {
+        val emb = Tables.embeddings(s, dir)
+        graft.operators.IvfIndex.build(
+          emb.filter(pmod(col("vec_id"), lit(3)) =!= 0),
+          "vec_id", "embedding", path, nlist = 8, dim = 64)
+        graft.operators.IvfIndex.append(
+          emb.filter(pmod(col("vec_id"), lit(3)) === 0), path)
       }
       graft.operators.IvfIndex.probe(s, path, QueryVec.values, nprobe = 2)
         .withColumn("distance",
@@ -2967,29 +2862,22 @@ object SparkEntry {
     // compaction-invariant, so the oracle is the same full-corpus
     // pruned-probe replay as q_ivf_append.
     "q_ivf_autocompact" -> ((s, dir) => {
-      val path = stagedPath("ivf_idx_autoc_v1", dir)
-      this.synchronized {
-        val pending = java.nio.file.Paths.get(path + "_AUTOC_PENDING")
-        if (!graft.operators.IvfIndex.exists(path) ||
-            java.nio.file.Files.exists(pending)) {
-          java.nio.file.Files.deleteIfExists(pending)
-          java.nio.file.Files.createFile(pending)
-          val emb = Tables.embeddings(s, dir)
-          graft.operators.IvfIndex.build(
-            emb.filter(pmod(col("vec_id"), lit(3)) =!= 0),
-            "vec_id", "embedding", path, nlist = 8, dim = 64)
-          require(!graft.operators.IvfIndex.compactIfFragmented(s, path),
-            "a fresh build is one file per partition — the policy must not fire")
-          Seq(0L, 3L, 6L).foreach { w =>
-            graft.operators.IvfIndex.append(
-              emb.filter(pmod(col("vec_id"), lit(9)) === w), path)
-          }
-          require(graft.operators.IvfIndex.compactIfFragmented(s, path),
-            "three append waves must push files-per-partition past the threshold")
-          require(!graft.operators.IvfIndex.compactIfFragmented(s, path),
-            "a just-compacted index is back at one file per partition")
-          java.nio.file.Files.delete(pending)
+      val path = stagedPath("ivf_idx_autoc_v2", dir)
+      Staging.once(path)(graft.operators.IvfIndex.exists(path)) {
+        val emb = Tables.embeddings(s, dir)
+        graft.operators.IvfIndex.build(
+          emb.filter(pmod(col("vec_id"), lit(3)) =!= 0),
+          "vec_id", "embedding", path, nlist = 8, dim = 64)
+        require(!graft.operators.IvfIndex.compactIfFragmented(s, path),
+          "a fresh build is one file per partition — the policy must not fire")
+        Seq(0L, 3L, 6L).foreach { w =>
+          graft.operators.IvfIndex.append(
+            emb.filter(pmod(col("vec_id"), lit(9)) === w), path)
         }
+        require(graft.operators.IvfIndex.compactIfFragmented(s, path),
+          "three append waves must push files-per-partition past the threshold")
+        require(!graft.operators.IvfIndex.compactIfFragmented(s, path),
+          "a just-compacted index is back at one file per partition")
       }
       graft.operators.IvfIndex.probe(s, path, QueryVec.values, nprobe = 2)
         .withColumn("distance",
@@ -3023,66 +2911,63 @@ object SparkEntry {
       val sigStage = stagedPath("health_signatures_v1", dir)
       val pqOk = stagedPath("health_pq_ok_v1", dir)
       val pqDeep = stagedPath("health_pq_deep_v1", dir)
-      this.synchronized {
-        // one group done-marker brackets ALL fixtures: a crash anywhere
-        // mid-build leaves it absent and the whole set rebuilds (each
-        // builder starts from deleteRec/overwrite, clearing junk state)
-        val done = java.nio.file.Paths.get(
-          stagedPath("health_fixtures_done_v2", dir))
-        if (!java.nio.file.Files.exists(done)) {
-          val docs = Tables.documents(s, dir)
-          val emb = Tables.embeddings(s, dir)
-          // stale LSM stage: two same-sized append waves supersede most
-          // touched posting lists — past the 0.3 default, left
-          // uncompacted so the policy column must flag it
-          graft.tables.Staging.deleteRec(stalePostings)
-          graft.operators.Retrieval.stagePostings(
-            docs.filter(pmod(col("doc_id"), lit(3)) === 1),
-            col("doc_id"), col("text"), stalePostings)
-          graft.operators.Retrieval.appendPostings(
-            docs.filter(pmod(col("doc_id"), lit(3)) === 2),
-            col("doc_id"), col("text"), stalePostings)
-          graft.operators.Retrieval.appendPostings(
-            docs.filter(pmod(col("doc_id"), lit(3)) === 0),
-            col("doc_id"), col("text"), stalePostings)
-          // fragmented file-granular index: three waves, uncompacted
-          graft.operators.IvfIndex.build(
-            emb.filter(pmod(col("vec_id"), lit(3)) =!= 0),
-            "vec_id", "embedding", fragIvf, nlist = 8, dim = 64)
-          Seq(0L, 3L, 6L).foreach { w =>
-            graft.operators.IvfIndex.append(
-              emb.filter(pmod(col("vec_id"), lit(9)) === w), fragIvf)
-          }
-          // torn maintenance: a writer "crashed" intent-in-hand
-          graft.operators.IvfIndex.build(emb.filter(col("vec_id") < 64),
-            "vec_id", "embedding", tornIvf, nlist = 8, dim = 64)
-          java.nio.file.Files.createFile(
-            java.nio.file.Paths.get(tornIvf, "_APPENDING"))
-          // held writer lock (crashed or still running — either way the
-          // stage must report locked, not serve a second writer)
-          graft.operators.VectorStore.write(
-            emb.filter(col("vec_id") < 64)
-              .select(col("vec_id"), col("embedding")),
-            col("embedding"), lockedStore)
-          java.nio.file.Files.createFile(
-            java.nio.file.Paths.get(lockedStore, "_WRITER_LOCK"))
-          // signature stage (healthy), and two versioned PQ
-          // publications: two republishes retain 2 ≤ 3 (healthy), five
-          // retain 5 > 3 with no retention floor yet (Pq.retain debt)
-          graft.operators.Dedup.stageMinhashSignatures(
-            docs.filter(col("doc_id") < 64), col("doc_id"), col("text"),
-            sigStage)
-          val pqEmb = emb.filter(col("vec_id") < 64)
-          graft.tables.Staging.deleteRec(pqOk)
-          graft.tables.Staging.deleteRec(pqDeep)
-          (1 to 2).foreach(_ => graft.operators.Pq.republish(pqEmb,
-            col("vec_id"), col("embedding"), m = 4, subDim = 16, k = 4,
-            iters = 1, path = pqOk))
-          (1 to 5).foreach(_ => graft.operators.Pq.republish(pqEmb,
-            col("vec_id"), col("embedding"), m = 4, subDim = 16, k = 4,
-            iters = 1, path = pqDeep))
-          java.nio.file.Files.createFile(done)
+      // one group done file covers ALL fixtures: a crash anywhere
+      // mid-build rebuilds the whole set (each builder starts from
+      // deleteRec/overwrite, clearing junk state)
+      val done = stagedPath("health_fixtures_done_v2", dir)
+      Staging.once(done)(new java.io.File(done).exists()) {
+        val docs = Tables.documents(s, dir)
+        val emb = Tables.embeddings(s, dir)
+        // stale LSM stage: two same-sized append waves supersede most
+        // touched posting lists — past the 0.3 default, left
+        // uncompacted so the policy column must flag it
+        Staging.deleteRec(stalePostings)
+        graft.operators.Retrieval.stagePostings(
+          docs.filter(pmod(col("doc_id"), lit(3)) === 1),
+          col("doc_id"), col("text"), stalePostings)
+        graft.operators.Retrieval.appendPostings(
+          docs.filter(pmod(col("doc_id"), lit(3)) === 2),
+          col("doc_id"), col("text"), stalePostings)
+        graft.operators.Retrieval.appendPostings(
+          docs.filter(pmod(col("doc_id"), lit(3)) === 0),
+          col("doc_id"), col("text"), stalePostings)
+        // fragmented file-granular index: three waves, uncompacted
+        graft.operators.IvfIndex.build(
+          emb.filter(pmod(col("vec_id"), lit(3)) =!= 0),
+          "vec_id", "embedding", fragIvf, nlist = 8, dim = 64)
+        Seq(0L, 3L, 6L).foreach { w =>
+          graft.operators.IvfIndex.append(
+            emb.filter(pmod(col("vec_id"), lit(9)) === w), fragIvf)
         }
+        // torn maintenance: a writer "crashed" intent-in-hand
+        graft.operators.IvfIndex.build(emb.filter(col("vec_id") < 64),
+          "vec_id", "embedding", tornIvf, nlist = 8, dim = 64)
+        java.nio.file.Files.createFile(
+          java.nio.file.Paths.get(tornIvf, "_APPENDING"))
+        // held writer lock (crashed or still running — either way the
+        // stage must report locked, not serve a second writer)
+        graft.operators.VectorStore.write(
+          emb.filter(col("vec_id") < 64)
+            .select(col("vec_id"), col("embedding")),
+          col("embedding"), lockedStore)
+        java.nio.file.Files.createFile(
+          java.nio.file.Paths.get(lockedStore, "_WRITER_LOCK"))
+        // signature stage (healthy), and two versioned PQ
+        // publications: two republishes retain 2 ≤ 3 (healthy), five
+        // retain 5 > 3 with no retention floor yet (Pq.retain debt)
+        graft.operators.Dedup.stageMinhashSignatures(
+          docs.filter(col("doc_id") < 64), col("doc_id"), col("text"),
+          sigStage)
+        val pqEmb = emb.filter(col("vec_id") < 64)
+        Staging.deleteRec(pqOk)
+        Staging.deleteRec(pqDeep)
+        (1 to 2).foreach(_ => graft.operators.Pq.republish(pqEmb,
+          col("vec_id"), col("embedding"), m = 4, subDim = 16, k = 4,
+          iters = 1, path = pqOk))
+        (1 to 5).foreach(_ => graft.operators.Pq.republish(pqEmb,
+          col("vec_id"), col("embedding"), m = 4, subDim = 16, k = 4,
+          iters = 1, path = pqDeep))
+        java.nio.file.Files.createFile(java.nio.file.Paths.get(done))
       }
       graft.operators.StageAdmin.health(s, Seq(
         Probe("docs_postings", "postings", docPostingsPath(s, dir)),
@@ -3107,21 +2992,14 @@ object SparkEntry {
     // and only those partitions rewrite). Probe ≡ rebuild-on-remaining;
     // the oracle replays the probe over `embeddings WHERE vec_id % 3 <> 0`.
     "q_ivf_delete" -> ((s, dir) => {
-      val path = stagedPath("ivf_idx_delete_v1", dir)
-      this.synchronized {
-        val pending = java.nio.file.Paths.get(path + "_DELETE_PENDING")
-        if (!graft.operators.IvfIndex.exists(path) ||
-            java.nio.file.Files.exists(pending)) {
-          java.nio.file.Files.deleteIfExists(pending)
-          java.nio.file.Files.createFile(pending)
-          val emb = Tables.embeddings(s, dir)
-          graft.operators.IvfIndex.build(emb, "vec_id", "embedding", path,
-            nlist = 8, dim = 64)
-          graft.operators.IvfIndex.delete(
-            emb.filter(pmod(col("vec_id"), lit(3)) === 0)
-              .select(col("vec_id")), path, idName = "vec_id")
-          java.nio.file.Files.delete(pending)
-        }
+      val path = stagedPath("ivf_idx_delete_v2", dir)
+      Staging.once(path)(graft.operators.IvfIndex.exists(path)) {
+        val emb = Tables.embeddings(s, dir)
+        graft.operators.IvfIndex.build(emb, "vec_id", "embedding", path,
+          nlist = 8, dim = 64)
+        graft.operators.IvfIndex.delete(
+          emb.filter(pmod(col("vec_id"), lit(3)) === 0)
+            .select(col("vec_id")), path, idName = "vec_id")
       }
       graft.operators.IvfIndex.probe(s, path, QueryVec.values, nprobe = 2)
         .withColumn("distance",
@@ -3155,69 +3033,66 @@ object SparkEntry {
       val pqOk = stagedPath("heal_pq_ok_v1", dir)
       val pqDeep = stagedPath("heal_pq_deep_v1", dir)
       val resultPath = stagedPath("heal_result_v1", dir)
-      this.synchronized {
-        val done = java.nio.file.Paths.get(
-          stagedPath("heal_fixtures_done_v1", dir))
-        if (!java.nio.file.Files.exists(done)) {
-          val docs = Tables.documents(s, dir)
-          val emb = Tables.embeddings(s, dir)
-          graft.tables.Staging.deleteRec(stalePostings)
-          graft.operators.Retrieval.stagePostings(
-            docs.filter(pmod(col("doc_id"), lit(3)) === 1),
-            col("doc_id"), col("text"), stalePostings)
-          graft.operators.Retrieval.appendPostings(
-            docs.filter(pmod(col("doc_id"), lit(3)) === 2),
-            col("doc_id"), col("text"), stalePostings)
-          graft.operators.Retrieval.appendPostings(
-            docs.filter(pmod(col("doc_id"), lit(3)) === 0),
-            col("doc_id"), col("text"), stalePostings)
-          graft.operators.IvfIndex.build(
-            emb.filter(pmod(col("vec_id"), lit(3)) =!= 0),
-            "vec_id", "embedding", fragIvf, nlist = 8, dim = 64)
-          Seq(0L, 3L, 6L).foreach { w =>
-            graft.operators.IvfIndex.append(
-              emb.filter(pmod(col("vec_id"), lit(9)) === w), fragIvf)
-          }
-          graft.operators.IvfIndex.build(emb.filter(col("vec_id") < 64),
-            "vec_id", "embedding", tornIvf, nlist = 8, dim = 64)
-          java.nio.file.Files.createFile(
-            java.nio.file.Paths.get(tornIvf, "_APPENDING"))
-          graft.operators.VectorStore.write(
-            emb.filter(col("vec_id") < 64)
-              .select(col("vec_id"), col("embedding")),
-            col("embedding"), lockedStore)
-          java.nio.file.Files.createFile(
-            java.nio.file.Paths.get(lockedStore, "_WRITER_LOCK"))
-          graft.operators.Dedup.stageMinhashSignatures(
-            docs.filter(col("doc_id") < 64), col("doc_id"), col("text"),
-            sigStage)
-          val pqEmb = emb.filter(col("vec_id") < 64)
-          graft.tables.Staging.deleteRec(pqOk)
-          graft.tables.Staging.deleteRec(pqDeep)
-          (1 to 2).foreach(_ => graft.operators.Pq.republish(pqEmb,
-            col("vec_id"), col("embedding"), m = 4, subDim = 16, k = 4,
-            iters = 1, path = pqOk))
-          (1 to 5).foreach(_ => graft.operators.Pq.republish(pqEmb,
-            col("vec_id"), col("embedding"), m = 4, subDim = 16, k = 4,
-            iters = 1, path = pqDeep))
-          val healed = graft.operators.StageAdmin.heal(s, Seq(
-            Probe("docs_postings", "postings", docPostingsPath(s, dir)),
-            Probe("docs_windows", "windows", docWindowsPath(s, dir)),
-            Probe("docs_signatures", "signatures", sigStage),
-            Probe("emb_graph_ann", "graph_ann", graphAnnIndexPath(s, dir)),
-            Probe("emb_ivf", "ivf", ivfIndexFullPath(s, dir)),
-            Probe("emb_store", "vector_store", docEmbedStorePath(s, dir)),
-            Probe("emb_pq", "pq", pqOk),
-            Probe("emb_pq_deep", "pq", pqDeep),
-            Probe("postings_stale", "postings", stalePostings),
-            Probe("ivf_fragmented", "ivf", fragIvf),
-            Probe("ivf_torn", "ivf", tornIvf),
-            Probe("store_locked", "vector_store", lockedStore),
-            Probe("postings_missing", "postings", missing)
-          ), apply = true)
-          healed.coalesce(1).write.mode("overwrite").parquet(resultPath)
-          java.nio.file.Files.createFile(done)
+      val done = stagedPath("heal_fixtures_done_v1", dir)
+      Staging.once(done)(new java.io.File(done).exists()) {
+        val docs = Tables.documents(s, dir)
+        val emb = Tables.embeddings(s, dir)
+        Staging.deleteRec(stalePostings)
+        graft.operators.Retrieval.stagePostings(
+          docs.filter(pmod(col("doc_id"), lit(3)) === 1),
+          col("doc_id"), col("text"), stalePostings)
+        graft.operators.Retrieval.appendPostings(
+          docs.filter(pmod(col("doc_id"), lit(3)) === 2),
+          col("doc_id"), col("text"), stalePostings)
+        graft.operators.Retrieval.appendPostings(
+          docs.filter(pmod(col("doc_id"), lit(3)) === 0),
+          col("doc_id"), col("text"), stalePostings)
+        graft.operators.IvfIndex.build(
+          emb.filter(pmod(col("vec_id"), lit(3)) =!= 0),
+          "vec_id", "embedding", fragIvf, nlist = 8, dim = 64)
+        Seq(0L, 3L, 6L).foreach { w =>
+          graft.operators.IvfIndex.append(
+            emb.filter(pmod(col("vec_id"), lit(9)) === w), fragIvf)
         }
+        graft.operators.IvfIndex.build(emb.filter(col("vec_id") < 64),
+          "vec_id", "embedding", tornIvf, nlist = 8, dim = 64)
+        java.nio.file.Files.createFile(
+          java.nio.file.Paths.get(tornIvf, "_APPENDING"))
+        graft.operators.VectorStore.write(
+          emb.filter(col("vec_id") < 64)
+            .select(col("vec_id"), col("embedding")),
+          col("embedding"), lockedStore)
+        java.nio.file.Files.createFile(
+          java.nio.file.Paths.get(lockedStore, "_WRITER_LOCK"))
+        graft.operators.Dedup.stageMinhashSignatures(
+          docs.filter(col("doc_id") < 64), col("doc_id"), col("text"),
+          sigStage)
+        val pqEmb = emb.filter(col("vec_id") < 64)
+        Staging.deleteRec(pqOk)
+        Staging.deleteRec(pqDeep)
+        (1 to 2).foreach(_ => graft.operators.Pq.republish(pqEmb,
+          col("vec_id"), col("embedding"), m = 4, subDim = 16, k = 4,
+          iters = 1, path = pqOk))
+        (1 to 5).foreach(_ => graft.operators.Pq.republish(pqEmb,
+          col("vec_id"), col("embedding"), m = 4, subDim = 16, k = 4,
+          iters = 1, path = pqDeep))
+        val healed = graft.operators.StageAdmin.heal(s, Seq(
+          Probe("docs_postings", "postings", docPostingsPath(s, dir)),
+          Probe("docs_windows", "windows", docWindowsPath(s, dir)),
+          Probe("docs_signatures", "signatures", sigStage),
+          Probe("emb_graph_ann", "graph_ann", graphAnnIndexPath(s, dir)),
+          Probe("emb_ivf", "ivf", ivfIndexFullPath(s, dir)),
+          Probe("emb_store", "vector_store", docEmbedStorePath(s, dir)),
+          Probe("emb_pq", "pq", pqOk),
+          Probe("emb_pq_deep", "pq", pqDeep),
+          Probe("postings_stale", "postings", stalePostings),
+          Probe("ivf_fragmented", "ivf", fragIvf),
+          Probe("ivf_torn", "ivf", tornIvf),
+          Probe("store_locked", "vector_store", lockedStore),
+          Probe("postings_missing", "postings", missing)
+        ), apply = true)
+        healed.coalesce(1).write.mode("overwrite").parquet(resultPath)
+        java.nio.file.Files.createFile(java.nio.file.Paths.get(done))
       }
       s.read.parquet(resultPath).orderBy(col("name"))
     }),
@@ -3299,12 +3174,7 @@ object SparkEntry {
     // probe a 5/16 scan, exact re-rank inside. Same result as the
     // in-memory ann_lsh_multi; here the layout itself is the index.
     "q_vector_store" -> ((s, dir) => {
-      val path = stagedPath("vector_store_v1", dir)
-      this.synchronized {
-        if (!new java.io.File(path, "_SUCCESS").exists())
-          graft.operators.VectorStore.write(Tables.embeddings(s, dir),
-            col("embedding"), path)
-      }
+      val path = vectorStorePath(s, dir)
       graft.operators.VectorStore.queryL2(s, path, "embedding", "vec_id",
           QueryVec.values, 5)
         .select(col("vec_id"), col("label"), col("bucket"), col("distance"))
@@ -3317,12 +3187,7 @@ object SparkEntry {
     // re-rank runs over the filtered candidates. The oracle replays the
     // probe chain with the same WHERE.
     "q_vector_store_filtered" -> ((s, dir) => {
-      val path = stagedPath("vector_store_v1", dir)
-      this.synchronized {
-        if (!new java.io.File(path, "_SUCCESS").exists())
-          graft.operators.VectorStore.write(Tables.embeddings(s, dir),
-            col("embedding"), path)
-      }
+      val path = vectorStorePath(s, dir)
       graft.operators.VectorStore.queryL2(s, path, "embedding", "vec_id",
           QueryVec.values, 5, where = Some(col("label") === 2))
         .select(col("vec_id"), col("label"), col("bucket"), col("distance"))
@@ -3339,12 +3204,7 @@ object SparkEntry {
     // multi-probe result, so batch ≡ per-query is hash-checked.
     "q_vector_store_batch" -> ((s, dir) => {
       import s.implicits._
-      val path = stagedPath("vector_store_v1", dir)
-      this.synchronized {
-        if (!new java.io.File(path, "_SUCCESS").exists())
-          graft.operators.VectorStore.write(Tables.embeddings(s, dir),
-            col("embedding"), path)
-      }
+      val path = vectorStorePath(s, dir)
       val qs = BatchQueryIds.map(b =>
           (b.toLong, OracleGen.QueryVec.shiftedValues(b)))
         .toDF("q_id", "q_vec")
@@ -3360,15 +3220,13 @@ object SparkEntry {
     // file-counts (and task counts at 100 TB) bounded as appends accrue.
     "q_vector_store_compact" -> ((s, dir) => {
       val path = stagedPath("vector_store_compact_v1", dir)
-      this.synchronized {
-        if (!new java.io.File(path, "_SUCCESS").exists()) {
-          val emb = Tables.embeddings(s, dir)
-          graft.operators.VectorStore.write(
-            emb.filter(col("vec_id") % 2 === 0), col("embedding"), path)
-          graft.operators.VectorStore.append(
-            emb.filter(col("vec_id") % 2 === 1), col("embedding"), path)
-          graft.operators.VectorStore.compact(s, path)
-        }
+      Staging.once(path)(Staging.written(path)) {
+        val emb = Tables.embeddings(s, dir)
+        graft.operators.VectorStore.write(
+          emb.filter(col("vec_id") % 2 === 0), col("embedding"), path)
+        graft.operators.VectorStore.append(
+          emb.filter(col("vec_id") % 2 === 1), col("embedding"), path)
+        graft.operators.VectorStore.compact(s, path)
       }
       graft.operators.VectorStore.queryL2(s, path, "embedding", "vec_id",
           QueryVec.values, 5)
@@ -3383,17 +3241,15 @@ object SparkEntry {
     // SQL as q_vector_store.
     "q_vector_store_append" -> ((s, dir) => {
       val path = stagedPath("vector_store_app_v1", dir)
-      this.synchronized {
-        if (!new java.io.File(path, "_GRAFT_APPENDED").exists()) {
-          val emb = Tables.embeddings(s, dir)
-          graft.operators.VectorStore.write(
-            emb.filter(col("vec_id") % 2 === 0), col("embedding"), path)
-          graft.operators.VectorStore.append(
-            emb.filter(col("vec_id") % 2 === 1), col("embedding"), path)
-          graft.operators.VectorStore.append(
-            emb.filter(col("vec_id") % 4 === 0), col("embedding"), path)
-          new java.io.File(path, "_GRAFT_APPENDED").createNewFile()
-        }
+      Staging.once(path)(Staging.written(path, "_GRAFT_APPENDED")) {
+        val emb = Tables.embeddings(s, dir)
+        graft.operators.VectorStore.write(
+          emb.filter(col("vec_id") % 2 === 0), col("embedding"), path)
+        graft.operators.VectorStore.append(
+          emb.filter(col("vec_id") % 2 === 1), col("embedding"), path)
+        graft.operators.VectorStore.append(
+          emb.filter(col("vec_id") % 4 === 0), col("embedding"), path)
+        new java.io.File(path, "_GRAFT_APPENDED").createNewFile()
       }
       graft.operators.VectorStore.queryL2(s, path, "embedding", "vec_id",
           QueryVec.values, 5)
@@ -3407,16 +3263,14 @@ object SparkEntry {
     // the oracle computes directly.
     "q_vector_store_upsert" -> ((s, dir) => {
       val path = stagedPath("vector_store_ups_v1", dir)
-      this.synchronized {
-        if (!new java.io.File(path, "_GRAFT_UPSERTED").exists()) {
-          val emb = Tables.embeddings(s, dir)
-          graft.operators.VectorStore.write(emb, col("embedding"), path)
-          val reembedded = emb.filter(col("vec_id") % 3 === 0)
-            .select(col("vec_id"), col("label"),
-              transform(col("embedding"), x => (x * lit(0.5)).cast("float")).as("embedding"))
-          graft.operators.VectorStore.upsert(reembedded, col("embedding"), path)
-          new java.io.File(path, "_GRAFT_UPSERTED").createNewFile()
-        }
+      Staging.once(path)(Staging.written(path, "_GRAFT_UPSERTED")) {
+        val emb = Tables.embeddings(s, dir)
+        graft.operators.VectorStore.write(emb, col("embedding"), path)
+        val reembedded = emb.filter(col("vec_id") % 3 === 0)
+          .select(col("vec_id"), col("label"),
+            transform(col("embedding"), x => (x * lit(0.5)).cast("float")).as("embedding"))
+        graft.operators.VectorStore.upsert(reembedded, col("embedding"), path)
+        new java.io.File(path, "_GRAFT_UPSERTED").createNewFile()
       }
       graft.operators.VectorStore.queryL2(s, path, "embedding", "vec_id",
           QueryVec.values, 5)
@@ -3436,25 +3290,23 @@ object SparkEntry {
     // relational algebra over the source table.
     "q_vector_store_lifecycle" -> ((s, dir) => {
       val path = stagedPath("vector_store_life_v1", dir)
-      this.synchronized {
-        if (!new java.io.File(path, "_GRAFT_LIFECYCLE").exists()) {
-          val emb = Tables.embeddings(s, dir)
-          graft.operators.VectorStore.write(
-            emb.filter(col("vec_id") % 2 === 0), col("embedding"), path)
-          graft.operators.VectorStore.append(
-            emb.filter(col("vec_id") % 2 === 1), col("embedding"), path)
-          // replayed append: idempotent on vec_id, must be a no-op
-          graft.operators.VectorStore.append(emb, col("embedding"), path)
-          val reemb = emb.filter(col("vec_id") % 3 === 0)
-            .select(col("vec_id"), (col("label") + lit(1000)).as("label"),
-              transform(col("embedding"), x => (x * lit(0.5)).cast("float"))
-                .as("embedding"))
-          graft.operators.VectorStore.upsert(reemb, col("embedding"), path)
-          graft.operators.VectorStore.delete(s, path,
-            emb.filter(col("vec_id") % 4 === 0).select(col("vec_id")))
-          graft.operators.VectorStore.compact(s, path)
-          new java.io.File(path, "_GRAFT_LIFECYCLE").createNewFile()
-        }
+      Staging.once(path)(Staging.written(path, "_GRAFT_LIFECYCLE")) {
+        val emb = Tables.embeddings(s, dir)
+        graft.operators.VectorStore.write(
+          emb.filter(col("vec_id") % 2 === 0), col("embedding"), path)
+        graft.operators.VectorStore.append(
+          emb.filter(col("vec_id") % 2 === 1), col("embedding"), path)
+        // replayed append: idempotent on vec_id, must be a no-op
+        graft.operators.VectorStore.append(emb, col("embedding"), path)
+        val reemb = emb.filter(col("vec_id") % 3 === 0)
+          .select(col("vec_id"), (col("label") + lit(1000)).as("label"),
+            transform(col("embedding"), x => (x * lit(0.5)).cast("float"))
+              .as("embedding"))
+        graft.operators.VectorStore.upsert(reemb, col("embedding"), path)
+        graft.operators.VectorStore.delete(s, path,
+          emb.filter(col("vec_id") % 4 === 0).select(col("vec_id")))
+        graft.operators.VectorStore.compact(s, path)
+        new java.io.File(path, "_GRAFT_LIFECYCLE").createNewFile()
       }
       val probe = graft.operators.VectorStore.queryL2(s, path, "embedding",
           "vec_id", QueryVec.values, 5)
@@ -3485,21 +3337,19 @@ object SparkEntry {
     // and label/vector changes appearing only from their version on.
     "q_vector_store_timetravel" -> ((s, dir) => {
       val path = stagedPath("vector_store_tt_v1", dir)
-      this.synchronized {
-        if (!new java.io.File(path, "_GRAFT_TT").exists()) {
-          val emb = Tables.embeddings(s, dir)
-          graft.operators.VectorStore.write(emb, col("embedding"), path,
-            retainHistory = true)
-          val reemb = emb.filter(col("vec_id") % 3 === 0)
-            .select(col("vec_id"), (col("label") + lit(1000)).as("label"),
-              transform(col("embedding"), x => (x * lit(0.5)).cast("float"))
-                .as("embedding"))
-          graft.operators.VectorStore.upsert(reemb, col("embedding"), path)
-          graft.operators.VectorStore.delete(s, path,
-            emb.filter(col("vec_id") % 4 === 0).select(col("vec_id")))
-          graft.operators.VectorStore.compact(s, path)
-          new java.io.File(path, "_GRAFT_TT").createNewFile()
-        }
+      Staging.once(path)(Staging.written(path, "_GRAFT_TT")) {
+        val emb = Tables.embeddings(s, dir)
+        graft.operators.VectorStore.write(emb, col("embedding"), path,
+          retainHistory = true)
+        val reemb = emb.filter(col("vec_id") % 3 === 0)
+          .select(col("vec_id"), (col("label") + lit(1000)).as("label"),
+            transform(col("embedding"), x => (x * lit(0.5)).cast("float"))
+              .as("embedding"))
+        graft.operators.VectorStore.upsert(reemb, col("embedding"), path)
+        graft.operators.VectorStore.delete(s, path,
+          emb.filter(col("vec_id") % 4 === 0).select(col("vec_id")))
+        graft.operators.VectorStore.compact(s, path)
+        new java.io.File(path, "_GRAFT_TT").createNewFile()
       }
       require(graft.operators.VectorStore.currentVersion(path) == 3L,
         "timetravel store must have exactly versions 0..3")
@@ -3529,22 +3379,20 @@ object SparkEntry {
     // actually shrank to the single dir the retained range needs.
     "q_vector_store_retain" -> ((s, dir) => {
       val path = stagedPath("vector_store_retain_v1", dir)
-      this.synchronized {
-        if (!new java.io.File(path, "_GRAFT_RETAINED").exists()) {
-          val emb = Tables.embeddings(s, dir)
-          graft.operators.VectorStore.write(emb, col("embedding"), path,
-            retainHistory = true)
-          val reemb = emb.filter(col("vec_id") % 3 === 0)
-            .select(col("vec_id"), (col("label") + lit(1000)).as("label"),
-              transform(col("embedding"), x => (x * lit(0.5)).cast("float"))
-                .as("embedding"))
-          graft.operators.VectorStore.upsert(reemb, col("embedding"), path)
-          graft.operators.VectorStore.delete(s, path,
-            emb.filter(col("vec_id") % 4 === 0).select(col("vec_id")))
-          graft.operators.VectorStore.compact(s, path)
-          graft.operators.VectorStore.retain(path, keep = 2)
-          new java.io.File(path, "_GRAFT_RETAINED").createNewFile()
-        }
+      Staging.once(path)(Staging.written(path, "_GRAFT_RETAINED")) {
+        val emb = Tables.embeddings(s, dir)
+        graft.operators.VectorStore.write(emb, col("embedding"), path,
+          retainHistory = true)
+        val reemb = emb.filter(col("vec_id") % 3 === 0)
+          .select(col("vec_id"), (col("label") + lit(1000)).as("label"),
+            transform(col("embedding"), x => (x * lit(0.5)).cast("float"))
+              .as("embedding"))
+        graft.operators.VectorStore.upsert(reemb, col("embedding"), path)
+        graft.operators.VectorStore.delete(s, path,
+          emb.filter(col("vec_id") % 4 === 0).select(col("vec_id")))
+        graft.operators.VectorStore.compact(s, path)
+        graft.operators.VectorStore.retain(path, keep = 2)
+        new java.io.File(path, "_GRAFT_RETAINED").createNewFile()
       }
       val floorV = graft.operators.VectorStore.retentionFloor(path)
       val refused = (0L until floorV).count { v =>
@@ -3574,14 +3422,12 @@ object SparkEntry {
 
     "q_vector_store_delete" -> ((s, dir) => {
       val path = stagedPath("vector_store_del_v1", dir)
-      this.synchronized {
-        if (!new java.io.File(path, "_GRAFT_DELETED").exists()) {
-          val emb = Tables.embeddings(s, dir)
-          graft.operators.VectorStore.write(emb, col("embedding"), path)
-          graft.operators.VectorStore.delete(s, path,
-            emb.filter(col("vec_id") % 4 === 0).select(col("vec_id")))
-          new java.io.File(path, "_GRAFT_DELETED").createNewFile()
-        }
+      Staging.once(path)(Staging.written(path, "_GRAFT_DELETED")) {
+        val emb = Tables.embeddings(s, dir)
+        graft.operators.VectorStore.write(emb, col("embedding"), path)
+        graft.operators.VectorStore.delete(s, path,
+          emb.filter(col("vec_id") % 4 === 0).select(col("vec_id")))
+        new java.io.File(path, "_GRAFT_DELETED").createNewFile()
       }
       val probe = graft.operators.VectorStore.queryL2(s, path, "embedding",
           "vec_id", QueryVec.values, 5)
@@ -3601,34 +3447,32 @@ object SparkEntry {
     // tore a bucket hash-mismatches.
     "q_vector_store_recover" -> ((s, dir) => {
       val path = stagedPath("vector_store_rec_v2", dir)
-      this.synchronized {
-        if (!new java.io.File(path, "_GRAFT_RECOVERED").exists()) {
-          import java.nio.file.{Files, Paths, StandardCopyOption}
-          import scala.jdk.CollectionConverters._
-          val emb = Tables.embeddings(s, dir)
-          graft.operators.VectorStore.write(emb, col("embedding"), path)
-          val store = s.read.parquet(path)
-          val victims = emb.filter(col("vec_id") % 4 === 0).select(col("vec_id"))
-          val affected = store.join(victims, Seq("vec_id"), "left_semi")
-            .select(col("bucket")).distinct().collect()
-            .map(_.getInt(0)).toSeq.sorted
-          val tmp = path + "__deleting"
-          store.filter(col("bucket").isin(affected: _*))
-            .join(victims, Seq("vec_id"), "left_anti")
-            .write.mode("overwrite").partitionBy("bucket").parquet(tmp)
-          affected.foreach { b =>
-            val src = Paths.get(tmp, s"bucket=$b")
-            if (!Files.exists(src)) Files.createDirectories(src)
-          }
-          val intentTmp = Paths.get(path, "_COMMIT_STAGING")
-          Files.write(intentTmp,
-            ("__deleting" +: "-" +: affected.map(_.toString)).asJava)
-          graft.tables.Staging.atomicPublishFresh(
-            intentTmp, Paths.get(path, "_COMMIT"))
-          // the writer dies here: intent logged, nothing swapped yet
-          graft.operators.VectorStore.recover(path)
-          new java.io.File(path, "_GRAFT_RECOVERED").createNewFile()
+      Staging.once(path)(Staging.written(path, "_GRAFT_RECOVERED")) {
+        import java.nio.file.{Files, Paths, StandardCopyOption}
+        import scala.jdk.CollectionConverters._
+        val emb = Tables.embeddings(s, dir)
+        graft.operators.VectorStore.write(emb, col("embedding"), path)
+        val store = s.read.parquet(path)
+        val victims = emb.filter(col("vec_id") % 4 === 0).select(col("vec_id"))
+        val affected = store.join(victims, Seq("vec_id"), "left_semi")
+          .select(col("bucket")).distinct().collect()
+          .map(_.getInt(0)).toSeq.sorted
+        val tmp = path + "__deleting"
+        store.filter(col("bucket").isin(affected: _*))
+          .join(victims, Seq("vec_id"), "left_anti")
+          .write.mode("overwrite").partitionBy("bucket").parquet(tmp)
+        affected.foreach { b =>
+          val src = Paths.get(tmp, s"bucket=$b")
+          if (!Files.exists(src)) Files.createDirectories(src)
         }
+        val intentTmp = Paths.get(path, "_COMMIT_STAGING")
+        Files.write(intentTmp,
+          ("__deleting" +: "-" +: affected.map(_.toString)).asJava)
+        Staging.atomicPublishFresh(
+          intentTmp, Paths.get(path, "_COMMIT"))
+        // the writer dies here: intent logged, nothing swapped yet
+        graft.operators.VectorStore.recover(path)
+        new java.io.File(path, "_GRAFT_RECOVERED").createNewFile()
       }
       val probe = graft.operators.VectorStore.queryL2(s, path, "embedding",
           "vec_id", QueryVec.values, 5)
@@ -3823,15 +3667,13 @@ object SparkEntry {
     // dir; the measured query is the pruned integer-dot top-k.
     "q_vector_store_quantized" -> ((s, dir) => {
       val path = stagedPath("vector_store_q8_v1", dir)
-      this.synchronized {
-        if (!new java.io.File(path, "_SUCCESS").exists()) {
-          Tables.embeddings(s, dir)
-            .withColumn("maxabs", Quantize.maxAbs(col("embedding")))
-            .select(col("vec_id"), col("label"), col("maxabs"),
-              Quantize.int8(col("embedding"), col("maxabs")).as("codes"),
-              Ann.bucketOf(col("embedding"), 4, 64).as("bucket"))
-            .write.mode("overwrite").partitionBy("bucket").parquet(path)
-        }
+      Staging.once(path)(Staging.written(path)) {
+        Tables.embeddings(s, dir)
+          .withColumn("maxabs", Quantize.maxAbs(col("embedding")))
+          .select(col("vec_id"), col("label"), col("maxabs"),
+            Quantize.int8(col("embedding"), col("maxabs")).as("codes"),
+            Ann.bucketOf(col("embedding"), 4, 64).as("bucket"))
+          .write.mode("overwrite").partitionBy("bucket").parquet(path)
       }
       val (codes, qMaxAbs) = Quantize.quantizeQuery(QueryVec.values)
       val probes = Ann.probesOf(QueryVec.values, 4)
@@ -4822,11 +4664,7 @@ object SparkEntry {
     // planted suffix-copies confirm at distance <= 16; band-collision
     // false positives don't.
     "q_editdist_refine" -> ((s, dir) => {
-      val stage = stagedPath("minhash_sigs_v2", dir)
-      this.synchronized {
-        if (!new java.io.File(stage, "_SUCCESS").exists())
-          Dedup.stageMinhashSignatures(nearDupCorpus(s, dir), col("id"), col("text"), stage)
-      }
+      val stage = minhashSigsPath(s, dir)
       val pairs = Dedup.minhashPairsFromStage(s, stage, maxBucket = 50)
         .select(col("a_id"), col("b_id"))
       val corpus = nearDupCorpus(s, dir)
@@ -4885,11 +4723,7 @@ object SparkEntry {
     // structurally zero here, and the oracle recomputes rather than
     // assumes it.
     "q_split_grouped" -> ((s, dir) => {
-      val stage = stagedPath("minhash_sigs_v2", dir)
-      this.synchronized {
-        if (!new java.io.File(stage, "_SUCCESS").exists())
-          Dedup.stageMinhashSignatures(nearDupCorpus(s, dir), col("id"), col("text"), stage)
-      }
+      val stage = minhashSigsPath(s, dir)
       val pairs = Dedup.minhashPairsFromStage(s, stage, maxBucket = 50)
         .select(col("a_id"), col("b_id"))
       val comps = Dedup.connectedComponents(pairs)
@@ -5366,12 +5200,7 @@ object SparkEntry {
           ivfIndexFullPath(s, dir), vecBatch(n), k = 10, nprobe = 2,
           pruneLiteralLimit = 0)),
         ("store", n => {
-          val path = stagedPath("vector_store_v1", dir)
-          this.synchronized {
-            if (!new java.io.File(path, "_SUCCESS").exists())
-              graft.operators.VectorStore.write(Tables.embeddings(s, dir),
-                col("embedding"), path)
-          }
+          val path = vectorStorePath(s, dir)
           graft.operators.VectorStore.queryL2Batch(s, path, "embedding",
             "vec_id", vecBatch(n), k = 10, pruneLiteralLimit = 0)
         }))
@@ -5423,32 +5252,25 @@ object SparkEntry {
     // the query itself also asserts the policy actually FIRED (and that
     // a fresh stage does not).
     "q_postings_autocompact" -> ((s, dir) => {
-      val stage = stagedPath("doc_postings_autoc_v1", dir)
-      this.synchronized {
-        val pending = java.nio.file.Paths.get(stage + "_AUTOC_PENDING")
-        if (!graft.operators.Retrieval.postingsExist(stage) ||
-            java.nio.file.Files.exists(pending)) {
-          java.nio.file.Files.deleteIfExists(pending)
-          java.nio.file.Files.createFile(pending)
-          val docs = Tables.documents(s, dir)
-          graft.operators.Retrieval.stagePostings(
-            docs.filter(pmod(col("doc_id"), lit(3)) === 1),
-            col("doc_id"), col("text"), stage)
-          require(!graft.operators.Retrieval.compactIfStale(s, stage),
-            "a fresh stage has no stale rows — the policy must not fire")
-          graft.operators.Retrieval.appendPostings(
-            docs.filter(pmod(col("doc_id"), lit(3)) === 2),
-            col("doc_id"), col("text"), stage)
-          // a same-sized second corpus wave supersedes ~every touched
-          // token's rows — well past the 5% threshold used here
-          require(graft.operators.Retrieval.compactIfStale(s, stage, 0.05),
-            "the policy must fire once the stale fraction crosses the threshold")
-          graft.operators.Retrieval.appendPostings(
-            docs.filter(pmod(col("doc_id"), lit(3)) === 0),
-            col("doc_id"), col("text"), stage)
-          graft.operators.Retrieval.compactIfStale(s, stage, 0.05)
-          java.nio.file.Files.delete(pending)
-        }
+      val stage = stagedPath("doc_postings_autoc_v2", dir)
+      Staging.once(stage)(graft.operators.Retrieval.postingsExist(stage)) {
+        val docs = Tables.documents(s, dir)
+        graft.operators.Retrieval.stagePostings(
+          docs.filter(pmod(col("doc_id"), lit(3)) === 1),
+          col("doc_id"), col("text"), stage)
+        require(!graft.operators.Retrieval.compactIfStale(s, stage),
+          "a fresh stage has no stale rows — the policy must not fire")
+        graft.operators.Retrieval.appendPostings(
+          docs.filter(pmod(col("doc_id"), lit(3)) === 2),
+          col("doc_id"), col("text"), stage)
+        // a same-sized second corpus wave supersedes ~every touched
+        // token's rows — well past the 5% threshold used here
+        require(graft.operators.Retrieval.compactIfStale(s, stage, 0.05),
+          "the policy must fire once the stale fraction crosses the threshold")
+        graft.operators.Retrieval.appendPostings(
+          docs.filter(pmod(col("doc_id"), lit(3)) === 0),
+          col("doc_id"), col("text"), stage)
+        graft.operators.Retrieval.compactIfStale(s, stage, 0.05)
       }
       graft.operators.Retrieval.bm25FromStage(s, stage,
           RagQuery.split(" ").toSeq)
@@ -5602,27 +5424,20 @@ object SparkEntry {
     // the oracle is the same surviving-corpus replay as
     // q_windows_delete.
     "q_windows_autocompact" -> ((s, dir) => {
-      val stage = stagedPath("doc_windows_autoc_v1", dir)
-      this.synchronized {
-        val pending = java.nio.file.Paths.get(stage + "_AUTOC_PENDING")
-        if (!graft.operators.Retrieval.windowsExist(stage) ||
-            java.nio.file.Files.exists(pending)) {
-          java.nio.file.Files.deleteIfExists(pending)
-          java.nio.file.Files.createFile(pending)
-          val docs = Tables.documents(s, dir)
-          graft.operators.Retrieval.stageWindows(docs,
-            col("doc_id"), col("text"), stage)
-          require(!graft.operators.Retrieval.compactWindowsIfStale(s, stage),
-            "a fresh window stage has no stale rows — the policy must not fire")
-          graft.operators.Retrieval.deleteWindows(
-            docs.filter(pmod(col("doc_id"), lit(3)) === 0)
-              .select(col("doc_id")), stage)
-          require(graft.operators.Retrieval.compactWindowsIfStale(s, stage, 0.05),
-            "the policy must fire once the tombstoned fraction crosses the threshold")
-          require(!graft.operators.Retrieval.compactWindowsIfStale(s, stage, 0.05),
-            "a just-compacted stage is back at G=0 — the policy must not re-fire")
-          java.nio.file.Files.delete(pending)
-        }
+      val stage = stagedPath("doc_windows_autoc_v2", dir)
+      Staging.once(stage)(graft.operators.Retrieval.windowsExist(stage)) {
+        val docs = Tables.documents(s, dir)
+        graft.operators.Retrieval.stageWindows(docs,
+          col("doc_id"), col("text"), stage)
+        require(!graft.operators.Retrieval.compactWindowsIfStale(s, stage),
+          "a fresh window stage has no stale rows — the policy must not fire")
+        graft.operators.Retrieval.deleteWindows(
+          docs.filter(pmod(col("doc_id"), lit(3)) === 0)
+            .select(col("doc_id")), stage)
+        require(graft.operators.Retrieval.compactWindowsIfStale(s, stage, 0.05),
+          "the policy must fire once the tombstoned fraction crosses the threshold")
+        require(!graft.operators.Retrieval.compactWindowsIfStale(s, stage, 0.05),
+          "a just-compacted stage is back at G=0 — the policy must not re-fire")
       }
       graft.operators.Retrieval.maxSimPrunedFromStage(s, stage,
           RagQuery.split(" ").toSeq)
@@ -6190,26 +6005,18 @@ object SparkEntry {
     // corpus — the same replay as q_pq_republish. The refusal of
     // below-floor loads and the footprint shrink are asserted in PqSpec.
     "q_pq_retain" -> ((s, dir) => {
-      val path = stagedPath("pq_books_retain_v1", dir)
-      this.synchronized {
-        val pending = java.nio.file.Paths.get(path + "_RETAIN_PENDING")
-        if (Pq.retentionFloor(path) < 3L ||
-            java.nio.file.Files.exists(pending)) {
-          java.nio.file.Files.deleteIfExists(pending)
-          java.nio.file.Files.createFile(pending)
-          graft.tables.Staging.deleteRec(path)
-          val emb = Tables.embeddings(s, dir)
-          Pq.republish(emb, col("vec_id"), col("embedding"),
-            m = 8, subDim = 8, k = 16, iters = 2, path)
-          Pq.republish(emb.filter(pmod(col("vec_id"), lit(3)) === 0),
-            col("vec_id"), col("embedding"),
-            m = 8, subDim = 8, k = 16, iters = 2, path)
-          Pq.republish(emb.filter(pmod(col("vec_id"), lit(2)) === 0),
-            col("vec_id"), col("embedding"),
-            m = 8, subDim = 8, k = 16, iters = 2, path)
-          Pq.retain(path, keep = 1)
-          java.nio.file.Files.delete(pending)
-        }
+      val path = stagedPath("pq_books_retain_v2", dir)
+      Staging.once(path)(Pq.retentionFloor(path) >= 3L) {
+        val emb = Tables.embeddings(s, dir)
+        Pq.republish(emb, col("vec_id"), col("embedding"),
+          m = 8, subDim = 8, k = 16, iters = 2, path)
+        Pq.republish(emb.filter(pmod(col("vec_id"), lit(3)) === 0),
+          col("vec_id"), col("embedding"),
+          m = 8, subDim = 8, k = 16, iters = 2, path)
+        Pq.republish(emb.filter(pmod(col("vec_id"), lit(2)) === 0),
+          col("vec_id"), col("embedding"),
+          m = 8, subDim = 8, k = 16, iters = 2, path)
+        Pq.retain(path, keep = 1)
       }
       val refreshed = Tables.embeddings(s, dir)
         .filter(pmod(col("vec_id"), lit(2)) === 0)
@@ -6236,23 +6043,14 @@ object SparkEntry {
     }),
 
     "q_pq_republish" -> ((s, dir) => {
-      val path = stagedPath("pq_books_repub_v1", dir)
-      this.synchronized {
-        // marker OUTSIDE the stage dir, bracketing both publishes
-        val pending = java.nio.file.Paths.get(path + "_REPUB_PENDING")
-        if (Pq.currentVersion(path) < 2L ||
-            java.nio.file.Files.exists(pending)) {
-          java.nio.file.Files.deleteIfExists(pending)
-          java.nio.file.Files.createFile(pending)
-          graft.tables.Staging.deleteRec(path)
-          val emb = Tables.embeddings(s, dir)
-          Pq.republish(emb, col("vec_id"), col("embedding"),
-            m = 8, subDim = 8, k = 16, iters = 2, path)
-          Pq.republish(emb.filter(pmod(col("vec_id"), lit(2)) === 0),
-            col("vec_id"), col("embedding"),
-            m = 8, subDim = 8, k = 16, iters = 2, path)
-          java.nio.file.Files.delete(pending)
-        }
+      val path = stagedPath("pq_books_repub_v2", dir)
+      Staging.once(path)(Pq.currentVersion(path) >= 2L) {
+        val emb = Tables.embeddings(s, dir)
+        Pq.republish(emb, col("vec_id"), col("embedding"),
+          m = 8, subDim = 8, k = 16, iters = 2, path)
+        Pq.republish(emb.filter(pmod(col("vec_id"), lit(2)) === 0),
+          col("vec_id"), col("embedding"),
+          m = 8, subDim = 8, k = 16, iters = 2, path)
       }
       val refreshed = Tables.embeddings(s, dir)
         .filter(pmod(col("vec_id"), lit(2)) === 0)
@@ -6894,27 +6692,26 @@ object SparkEntry {
     // staging, content-fingerprinted like every staged layout.
     "q_schema_evolution" -> ((s, dir) => {
       val stage = stagedPath("schema_evo_v1", dir)
-      this.synchronized {
-        if (!new java.io.File(stage, "_GRAFT_DONE").exists()) {
-          import java.nio.file.{Files, Paths}
-          import scala.jdk.CollectionConverters._
-          Files.createDirectories(Paths.get(stage))
-          val docs = Tables.documents(s, dir)
-          def writeIn(df: DataFrame, name: String): Unit = {
-            val tmp = Files.createTempDirectory("graft_evo").toString
-            df.coalesce(1).write.mode("overwrite").parquet(tmp)
-            val part = Files.list(Paths.get(tmp)).iterator().asScala
-              .find(_.getFileName.toString.endsWith(".parquet"))
-              .getOrElse(sys.error("no parquet part for schema stage"))
-            graft.tables.Staging.moveFile(part, Paths.get(stage, name))
-          }
-          writeIn(docs.filter(col("doc_id") % 2 === 0)
-            .select(col("doc_id"), col("text")), "gen1.parquet")
-          writeIn(docs.filter(col("doc_id") % 2 === 1)
-            .select(col("doc_id"), col("text"), col("lang"), col("n_chars")),
-            "gen2.parquet")
-          Files.createFile(Paths.get(stage, "_GRAFT_DONE"))
+      Staging.once(stage)(Staging.written(stage, "_GRAFT_DONE")) {
+        import java.nio.file.{Files, Paths}
+        import scala.jdk.CollectionConverters._
+        Files.createDirectories(Paths.get(stage))
+        val docs = Tables.documents(s, dir)
+        def writeIn(df: DataFrame, name: String): Unit = {
+          val tmp = Files.createTempDirectory("graft_evo").toString
+          df.coalesce(1).write.mode("overwrite").parquet(tmp)
+          val part = Files.list(Paths.get(tmp)).iterator().asScala
+            .find(_.getFileName.toString.endsWith(".parquet"))
+            .getOrElse(sys.error("no parquet part for schema stage"))
+          Staging.moveFile(part, Paths.get(stage, name))
+          Staging.deleteRec(tmp)
         }
+        writeIn(docs.filter(col("doc_id") % 2 === 0)
+          .select(col("doc_id"), col("text")), "gen1.parquet")
+        writeIn(docs.filter(col("doc_id") % 2 === 1)
+          .select(col("doc_id"), col("text"), col("lang"), col("n_chars")),
+          "gen2.parquet")
+        Files.createFile(Paths.get(stage, "_GRAFT_DONE"))
       }
       s.read.option("mergeSchema", "true").parquet(stage)
         .groupBy(coalesce(col("lang"), lit("<pre-evolution>")).as("lang2"))
@@ -6925,12 +6722,10 @@ object SparkEntry {
 
     "q_partition_prune" -> ((s, dir) => {
       val out = stagedPath("part_orders_v1", dir)
-      this.synchronized {
-        if (!new java.io.File(out, "_SUCCESS").exists()) {
-          Tables.orders(s, dir)
-            .withColumn("o_year", year(col("o_orderdate")))
-            .write.mode("overwrite").partitionBy("o_year").parquet(out)
-        }
+      Staging.once(out)(Staging.written(out)) {
+        Tables.orders(s, dir)
+          .withColumn("o_year", year(col("o_orderdate")))
+          .write.mode("overwrite").partitionBy("o_year").parquet(out)
       }
       s.read.parquet(out)
         .filter(col("o_year") === 1998)
@@ -6950,23 +6745,21 @@ object SparkEntry {
     "q_dpp_join" -> ((s, dir) => {
       val out = stagedPath("events_by_day_v1", dir)
       val dimOut = stagedPath("day_dim_v1", dir)
-      this.synchronized {
-        if (!new java.io.File(out, "_SUCCESS").exists()) {
-          Tables.events(s, dir)
-            .withColumn("day", expr("ts div 1000 div 86400000000"))
-            .write.mode("overwrite").partitionBy("day").parquet(out)
-        }
-        if (!new java.io.File(dimOut, "_SUCCESS").exists()) {
-          import s.implicits._
-          // int days match the inferred partition-column type, keeping the
-          // join key the bare partition attribute (what DPP keys on); the
-          // dim is a real parquet table so its runtime filter survives as
-          // a Filter node (a literal local relation would constant-fold
-          // and DPP would see no pruning filter to reuse)
-          (19723 to 19752).map(d => (d, if (d <= 19725) "keep" else "drop"))
-            .toDF("day", "tag")
-            .write.mode("overwrite").parquet(dimOut)
-        }
+      Staging.once(out)(Staging.written(out)) {
+        Tables.events(s, dir)
+          .withColumn("day", expr("ts div 1000 div 86400000000"))
+          .write.mode("overwrite").partitionBy("day").parquet(out)
+      }
+      Staging.once(dimOut)(Staging.written(dimOut)) {
+        import s.implicits._
+        // int days match the inferred partition-column type, keeping the
+        // join key the bare partition attribute (what DPP keys on); the
+        // dim is a real parquet table so its runtime filter survives as
+        // a Filter node (a literal local relation would constant-fold
+        // and DPP would see no pruning filter to reuse)
+        (19723 to 19752).map(d => (d, if (d <= 19725) "keep" else "drop"))
+          .toDF("day", "tag")
+          .write.mode("overwrite").parquet(dimOut)
       }
       val dim = s.read.parquet(dimOut)
       s.read.parquet(out)
@@ -7417,15 +7210,7 @@ object SparkEntry {
     // the gate really ran per micro-batch.
     "q_stream_dedup_gate" -> ((s0, dir) => {
       val s = graft.streaming.Streaming.streamSession(s0)
-      val sigStage = stagedPath("gate_ref_sigs_v2", dir)
-      this.synchronized {
-        if (!new java.io.File(sigStage, "_SUCCESS").exists()) {
-          val ref = Tables.documents(s, dir).filter(col("doc_id") % 10 === 0)
-            .select((col("doc_id") + 100000).as("id"),
-              concat(col("text"), lit(" zz extra token")).as("text"))
-          Dedup.stageMinhashSignatures(ref, col("id"), col("text"), sigStage)
-        }
-      }
+      val sigStage = gateRefSigsPath(s, dir)
       val src = s.readStream.schema(Tables.documents(s, dir).schema)
         .option("maxFilesPerTrigger", "1")
         .parquet(graft.streaming.Streaming.stageSplitSource(s, dir, "documents", "doc_id"))
@@ -7447,15 +7232,7 @@ object SparkEntry {
     // sequence by unrolling the three batches.
     "q_stream_dedup_absorb" -> ((s0, dir) => {
       val s = graft.streaming.Streaming.streamSession(s0)
-      val sigStage = stagedPath("gate_ref_sigs_v2", dir)
-      this.synchronized {
-        if (!new java.io.File(sigStage, "_SUCCESS").exists()) {
-          val ref = Tables.documents(s, dir).filter(col("doc_id") % 10 === 0)
-            .select((col("doc_id") + 100000).as("id"),
-              concat(col("text"), lit(" zz extra token")).as("text"))
-          Dedup.stageMinhashSignatures(ref, col("id"), col("text"), sigStage)
-        }
-      }
+      val sigStage = gateRefSigsPath(s, dir)
       val src = s.readStream.schema(Tables.documents(s, dir).schema)
         .option("maxFilesPerTrigger", "1")
         .parquet(graft.streaming.Streaming.stageSplitSource(s, dir, "documents", "doc_id"))
@@ -7583,12 +7360,7 @@ object SparkEntry {
     // chain from the embeddings table.
     "q_stream_store_serve" -> ((s0, dir) => {
       val s = graft.streaming.Streaming.streamSession(s0)
-      val path = stagedPath("vector_store_v1", dir)
-      this.synchronized {
-        if (!new java.io.File(path, "_SUCCESS").exists())
-          graft.operators.VectorStore.write(Tables.embeddings(s, dir),
-            col("embedding"), path)
-      }
+      val path = vectorStorePath(s, dir)
       val src = s.readStream.schema(Tables.embeddings(s, dir).schema)
         .option("maxFilesPerTrigger", "1")
         .parquet(graft.streaming.Streaming.stageSplitSource(s, dir,
@@ -7782,12 +7554,10 @@ object SparkEntry {
     */
   private def ivfIndexFullPath(s: SparkSession, dir: String): String = {
     val path = stagedPath("ivf_idx_full_v1", dir)
-    this.synchronized {
-      if (!graft.operators.IvfIndex.exists(path))
-        graft.operators.IvfIndex.build(Tables.embeddings(s, dir),
-          "vec_id", "embedding", path, nlist = 8, dim = 64)
+    Staging.once(path)(graft.operators.IvfIndex.exists(path)) {
+      graft.operators.IvfIndex.build(Tables.embeddings(s, dir),
+        "vec_id", "embedding", path, nlist = 8, dim = 64)
     }
-    path
   }
 
   /** Batched/streamed IVF serving replay: the shared static-centroid

@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 
 import graft.functions.TextFunctions
 import graft.sources.Mime
-import graft.tables.Tables
+import graft.tables.{Staging, Tables}
 
 /** The reference's ingestion pipelines as end-to-end builders.
   *
@@ -47,21 +47,18 @@ object Products {
     // _v1: bump when the column derivation changes; the path also embeds a
     // content fingerprint of the source dir so regenerated testdata can
     // never serve a stale staged CSV (see Staging)
-    val out = graft.tables.Staging.stagedPath("products_csv_v1", sfDir)
-    this.synchronized {
-      if (!new java.io.File(out, "_SUCCESS").exists()) {
-        Tables.part(spark, sfDir).select(
-            col("p_partkey").as("id"),
-            col("p_name").as("name"),
-            col("p_retailprice").as("price"),
-            concat(lit("img-"), col("p_partkey").cast("string")).as("img_url"),
-            col("p_brand").as("color"),
-            col("p_type").as("category"),
-            concat(lit("size "), col("p_size").cast("string")).as("description"))
-          .write.mode("overwrite").option("header", "true").csv(out)
-      }
+    val out = Staging.stagedPath("products_csv_v1", sfDir)
+    Staging.once(out)(Staging.written(out)) {
+      Tables.part(spark, sfDir).select(
+          col("p_partkey").as("id"),
+          col("p_name").as("name"),
+          col("p_retailprice").as("price"),
+          concat(lit("img-"), col("p_partkey").cast("string")).as("img_url"),
+          col("p_brand").as("color"),
+          col("p_type").as("category"),
+          concat(lit("size "), col("p_size").cast("string")).as("description"))
+        .write.mode("overwrite").option("header", "true").csv(out)
     }
-    out
   }
 
   /** raw messages (id, raw) → email_texts (id, document, embedding): D3. */

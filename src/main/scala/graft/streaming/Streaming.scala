@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, Trigger}
 
 import graft.functions.TextFunctions
+import graft.tables.Staging
 
 /** Structured Streaming surface — the incremental twin of the batch
   * pipelines. The reference's email fetch is a one-shot batch pull of the
@@ -96,7 +97,7 @@ object Streaming {
     Files.createDirectories(dir)
     val dst = dir.resolve(src.getFileName)
     if (!Files.exists(dst))
-      graft.tables.Staging.copyFile(src, dst, replace = true)
+      Staging.copyFile(src, dst, replace = true)
     dir.toString
   }
 
@@ -114,42 +115,15 @@ object Streaming {
   def stageSplitSource(s: org.apache.spark.sql.SparkSession, sfDir: String,
                        table: String, orderCol: String,
                        splits: Int = 3): String = {
-    import java.nio.file.{Files, Paths}
     // the cache key carries the ORDER column too: the same table split by
     // a different column is a different source (range boundaries differ)
-    val out = graft.tables.Staging.stagedPath(
+    val out = Staging.stagedPath(
       s"stream_${table}_${orderCol}_${splits}f_v2", sfDir)
-    this.synchronized {
-      if (!Files.exists(Paths.get(out, "_GRAFT_DONE"))) {
-        val outP = Paths.get(out)
-        Files.createDirectories(outP)
-        val df = graft.tables.Tables.tableNormalized(s, sfDir, table)
-        val mm = df.agg(min(col(orderCol)).cast("long"),
-          max(col(orderCol)).cast("long")).head()
-        val (mn, mx) = (mm.getLong(0), mm.getLong(1))
-        val width = (mx - mn) / splits + 1
-        val base = System.currentTimeMillis()
-        (0 until splits).foreach { i =>
-          val lo = mn + width * i
-          val tmp = Files.createTempDirectory("graft_split").toString
-          df.filter(col(orderCol).cast("long") >= lo &&
-              (if (i == splits - 1) lit(true)
-               else col(orderCol).cast("long") < lo + width))
-            .coalesce(1).write.mode("overwrite").parquet(tmp)
-          import scala.jdk.CollectionConverters._
-          val part = Files.list(Paths.get(tmp)).iterator().asScala
-            .find(_.getFileName.toString.endsWith(".parquet"))
-            .getOrElse(sys.error(s"no parquet part written for split $i"))
-          val dst = outP.resolve(f"split-$i%04d.parquet")
-          graft.tables.Staging.moveFile(part, dst)
-          // strictly increasing mtimes pin the source's replay order
-          Files.setLastModifiedTime(dst,
-            java.nio.file.attribute.FileTime.fromMillis(base + i * 2000L))
-        }
-        Files.createFile(Paths.get(out, "_GRAFT_DONE"))
-      }
+    Staging.once(out)(Staging.written(out, Done)) {
+      val df = graft.tables.Tables.tableNormalized(s, sfDir, table)
+      val r = orderRanges(df, orderCol, splits)
+      writeSplits(out, (0 until splits).map(i => df.filter(r.slice(i))))
     }
-    out
   }
 
   /** Stage an EXPLICIT slice sequence as a one-file-per-micro-batch
@@ -159,30 +133,8 @@ object Streaming {
     * `maxFilesPerTrigger=1` replays the slices in order, one micro-batch
     * each. Cached behind `_GRAFT_DONE` like every staged source.
     */
-  def stageSlicesSource(slices: Seq[DataFrame], out: String): String = {
-    import java.nio.file.{Files, Paths}
-    this.synchronized {
-      if (!Files.exists(Paths.get(out, "_GRAFT_DONE"))) {
-        val outP = Paths.get(out)
-        Files.createDirectories(outP)
-        val base = System.currentTimeMillis()
-        slices.zipWithIndex.foreach { case (df, i) =>
-          val tmp = Files.createTempDirectory("graft_split").toString
-          df.coalesce(1).write.mode("overwrite").parquet(tmp)
-          import scala.jdk.CollectionConverters._
-          val part = Files.list(Paths.get(tmp)).iterator().asScala
-            .find(_.getFileName.toString.endsWith(".parquet"))
-            .getOrElse(sys.error(s"no parquet part written for slice $i"))
-          val dst = outP.resolve(f"split-$i%04d.parquet")
-          graft.tables.Staging.moveFile(part, dst)
-          Files.setLastModifiedTime(dst,
-            java.nio.file.attribute.FileTime.fromMillis(base + i * 2000L))
-        }
-        Files.createFile(Paths.get(out, "_GRAFT_DONE"))
-      }
-    }
-    out
-  }
+  def stageSlicesSource(slices: Seq[DataFrame], out: String): String =
+    Staging.once(out)(Staging.written(out, Done))(writeSplits(out, slices))
 
   /** stageSplitSource variant that PLANTS RETRANSMISSIONS ONE BATCH
     * LATE: file k holds range-split k PLUS a full identical copy of
@@ -212,40 +164,18 @@ object Streaming {
                                   orderCol: String,
                                   splits: Int = 3): (String, Long) = {
     import java.nio.file.{Files, Paths}
-    val out = graft.tables.Staging.stagedPath(
+    val out = Staging.stagedPath(
       s"stream_${table}_retrans_${splits}f_v2", sfDir)
-    this.synchronized {
-      if (!Files.exists(Paths.get(out, "_GRAFT_DONE"))) {
-        val outP = Paths.get(out)
-        Files.createDirectories(outP)
-        val df = graft.tables.Tables.tableNormalized(s, sfDir, table)
-        val mm = df.agg(min(col(orderCol)).cast("long"),
-          max(col(orderCol)).cast("long")).head()
-        val (mn, mx) = (mm.getLong(0), mm.getLong(1))
-        val width = (mx - mn) / splits + 1
-        def slice(i: Int) = df.filter(col(orderCol).cast("long") >= mn + width * i &&
-          (if (i == splits - 1) lit(true)
-           else col(orderCol).cast("long") < mn + width * (i + 1)))
-        val base = System.currentTimeMillis()
-        (0 to splits).foreach { k =>
-          val part =
-            if (k == 0) slice(0)
-            else if (k == splits) slice(splits - 1)
-            else slice(k).unionAll(slice(k - 1))
-          val tmp = Files.createTempDirectory("graft_split").toString
-          part.coalesce(1).write.mode("overwrite").parquet(tmp)
-          import scala.jdk.CollectionConverters._
-          val f = Files.list(Paths.get(tmp)).iterator().asScala
-            .find(_.getFileName.toString.endsWith(".parquet"))
-            .getOrElse(sys.error(s"no parquet part written for file $k"))
-          val dst = outP.resolve(f"split-$k%04d.parquet")
-          graft.tables.Staging.moveFile(f, dst)
-          Files.setLastModifiedTime(dst,
-            java.nio.file.attribute.FileTime.fromMillis(base + k * 2000L))
-        }
-        Files.writeString(Paths.get(out, "_GRAFT_WIDTH"), width.toString)
-        Files.createFile(Paths.get(out, "_GRAFT_DONE"))
-      }
+    Staging.once(out)(Staging.written(out, Done)) {
+      val df = graft.tables.Tables.tableNormalized(s, sfDir, table)
+      val r = orderRanges(df, orderCol, splits)
+      def slice(i: Int) = df.filter(r.slice(i))
+      writeSplits(out, (0 to splits).map { k =>
+        if (k == 0) slice(0)
+        else if (k == splits) slice(splits - 1)
+        else slice(k).unionAll(slice(k - 1))
+      })
+      Files.writeString(Paths.get(out, "_GRAFT_WIDTH"), r.width.toString)
     }
     val width = Files.readString(Paths.get(out, "_GRAFT_WIDTH")).trim.toLong
     (out, width)
@@ -264,44 +194,17 @@ object Streaming {
   def stageSplitSourceWithLate(s: org.apache.spark.sql.SparkSession,
                                sfDir: String, table: String, orderCol: String,
                                lateIdCol: String, splits: Int = 3): String = {
-    import java.nio.file.{Files, Paths}
-    val out = graft.tables.Staging.stagedPath(
+    val out = Staging.stagedPath(
       s"stream_${table}_late_${splits}f_v2", sfDir)
-    this.synchronized {
-      if (!Files.exists(Paths.get(out, "_GRAFT_DONE"))) {
-        val outP = Paths.get(out)
-        Files.createDirectories(outP)
-        val df = graft.tables.Tables.tableNormalized(s, sfDir, table)
-        val mm = df.agg(min(col(orderCol)).cast("long"),
-          max(col(orderCol)).cast("long")).head()
-        val (mn, mx) = (mm.getLong(0), mm.getLong(1))
-        val width = (mx - mn) / splits + 1
-        val isLate = col(orderCol).cast("long") < mn + width &&
-          pmod(col(lateIdCol), lit(5)) === 0
-        val base = System.currentTimeMillis()
-        def writeSplit(i: Int, part: org.apache.spark.sql.DataFrame): Unit = {
-          import scala.jdk.CollectionConverters._
-          val tmp = Files.createTempDirectory("graft_split").toString
-          part.coalesce(1).write.mode("overwrite").parquet(tmp)
-          val f = Files.list(Paths.get(tmp)).iterator().asScala
-            .find(_.getFileName.toString.endsWith(".parquet"))
-            .getOrElse(sys.error(s"no parquet part written for split $i"))
-          val dst = outP.resolve(f"split-$i%04d.parquet")
-          graft.tables.Staging.moveFile(f, dst)
-          Files.setLastModifiedTime(dst,
-            java.nio.file.attribute.FileTime.fromMillis(base + i * 2000L))
-        }
-        (0 until splits).foreach { i =>
-          val lo = mn + width * i
-          writeSplit(i, df.filter(col(orderCol).cast("long") >= lo &&
-              (if (i == splits - 1) lit(true)
-               else col(orderCol).cast("long") < lo + width) && !isLate))
-        }
-        writeSplit(splits, df.filter(isLate)) // the out-of-order tail file
-        Files.createFile(Paths.get(out, "_GRAFT_DONE"))
-      }
+    Staging.once(out)(Staging.written(out, Done)) {
+      val df = graft.tables.Tables.tableNormalized(s, sfDir, table)
+      val r = orderRanges(df, orderCol, splits)
+      val isLate = col(orderCol).cast("long") < r.lo + r.width &&
+        pmod(col(lateIdCol), lit(5)) === 0
+      // the last file is the out-of-order tail
+      writeSplits(out, (0 until splits).map(i =>
+        df.filter(r.slice(i) && !isLate)) :+ df.filter(isLate))
     }
-    out
   }
 
   /** stageSplitSource variant that APPENDS FLUSH-SENTINEL FILES: two
@@ -326,44 +229,63 @@ object Streaming {
                                 tag: String,
                                 mkSentinel: (DataFrame, Long) => DataFrame,
                                 splits: Int = 3): String = {
-    import java.nio.file.{Files, Paths}
-    val out = graft.tables.Staging.stagedPath(
+    val out = Staging.stagedPath(
       s"stream_${table}_${tag}_${splits}f_v5", sfDir)
-    this.synchronized {
-      if (!Files.exists(Paths.get(out, "_GRAFT_DONE"))) {
-        val outP = Paths.get(out)
-        Files.createDirectories(outP)
-        val df = graft.tables.Tables.tableNormalized(s, sfDir, table)
-        val mm = df.agg(min(col(orderCol)).cast("long"),
-          max(col(orderCol)).cast("long")).head()
-        val (mn, mx) = (mm.getLong(0), mm.getLong(1))
-        val width = (mx - mn) / splits + 1
-        val base = System.currentTimeMillis()
-        def writeSplit(i: Int, part: DataFrame): Unit = {
-          import scala.jdk.CollectionConverters._
-          val tmp = Files.createTempDirectory("graft_split").toString
-          part.coalesce(1).write.mode("overwrite").parquet(tmp)
-          val f = Files.list(Paths.get(tmp)).iterator().asScala
-            .find(_.getFileName.toString.endsWith(".parquet"))
-            .getOrElse(sys.error(s"no parquet part written for split $i"))
-          val dst = outP.resolve(f"split-$i%04d.parquet")
-          graft.tables.Staging.moveFile(f, dst)
-          Files.setLastModifiedTime(dst,
-            java.nio.file.attribute.FileTime.fromMillis(base + i * 2000L))
-        }
-        (0 until splits).foreach { i =>
-          val lo = mn + width * i
-          writeSplit(i, df.filter(col(orderCol).cast("long") >= lo &&
-            (if (i == splits - 1) lit(true)
-             else col(orderCol).cast("long") < lo + width)))
-        }
-        (0 until 2).foreach { j =>
-          writeSplit(splits + j, mkSentinel(df, mx + j * 3600L * 1000000000L))
-        }
-        Files.createFile(Paths.get(out, "_GRAFT_DONE"))
-      }
+    Staging.once(out)(Staging.written(out, Done)) {
+      val df = graft.tables.Tables.tableNormalized(s, sfDir, table)
+      val r = orderRanges(df, orderCol, splits)
+      writeSplits(out, (0 until splits).map(i => df.filter(r.slice(i))) ++
+        (0 until 2).map(j => mkSentinel(df, r.hi + j * 3600L * 1000000000L)))
     }
-    out
+  }
+
+  /** The done file of a staged split source. */
+  private val Done = "_GRAFT_DONE"
+
+  /** `orderCol`'s [lo, hi] range over a table, cut into `splits`
+    * ascending slices of `width` (the last one open-ended).
+    */
+  private final case class OrderRanges(orderCol: String, lo: Long, hi: Long,
+                                       splits: Int) {
+    val width: Long = (hi - lo) / splits + 1
+    def slice(i: Int): Column = {
+      val v = col(orderCol).cast("long")
+      v >= lo + width * i &&
+        (if (i == splits - 1) lit(true) else v < lo + width * (i + 1))
+    }
+  }
+
+  private def orderRanges(df: DataFrame, orderCol: String,
+                          splits: Int): OrderRanges = {
+    val mm = df.agg(min(col(orderCol)).cast("long"),
+      max(col(orderCol)).cast("long")).head()
+    OrderRanges(orderCol, mm.getLong(0), mm.getLong(1), splits)
+  }
+
+  /** THE split-source writer: part i becomes `out/split-%04d.parquet`
+    * with strictly increasing mtimes (they pin the file source's replay
+    * order), then `_GRAFT_DONE`. Each part is written as one file into
+    * `out`'s own temp sibling, moved in, and the sibling deleted.
+    */
+  private def writeSplits(out: String, parts: Seq[DataFrame]): Unit = {
+    import java.nio.file.{Files, Paths}
+    import scala.jdk.CollectionConverters._
+    val outP = Files.createDirectories(Paths.get(out))
+    val tmp = out + "_split_tmp"
+    val base = System.currentTimeMillis()
+    try parts.zipWithIndex.foreach { case (part, i) =>
+      part.coalesce(1).write.mode("overwrite").parquet(tmp)
+      val listing = Files.list(Paths.get(tmp))
+      val file = try listing.iterator().asScala
+        .find(_.getFileName.toString.endsWith(".parquet"))
+        .getOrElse(sys.error(s"no parquet part written for split $i"))
+      finally listing.close()
+      val dst = outP.resolve(f"split-$i%04d.parquet")
+      Staging.moveFile(file, dst)
+      Files.setLastModifiedTime(dst,
+        java.nio.file.attribute.FileTime.fromMillis(base + i * 2000L))
+    } finally Staging.deleteRec(tmp)
+    Files.createFile(outP.resolve(Done))
   }
 
   /** Drain a streaming DataFrame to completion through a DISTRIBUTED sink:
@@ -474,7 +396,7 @@ object Streaming {
         "declared terms broadcast assumes request-sized batches); batch " +
         "callers must use retrieveForTurnsFromStage's counted decision")
     val out = sys.props("java.io.tmpdir") + "/graft_stream_out_" + name
-    graft.tables.Staging.deleteRec(out)
+    Staging.deleteRec(out)
     // the static serving side (capped posting list + idf table) is
     // materialized ONCE before the stream starts — without the pin each
     // micro-batch re-reads and re-derives the whole stage (4 parquet
@@ -511,7 +433,7 @@ object Streaming {
     import java.nio.file.{Files, Paths}
     import java.util.Comparator
     val out = sys.props("java.io.tmpdir") + "/graft_stream_out_" + name
-    graft.tables.Staging.deleteRec(out)
+    Staging.deleteRec(out)
     val writeBatch: (Dataset[org.apache.spark.sql.Row], Long) => Unit =
       (batch, bid) => batch.withColumn("_batch_id", lit(bid))
         .write.mode("append").parquet(out)
@@ -541,7 +463,7 @@ object Streaming {
     import java.nio.file.{Files, Paths}
     import java.util.Comparator
     val out = sys.props("java.io.tmpdir") + "/graft_stream_out_" + name
-    graft.tables.Staging.deleteRec(out)
+    Staging.deleteRec(out)
     // foreachBatch is at-least-once: a retried micro-batch must replace
     // its own ledger rows, not append duplicates. Each batch overwrites a
     // directory keyed by its batch id (the id is deterministic across
@@ -578,7 +500,7 @@ object Streaming {
     import java.nio.file.{Files, Paths}
     import java.util.Comparator
     val out = sys.props("java.io.tmpdir") + "/graft_stream_out_" + name
-    graft.tables.Staging.deleteRec(out)
+    Staging.deleteRec(out)
     val writeBatch: (Dataset[org.apache.spark.sql.Row], Long) => Unit =
       (batch, bid) => {
         val b = batch.select(col("id"), col("text"))
@@ -631,7 +553,7 @@ object Streaming {
                             name: String, threshold: Double): DataFrame = {
     import java.nio.file.{Files, Paths}
     import java.util.Comparator
-    def reset(dir: String): Unit = graft.tables.Staging.deleteRec(dir)
+    def reset(dir: String): Unit = Staging.deleteRec(dir)
     val out = sys.props("java.io.tmpdir") + "/graft_stream_out_" + name
     val grow = sys.props("java.io.tmpdir") + "/graft_gate_grow_" + name
     reset(out); reset(grow)
@@ -652,7 +574,7 @@ object Streaming {
       try walk.forEach { p =>
         val t = dst.resolve(src.relativize(p))
         if (Files.isDirectory(p)) Files.createDirectories(t)
-        else graft.tables.Staging.copyFile(p, t)
+        else Staging.copyFile(p, t)
       } finally walk.close()
     }
     val writeBatch: (Dataset[org.apache.spark.sql.Row], Long) => Unit =
@@ -698,7 +620,7 @@ object Streaming {
                          numPlanes: Int = 4, dim: Int = 64): Unit = {
     import java.nio.file.{Files, Paths}
     import java.util.Comparator
-    graft.tables.Staging.deleteRec(storePath)
+    Staging.deleteRec(storePath)
     val writeBatch: (Dataset[org.apache.spark.sql.Row], Long) => Unit =
       (batch, _) =>
         if (!Files.exists(Paths.get(storePath, "_SUCCESS")))
@@ -735,7 +657,7 @@ object Streaming {
                            edgesPerBucket: Int = 3): Unit = {
     import java.nio.file.{Files, Paths}
     import java.util.Comparator
-    graft.tables.Staging.deleteRec(idxPath)
+    Staging.deleteRec(idxPath)
     val writeBatch: (Dataset[org.apache.spark.sql.Row], Long) => Unit =
       (batch, _) => {
         if (!graft.operators.GraphAnnIndex.exists(idxPath))
@@ -784,7 +706,7 @@ object Streaming {
   def drainToIvfIndex(stream: DataFrame, idxPath: String,
                       idName: String, vecColName: String,
                       nlist: Int = 8, dim: Int = 64): Unit = {
-    graft.tables.Staging.deleteRec(idxPath)
+    Staging.deleteRec(idxPath)
     val writeBatch: (Dataset[org.apache.spark.sql.Row], Long) => Unit =
       (batch, _) => {
         if (!graft.operators.IvfIndex.exists(idxPath))
@@ -834,7 +756,7 @@ object Streaming {
                            idName: String, textName: String): Unit = {
     import java.nio.file.{Files, Paths}
     import java.util.Comparator
-    graft.tables.Staging.deleteRec(stagePath)
+    Staging.deleteRec(stagePath)
     val writeBatch: (Dataset[org.apache.spark.sql.Row], Long) => Unit =
       (batch, _) => {
         if (!graft.operators.Retrieval.postingsExist(stagePath))
@@ -897,7 +819,7 @@ object Streaming {
                           idName: String, textName: String): Unit = {
     import java.nio.file.{Files, Paths}
     import java.util.Comparator
-    graft.tables.Staging.deleteRec(stagePath)
+    Staging.deleteRec(stagePath)
     val writeBatch: (Dataset[org.apache.spark.sql.Row], Long) => Unit =
       (batch, _) => {
         if (!graft.operators.Retrieval.windowsExist(stagePath))
@@ -947,7 +869,7 @@ object Streaming {
   def drainServeFromStore(queries: DataFrame, storePath: String, k: Int,
                           name: String): DataFrame = {
     val out = sys.props("java.io.tmpdir") + "/graft_stream_out_" + name
-    graft.tables.Staging.deleteRec(out)
+    Staging.deleteRec(out)
     val writeBatch: (Dataset[org.apache.spark.sql.Row], Long) => Unit =
       (batch, _) => {
         val b = batch.toDF()
@@ -991,7 +913,7 @@ object Streaming {
   def drainServeFromWindows(queries: DataFrame, stagePath: String, k: Int,
                             name: String): DataFrame = {
     val out = sys.props("java.io.tmpdir") + "/graft_stream_out_" + name
-    graft.tables.Staging.deleteRec(out)
+    Staging.deleteRec(out)
     val writeBatch: (Dataset[org.apache.spark.sql.Row], Long) => Unit =
       (batch, _) => {
         val b = batch.toDF()
@@ -1033,7 +955,7 @@ object Streaming {
                              name: String, beam: Int = 16,
                              hops: Int = 6): DataFrame = {
     val out = sys.props("java.io.tmpdir") + "/graft_stream_out_" + name
-    graft.tables.Staging.deleteRec(out)
+    Staging.deleteRec(out)
     val writeBatch: (Dataset[org.apache.spark.sql.Row], Long) => Unit =
       (batch, _) => {
         val b = batch.toDF()
@@ -1073,7 +995,7 @@ object Streaming {
   def drainServeFromIvf(queries: DataFrame, indexPath: String, k: Int,
                         nprobe: Int, name: String): DataFrame = {
     val out = sys.props("java.io.tmpdir") + "/graft_stream_out_" + name
-    graft.tables.Staging.deleteRec(out)
+    Staging.deleteRec(out)
     val writeBatch: (Dataset[org.apache.spark.sql.Row], Long) => Unit =
       (batch, _) => {
         val b = batch.toDF()
@@ -1120,7 +1042,7 @@ object Streaming {
     import java.nio.file.{Files, Paths}
     import java.util.Comparator
     import org.apache.spark.sql.expressions.Window
-    def rmTree(dir: String): Unit = graft.tables.Staging.deleteRec(dir)
+    def rmTree(dir: String): Unit = Staging.deleteRec(dir)
     rmTree(snapshotPath)
     val writeBatch: (Dataset[org.apache.spark.sql.Row], Long) => Unit =
       (batch, _) => {
@@ -1139,7 +1061,7 @@ object Streaming {
         rmTree(next)
         merged.write.mode("overwrite").parquet(next) // materializes before swap
         rmTree(snapshotPath)
-        graft.tables.Staging.moveFile(Paths.get(next), Paths.get(snapshotPath))
+        Staging.moveFile(Paths.get(next), Paths.get(snapshotPath))
       }
     val q = stream.writeStream
       .outputMode(OutputMode.Append())
@@ -1171,7 +1093,7 @@ object Streaming {
                        failAtBatch: Long = 1L): DataFrame = {
     import java.nio.file.{Files, Paths}
     import java.util.Comparator
-    def reset(dir: String): Unit = graft.tables.Staging.deleteRec(dir)
+    def reset(dir: String): Unit = Staging.deleteRec(dir)
     val out = sys.props("java.io.tmpdir") + "/graft_stream_out_" + name
     val ckpt = checkpointDir(name)
     reset(out); reset(ckpt)
@@ -1229,7 +1151,7 @@ object Streaming {
                              failAtBatch: Long = 1L): DataFrame = {
     import java.nio.file.{Files, Paths}
     import java.util.Comparator
-    def reset(dir: String): Unit = graft.tables.Staging.deleteRec(dir)
+    def reset(dir: String): Unit = Staging.deleteRec(dir)
     val out = sys.props("java.io.tmpdir") + "/graft_stream_out_" + name
     val ckpt = checkpointDir(name)
     reset(out); reset(ckpt)

@@ -4,7 +4,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.types._
 
-/** Staged layouts: cache keying, the one partitioned layout writer
+/** Staged layouts: cache keying, the one build-once primitive
+  * ([[Staging.once]]), the one partitioned layout writer
   * ([[Staging.writePartitioned]]), declared-schema reads, and the local
   * filesystem seam.
   *
@@ -42,6 +43,45 @@ object Staging {
     */
   def stagedPath(tag: String, dir: String): String =
     sys.props("java.io.tmpdir") + s"/graft_${tag}_" + dirFingerprint(dir)
+
+  /** Build the staged layout at `stage` once, then reuse it: the one
+    * build-once/query-many contract every staged setup shares. Returns
+    * `stage`.
+    *
+    * The stage is reused only when `built` (the layout's own done check:
+    * a `_SUCCESS` file, an index's meta marker, ...) holds AND no
+    * `stage + "_PENDING"` marker exists. Otherwise the marker is
+    * created, `stage` is wiped, `build` runs, and the marker is deleted
+    * last. The marker sits OUTSIDE the stage dir because builds wipe
+    * that dir wholesale, and it brackets the WHOLE build + maintenance
+    * sequence: a crash at any point (say after an index build but before
+    * its append, when the index's own done check already holds) leaves
+    * the marker, and the next call wipes and rebuilds instead of serving
+    * a half-maintained layout.
+    *
+    * One process-wide lock (this object's monitor) serialises every
+    * check-and-build, so concurrent callers build a stage once; a build
+    * may itself call `once` for a stage it reads (the lock is reentrant).
+    */
+  def once(stage: String)(built: => Boolean)(build: => Unit): String =
+    synchronized {
+      import java.nio.file.{Files, Paths}
+      val pending = Paths.get(stage + "_PENDING")
+      if (Files.exists(pending) || !built) {
+        Option(pending.getParent).foreach(Files.createDirectories(_))
+        Files.write(pending, Array.emptyByteArray)
+        deleteRec(stage)
+        build
+        Files.delete(pending)
+      }
+      stage
+    }
+
+  /** Whether `dir` holds the done file `marker` — the `built` check of a
+    * stage whose writer leaves one (Spark's `_SUCCESS` by default).
+    */
+  def written(dir: String, marker: String = "_SUCCESS"): Boolean =
+    new java.io.File(dir, marker).exists()
 
   // ------------------------------------------------------------------
   // THE LOCAL-FILESYSTEM SEAM (r21). Every raw byte-level file move/copy

@@ -7,11 +7,14 @@ import org.apache.spark.sql.functions._
 
 import graft.operators.{Dedup, VectorStore}
 import graft.oracle.OracleGen.QueryVec
+import graft.streaming.Streaming
 import graft.tables.{Staging, Tables}
 
-/** The one partitioned layout writer (Staging.writePartitioned), the
-  * declared-schema layout reads (Staging.readLayout), and the source
-  * guard that keeps every partitioned layout write on the writer.
+/** The one build-once primitive (Staging.once) and the split-source
+  * writer behind it, the one partitioned layout writer
+  * (Staging.writePartitioned), the declared-schema layout reads
+  * (Staging.readLayout), and the source guards that keep every staged
+  * setup on `once` and every partitioned layout write on the writer.
   */
 class StagingSpec extends SparkSpec {
   import spark.implicits._
@@ -184,6 +187,149 @@ class StagingSpec extends SparkSpec {
     assert(schemas.contains(spark.read.parquet(stage).schema))
     assert(pairs.filter(col("new_id") === col("corpus_id") + 100000)
       .count() == 8)
+  }
+
+  /** A `once` build that counts its runs and leaves one file; slow
+    * enough that concurrent callers overlap it.
+    */
+  private class Counted(stage: String) {
+    val runs = new java.util.concurrent.atomic.AtomicInteger()
+    def built: Boolean = Staging.written(stage, "data")
+    def build(): Unit = {
+      runs.incrementAndGet()
+      Thread.sleep(50)
+      java.nio.file.Files.createDirectories(java.nio.file.Paths.get(stage))
+      java.nio.file.Files.writeString(
+        java.nio.file.Paths.get(stage, "data"), "ok")
+    }
+    def once(): String = Staging.once(stage)(built)(build())
+  }
+
+  private def pending(stage: String) =
+    java.nio.file.Paths.get(stage + "_PENDING")
+
+  test("once: a built stage is reused without running build") {
+    val c = new Counted(tmp("reuse"))
+    val stage = c.once()
+    assert(c.runs.get == 1 && c.built)
+    assert(c.once() == stage)
+    assert(c.runs.get == 1, "a built stage must be served, not rebuilt")
+    assert(!java.nio.file.Files.exists(pending(stage)))
+  }
+
+  test("once: 8 concurrent callers run build exactly once") {
+    val stage = tmp("conc")
+    val c = new Counted(stage)
+    val start = new java.util.concurrent.CountDownLatch(1)
+    val seen = ConcurrentHashMap.newKeySet[String]()
+    val callers = (0 until 8).map { _ =>
+      val t = new Thread(() => { start.await(); seen.add(c.once()) })
+      t.start()
+      t
+    }
+    start.countDown()
+    callers.foreach(_.join(60000))
+    assert(c.runs.get == 1, s"build ran ${c.runs.get} times")
+    assert(seen.size == 1 && seen.contains(stage))
+  }
+
+  test("once: a build that throws leaves the marker, and the next call " +
+      "wipes the stage and rebuilds") {
+    val stage = tmp("crash")
+    val e = intercept[IllegalStateException] {
+      Staging.once(stage)(Staging.written(stage, "data")) {
+        java.nio.file.Files.createDirectories(java.nio.file.Paths.get(stage))
+        java.nio.file.Files.writeString(
+          java.nio.file.Paths.get(stage, "torn"), "half")
+        throw new IllegalStateException("crash mid-build")
+      }
+    }
+    assert(e.getMessage == "crash mid-build")
+    assert(java.nio.file.Files.exists(pending(stage)))
+    val c = new Counted(stage)
+    c.once()
+    assert(c.runs.get == 1)
+    assert(new java.io.File(stage).list().toSet == Set("data"),
+      "the rebuild must start from a wiped stage")
+    assert(!java.nio.file.Files.exists(pending(stage)))
+  }
+
+  test("once: a stage whose done check holds but whose marker is present " +
+      "(built, maintenance not yet done) is rebuilt, not served") {
+    val c = new Counted(tmp("torn"))
+    val stage = c.once()
+    // the crash an index build + append sequence can leave: the build's
+    // own done marker is written, the append never ran
+    java.nio.file.Files.createFile(pending(stage))
+    assert(c.built)
+    c.once()
+    assert(c.runs.get == 2, "a marked stage must be rebuilt")
+    assert(!java.nio.file.Files.exists(pending(stage)))
+  }
+
+  test("stageSlicesSource: a staging that died mid-write is redone on the " +
+      "next call, which serves exactly the good slices") {
+    val root = java.nio.file.Files.createTempDirectory("graft_staging_src")
+    val out = root.resolve("src").toString
+    val boom = udf((v: Long) => {
+      if (v >= 0) throw new IllegalStateException("slice eval failed")
+      v
+    })
+    val first = Seq(1L, 2L).toDF("v")
+    intercept[Exception] {
+      Streaming.stageSlicesSource(
+        Seq(first, Seq(3L).toDF("v").select(boom(col("v")).as("v"))), out)
+    }
+    // the first split landed before the failure
+    assert(new java.io.File(out, "split-0000.parquet").exists())
+    val good = Seq(Seq(10L, 11L), Seq(12L), Seq(13L, 14L))
+    assert(Streaming.stageSlicesSource(good.map(_.toDF("v")), out) == out)
+    val files = new java.io.File(out).list().filter(_.endsWith(".parquet"))
+      .sorted.toSeq
+    assert(files == Seq("split-0000.parquet", "split-0001.parquet",
+      "split-0002.parquet"))
+    files.zip(good).foreach { case (f, rows) =>
+      assert(spark.read.parquet(s"$out/$f").as[Long].collect().toSeq.sorted ==
+        rows, s"$f must hold its good slice")
+    }
+    // replay order is pinned by strictly increasing mtimes
+    val mtimes = files.map(f => new java.io.File(out, f).lastModified())
+    assert(mtimes == mtimes.sorted.distinct)
+    // staging leaves nothing beside `out`: no temp part, no marker
+    assert(root.toFile.list().toSeq == Seq("src"))
+  }
+
+  test("every staged setup goes through Staging.once, the build marker " +
+      "lives only in Staging, and no split writer leaks a temp dir") {
+    val root = new java.io.File("src/main/scala/graft")
+    assert(root.isDirectory, s"run from the repository root: $root")
+    def scala(d: java.io.File): Seq[java.io.File] =
+      d.listFiles().toSeq.flatMap(f =>
+        if (f.isDirectory) scala(f)
+        else if (f.getName.endsWith(".scala")) Seq(f) else Nil)
+    def rel(f: java.io.File) = root.toPath.relativize(f.toPath).toString
+    def hits(files: Seq[java.io.File], pattern: String): Seq[String] =
+      files.flatMap { f =>
+        java.nio.file.Files.readAllLines(f.toPath).toArray.toSeq
+          .zipWithIndex.collect {
+            case (l: String, i) if l.contains(pattern) => s"${rel(f)}:${i + 1}"
+          }
+      }
+    // staged-setup files that may still lock on their own monitor, by
+    // file, with the reason (none today)
+    val lockAllowed = Map.empty[String, String]
+    val setupFiles = Seq(new java.io.File(root, "SparkEntry.scala"),
+      new java.io.File(root, "operators/Products.scala")) ++
+      scala(new java.io.File(root, "streaming"))
+    val locks = hits(setupFiles, "this.synchronized")
+      .filterNot(h => lockAllowed.contains(h.takeWhile(_ != ':')))
+    assert(locks.isEmpty, s"hand-rolled staged-setup locks: $locks")
+    val markers = hits(scala(root).filterNot(rel(_) == "tables/Staging.scala"),
+      "_PENDING")
+    assert(markers.isEmpty, s"build markers outside Staging.once: $markers")
+    val splitTmp = "createTempDirectory(\"graft_" + "split\""
+    val leaks = hits(scala(new java.io.File("src")), splitTmp)
+    assert(leaks.isEmpty, s"per-split temp dirs: $leaks")
   }
 
   test("every partitioned layout write in operators/, streaming/ and " +
