@@ -587,9 +587,10 @@ object ScaleBench {
     // partition count SCALED with the corpus (nlist 8/32/128 — the
     // 100 TB layout discipline: more cells, not fatter cells; cellOf's
     // nlist-way distance chain caps how far this harness can push it),
-    // so the additive append stays ∝ the wave and the delete's
-    // victim-cell rewrite grows with the per-cell size, never the
-    // corpus. The graph index is deliberately absent from this family:
+    // so the additive append WRITES ∝ the wave and the delete's
+    // victim-cell rewrite grows with the per-cell size; both read the
+    // index's column-pruned id column (admission anti-join, victim
+    // lookup), which grows with the corpus's ids, not its vectors. The graph index is deliberately absent from this family:
     // its append recomputes the batch's bucket NEIGHBOURHOOD
     // (probeBits-reach), which for a clustered wave spans a constant
     // fraction of the index at any plane count — its maintenance

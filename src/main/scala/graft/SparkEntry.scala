@@ -2829,7 +2829,7 @@ object SparkEntry {
     // of the vectors, the rest admitted via IvfIndex.append (purely
     // additive: a vector's cell is a pure function of the vector, so
     // appends land in their own cells and touch nothing else; admission
-    // anti-joins the id sidecar pruned to the batch's id buckets).
+    // anti-joins the cells relation's column-pruned id column).
     // Probe-after-append must equal probing a full build — the oracle
     // replays the full-corpus cell assignment + pruned exact top-10.
     "q_ivf_append" -> ((s, dir) => {
@@ -2987,10 +2987,11 @@ object SparkEntry {
     }),
 
     // IVF lifecycle — DELETE: full build, every vec_id % 3 == 0 removed
-    // via IvfIndex.delete (the sidecar's id→cell mapping finds the
-    // victims' cells with an id-bucket-pruned lookup — no corpus scan —
-    // and only those partitions rewrite). Probe ≡ rebuild-on-remaining;
-    // the oracle replays the probe over `embeddings WHERE vec_id % 3 <> 0`.
+    // via IvfIndex.delete (a semi-join on the cells relation's
+    // column-pruned id column finds the victims' cells — ids are read,
+    // vectors are not — and only those partitions rewrite). Probe ≡
+    // rebuild-on-remaining; the oracle replays the probe over
+    // `embeddings WHERE vec_id % 3 <> 0`.
     "q_ivf_delete" -> ((s, dir) => {
       val path = stagedPath("ivf_idx_delete_v2", dir)
       Staging.once(path)(graft.operators.IvfIndex.exists(path)) {

@@ -122,9 +122,13 @@ object Dedup {
     */
   private def sigRows(df: DataFrame, idCol: Column, textCol: Column,
                       numHashes: Int, shingleN: Int): DataFrame =
-    df.select(idCol.cast("long").as("id"),
-        minhashSignature(textCol, numHashes, shingleN).as("sig"))
+    signatures(df, idCol, textCol, numHashes, shingleN)
       .withColumn("sb", sbCol(col("id")))
+
+  private def signatures(df: DataFrame, idCol: Column, textCol: Column,
+                         numHashes: Int, shingleN: Int): DataFrame =
+    df.select(idCol.cast("long").as("id"),
+      minhashSignature(textCol, numHashes, shingleN).as("sig"))
 
   private val SigSchema = {
     import org.apache.spark.sql.types._
@@ -132,6 +136,27 @@ object Dedup {
       StructField("sig", ArrayType(StringType)),
       StructField("sb", IntegerType)))
   }
+  private val RunSchema =
+    org.apache.spark.sql.types.StructType(SigSchema.filterNot(_.name == "sb"))
+
+  /** Append `df`'s (id, sig) signatures to a signature RUN at `runPath`:
+    * an unpartitioned relation a caller keeps private (a drain's
+    * accepted-so-far set), so each append writes at most one file per
+    * task instead of one per touched id bucket. Read it back with
+    * [[readSigRun]]; it screens through [[screenPairs]] like a stage.
+    */
+  def appendSigRun(df: DataFrame, idCol: Column, textCol: Column,
+                   runPath: String, numHashes: Int = 8,
+                   shingleN: Int = 3): Unit =
+    signatures(df, idCol, textCol, numHashes, shingleN)
+      .write.mode("append").parquet(runPath)
+
+  /** The (id, sig) rows of a signature run, read with a declared schema
+    * (an existing directory with no files yet reads as empty).
+    */
+  def readSigRun(spark: org.apache.spark.sql.SparkSession,
+                 runPath: String): DataFrame =
+    graft.tables.Staging.readLayout(spark, runPath, Some(RunSchema))
 
   /** Absorb a gated batch into the staged signature table: append the
     * accepted rows' signatures (the same hashing as
@@ -189,8 +214,8 @@ object Dedup {
     * half-deleted stage. Declared schema: no inference job per gate
     * micro-batch.
     */
-  private def readSigStage(spark: org.apache.spark.sql.SparkSession,
-                           stagePath: String): DataFrame = {
+  def readSigStage(spark: org.apache.spark.sql.SparkSession,
+                   stagePath: String): DataFrame = {
     if (graft.tables.Commit.pending(stagePath))
       throw new IllegalStateException(
         s"$stagePath has an unfinished maintenance commit (_COMMIT intent " +
@@ -226,32 +251,44 @@ object Dedup {
 
   /** Incremental dedup: candidate near-dup pairs between a NEW batch of
     * documents and an existing corpus whose signatures are already staged
-    * (stageMinhashSignatures). The new side is signed fresh and banded;
-    * the corpus side reads the stage — so corpus text is never re-hashed
-    * and, because the incoming batch is small, its banded relation
-    * broadcasts: the join plan shuffles NEITHER side. This is the ingest
-    * gate a production pipeline runs on every arriving batch; the staged
-    * signatures then absorb the accepted rows via append.
-    *
-    * `maxBucket` caps ONLY the staged corpus side. The corpus is fixed, so
-    * its bucket sizes — and therefore the verdict for any given incoming
-    * document — do not depend on how the arriving stream is chopped into
-    * batches (batch-boundary invariance). A cap on the fresh side would
-    * depend on batch composition, and is unnecessary: candidate blow-up
-    * comes from hot CORPUS buckets (s fresh rows x bucket_n corpus rows);
-    * the fresh batch itself is small and broadcast.
+    * (stageMinhashSignatures) — [[screenPairs]] against the stage.
     * Output: (corpus_id, new_id, est_jaccard).
     */
   def incrementalPairs(newDf: DataFrame, idCol: Column, textCol: Column,
                        stagePath: String, numHashes: Int = 8,
                        rowsPerBand: Int = 2, shingleN: Int = 3,
-                       maxBucket: Int = Int.MaxValue): DataFrame = {
+                       maxBucket: Int = Int.MaxValue): DataFrame =
+    screenPairs(newDf, idCol, textCol,
+      readSigStage(newDf.sparkSession, stagePath), numHashes, rowsPerBand,
+      shingleN, maxBucket)
+
+  /** Screen a NEW batch of documents against a corpus of (id, sig)
+    * signatures (any further columns are ignored). The new side is
+    * signed fresh and banded; the corpus side is read as given — so
+    * corpus text is never re-hashed and, because the incoming batch is
+    * small, its banded relation broadcasts: the join plan shuffles
+    * NEITHER side. This is the ingest gate a production pipeline runs on
+    * every arriving batch; the corpus then absorbs the accepted rows.
+    *
+    * `maxBucket` caps ONLY the corpus side. A fixed corpus has fixed
+    * bucket sizes, so the verdict for any given incoming document does
+    * not depend on how the arriving stream is chopped into batches
+    * (batch-boundary invariance). A cap on the fresh side would depend
+    * on batch composition, and is unnecessary: candidate blow-up comes
+    * from hot CORPUS buckets (s fresh rows x bucket_n corpus rows); the
+    * fresh batch itself is small and broadcast.
+    * Output: (corpus_id, new_id, est_jaccard).
+    */
+  def screenPairs(newDf: DataFrame, idCol: Column, textCol: Column,
+                  corpusSigs: DataFrame, numHashes: Int = 8,
+                  rowsPerBand: Int = 2, shingleN: Int = 3,
+                  maxBucket: Int = Int.MaxValue): DataFrame = {
     def banded(sigs: DataFrame, cap: Int) = {
       val b = sigs.select(col("id"), col("sig"),
         posexplode(bands(col("sig"), numHashes, rowsPerBand)).as(Seq("band_idx", "band")))
       dropHotBuckets(b, Seq("band_idx", "band"), cap)
     }
-    val corpus = banded(readSigStage(newDf.sparkSession, stagePath), maxBucket)
+    val corpus = banded(corpusSigs, maxBucket)
       .select(col("id").as("corpus_id"), col("sig").as("corpus_sig"),
         col("band_idx"), col("band"))
     val fresh = banded(newDf.select(idCol.as("id"),

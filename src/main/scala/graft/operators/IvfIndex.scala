@@ -17,15 +17,12 @@ import org.apache.spark.sql.functions._
   *           deterministic per vector, so probes partition-prune to
   *           nprobe/nlist of the store and APPENDS land each batch row
   *           in exactly its own cell (purely additive: no ranks, no
-  *           derived relations — append ≡ rebuild by construction)
-  *   ids/    ib=N/ (id, cell)            admission sidecar partitioned
-  *           by id hash: cells/ is partitioned by the VECTOR's cell, so
-  *           an "is this id stored?" lookup cannot prune it; this
-  *           relation can — admission anti-joins ∝ the batch's id
-  *           buckets, and because it also records each id's CELL,
-  *           [[delete]] learns the victims' cells without any corpus
-  *           scan (unlike the postings stage, which has no forward
-  *           index) and rewrites only those partitions
+  *           derived relations — append ≡ rebuild by construction).
+  *           The stored id column is also the admission and delete
+  *           lookup: parquet column pruning reads ids, not vectors, so
+  *           an append writes exactly one file per touched cell and
+  *           nothing else. An `ids/` sidecar left by an older build is
+  *           ignored by every reader and removed by [[compact]].
   *   _IVF_META   `nlist dim idName vecName`; written LAST via atomic
   *               rename — the done marker certifying the layout landed
   *   _APPENDING  maintenance-intent marker (crash ⇒ detected + refused)
@@ -71,49 +68,6 @@ object IvfIndex {
     java.nio.file.Files.deleteIfExists(intentFile(path))
   }
 
-  /** Id-hash bucket of the admission sidecar (crc32, cf. the Retrieval
-    * stages' db key and GraphAnnIndex's ib key).
-    */
-  private val NumIdBuckets = 64
-  private def ibCol(id: org.apache.spark.sql.Column) =
-    pmod(crc32(id.cast("string")), lit(NumIdBuckets.toLong)).cast("int")
-
-  /** Sidecar read with the DECLARED schema (ids stored as LONG —
-    * schema inference would open an arbitrary file's footer, defeating
-    * the pruning this relation exists for; cf. GraphAnnIndex.IdsSchema).
-    */
-  private val IdsSchema = org.apache.spark.sql.types.StructType(Seq(
-    org.apache.spark.sql.types.StructField("id",
-      org.apache.spark.sql.types.LongType),
-    org.apache.spark.sql.types.StructField("cell",
-      org.apache.spark.sql.types.IntegerType),
-    org.apache.spark.sql.types.StructField("ib",
-      org.apache.spark.sql.types.IntegerType)))
-  /** Sidecar format marker: v2 = (id, cell, ib). A sidecar written
-    * before the ib bucket column existed would read as all-null ib
-    * under the declared schema — every stored id then INVISIBLE to the
-    * bucket-pruned admission anti-join, i.e. silent re-admission
-    * duplicates. Backward compat is a one-time MIGRATION, not a
-    * refusal: the sidecar is derivable whole from the cells relation
-    * (cf. GraphAnnIndex's `_IDS_V2` rebuild-from-nodes), so an old
-    * index upgrades on first maintenance touch and serves identically.
-    */
-  private def idsMarker(path: String) =
-    java.nio.file.Paths.get(path, "ids", "_IDS_V2")
-
-  private def idsRel(spark: SparkSession, path: String): DataFrame = {
-    if (!java.nio.file.Files.exists(idsMarker(path))) {
-      val m = readMeta(path)
-      val rebuilt = cellsRel(spark, path)
-        .select(col(m.idName).cast("long").as("id"), col("cell"))
-        .withColumn("ib", ibCol(col("id")))
-      graft.tables.Staging.deleteRec(s"$path/ids")
-      graft.tables.Staging.writePartitioned(rebuilt, "ib", s"$path/ids")
-      java.nio.file.Files.createFile(idsMarker(path))
-    }
-    spark.read.schema(IdsSchema).parquet(s"$path/ids")
-  }
-
   /** The cells relation read with the schema RECORDED AT BUILD TIME
     * (`_IVF_SCHEMA`, caller columns + cell): schema inference opens an
     * arbitrary file's footer at PLANNING time — before any partition
@@ -125,22 +79,18 @@ object IvfIndex {
       graft.tables.Staging.recordedSchema(
         java.nio.file.Paths.get(path, "_IVF_SCHEMA")))
 
-  /** `cell` and `ib` are the index's own partition/sidecar keys: an input
-    * that already carries either would be silently overwritten (and `ib`
-    * dropped from the stored rows — schema drift between built and
-    * appended partitions), so both are refused up front.
+  /** `cell` is the index's own partition key: an input that already
+    * carries it would be silently overwritten, so it is refused up front.
     */
   private def requireNoReservedCols(df: DataFrame): Unit =
-    Seq("cell", "ib").foreach(c => require(!df.columns.contains(c),
-      s"input already carries a '$c' column — rename it, the IVF index owns that name"))
+    require(!df.columns.contains("cell"),
+      "input already carries a 'cell' column — rename it, the IVF index owns that name")
 
   /** Build the index at `path` (wholesale overwrite): every caller
-    * column rides into the cell partitions, the sidecar derives from
-    * the STAGED rows (no second corpus pass).
+    * column rides into the cell partitions.
     */
   def build(df: DataFrame, idName: String, vecName: String, path: String,
             nlist: Int = 8, dim: Int = 64): Unit = {
-    val spark = df.sparkSession
     // validation BEFORE the destructive deleteRec: a rejected input must
     // leave a pre-existing index at `path` intact
     requireNoReservedCols(df)
@@ -151,22 +101,17 @@ object IvfIndex {
     // inferring (inference opens arbitrary footers pre-pruning — cellsRel)
     java.nio.file.Files.writeString(
       java.nio.file.Paths.get(path, "_IVF_SCHEMA"), withCell.schema.json)
-    graft.tables.Staging.writePartitioned(cellsRel(spark, path)
-        .select(col(idName).cast("long").as("id"), col("cell"))
-        .withColumn("ib", ibCol(col("id"))),
-      "ib", s"$path/ids")
-    java.nio.file.Files.createFile(idsMarker(path))
     writeMeta(path, Meta(nlist, dim, idName, vecName))
   }
 
-  /** Incremental append: ids already stored are dropped (idempotent;
-    * the anti-join runs against the sidecar PRUNED to the batch's id
-    * buckets — a stored twin of an id always shares its bucket — so
-    * admission is ∝ the batch, never the corpus, and correct even for
-    * an id re-arriving with a CHANGED vector, which a cell-prune of the
-    * data relation would miss). Admitted rows land purely additively in
-    * their own cells; nothing that exists is read or rewritten —
-    * append ≡ rebuild by construction, q_ivf_append hash-checks it.
+  /** Incremental append: ids already stored are dropped (idempotent).
+    * Admission anti-joins the batch against the cells relation's id
+    * column — column-pruned, so it reads ids, not vectors — and, being
+    * keyed on the id alone, refuses an id re-arriving with a CHANGED
+    * vector (whose stored twin sits in another cell). Admitted rows land
+    * purely additively in their own cells, one new file per touched
+    * cell; nothing that exists is rewritten — append ≡ rebuild by
+    * construction, q_ivf_append hash-checks it.
     */
   def append(df: DataFrame, path: String): Unit =
     graft.tables.WriterLock.withLock(path)(appendImpl(df, path))
@@ -174,37 +119,24 @@ object IvfIndex {
   private def appendImpl(df: DataFrame, path: String): Unit = {
     val m = readMeta(path)
     requireNoReservedCols(df)
-    val spark = df.sparkSession
-    val batch = df
+    val fresh = df
       .withColumn("cell", Ann.cellOf(col(m.vecName), m.nlist, m.dim))
-      .withColumn("ib", ibCol(col(m.idName)))
-      .localCheckpoint() // feeds the bucket collect AND the admission join
-    // metadata-sized collect: ib lives in [0, NumIdBuckets)
-    val batchIbs = batch.select(col("ib")).distinct()
-      .collect().map(_.getInt(0)).toSeq.sorted
-    val fresh = batch
-      .join(idsRel(spark, path)
-          .filter(col("ib").isin(batchIbs: _*))
-          .select(col("id").as(m.idName)),
+      .join(cellsRel(df.sparkSession, path).select(col(m.idName)),
         Seq(m.idName), "left_anti")
-      .localCheckpoint() // feeds both writes under one lineage cut
+      .localCheckpoint() // feeds the emptiness check AND the write
     if (fresh.isEmpty) return
     java.nio.file.Files.createFile(intentFile(path))
-    // both relations' rows stage whole and move in under ONE crash-safe
-    // commit — a crash leaves the index fully pre- or fully post-append
+    // the rows stage whole and move in under a crash-safe commit — a
+    // crash leaves the index fully pre- or fully post-append
     graft.tables.Commit.commit(path, Seq(
-      graft.tables.Commit.Add("cells", "cell", fresh.drop("ib")),
-      graft.tables.Commit.Add("ids", "ib",
-        fresh.select(col(m.idName).cast("long").as("id"), col("cell"),
-          col("ib")))))
+      graft.tables.Commit.Add("cells", "cell", fresh)))
     java.nio.file.Files.delete(intentFile(path))
   }
 
-  /** Incremental delete: the sidecar's recorded (id → cell) mapping
-    * finds the victims' cells with an id-bucket-pruned lookup (NO
-    * corpus scan), then only those cell partitions and the victims' id
-    * partitions rewrite. Delete-then-probe ≡ rebuild-on-remaining —
-    * q_ivf_delete hash-checks it.
+  /** Incremental delete: a semi-join on the cells relation's (column-
+    * pruned) id and cell columns finds the victims' cells, then only
+    * those cell partitions rewrite. Delete-then-probe ≡
+    * rebuild-on-remaining — q_ivf_delete hash-checks it.
     */
   def delete(ids: DataFrame, path: String, idName: String = "id"): Unit =
     graft.tables.WriterLock.withLock(path)(deleteImpl(ids, path, idName))
@@ -213,34 +145,22 @@ object IvfIndex {
                          idName: String): Unit = {
     val m = readMeta(path)
     val spark = ids.sparkSession
-    val idsB = ids.select(col(idName).as("id"))
-      .withColumn("ib", ibCol(col("id")))
-      .localCheckpoint()
-    val vib = idsB.select(col("ib")).distinct()
-      .collect().map(_.getInt(0)).toSeq.sorted
-    if (vib.isEmpty) return
-    val sidecar = idsRel(spark, path)
-    val victims = sidecar.filter(col("ib").isin(vib: _*))
-      .join(idsB.select(col("id")), Seq("id"), "left_semi")
-      .localCheckpoint() // (id, cell, ib) — feeds both rewrites
-    if (victims.isEmpty) return
-    java.nio.file.Files.createFile(intentFile(path))
+    val victims = cellsRel(spark, path).select(col(m.idName), col("cell"))
+      .join(ids.select(col(idName).as(m.idName)), Seq(m.idName), "left_semi")
+      .localCheckpoint() // (id, cell) — feeds the cell collect AND the rewrite
     // metadata-sized: cell lives in [0, nlist)
     val vcells = victims.select(col("cell")).distinct()
       .collect().map(_.getInt(0)).toSeq.sorted
+    if (vcells.isEmpty) return
+    java.nio.file.Files.createFile(intentFile(path))
     val keptRows = cellsRel(spark, path)
       .filter(col("cell").isin(vcells: _*))
-      .join(victims.select(col("id").as(m.idName)), Seq(m.idName),
-        "left_anti")
-    val keptIds = sidecar.filter(col("ib").isin(vib: _*))
-      .join(victims.select(col("id")), Seq("id"), "left_anti")
-      .select(col("id"), col("cell"), col("ib"))
-    // staged whole, swapped under ONE crash-safe commit (the staging
+      .join(victims.select(col(m.idName)), Seq(m.idName), "left_anti")
+    // staged whole, swapped under one crash-safe commit (the staging
     // write happens before any live dir is touched — no checkpoint
     // needed for the read-from-overwritten-dir hazard)
     graft.tables.Commit.commit(path, Seq(
-      graft.tables.Commit.Replace("cells", "cell", vcells, keptRows),
-      graft.tables.Commit.Replace("ids", "ib", vib, keptIds)))
+      graft.tables.Commit.Replace("cells", "cell", vcells, keptRows)))
     java.nio.file.Files.delete(intentFile(path))
   }
 
@@ -257,41 +177,30 @@ object IvfIndex {
 
   /** Rewrite every partition into one file — the maintenance pass that
     * keeps file counts flat as streaming appends accumulate. Rows and
-    * probe results are invariant (QuantizeIvfSpec asserts it).
+    * probe results are invariant (QuantizeIvfSpec asserts it). An `ids/`
+    * sidecar left by an older build is removed here.
     */
   def compact(spark: SparkSession, path: String): Unit =
     graft.tables.WriterLock.withLock(path) {
       val m = readMeta(path)
-      // idsRel FIRST: on a pre-_IDS_V2 index it runs the one-time
-      // sidecar migration, which re-reads meta — creating the intent
-      // marker before that call would make readMeta refuse the index
-      // mid-compact (and strand the marker on the throw), exactly on
-      // the legacy layouts a maintenance pass is meant to upgrade.
-      val ids = idsRel(spark, path)
       java.nio.file.Files.createFile(intentFile(path))
       graft.tables.Commit.commit(path, Seq(
         graft.tables.Commit.Replace("cells", "cell",
-          (0 until m.nlist).toSeq, cellsRel(spark, path)),
-        graft.tables.Commit.Replace("ids", "ib",
-          (0 until NumIdBuckets).toSeq, ids)))
+          (0 until m.nlist).toSeq, cellsRel(spark, path))))
+      graft.tables.Staging.deleteRec(s"$path/ids")
       java.nio.file.Files.delete(intentFile(path))
     }
 
-  /** The WORST relation's mean parquet files per live partition (cells/
-    * and ids/) — the fragmentation this layout accrues as appends
-    * accumulate (every append lands exactly one new file per touched
-    * partition, builds and compacts leave exactly one): the IVF twin of
-    * the postings stage's staleFraction, measuring probe-side read
-    * amplification instead of superseded rows. Max, not a blended mean:
-    * a scan reads ONE relation's partitions, so the worst relation
-    * bounds the amplification and averaging would let a clean sibling
-    * hide another's debt. Driver-side readdir only; refuses a torn
-    * stage.
+  /** Mean parquet files per live cell partition — the fragmentation
+    * this layout accrues as appends accumulate (every append lands
+    * exactly one new file per touched cell, builds and compacts leave
+    * exactly one): the IVF twin of the postings stage's staleFraction,
+    * measuring probe-side read amplification instead of superseded
+    * rows. Driver-side readdir only; refuses a torn stage.
     */
   def fragmentation(path: String): Double = {
     readMeta(path) // validates done marker + no torn maintenance
-    Seq("cells", "ids").map(r =>
-      graft.tables.Staging.filesPerPartition(Seq(s"$path/$r"))).max
+    graft.tables.Staging.filesPerPartition(Seq(s"$path/cells"))
   }
 
   /** The auto-compaction policy (cf. Retrieval.compactIfStale): compact

@@ -378,8 +378,6 @@ object Streaming {
     */
   def drainRetrieveFromStage(resolved: DataFrame, stagePath: String, k: Int,
                              maxPostings: Long, name: String): DataFrame = {
-    import java.nio.file.{Files, Paths}
-    import java.util.Comparator
     // THE declared-broadcast seam (r21, mirroring the graph walk's
     // maxWalkBatch require): this drain is the only caller that passes
     // `broadcastTerms = Some(true)` into retrieveWithServingSide, and
@@ -430,8 +428,6 @@ object Streaming {
 
   private def drainAccumulating(stream: DataFrame, name: String,
                                 mode: OutputMode): DataFrame = {
-    import java.nio.file.{Files, Paths}
-    import java.util.Comparator
     val out = sys.props("java.io.tmpdir") + "/graft_stream_out_" + name
     Staging.deleteRec(out)
     val writeBatch: (Dataset[org.apache.spark.sql.Row], Long) => Unit =
@@ -460,8 +456,6 @@ object Streaming {
   def drainBatchAudit(stream: DataFrame,
                       rules: Seq[graft.operators.DataQuality.RowRule],
                       name: String): DataFrame = {
-    import java.nio.file.{Files, Paths}
-    import java.util.Comparator
     val out = sys.props("java.io.tmpdir") + "/graft_stream_out_" + name
     Staging.deleteRec(out)
     // foreachBatch is at-least-once: a retried micro-batch must replace
@@ -492,15 +486,13 @@ object Streaming {
     * that fixed side (incrementalPairs never caps the incoming batch,
     * whose bucket sizes would depend on how the stream was chopped), so
     * the batch oracle replays the union of batches exactly; the
-    * growing-reference variant (gate absorbs what it accepts) is the
-    * batch pair dedup_incremental + signature append.
+    * growing-reference variant (gate absorbs what it accepts) is
+    * [[drainDedupGateGrowing]]. Returns (id, status, _batch_id); an
+    * empty source returns an empty frame.
     */
   def drainDedupGate(docs: DataFrame, sigStagePath: String, name: String,
                      threshold: Double, maxBucket: Int = 50): DataFrame = {
-    import java.nio.file.{Files, Paths}
-    import java.util.Comparator
-    val out = sys.props("java.io.tmpdir") + "/graft_stream_out_" + name
-    Staging.deleteRec(out)
+    val out = freshDir(sys.props("java.io.tmpdir") + "/graft_stream_out_" + name)
     val writeBatch: (Dataset[org.apache.spark.sql.Row], Long) => Unit =
       (batch, bid) => {
         val b = batch.select(col("id"), col("text"))
@@ -521,20 +513,24 @@ object Streaming {
       .trigger(Trigger.AvailableNow())
       .start()
     q.awaitTermination()
-    docs.sparkSession.read.parquet(out)
+    readGateSink(docs, out)
   }
 
   /** The GROWING-reference ingest gate — the full production loop: every
-    * micro-batch is screened (Dedup.incrementalPairs against the staged
-    * signatures), the verdict lands in the audit sink, and the ACCEPTED
-    * rows' signatures are absorbed into the stage
-    * (Dedup.absorbSignatures) before the next batch arrives — so a
+    * micro-batch is screened against the reference stage PLUS every
+    * document this drain accepted before it (Dedup.screenPairs), the
+    * verdict lands in the audit sink, and the ACCEPTED rows' signatures
+    * are appended to a drain-private signature run
+    * (Dedup.appendSigRun) before the next batch arrives — so a
     * near-duplicate of an accepted document is rejected even though
-    * neither is in the original reference. foreachBatch runs micro-batches
-    * strictly sequentially, and stageSplitSource pins batch order with
-    * strictly increasing file mtimes, so the verdict sequence is
-    * deterministic and the batch oracle replays it by unrolling the
-    * batches (accepted(i) screens batch i+1).
+    * neither is in the original reference. The reference stage is the
+    * caller's read-only input (read in place, never copied or written,
+    * as in [[drainDedupGate]]); the run is unpartitioned, so an absorb
+    * writes one file per task, not one per id bucket. foreachBatch runs
+    * micro-batches strictly sequentially, and stageSplitSource pins
+    * batch order with strictly increasing file mtimes, so the verdict
+    * sequence is deterministic and the batch oracle replays it by
+    * unrolling the batches (accepted(i) screens batch i+1).
     *
     * PRECONDITION: unlike [[drainDedupGate]] (whose verdict is
     * order-insensitive), this drain's result depends on absorption ORDER,
@@ -543,45 +539,26 @@ object Streaming {
     * therefore carry strictly increasing per-file mtimes — use
     * stageSplitSource (which pins them explicitly) or an equivalently
     * mtime-pinned layout; coarse filesystem timestamps with equal mtimes
-    * would silently reorder absorption and diverge from the oracle. The growing stage is
-    * re-seeded from the fixed reference at every drain call, so
-    * re-execution is idempotent end-to-end. No hot-bucket cap here: cap
-    * semantics on a growing side would couple the cap to batch history —
-    * the capped, batch-invariant variant is [[drainDedupGate]].
+    * would silently reorder absorption and diverge from the oracle. The
+    * run is recreated empty at every drain call, so re-execution is
+    * idempotent end-to-end. No hot-bucket cap here: cap semantics on a
+    * growing side would couple the cap to batch history — the capped,
+    * batch-invariant variant is [[drainDedupGate]]. Returns
+    * (id, status, _batch_id); an empty source returns an empty frame.
     */
   def drainDedupGateGrowing(docs: DataFrame, refStagePath: String,
                             name: String, threshold: Double): DataFrame = {
-    import java.nio.file.{Files, Paths}
-    import java.util.Comparator
-    def reset(dir: String): Unit = Staging.deleteRec(dir)
-    val out = sys.props("java.io.tmpdir") + "/graft_stream_out_" + name
-    val grow = sys.props("java.io.tmpdir") + "/graft_gate_grow_" + name
-    reset(out); reset(grow)
-    val s = docs.sparkSession
-    // the working copy keeps the stage's id-hash partitioning — the
-    // absorb half appends partitionBy(sb) rows, and deleteSignatures'
-    // partition-local rewrite contract holds for the copy too. The
-    // reference stage is ALREADY in exactly that layout (it was written
-    // partitionBy(sb), one file per bucket), so the copy is a
-    // driver-side byte copy of the directory tree, not a Spark
-    // read-shuffle-write of the whole stage per drain call (r20; the
-    // rewrite was one full-stage job of pure data movement).
-    locally {
-      import java.nio.file.{Files, Paths}
-      val src = Paths.get(refStagePath)
-      val dst = Paths.get(grow)
-      val walk = Files.walk(src)
-      try walk.forEach { p =>
-        val t = dst.resolve(src.relativize(p))
-        if (Files.isDirectory(p)) Files.createDirectories(t)
-        else Staging.copyFile(p, t)
-      } finally walk.close()
-    }
+    val out = freshDir(sys.props("java.io.tmpdir") + "/graft_stream_out_" + name)
+    val run = freshDir(sys.props("java.io.tmpdir") + "/graft_gate_grow_" + name)
     val writeBatch: (Dataset[org.apache.spark.sql.Row], Long) => Unit =
       (batch, bid) => {
+        val s = batch.sparkSession
         val b = batch.select(col("id"), col("text"))
-        val dup = graft.operators.Dedup.incrementalPairs(b, col("id"),
-            col("text"), grow)
+        val corpus = graft.operators.Dedup.readSigStage(s, refStagePath)
+          .select(col("id"), col("sig"))
+          .union(graft.operators.Dedup.readSigRun(s, run))
+        val dup = graft.operators.Dedup.screenPairs(b, col("id"),
+            col("text"), corpus)
           .filter(col("est_jaccard") >= threshold)
           .select(col("new_id").as("id"), lit(1).as("_dup")).distinct()
         val verdict = b.join(dup, Seq("id"), "left")
@@ -592,9 +569,9 @@ object Streaming {
           .localCheckpoint() // one evaluation feeds both the sink and the absorb
         verdict.select(col("id"), col("status"), col("_batch_id"))
           .write.mode("append").parquet(out)
-        graft.operators.Dedup.absorbSignatures(
+        graft.operators.Dedup.appendSigRun(
           verdict.filter(col("status") === "accepted"), col("id"), col("text"),
-          grow)
+          run)
       }
     val q = docs.writeStream
       .outputMode(OutputMode.Append())
@@ -602,7 +579,28 @@ object Streaming {
       .trigger(Trigger.AvailableNow())
       .start()
     q.awaitTermination()
-    s.read.parquet(out)
+    readGateSink(docs, out)
+  }
+
+  /** `dir` recreated empty: a gate drain's sink or run exists even when
+    * no micro-batch ever runs (an empty source).
+    */
+  private def freshDir(dir: String): String = {
+    Staging.deleteRec(dir)
+    java.nio.file.Files.createDirectories(java.nio.file.Paths.get(dir))
+    dir
+  }
+
+  /** The gate sink's (id, status, _batch_id) rows, read with a declared
+    * schema (`id` typed as in `docs`), so an empty sink reads as an
+    * empty frame.
+    */
+  private def readGateSink(docs: DataFrame, out: String): DataFrame = {
+    import org.apache.spark.sql.types._
+    Staging.readLayout(docs.sparkSession, out, Some(StructType(Seq(
+      StructField("id", docs.schema("id").dataType),
+      StructField("status", StringType),
+      StructField("_batch_id", LongType)))))
   }
 
   /** Drain a stateless stream of (id, vector, ...) rows INTO a
@@ -619,7 +617,6 @@ object Streaming {
                          vecColName: String, idName: String,
                          numPlanes: Int = 4, dim: Int = 64): Unit = {
     import java.nio.file.{Files, Paths}
-    import java.util.Comparator
     Staging.deleteRec(storePath)
     val writeBatch: (Dataset[org.apache.spark.sql.Row], Long) => Unit =
       (batch, _) =>
@@ -655,8 +652,6 @@ object Streaming {
                            idName: String, vecColName: String,
                            sampleMod: Int = 16,
                            edgesPerBucket: Int = 3): Unit = {
-    import java.nio.file.{Files, Paths}
-    import java.util.Comparator
     Staging.deleteRec(idxPath)
     val writeBatch: (Dataset[org.apache.spark.sql.Row], Long) => Unit =
       (batch, _) => {
@@ -694,8 +689,8 @@ object Streaming {
   /** Streaming ingest INTO the persisted IVF index — the cell-partitioned
     * twin of [[drainToGraphAnnIndex]]: the first micro-batch builds the
     * index (IvfIndex.build), every later batch lands purely additively in
-    * its own cells (IvfIndex.append — admission pruned to the batch's id
-    * buckets, nothing existing rewritten), and after every batch the
+    * its own cells (IvfIndex.append — admission anti-joins the stored id
+    * column, nothing existing rewritten), and after every batch the
     * fragmentation policy (IvfIndex.compactIfFragmented) bounds the
     * files-per-partition the drain accrues — compaction is policy-driven,
     * not operator memory, and the index serves probes after every batch.
@@ -754,8 +749,6 @@ object Streaming {
     */
   def drainToPostingsStage(stream: DataFrame, stagePath: String,
                            idName: String, textName: String): Unit = {
-    import java.nio.file.{Files, Paths}
-    import java.util.Comparator
     Staging.deleteRec(stagePath)
     val writeBatch: (Dataset[org.apache.spark.sql.Row], Long) => Unit =
       (batch, _) => {
@@ -817,8 +810,6 @@ object Streaming {
     */
   def drainToWindowsStage(stream: DataFrame, stagePath: String,
                           idName: String, textName: String): Unit = {
-    import java.nio.file.{Files, Paths}
-    import java.util.Comparator
     Staging.deleteRec(stagePath)
     val writeBatch: (Dataset[org.apache.spark.sql.Row], Long) => Unit =
       (batch, _) => {
@@ -1040,10 +1031,8 @@ object Streaming {
   def drainMergeSnapshot(stream: DataFrame, snapshotPath: String,
                          keys: Seq[String], orderCols: Seq[String]): DataFrame = {
     import java.nio.file.{Files, Paths}
-    import java.util.Comparator
     import org.apache.spark.sql.expressions.Window
-    def rmTree(dir: String): Unit = Staging.deleteRec(dir)
-    rmTree(snapshotPath)
+    Staging.deleteRec(snapshotPath)
     val writeBatch: (Dataset[org.apache.spark.sql.Row], Long) => Unit =
       (batch, _) => {
         val s = batch.sparkSession
@@ -1058,9 +1047,9 @@ object Streaming {
               latest, keys)
           else latest
         val next = snapshotPath + "_next"
-        rmTree(next)
+        Staging.deleteRec(next)
         merged.write.mode("overwrite").parquet(next) // materializes before swap
-        rmTree(snapshotPath)
+        Staging.deleteRec(snapshotPath)
         Staging.moveFile(Paths.get(next), Paths.get(snapshotPath))
       }
     val q = stream.writeStream
@@ -1091,12 +1080,9 @@ object Streaming {
     */
   def drainWithRestart(mkStream: () => DataFrame, name: String,
                        failAtBatch: Long = 1L): DataFrame = {
-    import java.nio.file.{Files, Paths}
-    import java.util.Comparator
-    def reset(dir: String): Unit = Staging.deleteRec(dir)
     val out = sys.props("java.io.tmpdir") + "/graft_stream_out_" + name
     val ckpt = checkpointDir(name)
-    reset(out); reset(ckpt)
+    Staging.deleteRec(out); Staging.deleteRec(ckpt)
     @volatile var planted = false
     def run(plantFailure: Boolean): Unit = {
       val writeBatch: (Dataset[org.apache.spark.sql.Row], Long) => Unit =
@@ -1149,12 +1135,9 @@ object Streaming {
     */
   def drainAppendWithRestart(mkStream: () => DataFrame, name: String,
                              failAtBatch: Long = 1L): DataFrame = {
-    import java.nio.file.{Files, Paths}
-    import java.util.Comparator
-    def reset(dir: String): Unit = Staging.deleteRec(dir)
     val out = sys.props("java.io.tmpdir") + "/graft_stream_out_" + name
     val ckpt = checkpointDir(name)
-    reset(out); reset(ckpt)
+    Staging.deleteRec(out); Staging.deleteRec(ckpt)
     @volatile var planted = false
     def run(plantFailure: Boolean): Unit = {
       val writeBatch: (Dataset[org.apache.spark.sql.Row], Long) => Unit =

@@ -53,73 +53,68 @@ class LayoutCompatSpec extends SparkSpec {
     assert(after == before)
   }
 
-  test("ivf: a pre-ib sidecar (id, cell only) migrates whole on first " +
-      "maintenance touch — append stays idempotent, no silent " +
-      "re-admission") {
-    import spark.implicits._
-    val p = tmp("ivf")
-    IvfIndex.build(emb, "vec_id", "embedding", p, nlist = 8, dim = 64)
-    val probe = () => IvfIndex.probe(spark, p, QueryVec.values, nprobe = 2)
-      .collect().map(_.toString).sorted.toSeq
-    val before = probe()
-    // degrade the sidecar to the pre-ib layout: (id, cell), no marker
-    val old = spark.read.schema("id LONG, cell INT, ib INT")
-      .parquet(s"$p/ids").select(col("id"), col("cell")).collect()
-      .map(r => (r.getLong(0), r.getInt(1)))
-    graft.tables.Staging.deleteRec(s"$p/ids")
-    old.toSeq.toDF("id", "cell").coalesce(1).write
-      .mode("overwrite").parquet(s"$p/ids")
-    assert(!java.nio.file.Files.exists(
-      java.nio.file.Paths.get(p, "ids", "_IDS_V2")))
-    // re-appending already-stored vectors must stay a NO-OP (the bug a
-    // null-ib read would cause is silent duplicate admission here)
-    val nCells = spark.read.parquet(s"$p/cells").count()
-    IvfIndex.append(emb.limit(64), p)
-    assert(spark.read.parquet(s"$p/cells").count() == nCells,
-      "re-admission after sidecar migration must be a no-op")
-    assert(java.nio.file.Files.exists(
-      java.nio.file.Paths.get(p, "ids", "_IDS_V2")),
-      "first maintenance touch migrates the sidecar and marks it v2")
-    assert(probe() == before)
-    // and a real delete through the migrated sidecar still works
-    IvfIndex.delete(emb.filter(col("vec_id") % 3 === 0)
-      .select(col("vec_id")), p, idName = "vec_id")
-    val kept = spark.read.parquet(s"$p/cells").count()
-    assert(kept == emb.filter(col("vec_id") % 3 =!= 0).count())
+  /** What an older IVF writer left beside cells/: the `ids/` sidecar,
+    * either the v2 layout (id, cell, ib) partitioned by id bucket with its
+    * `_IDS_V2` marker, or the pre-ib (id, cell) layout without one.
+    */
+  private def plantLegacyIvfIds(p: String, v2: Boolean): Unit = {
+    val ids = spark.read.parquet(s"$p/cells")
+      .select(col("vec_id").cast("long").as("id"), col("cell"))
+    if (v2) {
+      ids.withColumn("ib",
+          pmod(crc32(col("id").cast("string")), lit(64L)).cast("int"))
+        .write.partitionBy("ib").parquet(s"$p/ids")
+      java.nio.file.Files.createFile(
+        java.nio.file.Paths.get(p, "ids", "_IDS_V2"))
+    } else ids.coalesce(1).write.parquet(s"$p/ids")
   }
 
-  test("ivf: compact on a pre-ib sidecar migrates then compacts — it " +
-      "must not strand an intent marker (heal's own prescription for a " +
-      "fragmented legacy index)") {
-    import spark.implicits._
-    val p = tmp("ivfc")
-    IvfIndex.build(emb, "vec_id", "embedding", p, nlist = 8, dim = 64)
-    val probe = () => IvfIndex.probe(spark, p, QueryVec.values, nprobe = 2)
-      .collect().map(_.toString).sorted.toSeq
-    val before = probe()
-    // same degrade as above: (id, cell) sidecar, no _IDS_V2 marker
-    val old = spark.read.schema("id LONG, cell INT, ib INT")
-      .parquet(s"$p/ids").select(col("id"), col("cell")).collect()
-      .map(r => (r.getLong(0), r.getInt(1)))
-    graft.tables.Staging.deleteRec(s"$p/ids")
-    old.toSeq.toDF("id", "cell").coalesce(1).write
-      .mode("overwrite").parquet(s"$p/ids")
-    // compact's FIRST maintenance touch triggers the sidecar migration,
-    // which re-reads meta — if the intent marker goes down before that
-    // read, readMeta refuses the index mid-compact and the thrown
-    // exception strands the marker (index then refuses ALL probes until
-    // recover(): compact would take a serving legacy index offline)
-    IvfIndex.compact(spark, p)
-    assert(!java.nio.file.Files.exists(
-      java.nio.file.Paths.get(p, "_APPENDING")),
-      "compact must not strand the intent marker on a legacy sidecar")
-    assert(java.nio.file.Files.exists(
-      java.nio.file.Paths.get(p, "ids", "_IDS_V2")))
-    assert(probe() == before, "compact is probe-invariant across the " +
-      "migration")
-    // and the migrated+compacted index still takes normal maintenance
-    IvfIndex.append(emb.limit(64), p)
-    assert(probe() == before)
+  test("ivf: an index carrying an older build's ids/ sidecar (with or " +
+      "without _IDS_V2) serves identically — re-appending stored ids is " +
+      "a no-op, delete ≡ rebuild-on-remaining") {
+    val rem = tmp("ivfrem")
+    IvfIndex.build(emb.filter(col("vec_id") % 3 =!= 0), "vec_id",
+      "embedding", rem, nlist = 8, dim = 64)
+    def rows(path: String): Seq[String] =
+      spark.read.parquet(s"$path/cells").collect().map(_.toString).sorted.toSeq
+    for (v2 <- Seq(true, false)) {
+      val p = tmp(s"ivf$v2")
+      IvfIndex.build(emb, "vec_id", "embedding", p, nlist = 8, dim = 64)
+      val probe = () => IvfIndex.probe(spark, p, QueryVec.values, nprobe = 2)
+        .collect().map(_.toString).sorted.toSeq
+      val before = probe()
+      val stored = rows(p)
+      plantLegacyIvfIds(p, v2)
+      assert(probe() == before, s"legacy ids/ (v2=$v2) must not change a probe")
+      IvfIndex.append(emb.limit(64), p)
+      assert(rows(p) == stored,
+        s"re-admitting stored ids beside a legacy ids/ (v2=$v2) must be a no-op")
+      IvfIndex.delete(emb.filter(col("vec_id") % 3 === 0)
+        .select(col("vec_id")), p, idName = "vec_id")
+      assert(rows(p) == rows(rem), s"delete ≡ rebuild-on-remaining (v2=$v2)")
+    }
+  }
+
+  test("ivf: compact removes an older build's ids/ sidecar (with or " +
+      "without _IDS_V2) without stranding the intent marker") {
+    for (v2 <- Seq(true, false)) {
+      val p = tmp(s"ivfc$v2")
+      IvfIndex.build(emb, "vec_id", "embedding", p, nlist = 8, dim = 64)
+      val probe = () => IvfIndex.probe(spark, p, QueryVec.values, nprobe = 2)
+        .collect().map(_.toString).sorted.toSeq
+      val before = probe()
+      plantLegacyIvfIds(p, v2)
+      IvfIndex.compact(spark, p)
+      assert(!java.nio.file.Files.exists(
+        java.nio.file.Paths.get(p, "_APPENDING")),
+        s"compact must not strand the intent marker (v2=$v2)")
+      assert(!java.nio.file.Files.exists(java.nio.file.Paths.get(p, "ids")),
+        s"compact removes the legacy ids/ (v2=$v2)")
+      assert(probe() == before, s"compact is probe-invariant (v2=$v2)")
+      // and the compacted index still takes normal maintenance
+      IvfIndex.append(emb.limit(64), p)
+      assert(probe() == before)
+    }
   }
 
   test("graph-ann: a pre-bucket sidecar (no _IDS_V2 marker) rebuilds " +

@@ -62,7 +62,7 @@ class QuantizeIvfSpec extends SparkSpec {
   }
 
   test("IvfIndex lifecycle: append ≡ rebuild (cells never rewritten), " +
-      "delete ≡ rebuild-on-remaining via the sidecar's id→cell map, " +
+      "delete ≡ rebuild-on-remaining via the stored id column, " +
       "compact invariant") {
     import graft.operators.IvfIndex
     import scala.jdk.CollectionConverters._
@@ -96,16 +96,13 @@ class QuantizeIvfSpec extends SparkSpec {
     val probeCells = Ann.ivfProbes(QueryVec.values, 8, 2).toSet
     assert(scanned.nonEmpty &&
       scanned.forall(f => probeCells.exists(c => f.contains(s"cell=$c/"))))
-    // delete ≡ rebuild-on-remaining; sidecar stays consistent
+    // delete ≡ rebuild-on-remaining
     IvfIndex.delete(emb.filter(col("vec_id") % 3 === 0).select(col("vec_id")),
       inc, idName = "vec_id")
     val rem = java.nio.file.Files.createTempDirectory("graft_ivf_rem").toString
     IvfIndex.build(emb.filter(col("vec_id") % 3 =!= 0), "vec_id", "embedding",
       rem, nlist = 8, dim = 64)
     assert(cells(inc) == cells(rem))
-    def sidecarIds(p: String): Set[Long] = spark.read.parquet(s"$p/ids")
-      .collect().map(_.getAs[Long]("id")).toSet
-    assert(sidecarIds(inc) == sidecarIds(rem))
     // compact: rows invariant, one file per partition
     IvfIndex.compact(spark, inc)
     assert(cells(inc) == cells(rem))
@@ -116,6 +113,73 @@ class QuantizeIvfSpec extends SparkSpec {
         .toArray.map(_.toString).count(_.endsWith(".parquet"))
       assert(n == 1, s"$d has $n parquet files")
     }
+  }
+
+  test("IvfIndex.append refuses a stored id re-appended with a changed " +
+      "vector that lands in another cell") {
+    import graft.operators.IvfIndex
+    val p = java.nio.file.Files.createTempDirectory("graft_ivf_neg").toString
+    IvfIndex.build(emb, "vec_id", "embedding", p, nlist = 8, dim = 64)
+    def cells(): Seq[String] =
+      spark.read.parquet(s"$p/cells").collect().map(_.toString).sorted.toSeq
+    val before = cells()
+    val negated = emb.withColumn("embedding",
+      transform(col("embedding"), x => -x))
+    val moved = negated.join(emb.select(col("vec_id"),
+        Ann.cellOf(col("embedding"), 8, 64).as("old_cell")), "vec_id")
+      .filter(Ann.cellOf(col("embedding"), 8, 64) =!= col("old_cell"))
+      .drop("old_cell")
+    assert(!moved.isEmpty, "some negated vectors must change cell")
+    IvfIndex.append(moved, p)
+    assert(cells() == before, "a stored id must be refused whatever its vector")
+  }
+
+  test("IvfIndex build, append, delete and compact never create ids/") {
+    import graft.operators.IvfIndex
+    val p = java.nio.file.Files.createTempDirectory("graft_ivf_noids").toString
+    def noIds(step: String): Unit = assert(
+      !java.nio.file.Files.exists(java.nio.file.Paths.get(p, "ids")),
+      s"$step created ids/")
+    IvfIndex.build(emb.filter(col("vec_id") % 3 =!= 0), "vec_id",
+      "embedding", p, nlist = 8, dim = 64)
+    noIds("build")
+    IvfIndex.append(emb.filter(col("vec_id") % 3 === 0), p)
+    noIds("append")
+    IvfIndex.delete(emb.filter(col("vec_id") % 5 === 0).select(col("vec_id")),
+      p, idName = "vec_id")
+    noIds("delete")
+    IvfIndex.compact(spark, p)
+    noIds("compact")
+  }
+
+  test("IvfIndex.append of 120 rows adds exactly one file per touched cell " +
+      "and nothing else") {
+    import graft.operators.IvfIndex
+    import scala.jdk.CollectionConverters._
+    val p = java.nio.file.Files.createTempDirectory("graft_ivf_120").toString
+    val held = emb.select(col("vec_id")).orderBy(col("vec_id")).limit(120)
+      .collect().map(_.getLong(0)).toSeq
+    assert(held.size == 120)
+    IvfIndex.build(emb.filter(!col("vec_id").isin(held: _*)), "vec_id",
+      "embedding", p, nlist = 8, dim = 64)
+    def files(): Set[String] = {
+      val walk = java.nio.file.Files.walk(java.nio.file.Paths.get(p))
+      try walk.iterator().asScala.filter(java.nio.file.Files.isRegularFile(_))
+        .map(f => java.nio.file.Paths.get(p).relativize(f).toString).toSet
+      finally walk.close()
+    }
+    val before = files()
+    val batch = emb.filter(col("vec_id").isin(held: _*))
+    IvfIndex.append(batch, p)
+    val added = files() -- before
+    val touched = batch.select(Ann.cellOf(col("embedding"), 8, 64))
+      .distinct().collect().map(r => s"cell=${r.getInt(0)}").toSet
+    assert(added.forall(f => f.startsWith("cells/") && f.endsWith(".parquet")),
+      s"an append adds only cell data files: $added")
+    val perCell = added.toSeq.groupBy(_.split('/')(1)).map { case (c, fs) =>
+      c -> fs.size }
+    assert(perCell == touched.map(_ -> 1).toMap,
+      s"one new file per touched cell: $perCell vs $touched")
   }
 
   test("IvfIndex fragmentation: 1.0 on a fresh build, grows one file per " +

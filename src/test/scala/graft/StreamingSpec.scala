@@ -108,23 +108,28 @@ class StreamingSpec extends SparkSpec {
     } finally q.stop()
   }
 
-  test("growing gate rejects a near-dup of an ACCEPTED earlier-batch doc") {
+  private val gateSchema = org.apache.spark.sql.types.StructType(Seq(
+    org.apache.spark.sql.types.StructField("id", org.apache.spark.sql.types.LongType),
+    org.apache.spark.sql.types.StructField("text", org.apache.spark.sql.types.StringType)))
+
+  /** The growing-gate fixture: a reference stage holding only doc 1, and
+    * a two-file source. Batch 1: a ref near-dup (must reject) + a novel
+    * doc (must accept); batch 2: a near-dup OF THE NOVEL DOC — the fixed
+    * gate would accept it (not in the reference); the growing gate must
+    * reject it because batch 1's accepted doc was absorbed in between.
+    * Distinct mtimes pin the file order, exactly like stageSplitSource.
+    * Returns (source stream, reference stage path).
+    */
+  private def growingGateFixture(): (org.apache.spark.sql.DataFrame, String) = {
     import spark.implicits._
-    import org.apache.spark.sql.functions._
     val srcDir = java.nio.file.Files.createTempDirectory("graft_gate_src")
       .toFile.getAbsolutePath
     val refDir = java.nio.file.Files.createTempDirectory("graft_gate_ref")
       .resolve("sigs").toString
-    // reference holds only doc 1
     graft.operators.Dedup.stageMinhashSignatures(
       Seq((1L, "alpha beta gamma delta epsilon zeta eta theta"))
         .toDF("id", "text"),
       col("id"), col("text"), refDir)
-    // batch 1: a ref near-dup (must reject) + a novel doc (must accept);
-    // batch 2: a near-dup OF THE NOVEL DOC — the fixed gate would accept
-    // it (not in the reference); the growing gate must reject it because
-    // batch 1's accepted doc was absorbed in between. Distinct mtimes pin
-    // the file order, exactly like stageSplitSource.
     val f1 = new java.io.File(srcDir, "b1.parquet")
     val f2 = new java.io.File(srcDir, "b2.parquet")
     def writeOne(rows: Seq[(Long, String)], dst: java.io.File, mtime: Long): Unit = {
@@ -141,19 +146,81 @@ class StreamingSpec extends SparkSpec {
       (11L, "one two three four five six seven eight")), f1, base)
     writeOne(Seq(
       (20L, "one two three four five six seven eight nine")), f2, base + 4000)
-    val schema = org.apache.spark.sql.types.StructType(Seq(
-      org.apache.spark.sql.types.StructField("id", org.apache.spark.sql.types.LongType),
-      org.apache.spark.sql.types.StructField("text", org.apache.spark.sql.types.StringType)))
-    val src = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", "1").parquet(srcDir)
-    val audit = Streaming.drainDedupGateGrowing(src, refDir, "spec_grow", 0.5)
+    (spark.readStream.schema(gateSchema)
+      .option("maxFilesPerTrigger", "1").parquet(srcDir), refDir)
+  }
+
+  /** Asserts the fixture's verdicts; returns them as id -> (status, batch). */
+  private def assertGrowingVerdicts(
+      audit: org.apache.spark.sql.DataFrame): Map[Long, (String, Long)] = {
     val st = audit.collect()
       .map(r => r.getLong(0) -> (r.getString(1), r.getLong(2))).toMap
+    assert(st.keySet == Set(10L, 11L, 20L))
     assert(st(10L)._1 == "rejected", "ref near-dup must reject")
     assert(st(11L)._1 == "accepted", "novel doc must accept")
     assert(st(20L)._1 == "rejected",
       "near-dup of the absorbed batch-1 doc must reject — the growing property")
     assert(st(11L)._2 < st(20L)._2, "doc 20 arrived in a later micro-batch")
+    st
+  }
+
+  test("growing gate rejects a near-dup of an ACCEPTED earlier-batch doc") {
+    val (src, refDir) = growingGateFixture()
+    assertGrowingVerdicts(
+      Streaming.drainDedupGateGrowing(src, refDir, "spec_grow", 0.5))
+  }
+
+  test("growing gate reads the reference stage in place: byte-identical " +
+      "after the drain, and the absorb writes no sb= partition") {
+    import scala.jdk.CollectionConverters._
+    val (src, refDir) = growingGateFixture()
+    def listing(dir: String): Map[String, (Long, Long)] = {
+      val root = java.nio.file.Paths.get(dir)
+      val walk = java.nio.file.Files.walk(root)
+      try walk.iterator().asScala.map { p =>
+        root.relativize(p).toString -> (p.toFile.length, p.toFile.lastModified)
+      }.toMap
+      finally walk.close()
+    }
+    val before = listing(refDir)
+    val st = assertGrowingVerdicts(
+      Streaming.drainDedupGateGrowing(src, refDir, "spec_grow_ro", 0.5))
+    assert(st.map { case (id, (status, _)) => id -> status } ==
+      Map(10L -> "rejected", 11L -> "accepted", 20L -> "rejected"))
+    assert(listing(refDir) == before,
+      "the reference stage is the caller's read-only input")
+    val run = sys.props("java.io.tmpdir") + "/graft_gate_grow_spec_grow_ro"
+    val written = listing(run).keySet
+    assert(written.exists(_.endsWith(".parquet")), "accepted doc 11 was absorbed")
+    assert(!written.exists(_.split('/').exists(_.startsWith("sb="))),
+      s"the absorb must not partition by id bucket: ${written.toSeq.sorted}")
+  }
+
+  /** Drains an empty source through `drain` (source, reference stage)
+    * and asserts the empty (id, status, _batch_id) result.
+    */
+  private def assertEmptyGateDrain(
+      drain: (org.apache.spark.sql.DataFrame, String) => org.apache.spark.sql.DataFrame): Unit = {
+    import org.apache.spark.sql.types._
+    val (_, refDir) = growingGateFixture()
+    val empty = java.nio.file.Files.createTempDirectory("graft_gate_empty")
+      .toFile.getAbsolutePath
+    val audit = drain(spark.readStream.schema(gateSchema)
+      .option("maxFilesPerTrigger", "1").parquet(empty), refDir)
+    assert(audit.schema.map(f => (f.name, f.dataType)) ==
+      Seq(("id", LongType), ("status", StringType), ("_batch_id", LongType)))
+    assert(audit.count() == 0)
+  }
+
+  test("fixed gate over an empty source returns an empty " +
+      "(id, status, _batch_id) frame") {
+    assertEmptyGateDrain(Streaming.drainDedupGate(_, _, "spec_gate_empty", 0.5))
+  }
+
+  test("growing gate over an empty source returns an empty " +
+      "(id, status, _batch_id) frame") {
+    assertEmptyGateDrain(
+      Streaming.drainDedupGateGrowing(_, _, "spec_grow_empty", 0.5))
   }
 
   test("split source + maxFilesPerTrigger drives >=3 micro-batches; update drain converges") {
