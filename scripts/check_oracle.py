@@ -28,6 +28,33 @@ TABLES = ["region", "nation", "customer", "supplier", "part", "orders",
 
 CHUNK = 20
 
+def mem_total_mb():
+    """The host's MemTotal in MB, or None when /proc/meminfo is absent."""
+    try:
+        with open("/proc/meminfo") as f:
+            kb = next(int(l.split()[1]) for l in f if l.startswith("MemTotal:"))
+        return kb // 1024
+    except (OSError, StopIteration, ValueError):
+        return None
+
+def memory_limit():
+    """DuckDB's memory limit: about 60% of the host's MemTotal, capped at
+    24GB. A fixed 24GB got the replay OOM-killed on a 15 GB host; past
+    the limit heavy oracles spill to temp_directory instead."""
+    mb = mem_total_mb()
+    return "24GB" if mb is None else f"{max(1, min(24 * 1024, int(mb * 0.6)))}MB"
+
+def cap_address_space():
+    """Cap this process's address space at 75% of MemTotal. Not all of
+    DuckDB's allocations obey memory_limit (a PREPARE pre-pass process
+    reached 16 GB RSS on a 15 GB host and was OOM-killed); under the cap
+    a runaway allocation fails as a query error instead."""
+    mb = mem_total_mb()
+    if mb is not None:
+        import resource
+        cap = int(mb * 0.75) << 20
+        resource.setrlimit(resource.RLIMIT_AS, (cap, cap))
+
 def rows_key(rows):
     return sorted(tuple(repr(x) for x in r) for r in rows)
 
@@ -38,27 +65,70 @@ def fresh_con(sf_dir):
     # pool exhausts and every later query dies "Out of Memory" — give it
     # a spill dir and a bounded limit so heavy oracles page instead
     con.execute("SET temp_directory='/tmp/duckdb_oracle_spill'")
-    con.execute("SET memory_limit='24GB'")
+    con.execute(f"SET memory_limit='{memory_limit()}'")
     for t in TABLES:
         con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'")
     return con
 
-def prepare_check(sf_dir, oracle):
+def prepare_check(sf_dir, out_dir, oracle):
     """Syntax/bind-check EVERY oracle via DuckDB PREPARE (no replay) —
     ~4 min on the 259-query set (planning the big unrolled CTE chains
     dominates), so a broken oracle fails the gate up front instead of
     20+ minutes into a replay (or never, if a fragile checker dies on an
-    earlier heavy query first). Returns [(name, error), ...]."""
-    con = fresh_con(sf_dir)
-    bad = []
-    for name, sql in oracle.items():
+    earlier heavy query first). Runs in CHUNKED SUBPROCESSES like the
+    replay: planning memory is not bounded by memory_limit, and one
+    process preparing all 259 grew to 16 GB RSS and was OOM-killed on a
+    15 GB host. A chunk that dies is retried one query per subprocess.
+    Returns [(name, error), ...]."""
+    def run(chunk_names):
+        with tempfile.NamedTemporaryFile("r", suffix=".json",
+                                         delete=False) as tf:
+            rp = tf.name
         try:
-            con.execute(f"PREPARE _graft_chk AS {sql}")
+            subprocess.run(
+                [sys.executable, os.path.abspath(__file__), sf_dir, out_dir,
+                 "--prepare", rp, ",".join(chunk_names)],
+                check=False)
+            try:
+                return dict(json.load(open(rp)))
+            except Exception:
+                return None
+        finally:
+            try:
+                os.unlink(rp)
+            except OSError:
+                pass
+
+    names = list(oracle.keys())
+    bad = {}
+    for i in range(0, len(names), CHUNK):
+        chunk = names[i:i + CHUNK]
+        got = run(chunk)
+        if got is None:
+            got = {}
+            for n in chunk:
+                solo = run([n])
+                got.update(solo if solo is not None
+                           else {n: "prepare worker died"})
+        bad.update({n: e for n, e in got.items() if e is not None})
+    return [(n, bad[n]) for n in names if n in bad]
+
+def prepare_worker(sf_dir, out_dir, names, result_path):
+    """Subprocess mode: PREPARE `names`, write {name: error or null}."""
+    oracle = json.load(open(f"{out_dir}/oracle_sql.json"))
+    con = fresh_con(sf_dir)
+    errs = {}
+    for name in names:
+        try:
+            con.execute(f"PREPARE _graft_chk AS {oracle[name]}")
             con.execute("DEALLOCATE _graft_chk")
+            errs[name] = None
         except Exception as e:
-            bad.append((name, str(e)[:200]))
+            errs[name] = str(e)[:200]
     con.close()
-    return bad
+    with open(result_path, "w") as f:
+        json.dump(errs, f)
+    return 0
 
 # A replay slower than this that is NOT in Verify.heavyOrder sorts into
 # the cheapest-first PREFIX of oracle_sql.json, where it can stall a
@@ -166,14 +236,21 @@ def main(sf_dir, out_dir, json_out=None):
         print("FAIL: oracle_sql.json is EMPTY — refusing to report green")
         return 1
     # fast pre-pass: PREPARE every oracle before any replay
-    bad = prepare_check(sf_dir, oracle)
+    bad = prepare_check(sf_dir, out_dir, oracle)
+    # running out of memory while planning says nothing about the oracle's
+    # syntax: its replay runs (and reports) like any other
+    oom = [n for n, e in bad if e.startswith("Out of Memory Error")]
+    for name in oom:
+        print(f"PREPARE {name}: out of memory while planning")
+    bad = [(n, e) for n, e in bad if n not in oom]
     if bad:
         for name, err in bad:
             print(f"FAIL {name}: PREPARE rejected: {err}")
         print(f"== PREPARE pre-pass: {len(bad)} oracle(s) malformed — "
               "aborting before replay ==")
         return 1
-    print(f"PREPARE pre-pass: all {len(oracle)} oracles bind clean")
+    print(f"PREPARE pre-pass: {len(oracle) - len(oom)} oracles bind clean, "
+          f"{len(oom)} not prepared (out of memory)")
     # preserve the file's key order — Verify writes it cheapest-first so
     # a dying checker still reports a maximal prefix (json.load keeps
     # insertion order)
@@ -302,6 +379,10 @@ def _close(x, y):
     return repr(x) == repr(y)
 
 if __name__ == "__main__":
+    cap_address_space()
+    if len(sys.argv) > 4 and sys.argv[3] == "--prepare":
+        sys.exit(prepare_worker(sys.argv[1], sys.argv[2],
+                                sys.argv[5].split(","), sys.argv[4]))
     if len(sys.argv) > 4 and sys.argv[3] == "--worker":
         sys.exit(worker(sys.argv[1], sys.argv[2], sys.argv[5].split(","),
                         sys.argv[4]))

@@ -28,6 +28,8 @@ object Bench {
       .config("spark.sql.sources.parallelPartitionDiscovery.threshold",
         sys.env.getOrElse("SPARK_GRAFT_LISTING_PAR_THRESHOLD", "128"))
       .config("spark.ui.enabled", "false")
+      // fork-free `file:` filesystem, as in Streaming.streamSession
+      .config(graft.tables.LocalFs.sparkConfs)
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     // warm up the JVM/codegen/reader paths so per-query timings reflect

@@ -25,6 +25,8 @@ object Smoke {
       .config("spark.sql.optimizer.excludedRules",
         "org.apache.spark.sql.catalyst.optimizer.InferFiltersFromGenerate")
       .config("spark.ui.enabled", "false")
+      // fork-free `file:` filesystem, as in Streaming.streamSession
+      .config(graft.tables.LocalFs.sparkConfs)
       .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     if (sys.env.get("GRAFT_AUTOLSH").contains("1")) {

@@ -34,6 +34,8 @@ object Verify {
       .config("spark.sql.sources.parallelPartitionDiscovery.threshold",
         sys.env.getOrElse("SPARK_GRAFT_LISTING_PAR_THRESHOLD", "128"))
       .config("spark.ui.enabled", "false")
+      // fork-free `file:` filesystem, as in Streaming.streamSession
+      .config(graft.tables.LocalFs.sparkConfs)
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()

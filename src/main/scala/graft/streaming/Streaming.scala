@@ -47,18 +47,39 @@ object Streaming {
       .groupBy(col(keyCol), session_window(col(tsCol), gap))
       .agg(count(lit(1)).as("n_events"))
 
-  /** Isolated session clone (own SQLConf, shared SparkContext) with
-    * streaming-sized shuffle parallelism. Stateful operators keep one
-    * state store per shuffle partition per stateful side (a stream-stream
-    * join keeps four), each paying fixed checkpoint/commit overhead per
-    * micro-batch — so partition count should track STATE volume, not the
-    * batch-side CPU count. Cloning instead of mutating the caller's conf
+  /** Isolated session clone (own SQLConf, shared SparkContext) for
+    * streaming drains. Cloning instead of mutating the caller's conf
     * keeps concurrent batch queries on the same session unaffected.
+    *
+    * `partitions` is the state-store sizing knob: it sets
+    * `spark.sql.shuffle.partitions`, which is fixed into a query's
+    * checkpoint at its first run. Stateful operators keep one state store
+    * per shuffle partition per stateful side (a stream-stream join keeps
+    * four), each paying a fixed checkpoint/commit cost per micro-batch,
+    * so the count should track STATE volume, not the batch-side CPU
+    * count: fewer partitions mean fewer commits per batch, more mean
+    * smaller stores and more parallel state updates. 4 is sized for the
+    * fixture streams; an A/B of 4 → 2 on the join drains halved the
+    * summed state-commit ms but not the wall time, because the commits
+    * of one batch run in parallel across tasks. A drain over large
+    * state passes a count derived from its state volume.
+    *
+    * Confs the session sets:
+    *  - `spark.sql.shuffle.partitions` = `partitions` (above)
+    *  - `spark.sql.streaming.noDataMicroBatches.enabled` = false (below)
+    *  - [[graft.tables.LocalFs.confs]]: `file:` paths go through the
+    *    fork-free local filesystem. Spark copies SQL confs into every
+    *    Hadoop conf it builds for the session, so offset, commit and
+    *    source logs, state-store deltas, foreachBatch sinks and the
+    *    layouts written inside a batch all use it; each batch otherwise
+    *    forks dozens of `chmod`/`readlink` processes. The caller's
+    *    session and non-`file:` schemes are untouched.
     */
   def streamSession(s: org.apache.spark.sql.SparkSession,
                     partitions: Int = 4): org.apache.spark.sql.SparkSession = {
     val s2 = s.newSession()
     s2.conf.set("spark.sql.shuffle.partitions", partitions.toString)
+    graft.tables.LocalFs.confs.foreach { case (k, v) => s2.conf.set(k, v) }
     // No trailing no-data micro-batch (r21). Every drain here is
     // Trigger.AvailableNow over a FINITE staged source, and each batch
     // costs ~0.6-0.75 s of fixed machinery (measured, ProfileLeftJoin:

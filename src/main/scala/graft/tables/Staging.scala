@@ -95,6 +95,10 @@ object Staging {
   // (and HDFS); on an object store rename is copy+delete with different
   // atomicity, so a deployment swap replaces THIS FILE's primitives
   // (e.g. with a manifest-pointer commit), not thirty call sites.
+  // These helpers are java.nio; the Hadoop side of the seam (what Spark's
+  // own writers, checkpoints and state stores use for `file:`) is
+  // [[LocalFs]], which keeps Hadoop's local filesystem from forking a
+  // process per chmod and link-status probe.
   // ------------------------------------------------------------------
 
   /** Atomically publish `tmp` as `dst` (same directory): the one rename

@@ -20,6 +20,8 @@ trait SparkSpec extends AnyFunSuite {
     .config("spark.sql.optimizer.excludedRules",
       "org.apache.spark.sql.catalyst.optimizer.InferFiltersFromGenerate")
     .config("spark.ui.enabled", "false")
+    // fork-free `file:` filesystem, as in Streaming.streamSession
+    .config(graft.tables.LocalFs.sparkConfs)
     .getOrCreate()
 
   def sf0001 = "/root/testdata/sf0.001"
