@@ -16,7 +16,8 @@ import org.apache.spark.unsafe.types.UTF8String
   * `mapPartitions`.
   *
   * Algorithm (signed feature hashing, "hashing trick"):
-  *   tokens  = lower(trim(text)) split on \s+, empties dropped
+  *   tokens  = lower(trim(text)) split on \s+, empties dropped (the
+  *             engine's one tokenizer, [[Tokens]])
   *   bucket  = int(md5(token)[hex chars 4..6]) % dim
   *   sign    = +1 if hex char 7 of md5(token) is even, else -1
   *   counts[bucket] += sign                    (exact integer math)
@@ -34,6 +35,9 @@ import org.apache.spark.unsafe.types.UTF8String
 case class HashEmbed(child: Expression, dim: Int)
     extends UnaryExpression {
 
+  // read once, on first evaluation or codegen, as Spark's `Lower` does
+  private final lazy val useICU = Tokens.icuCaseMappings
+
   override def dataType: DataType = ArrayType(DoubleType, containsNull = false)
 
   override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
@@ -44,11 +48,11 @@ case class HashEmbed(child: Expression, dim: Int)
         s"hash_embed expects STRING input, got ${child.dataType.catalogString}")
 
   override def nullSafeEval(input: Any): Any =
-    HashEmbed.evalUTF8(input.asInstanceOf[UTF8String], dim)
+    HashEmbed.evalUTF8(input.asInstanceOf[UTF8String], dim, useICU)
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
     nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = graft.expressions.HashEmbed$$.MODULE$$.evalUTF8($c, $dim);")
+      s"${ev.value} = graft.expressions.HashEmbed$$.MODULE$$.evalUTF8($c, $dim, $useICU);")
 
   override def prettyName: String = "hash_embed"
   override protected def withNewChildInternal(newChild: Expression): HashEmbed =
@@ -58,8 +62,8 @@ case class HashEmbed(child: Expression, dim: Int)
 object HashEmbed {
 
   /** Entry point shared by interpreted eval and generated code. */
-  def evalUTF8(s: UTF8String, dim: Int): GenericArrayData =
-    new GenericArrayData(embed(s.toString, dim))
+  def evalUTF8(s: UTF8String, dim: Int, useICU: Boolean): GenericArrayData =
+    new GenericArrayData(embedTokens(Tokens.split(s, useICU), dim))
 
   /** Per-thread digest — `MessageDigest.getInstance` per token was the
     * hot-loop cost (provider lookup + allocation per call).
@@ -83,28 +87,36 @@ object HashEmbed {
     */
   def bucketSign(token: String, dim: Int): (Int, Int) = {
     val d = md5(token)
-    val b = ((d(1) & 0xf) * 256 + ((d(2) >> 4) & 0xf) * 16 + (d(2) & 0xf)) % dim
-    val s = if ((((d(3) >> 4) & 0xf) & 1) == 0) 1 else -1
-    (b, s)
+    (bucket(d, dim), sign(d))
   }
 
-  private val Whitespace = java.util.regex.Pattern.compile("\\s+")
+  private def bucket(d: Array[Byte], dim: Int): Int =
+    ((d(1) & 0xf) * 256 + ((d(2) >> 4) & 0xf) * 16 + (d(2) & 0xf)) % dim
 
-  def tokens(text: String): Array[String] =
-    Whitespace.split(text.trim.toLowerCase(java.util.Locale.ROOT))
-      .filter(_.nonEmpty)
+  private def sign(d: Array[Byte]): Int = if ((((d(3) >> 4) & 0xf) & 1) == 0) 1 else -1
 
-  /** Pure-Scala embedding — used by the expression and for driver-side query
-    * vectors (reference `rag.py:72-73` embeds the query the same way as rows).
+  /** The engine's tokens of `text` (see [[Tokens]]). */
+  def tokens(text: String): Array[String] = Tokens.of(text)
+
+  /** Driver-side embedding, for query vectors (reference `rag.py:72-73`
+    * embeds the query the same way as rows); equal to the column form
+    * under the active session's case mapping.
     */
-  def embed(text: String, dim: Int): Array[Double] = {
+  def embed(text: String, dim: Int): Array[Double] =
+    embedTokens(Tokens.split(UTF8String.fromString(text), Tokens.icuCaseMappings), dim)
+
+  /** Each token's md5 is taken straight off the lowered bytes: no String
+    * per token.
+    */
+  private def embedTokens(t: Tokens.Split, dim: Int): Array[Double] = {
     val counts = new Array[Long](dim)
-    val ts = tokens(text)
+    val md = threadMd5.get()
     var j = 0
-    while (j < ts.length) {
-      val d = md5(ts(j))
-      val b = ((d(1) & 0xf) * 256 + ((d(2) >> 4) & 0xf) * 16 + (d(2) & 0xf)) % dim
-      counts(b) += (if ((((d(3) >> 4) & 0xf) & 1) == 0) 1 else -1)
+    while (j < t.n) {
+      md.reset()
+      md.update(t.bytes, t.start(j), t.end(j) - t.start(j))
+      val d = md.digest()
+      counts(bucket(d, dim)) += sign(d)
       j += 1
     }
     var norm2 = 0L

@@ -3,7 +3,7 @@ package graft.functions
 import org.apache.spark.sql.{Column, GraftBridge}
 import org.apache.spark.sql.functions._
 
-import graft.expressions.{HashEmbed, RepetitionRatio, Shingles, SimHash}
+import graft.expressions.{HashEmbed, RepetitionRatio, Shingles, SimHash, Tokens}
 
 /** Text-pipeline column functions: embedding, templating, tokenization,
   * intent rules — the reference's text stages re-expressed as codegen-friendly
@@ -32,10 +32,18 @@ object TextFunctions {
       lit(", description: "), description)
 
   /** Whitespace tokens of lowercased text, empties dropped — the shared
-    * tokenization of HashEmbed and the text-analysis ops.
+    * tokenization of HashEmbed, the chunker and the text-analysis ops.
+    *
+    * Equal to Spark's `filter(split(lower(trim(text)), "\\s+"), t => t =!= "")`
+    * under either `spark.sql.icu.caseMappings.enabled`, but one native pass
+    * per row (see graft.expressions.Tokens): it mirrors Spark's UTF8_BINARY
+    * `trim` and `lower` (ICU root case mapping, ASCII fast path) without
+    * Spark's `CollationAwareUTF8String`, whose one-time title-case table
+    * build costs about 1.6 s in the first `lower()` of a JVM, and without
+    * the interpreted `filter` lambda.
     */
   def tokens(text: Column): Column =
-    filter(split(lower(trim(text)), "\\s+"), t => t =!= "")
+    GraftBridge.column(Tokens(GraftBridge.expression(text)))
 
   def tokenCount(text: Column): Column = size(tokens(text)).cast("long")
 

@@ -11,9 +11,11 @@ import org.apache.spark.sql.functions._
   * reference's "engine" too — SURVEY.md §2.1 S6); the engine ingests raw
   * message text from any source (binaryFile batch, file-per-message stream).
   *
-  * Parser shape: UDF returning ARRAY<STRUCT<content_type, body>> + explode —
-  * the UDTF/Generator pattern (SURVEY.md §2.11). Parsing is per-row and
-  * narrow; the only shuffle in the pipeline is the per-message re-aggregation.
+  * Shape: one UDF per row assembles a message's document (its text/plain
+  * bodies in part order) — each input row is one message, as in the
+  * reference's per-message loop. Ingest is narrow: no shuffle, and the
+  * output keeps the input's partitioning, so every later text phase runs
+  * as many tasks as the mailbox has partitions.
   */
 object Mime {
 
@@ -71,28 +73,20 @@ object Mime {
     re.findFirstMatchIn(headers.mkString("\n")).map(_.group(1))
   }
 
-  /** Column form: ARRAY<STRUCT<content_type, body>> of a raw-message column. */
-  val parseMimeUdf = udf((raw: String) => parseMime(raw))
-
-  /** Full E1 ingest: raw messages (idCol, rawCol) →
-    * (id, document) with only text/plain parts, joined by "\n", empties
-    * dropped — mirrors `email_fetching.py:44-51` semantics.
-    *
-    * Re-aggregation uses sort_array over (part_index, body) so multi-part
-    * join order is the original part order regardless of shuffle.
+  /** One message's document: its text/plain bodies in part order, joined
+    * with "\n" (P1/F2, `email_fetching.py:44-48`); "" when it has none.
     */
-  def ingest(messages: DataFrame, idCol: Column, rawCol: Column): DataFrame = {
-    val parts = messages.select(
-        idCol.as("id"),
-        posexplode(parseMimeUdf(rawCol)).as(Seq("part_idx", "part")))
-      .filter(col("part.content_type") === "text/plain") // P1, email_fetching.py:44-48
-    parts
-      .groupBy(col("id"))
-      .agg(array_join(
-        transform(
-          array_sort(collect_list(struct(col("part_idx"), col("part.body").as("body")))),
-          x => x.getField("body")),
-        "\n").as("document")) // F2, email_fetching.py:46
+  private def plainText(raw: String): String =
+    parseMime(raw).collect { case MimePart("text/plain", body) => body }.mkString("\n")
+
+  private val plainTextUdf = udf((raw: String) => plainText(raw))
+
+  /** Full E1 ingest: raw messages (idCol, rawCol) → (id, document) with
+    * only text/plain parts, joined by "\n", empties dropped — mirrors
+    * `email_fetching.py:44-51` semantics. One row per input message: rows
+    * that share an id stay separate documents.
+    */
+  def ingest(messages: DataFrame, idCol: Column, rawCol: Column): DataFrame =
+    messages.select(idCol.as("id"), plainTextUdf(rawCol).as("document"))
       .filter(length(trim(col("document"))) > 0) // P2, email_fetching.py:49
-  }
 }

@@ -46,4 +46,26 @@ class HashEmbedSpec extends SparkSpec {
     val rows = df.select(TextFunctions.hashEmbed($"t", 8)).collect()
     assert(rows(0).isNullAt(0))
   }
+
+  test("control characters are not trimmed: embedding follows Spark's composed tokens") {
+    import spark.implicits._
+    import org.apache.spark.sql.functions._
+    import graft.functions.TextFunctions
+    val text = "\u0001abc Def"
+    val df = spark.sparkContext.parallelize(Seq((1L, text)), 1).toDF("id", "t")
+    val sparkTokens = df.select(filter(split(lower(trim($"t")), "\\s+"), t => t =!= ""))
+      .head().getSeq[String](0)
+    assert(sparkTokens == Seq("\u0001abc", "def"))
+    // the formula: signed bucket counts over the tokens, L2-normalized
+    val counts = new Array[Long](16)
+    sparkTokens.foreach { t =>
+      val (b, sg) = HashEmbed.bucketSign(t, 16)
+      counts(b) += sg
+    }
+    val norm = math.sqrt(counts.map(c => (c * c).toDouble).sum)
+    val want = counts.map(_ / norm).toSeq
+    assert(df.select(TextFunctions.hashEmbed($"t", 16)).head().getSeq[Double](0) == want)
+    assert(HashEmbed.embed(text, 16).toSeq == want)
+    assert(HashEmbed.embed(text, 16).toSeq != HashEmbed.embed("abc def", 16).toSeq)
+  }
 }

@@ -70,4 +70,22 @@ class MimeSpec extends SparkSpec {
     val parts = Mime.parseMime(msg)
     assert(parts == Seq(Mime.MimePart("text/plain", "crlf body")))
   }
+
+  test("ingest is narrow: a 4-partition mailbox gives 4 partitions and no exchange") {
+    import spark.implicits._
+    val msgs = spark.sparkContext.parallelize(
+      (1 to 12).map(i => (s"m$i", s"Content-Type: text/plain\n\nbody $i")), 4).toDF("id", "raw")
+    val out = Mime.ingest(msgs, $"id", $"raw")
+    assert(out.count() == 12)
+    assert(out.rdd.getNumPartitions == 4)
+    assert(!planNodes(out).exists(
+      _.isInstanceOf[org.apache.spark.sql.execution.exchange.Exchange]))
+  }
+
+  test("each row is one message: rows sharing an id stay two documents") {
+    import spark.implicits._
+    val df = Seq(("m1", multipart), ("m1", "Subject: x\n\nsecond message")).toDF("id", "raw")
+    val out = Mime.ingest(df, $"id", $"raw").collect().map(r => r.getString(0) -> r.getString(1))
+    assert(out.toSet == Set("m1" -> "hello plain one\nhello plain two", "m1" -> "second message"))
+  }
 }
