@@ -3,35 +3,7 @@ import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // InferFiltersFromGenerate turns explode(hash_embed(text)) into a
-      // triple evaluation of the embed (size>0 + isnotnull + the generator
-      // itself, measured 3x on q_embed_docs) once pushdown substitutes the
-      // alias; for this engine's explode-over-computed-array shapes the
-      // inferred filter is pure recomputation, so the rule is excluded.
-      .config("spark.sql.optimizer.excludedRules",
-        "org.apache.spark.sql.catalyst.optimizer.InferFiltersFromGenerate")
-      // Partition discovery below this path count lists on the driver
-      // thread instead of launching a listing JOB. Every persisted stage
-      // here is a 64-hash-bucket directory tree, and the default
-      // threshold (32) made each staged-relation open pay a ~200 ms
-      // distributed listing of 64 local directories a sequential readdir
-      // does in microseconds — measured 32% of the postings drain chain
-      // (ProfileAppendJobs, OPTIMIZATION_r20.md §listing). Parameterised
-      // because the tradeoff inverts on object stores with thousands of
-      // partitions, where parallel listing is the right call.
-      .config("spark.sql.sources.parallelPartitionDiscovery.threshold",
-        sys.env.getOrElse("SPARK_GRAFT_LISTING_PAR_THRESHOLD", "128"))
-      .config("spark.ui.enabled", "false")
-      // fork-free `file:` filesystem, as in Streaming.streamSession
-      .config(graft.tables.LocalFs.sparkConfs)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local(GraftSession.cpus)
     // warm up the JVM/codegen/reader paths so per-query timings reflect
     // steady state, not first-job JIT
     try SparkEntry.entry(spark).count() catch { case _: Throwable => () }
@@ -250,5 +222,52 @@ object Bench {
     }
     println(s"""{"metric":"total","value":${r3(total)},"unit":"sec","sf":"$sfDir","n_queries":${results.size},"full":"BENCH_FULL.json","slowest":$slowest$selfGate}""")
     spark.stop()
+  }
+}
+
+/** The one way this engine builds a SparkSession: Bench, Verify,
+  * ScaleBench, Smoke and the specs all come from [[local]], so they run
+  * the same confs. The confs stay string literals in this file because
+  * perfbench checks that every conf of its own session appears, key and
+  * value, in the text of `Bench.scala`.
+  */
+object GraftSession {
+  /** `SPARK_GRAFT_CPUS`, else every core of this host. */
+  def cpus: Int = sys.env.get("SPARK_GRAFT_CPUS").map(_.toInt)
+    .getOrElse(Runtime.getRuntime.availableProcessors)
+
+  def local(cpus: Int): SparkSession = {
+    val spark = SparkSession.builder()
+      .master(s"local[$cpus]")
+      .config("spark.sql.shuffle.partitions", cpus.toString)
+      .config("spark.sql.session.timeZone", "UTC")
+      // events.ts is parquet TIMESTAMP(NANOS) in some testdata
+      // generations, which Spark's reader rejects; read it as BIGINT nanos
+      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
+      // InferFiltersFromGenerate turns explode(hash_embed(text)) into a
+      // triple evaluation of the embed (size>0 + isnotnull + the generator
+      // itself, measured 3x on q_embed_docs) once pushdown substitutes the
+      // alias; for this engine's explode-over-computed-array shapes the
+      // inferred filter is pure recomputation, so the rule is excluded.
+      .config("spark.sql.optimizer.excludedRules",
+        "org.apache.spark.sql.catalyst.optimizer.InferFiltersFromGenerate")
+      // Partition discovery below this path count lists on the driver
+      // thread instead of launching a listing JOB. Every persisted stage
+      // here is a 64-hash-bucket directory tree, and the default
+      // threshold (32) made each staged-relation open pay a ~200 ms
+      // distributed listing of 64 local directories a sequential readdir
+      // does in microseconds — measured 32% of the postings drain chain
+      // (OPTIMIZATION_r20.md §1). On object stores with thousands of
+      // partitions the tradeoff inverts and parallel listing is right.
+      .config("spark.sql.sources.parallelPartitionDiscovery.threshold", "128")
+      .config("spark.ui.enabled", "false")
+      // fork-free `file:` filesystem, as in Streaming.streamSession
+      .config(graft.tables.LocalFs.sparkConfs)
+      // SQL functions, LshKnnRule and the as-of join strategy, in this
+      // session and every session derived from it
+      .config("spark.sql.extensions", "graft.GraftExtensions")
+      .getOrCreate()
+    spark.sparkContext.setLogLevel("WARN")
+    spark
   }
 }

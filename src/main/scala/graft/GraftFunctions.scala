@@ -10,9 +10,8 @@ import graft.expressions._
   *
   *   SELECT l2_distance(a.embedding, b.embedding), hash_embed(text, 64) ...
   *
-  * `registerAll` uses the session FunctionRegistry (works on any session);
-  * `GraftExtensions` is the `spark.sql.extensions=graft.GraftExtensions`
-  * config-time variant for clusters.
+  * [[GraftExtensions]] injects them into every session built with
+  * `spark.sql.extensions=graft.GraftExtensions`.
   */
 object GraftFunctions {
 
@@ -62,23 +61,24 @@ object GraftFunctions {
       if (es.length > 2) doubleLit(es(2), "mmr_greedy lambda") else 0.5)
       .toAggregateExpression())
   )
-
-  def registerAll(spark: SparkSession): Unit =
-    builders.foreach { case (name, b) =>
-      spark.sessionState.functionRegistry
-        .createOrReplaceTempFunction(name, es => b(es), "scala_udf")
-    }
 }
 
-/** Config-time registration: `.withExtensions(new GraftExtensions)` or
-  * `spark.sql.extensions=graft.GraftExtensions`.
+/** The engine's one install point, `spark.sql.extensions=graft.GraftExtensions`
+  * (as [[GraftSession.local]] sets it): the SQL functions of
+  * [[GraftFunctions.builders]], the opt-in [[graft.plans.LshKnnRule]]
+  * (gated by `spark.graft.ann.autoLsh`) and the as-of join's
+  * [[graft.plans.AsOfStrategy]]. Extensions are part of every session's
+  * state, so `newSession()` children and streaming clones get all three.
   */
 class GraftExtensions extends (org.apache.spark.sql.SparkSessionExtensions => Unit) {
-  override def apply(ext: org.apache.spark.sql.SparkSessionExtensions): Unit =
+  override def apply(ext: org.apache.spark.sql.SparkSessionExtensions): Unit = {
     GraftFunctions.builders.foreach { case (name, b) =>
       ext.injectFunction((
         org.apache.spark.sql.catalyst.FunctionIdentifier(name),
         new org.apache.spark.sql.catalyst.expressions.ExpressionInfo("graft", name),
         (es: Seq[Expression]) => b(es)))
     }
+    ext.injectOptimizerRule(graft.plans.LshKnnRule(_))
+    ext.injectPlannerStrategy(_ => graft.plans.AsOfStrategy)
+  }
 }

@@ -433,23 +433,7 @@ object ScaleBench {
   def main(args: Array[String]): Unit = {
     val outJson = args.headOption.getOrElse("BENCH_SCALE.json")
     val baseDir = if (args.length > 1) args(1) else "/tmp/graft_scale"
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.optimizer.excludedRules",
-        "org.apache.spark.sql.catalyst.optimizer.InferFiltersFromGenerate")
-      // driver-thread listing for the 64-bucket stage trees (see
-      // Bench.scala for the measurement; parameterised for object stores)
-      .config("spark.sql.sources.parallelPartitionDiscovery.threshold",
-        sys.env.getOrElse("SPARK_GRAFT_LISTING_PAR_THRESHOLD", "128"))
-      .config("spark.ui.enabled", "false")
-      // fork-free `file:` filesystem, as in Streaming.streamSession
-      .config(graft.tables.LocalFs.sparkConfs)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local(GraftSession.cpus)
 
     // Dev iteration filter: SPARK_GRAFT_SCALE_ONLY="q_a,q_b" restricts
     // the batch family; SPARK_GRAFT_SCALE_MAX=10 drops larger decades.
@@ -784,7 +768,7 @@ object ScaleBench {
     // ---- batch-count amortization family (r21) -----------------------
     // The ingest drains' declared residual is per-micro-batch FIXED cost
     // (state-store commit + offset/commit WAL + per-batch planning,
-    // measured ~0.6-0.75 s/batch in ProfileLeftJoin), which production
+    // measured ~0.6-0.75 s/batch, OPTIMIZATION_r21.md §1), which production
     // amortizes with bigger batches. This family proves the claim at the
     // harness: the SAME corpus — identical rows, identical event times —
     // chopped into {1, 4, 16} files runs the stream_window query as

@@ -1,38 +1,16 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev smoke runner: drives SparkEntry.entry (the driver's t1 smoke) and,
   * with args, any named query — printing the formatted physical plan so the
   * scale-shape of each operator can be inspected (`.explain("formatted")`).
   *
   * Usage: graft.Smoke [queryName sfDir] (no args → entry on sf0.001)
-  *        graft.Smoke sql "<statement>" [sfDir]  — runs SQL with graft
-  *        functions registered and testdata tables as temp views
+  *        graft.Smoke sql "<statement>" [sfDir]  — runs SQL over the
+  *        testdata tables as temp views
   */
 object Smoke {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")}]")
-      .config("spark.sql.shuffle.partitions", sys.env.getOrElse("SPARK_GRAFT_CPUS", "4"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // InferFiltersFromGenerate turns explode(hash_embed(text)) into a
-      // triple evaluation of the embed (size>0 + isnotnull + the generator
-      // itself, measured 3x on q_embed_docs) once pushdown substitutes the
-      // alias; for this engine's explode-over-computed-array shapes the
-      // inferred filter is pure recomputation, so the rule is excluded.
-      .config("spark.sql.optimizer.excludedRules",
-        "org.apache.spark.sql.catalyst.optimizer.InferFiltersFromGenerate")
-      .config("spark.ui.enabled", "false")
-      // fork-free `file:` filesystem, as in Streaming.streamSession
-      .config(graft.tables.LocalFs.sparkConfs)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    if (sys.env.get("GRAFT_AUTOLSH").contains("1")) {
-      graft.plans.LshKnnRule.install(spark)
-      spark.conf.set("spark.graft.ann.autoLsh", "true")
-    }
+    val spark = GraftSession.local(GraftSession.cpus)
     val df = args match {
       case Array("skew") =>
         // salted-join demo on synthetic hot-key data
@@ -62,7 +40,6 @@ object Smoke {
         spark.table("demo_out")
       case Array("sql", stmt, rest @ _*) =>
         val sfDir = rest.headOption.getOrElse("/root/testdata/sf0.001")
-        GraftFunctions.registerAll(spark)
         Seq("region", "nation", "customer", "supplier", "part", "orders",
           "lineitem", "events", "documents", "embeddings").foreach { t =>
           spark.read.parquet(s"$sfDir/$t.parquet").createOrReplaceTempView(t)

@@ -2712,17 +2712,16 @@ object SparkEntry {
     }),
 
     // Optimizer-rule gate (plans.LshKnnRule): the SAME declarative exact-KNN
-    // query as knn_l2, run in a child session with the rule installed and
-    // spark.graft.ann.autoLsh=true. The rule must rewrite the O(n) distance
-    // scan into the bucket-local LSH probe; the oracle is the bucket-local
-    // SQL (ann_lsh semantics), NOT the exact top-5 — recall@5 < 1 on this
-    // corpus, so an un-fired rule returns the exact answer and hash-
-    // MISMATCHES. The in-closure plan check catches the same failure
+    // query as knn_l2, run in a child session (which inherits the rule from
+    // GraftExtensions) with spark.graft.ann.autoLsh=true. The rule must
+    // rewrite the O(n) distance scan into the bucket-local LSH probe; the
+    // oracle is the bucket-local SQL (ann_lsh semantics), NOT the exact
+    // top-5 — recall@5 < 1 on this corpus, so an un-fired rule returns the
+    // exact answer and hash-MISMATCHES. The in-closure plan check catches the same failure
     // earlier with a better message. (Answer quality of the rewrite vs
     // exact KNN is tracked separately by q_ann_recall.)
     "q_lsh_rule_knn" -> ((s, dir) => {
       val child = s.newSession()
-      graft.plans.LshKnnRule.install(child)
       child.conf.set("spark.graft.ann.autoLsh", "true")
       val df = Knn.knn(Tables.embeddings(child, dir), col("embedding"),
           col("vec_id"), QueryVec.values, 5, Knn.L2)
@@ -4977,10 +4976,9 @@ object SparkEntry {
     // The custom-expression SQL surface end-to-end: hash_embed +
     // l2_distance called from spark.sql over a temp view — the same
     // codegen'd Catalyst expressions the DataFrame queries use, reached
-    // through the FunctionRegistry (GraftFunctions.registerAll), so a
+    // through the FunctionRegistry (injected by GraftExtensions), so a
     // SQL-only user gets identical results.
     "q_sql_custom_funcs" -> ((s, dir) => {
-      GraftFunctions.registerAll(s)
       Tables.documents(s, dir).createOrReplaceTempView("documents_v")
       s.sql(
         s"""SELECT doc_id,
@@ -7276,7 +7274,7 @@ object SparkEntry {
     // independent, so the drained union must equal the one-shot batch
     // retrieval — the same oracle as q_conversation_rag.
     //
-    // Cost floor, measured (graft.ProfileConv, sf0.1 solo, 2 rounds):
+    // Cost floor, measured in round 16 (sf0.1 solo, 2 rounds):
     // full drain 7.2 s; the identical pipeline with a NO-OP sink
     // (stateful resolve + state-store commits + machinery, zero
     // retrieval) 1.8 s; the ONE-SHOT batch retrieval over the same

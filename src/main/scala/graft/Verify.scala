@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -13,31 +12,7 @@ object Verify {
       writeOracles(outDir, SparkEntry.oracleSql, "oracle_sql.json")
       return
     }
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      // events.ts is parquet TIMESTAMP(NANOS) — illegal for Spark's reader;
-      // read as BIGINT nanos; queries expose micros (ts_us via ts div 1000,
-      // oracle side: epoch_us — DuckDB truncates nanos to micros).
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // InferFiltersFromGenerate turns explode(hash_embed(text)) into a
-      // triple evaluation of the embed (size>0 + isnotnull + the generator
-      // itself, measured 3x on q_embed_docs) once pushdown substitutes the
-      // alias; for this engine's explode-over-computed-array shapes the
-      // inferred filter is pure recomputation, so the rule is excluded.
-      .config("spark.sql.optimizer.excludedRules",
-        "org.apache.spark.sql.catalyst.optimizer.InferFiltersFromGenerate")
-      // driver-thread listing for the 64-bucket stage trees (see
-      // Bench.scala for the measurement; parameterised for object stores)
-      .config("spark.sql.sources.parallelPartitionDiscovery.threshold",
-        sys.env.getOrElse("SPARK_GRAFT_LISTING_PAR_THRESHOLD", "128"))
-      .config("spark.ui.enabled", "false")
-      // fork-free `file:` filesystem, as in Streaming.streamSession
-      .config(graft.tables.LocalFs.sparkConfs)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local(GraftSession.cpus)
     new java.io.File(outDir).mkdirs()
     // Queries are independent — run them on concurrent threads (Spark
     // schedules concurrent jobs fine); the serial dump measured ~3 min at

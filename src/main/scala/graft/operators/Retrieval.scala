@@ -400,7 +400,7 @@ object Retrieval {
     // (count, Σdl) — the separate isEmpty probe plus the concurrent
     // writeGlobals job were two more driver round-trips per micro-batch
     // (r20; each sequential job at batch size is ~100 ms of fixed cost
-    // plus a planning gap, cf. ProfileAppendJobs)
+    // plus a planning gap, cf. OPTIMIZATION_r20.md §2)
     val bg = fresh.agg(count(lit(1)).cast("long"),
       coalesce(sum(size(col("tk")).cast("long")), lit(0L))).collect().head
     if (bg.getLong(0) == 0L) return

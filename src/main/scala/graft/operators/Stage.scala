@@ -35,8 +35,9 @@ object Stage {
     * downstream keyed round RE-EXCHANGES the pre-partitioned relation
     * (the executed q_pagerank_personalized plan carries one
     * `Exchange hashpartitioning(id, 32)` per iteration over the
-    * checkpointed node set; ProfileStageCut is the minimal repro, and
-    * plans/r21/q_pagerank_personalized_* show both shapes). Removing
+    * checkpointed node set; GraphSpec's "Stage.Local cut under AQE" test
+    * pins that shape, and plans/r21/q_pagerank_personalized_* show both
+    * shapes). Removing
     * those exchanges by materializing the cut with AQE off was built and
     * A/B'd — and REGRESSED the whole iterative family ~1.4× at sf0.1
     * (pagerank 4.25→6.15 s, personalized 4.33→6.40, dangling 3.89→5.38,

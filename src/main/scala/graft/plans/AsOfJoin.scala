@@ -187,9 +187,6 @@ object AsOf {
     }
     require(toleranceUs >= 0, "toleranceUs must be non-negative")
     val spark = left.sparkSession
-    if (!spark.experimental.extraStrategies.contains(AsOfStrategy))
-      spark.experimental.extraStrategies =
-        spark.experimental.extraStrategies :+ AsOfStrategy
     val lp = GraftBridge.logicalPlan(left)
     val rp = GraftBridge.logicalPlan(right)
     def attr(p: LogicalPlan, name: String): Attribute = {

@@ -23,8 +23,7 @@ import graft.operators.Ann
   *
   *   spark.graft.ann.autoLsh = true   (numPlanes: spark.graft.ann.planes)
   *
-  * Registered via `LshKnnRule.install(spark)` → experimental
-  * extraOptimizations.
+  * Injected into every session by [[graft.GraftExtensions]].
   */
 case class LshKnnRule(spark: SparkSession) extends Rule[LogicalPlan] {
 
@@ -81,23 +80,14 @@ case class LshKnnRule(spark: SparkSession) extends Rule[LogicalPlan] {
     }
   }
 
-  /** Idempotency guard: extraOptimizations run in a fixed-point batch, so
-    * without this the rule would stack an identical Filter on every
-    * iteration (up to maxIterations). Our injected filter is recognizable
-    * by the DotProductExpr bucket chain.
+  /** Idempotency guard: injected optimizer rules run in fixed-point
+    * batches, so without this the rule would stack an identical Filter on
+    * every iteration (up to maxIterations). Our injected filter is
+    * recognizable by the DotProductExpr bucket chain.
     */
   private def alreadyRewritten(child: LogicalPlan): Boolean = child match {
     case Filter(cond, _) =>
       cond.exists(_.isInstanceOf[graft.expressions.DotProductExpr])
     case _ => false
-  }
-}
-
-object LshKnnRule {
-  /** Idempotently install into the session's experimental optimizations. */
-  def install(spark: SparkSession): Unit = {
-    val existing = spark.experimental.extraOptimizations
-    if (!existing.exists(_.isInstanceOf[LshKnnRule]))
-      spark.experimental.extraOptimizations = existing :+ LshKnnRule(spark)
   }
 }

@@ -82,8 +82,9 @@ object Streaming {
     graft.tables.LocalFs.confs.foreach { case (k, v) => s2.conf.set(k, v) }
     // No trailing no-data micro-batch (r21). Every drain here is
     // Trigger.AvailableNow over a FINITE staged source, and each batch
-    // costs ~0.6-0.75 s of fixed machinery (measured, ProfileLeftJoin:
-    // addBatch job + state-store commit + offset/commit WAL + planning)
+    // costs ~0.6-0.75 s of fixed machinery (measured per batch,
+    // OPTIMIZATION_r21.md §1: addBatch job + state-store commit +
+    // offset/commit WAL + planning)
     // regardless of rows — so a trailing empty batch is pure per-drain
     // overhead UNLESS the last data batch raised the watermark past
     // still-buffered state. No drain in this engine depends on that:
@@ -93,8 +94,8 @@ object Streaming {
     // AvailableNow was the r18 measured failure that introduced the
     // sentinels), Complete-mode drains re-emit converged state on the
     // last DATA batch, and append-mode dedup/join emission is
-    // data-batch-driven (ProfileLeftJoin: the trailing batch measured
-    // updated=0 removed=0, emitted nothing). Proven result-invariant
+    // data-batch-driven (OPTIMIZATION_r21.md §1: the trailing batch
+    // measured updated=0 removed=0, emitted nothing). Proven result-invariant
     // across all 259 oracle queries (self-gate r21). A continuous
     // production stream would leave this ON (there the no-data batch is
     // how idle-period watermark eviction happens); it is a property of

@@ -56,6 +56,9 @@ class AsOfSpec extends SparkSpec {
     val df = AsOf.join(l, "k", "t", r, "k2", "t2", "tie")
     val plan = df.queryExecution.executedPlan.toString
     assert(plan.contains("AsOfJoin"))
+    assert(planNodes(df).exists(_.isInstanceOf[AsOfJoinExec]))
+    // planned through GraftExtensions, not by mutating the session
+    assert(spark.experimental.extraStrategies.isEmpty)
     assert(df.count() == 1)
   }
 

@@ -3,7 +3,12 @@ package graft
 class GraftFunctionsSpec extends SparkSpec {
 
   test("registered SQL functions evaluate like their Column twins") {
-    GraftFunctions.registerAll(spark)
+    // the cluster install path: the session's only hook is the conf
+    assert(spark.sparkContext.getConf.get("spark.sql.extensions") == "graft.GraftExtensions")
+    val fresh = spark.newSession()
+    GraftFunctions.builders.foreach { case (name, _) =>
+      assert(fresh.catalog.functionExists(name), s"$name not resolvable in a new session")
+    }
     val row = spark.sql(
       """SELECT l2_distance(array(1.0D, 2.0D), array(4.0D, 6.0D)) AS l2,
         |       dot_product(array(1.0D, 2.0D), array(3.0D, 4.0D)) AS dp,
@@ -22,7 +27,6 @@ class GraftFunctionsSpec extends SparkSpec {
   }
 
   test("SQL functions survive filters/aggregates in a real query") {
-    GraftFunctions.registerAll(spark)
     spark.read.parquet(s"$sf0001/documents.parquet").createOrReplaceTempView("docs_v")
     val n = spark.sql(
       "SELECT count(*) FROM docs_v WHERE simhash(text) != 0").head().getLong(0)

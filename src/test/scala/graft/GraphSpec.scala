@@ -239,4 +239,27 @@ class GraphSpec extends SparkSpec {
     val k = out.select($"iters_run").head().getInt(0)
     assert(k == 3, s"cap expected, got $k") // line graph never reaches delta 0 in 3
   }
+
+  // Stage.Local's re-exchange is kept deliberately (see its comment):
+  // under AQE a localCheckpoint scans back without the partitioning of
+  // the repartition before it, so a keyed round re-exchanges the cut.
+  test("Stage.Local cut under AQE: keyed downstream plans a fresh hash exchange") {
+    import org.apache.spark.sql.catalyst.plans.physical.{HashPartitioning, UnknownPartitioning}
+    import org.apache.spark.sql.execution.RDDScanExec
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+    import graft.operators.Stage
+    assert(spark.conf.get("spark.sql.adaptive.enabled") == "true")
+    val base = spark.range(10000).select((col("id") % 100).as("k"), col("id").as("v"))
+    val cut = Stage.Local.cut(base.repartition(col("k")), "stage_cut_probe")
+    val downstream = cut.groupBy(col("k")).count()
+    val nodes = planNodes(downstream)
+    val scans = nodes.collect { case r: RDDScanExec => r }
+    assert(scans.nonEmpty && scans.forall(_.outputPartitioning.isInstanceOf[UnknownPartitioning]),
+      scans.map(_.outputPartitioning).mkString(", "))
+    val hashExchanges = nodes.collect {
+      case e: ShuffleExchangeExec if e.outputPartitioning.isInstanceOf[HashPartitioning] => e
+    }
+    assert(hashExchanges.size == 1, downstream.queryExecution.executedPlan.toString)
+    assert(downstream.count() == 100)
+  }
 }

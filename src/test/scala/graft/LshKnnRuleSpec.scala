@@ -4,16 +4,17 @@ import org.apache.spark.sql.functions._
 
 import graft.operators.{Ann, Knn}
 import graft.oracle.OracleGen.QueryVec
-import graft.plans.LshKnnRule
 import graft.tables.Tables
 
 class LshKnnRuleSpec extends SparkSpec {
 
-  private def knnDf = Knn.knn(Tables.embeddings(spark, sf0001),
-    col("embedding"), col("vec_id"), QueryVec.values, 5)
+  private def knnDf = knnOn(spark)
+  private def knnOn(s: org.apache.spark.sql.SparkSession) = Knn.knn(
+    Tables.embeddings(s, sf0001), col("embedding"), col("vec_id"), QueryVec.values, 5)
 
   test("rule off by default: plan keeps the full scan") {
-    LshKnnRule.install(spark)
+    // injected by GraftExtensions, not by mutating the session
+    assert(spark.experimental.extraOptimizations.isEmpty)
     spark.conf.unset("spark.graft.ann.autoLsh")
     val plan = knnDf.queryExecution.optimizedPlan.toString
     assert(!plan.contains("dot_product")) // no bucket filter injected
@@ -22,7 +23,6 @@ class LshKnnRuleSpec extends SparkSpec {
 
   test("rule on: tolerates a Filter between Sort and Project") {
     import graft.functions.VectorFunctions
-    LshKnnRule.install(spark)
     spark.conf.set("spark.graft.ann.autoLsh", "true")
     try {
       // a non-deterministic predicate cannot be pushed below the Project,
@@ -45,7 +45,6 @@ class LshKnnRuleSpec extends SparkSpec {
   }
 
   test("rule on: injects the LSH bucket filter and matches annLsh output") {
-    LshKnnRule.install(spark)
     spark.conf.set("spark.graft.ann.autoLsh", "true")
     try {
       val df = knnDf
@@ -58,5 +57,9 @@ class LshKnnRuleSpec extends SparkSpec {
       assert(rewritten == direct)
       assert(rewritten.nonEmpty)
     } finally spark.conf.unset("spark.graft.ann.autoLsh")
+    // a child session inherits the rule; the gate conf alone enables it
+    val child = spark.newSession()
+    child.conf.set("spark.graft.ann.autoLsh", "true")
+    assert(knnOn(child).queryExecution.optimizedPlan.toString.contains("dot_product"))
   }
 }

@@ -28,7 +28,6 @@ class SketchSpec extends SparkSpec {
     val sk = df.agg(
       count_min_sketch(col("k"), lit(0.001), lit(0.99), lit(42)).as("cms"),
       count(lit(1)).as("n_total"))
-    GraftFunctions.registerAll(spark)
     sk.createOrReplaceTempView("sk")
     val est = spark.sql(
       """SELECT cms_estimate(cms, 1L) AS e1, cms_estimate(cms, 2L) AS e2,

@@ -4,25 +4,12 @@ import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Shared session base — one SparkSession per suite (lazy, reused across
-  * suites within the same JVM via getOrCreate).
+  * suites within the same JVM via getOrCreate), with Bench's exact confs
+  * at a fixed width of 4, which the specs' plan and layout assertions
+  * are written against.
   */
 trait SparkSpec extends AnyFunSuite {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-    // InferFiltersFromGenerate turns explode(hash_embed(text)) into a
-    // triple evaluation of the embed (size>0 + isnotnull + the generator
-    // itself, measured 3x on q_embed_docs) once pushdown substitutes the
-    // alias; for this engine's explode-over-computed-array shapes the
-    // inferred filter is pure recomputation, so the rule is excluded.
-    .config("spark.sql.optimizer.excludedRules",
-      "org.apache.spark.sql.catalyst.optimizer.InferFiltersFromGenerate")
-    .config("spark.ui.enabled", "false")
-    // fork-free `file:` filesystem, as in Streaming.streamSession
-    .config(graft.tables.LocalFs.sparkConfs)
-    .getOrCreate()
+  lazy val spark: SparkSession = GraftSession.local(4)
 
   def sf0001 = "/root/testdata/sf0.001"
 

@@ -30,7 +30,6 @@ class VectorSumFpSpec extends SparkSpec {
   }
 
   test("works through the SQL registry") {
-    GraftFunctions.registerAll(spark)
     Tables.embeddings(spark, sf0001).createOrReplaceTempView("emb_vsf")
     val viaSql = spark.sql(
       "SELECT label, vector_sum_fp(embedding, 64) AS s FROM emb_vsf GROUP BY label")
