@@ -1417,7 +1417,7 @@ object SparkEntry {
 
   /** One-time AUTO-COMPACTED graph-ANN index: built on 2/3 of the
     * embeddings, the remaining third appended in THREE waves (each wave
-    * lands one new file per touched nodes/ids partition — maintenance
+    * lands one new file per touched nodes/ partition — maintenance
     * debt the policy, not an operator, must notice), then
     * GraphAnnIndex.compactIfFragmented fires once files-per-partition
     * crosses the threshold. Fire/no-fire is asserted at build, post-

@@ -19,20 +19,13 @@ import org.apache.spark.sql.functions._
   * Layout under `path` (the VectorStore discipline — the directory
   * layout IS the index, no server process, nothing rebuilt on restart):
   *
-  *   nodes/        (id, vec, bucket)    partitioned by LSH `bucket`
-  *   ids/          (id, bucket, ib)     partitioned by id-hash `ib` —
-  *                 the admission sidecar AND forward map: nodes are
-  *                 partitioned by the VECTOR's bucket, so an "is this
-  *                 id already here?" lookup cannot prune them; this
-  *                 relation can, making the per-batch admission
-  *                 anti-join ∝ the batch's id buckets instead of a
-  *                 full id-column scan per append (and correct even
-  *                 when a stored id arrives with a CHANGED vector,
-  *                 which a vector-bucket prune of the node table would
-  *                 miss). Recording each id's bucket also gives
-  *                 [[delete]] the victims' buckets from the same
-  *                 pruned lookup — no corpus scan anywhere in the
-  *                 maintenance surface
+  *   nodes/        (id, vec, bucket)    partitioned by LSH `bucket`.
+  *                 Its stored id column is also the admission and
+  *                 delete lookup: parquet column pruning reads ids (and
+  *                 buckets), not vectors, so an append writes exactly
+  *                 one node file per touched bucket and nothing else.
+  *                 An `ids/` sidecar left by an older build is ignored
+  *                 by every reader and removed by [[compact]]
   *   coarse_adj/   (src, dst, d_bucket) partitioned by `d_bucket`
   *   base_adj/     (src, dst, d_bucket) partitioned by `d_bucket`
   *   _INDEX_META   parameters; written LAST via atomic rename — the
@@ -89,12 +82,8 @@ object GraphAnnIndex {
       java.nio.file.Files.readString(genFile(path)).trim.toLong
     else 0L
 
-  private def bumpGen(path: String): Unit = {
-    import java.nio.file.{Files, Paths, StandardCopyOption}
-    val tmp = Paths.get(path, "_GEN_TMP")
-    Files.writeString(tmp, System.nanoTime().toString)
-    graft.tables.Staging.atomicPublish(tmp, genFile(path))
-  }
+  private def bumpGen(path: String): Unit =
+    graft.tables.Staging.publishText(genFile(path), System.nanoTime().toString)
 
   /** Best-effort stored-node-count HINT — the cost-model input that picks
     * between [[updateLayerOps]]'s two edge-identical `replaced` shapes
@@ -116,12 +105,8 @@ object GraphAnnIndex {
         .trim.toLong).toOption
     else None
 
-  private def writeCountHint(path: String, n: Long): Unit = {
-    import java.nio.file.{Files, Paths, StandardCopyOption}
-    val tmp = Paths.get(path, "_COUNT_TMP")
-    Files.writeString(tmp, n.toString)
-    graft.tables.Staging.atomicPublish(tmp, countFile(path))
-  }
+  private def writeCountHint(path: String, n: Long): Unit =
+    graft.tables.Staging.publishText(countFile(path), n.toString)
 
   /** True iff a completed build exists at `path` (the done marker is
     * written last, so its presence certifies the whole layout).
@@ -129,13 +114,9 @@ object GraphAnnIndex {
   def exists(path: String): Boolean =
     java.nio.file.Files.exists(metaFile(path))
 
-  private def writeMeta(path: String, m: Meta): Unit = {
-    import java.nio.file.{Files, Paths, StandardCopyOption}
-    val tmp = Paths.get(path, "_INDEX_META_TMP")
-    Files.writeString(tmp,
+  private def writeMeta(path: String, m: Meta): Unit =
+    graft.tables.Staging.publishText(metaFile(path),
       s"${m.sampleMod} ${m.edgesPerBucket} ${m.numPlanes} ${m.dim} ${m.probeBits}")
-    graft.tables.Staging.atomicPublish(tmp, metaFile(path))
-  }
 
   /** Read the index parameters; refuses an index with unfinished
     * maintenance (flagged by the `_APPENDING` intent marker or a pending
@@ -156,63 +137,6 @@ object GraphAnnIndex {
     Meta(p(0), p(1), p(2), p(3), p(4))
   }
 
-  private def deleteRec(path: String): Unit =
-    graft.tables.Staging.deleteRec(path)
-
-  /** Id-hash bucket for the admission sidecar (crc32, like the
-    * Retrieval stages' db key: a literal id's bucket is trivially
-    * computable driver-side, so admission scans partition-prune).
-    */
-  private val NumIdBuckets = 64
-  private def ibCol(id: Column): Column =
-    pmod(crc32(id.cast("string")), lit(NumIdBuckets.toLong)).cast("int")
-
-  /** The admission/forward-map sidecar — (id, bucket) partitioned by id
-    * hash. Besides pruned admission, recording each id's BUCKET makes
-    * it the forward index the bucket-partitioned node table lacks:
-    * [[delete]] learns the victims' buckets from an id-bucket-pruned
-    * lookup instead of scanning every node (the IvfIndex id→cell
-    * discipline). Backfilled from the node table on first touch of a
-    * pre-sidecar (or pre-bucket, `_IDS_V2`-less) index — one full scan,
-    * ONCE. Read with the DECLARED schema (ids are numeric throughout
-    * the engine — `id % sampleMod` is the coarse-layer membership test
-    * — and stored as LONG): schema inference would open an arbitrary
-    * file's footer, defeating the partition pruning this relation
-    * exists for.
-    */
-  private val IdsSchema = org.apache.spark.sql.types.StructType(Seq(
-    org.apache.spark.sql.types.StructField("id",
-      org.apache.spark.sql.types.LongType),
-    org.apache.spark.sql.types.StructField("bucket",
-      org.apache.spark.sql.types.IntegerType),
-    org.apache.spark.sql.types.StructField("ib",
-      org.apache.spark.sql.types.IntegerType)))
-
-  private def idsMarker(path: String) =
-    java.nio.file.Paths.get(path, "ids", "_IDS_V2")
-
-  private def idsRel(spark: SparkSession, path: String): DataFrame = {
-    if (!java.nio.file.Files.exists(idsMarker(path))) {
-      // absent OR pre-bucket layout: rebuild the sidecar whole from the
-      // node table (the one-time migration scan)
-      graft.tables.Staging.deleteRec(s"$path/ids")
-      writeIds(spark.read.parquet(s"$path/nodes")
-        .select(col("id"), col("bucket")), path, overwrite = true)
-    }
-    spark.read.schema(IdsSchema).parquet(s"$path/ids")
-  }
-
-  private def writeIds(ids: DataFrame, path: String,
-                       overwrite: Boolean): Unit = {
-    graft.tables.Staging.writePartitioned(
-      ids.select(col("id").cast("long").as("id"),
-          col("bucket").cast("int").as("bucket"))
-        .withColumn("ib", ibCol(col("id"))),
-      "ib", s"$path/ids", if (overwrite) "overwrite" else "append")
-    if (!java.nio.file.Files.exists(idsMarker(path)))
-      java.nio.file.Files.createFile(idsMarker(path))
-  }
-
   /** Build the full index at `path` (wholesale overwrite of any previous
     * index there). The adjacency builds read the STAGED node table, so
     * the corpus lineage runs exactly once.
@@ -221,17 +145,17 @@ object GraphAnnIndex {
             sampleMod: Int = 16, edgesPerBucket: Int = 3, numPlanes: Int = 4,
             dim: Int = 64, probeBits: Int = 2): Unit = {
     val spark = corpus.sparkSession
-    deleteRec(path)
+    graft.tables.Staging.deleteRec(path)
     graft.tables.Staging.writePartitioned(
       corpus.select(idCol.as("id"), vecCol.as("vec"),
         Ann.bucketOf(vecCol, numPlanes, dim).as("bucket")),
       "bucket", s"$path/nodes")
     val nodes = spark.read.parquet(s"$path/nodes")
-    // the three derived relations (sidecar + both adjacency layers) each
-    // read only the STAGED nodes and write disjoint directories — run
-    // them CONCURRENTLY (the Commit.commit staging discipline): the done
-    // marker below still lands strictly after all three, so crash
-    // atomicity is unchanged. First failure rethrows after all settle.
+    // the two derived adjacency layers each read only the STAGED nodes
+    // and write disjoint directories — run them CONCURRENTLY (the
+    // Commit.commit staging discipline): the done marker below still
+    // lands strictly after both, so crash atomicity is unchanged. First
+    // failure rethrows after all settle.
     locally {
       import scala.concurrent.{Await, ExecutionContext, Future}
       import scala.concurrent.duration.Duration
@@ -240,9 +164,6 @@ object GraphAnnIndex {
       // (same staged nodes, zero extra wall-clock on the critical path)
       val counted = Future(nodes.count())
       val writes = Seq(
-        // admission sidecar from the STAGED nodes (no second corpus pass)
-        Future(writeIds(nodes.select(col("id"), col("bucket")), path,
-          overwrite = true)),
         Future(graft.tables.Staging.writePartitioned(
           Ann.neighborEdges(nodes.filter(col("id") % sampleMod === 0),
             col("id"), col("vec"), edgesPerBucket, numPlanes, dim, probeBits),
@@ -483,9 +404,11 @@ object GraphAnnIndex {
     *  - new sources' edges into untouched buckets are purely additive
     *    (nothing in those buckets moved) → plain partition append;
     *  - every other partition is never read or written;
-    *  - admission ("is this id already stored?") anti-joins the `ids/`
-    *    sidecar pruned to the batch's id-hash buckets — ∝ the batch's
-    *    locality per micro-batch, never an O(corpus) id-column scan.
+    *  - admission ("is this id already stored?") anti-joins the batch
+    *    against the node table's id column — column-pruned, so it reads
+    *    ids, not vectors — and, keyed on the id alone, refuses a stored
+    *    id re-arriving with a CHANGED vector (whose stored twin sits in
+    *    another bucket).
     *
     * Crash safety: every relation's mutation stages whole and applies
     * under ONE [[graft.tables.Commit]] protocol round, so a crash leaves
@@ -503,31 +426,15 @@ object GraphAnnIndex {
     val m = readMeta(path)
     val spark = df.sparkSession
     val old = spark.read.parquet(s"$path/nodes")
-    // one lineage cut: the admitted batch feeds both layers' updates and
-    // the node append — recomputing a nondeterministic caller df between
-    // them could update adjacency for a row the node table never gets
-    val batch = df.select(idCol.as("id"), vecCol.as("vec"),
+    // one lineage cut on the admitted set: it feeds the stats collect,
+    // both layers' updates and the node append — recomputing a
+    // nondeterministic caller df between them could update adjacency for
+    // a row the node table never gets. It runs BEFORE the intent marker:
+    // evaluating the batch inside the marker window widens the span in
+    // which readers are refused.
+    val fresh = df.select(idCol.as("id"), vecCol.as("vec"),
         Ann.bucketOf(vecCol, m.numPlanes, m.dim).as("bucket"))
-      .withColumn("ib", ibCol(col("id")))
-      .localCheckpoint() // feeds the bucket collect AND the admission join
-    // metadata-sized collect: ib lives in [0, NumIdBuckets) — the
-    // admission anti-join runs against the id sidecar PRUNED to the
-    // batch's id buckets (a stored twin of an id always shares its
-    // bucket), so per-batch admission cost is ∝ the batch's buckets,
-    // never the stored id column
-    val batchIbs = batch.select(col("ib")).distinct()
-      .collect().map(_.getInt(0)).toSeq.sorted
-    // Lineage cut on the admitted set: 6 consumers below (stats collect,
-    // both layers' staged rewrites, the nodes/ids Adds). Dropping it is
-    // SAFE here — every consumer evaluates during Commit staging, before
-    // any live dir is touched, over static inputs — but measured NEUTRAL
-    // -to-negative at sf0.1 (the re-evaluations congest the same task
-    // pool the concurrent staged writes use), so the one sequential cut
-    // job stays.
-    val fresh = batch
-      .join(idsRel(spark, path).filter(col("ib").isin(batchIbs: _*))
-        .select(col("id")), Seq("id"), "left_anti")
-      .drop("ib")
+      .join(old.select(col("id")), Seq("id"), "left_anti")
       .localCheckpoint()
     // ONE metadata-sized action answers is-empty, both layers'
     // touched-bucket sets (bucket ids live in [0, 2^numPlanes)) AND the
@@ -556,10 +463,10 @@ object GraphAnnIndex {
       val incremental = prior.exists(_ >= minRatio * waveRows)
       java.nio.file.Files.createFile(intentFile(path))
       // EVERY relation's mutation — both layers' replaced/added edge
-      // partitions, the node rows, the sidecar rows — stages whole and
-      // applies under ONE crash-safe commit: a crash leaves the index
-      // either fully pre-append or fully post-append (recover() rolls a
-      // logged commit forward), never torn between relations
+      // partitions and the node rows — stages whole and applies under ONE
+      // crash-safe commit: a crash leaves the index either fully
+      // pre-append or fully post-append (recover() rolls a logged commit
+      // forward), never torn between relations
       val ops =
         updateLayerOps(spark, path, old, fresh, bNewBase, "base_adj", m,
           incremental) ++
@@ -567,12 +474,7 @@ object GraphAnnIndex {
           old.filter(col("id") % m.sampleMod === 0),
           fresh.filter(col("id") % m.sampleMod === 0), bNewCoarse,
           "coarse_adj", m, incremental) ++
-        Seq(
-          graft.tables.Commit.Add("nodes", "bucket", fresh),
-          graft.tables.Commit.Add("ids", "ib",
-            fresh.select(col("id").cast("long").as("id"),
-                col("bucket").cast("int").as("bucket"))
-              .withColumn("ib", ibCol(col("id")))))
+        Seq(graft.tables.Commit.Add("nodes", "bucket", fresh))
       graft.tables.Commit.commit(path, ops)
       java.nio.file.Files.delete(intentFile(path))
       prior.foreach(p => writeCountHint(path, p + waveRows))
@@ -749,20 +651,16 @@ object GraphAnnIndex {
     val m = readMeta(path)
     val spark = ids.sparkSession
     val nodes = spark.read.parquet(s"$path/nodes")
-    // victims (id, bucket) from the sidecar's forward map, pruned to the
-    // deletion set's id-hash buckets — no node scan to find them
-    val idsB = ids.select(col(idName).cast("long").as("id"))
-      .withColumn("ib", ibCol(col("id")))
-      .localCheckpoint() // feeds the bucket collect AND the victim join
-    // metadata-sized collect: ib lives in [0, NumIdBuckets)
-    val vib = idsB.select(col("ib")).distinct()
+    // victims (id, bucket): a semi-join on the node table's column-pruned
+    // id and bucket columns — ids and buckets are read, vectors are not
+    val victims = nodes.select(col("id"), col("bucket"))
+      .join(ids.select(col(idName).cast("long").as("id")), Seq("id"),
+        "left_semi")
+      .localCheckpoint() // feeds the bucket collects AND both rewrites
+    // metadata-sized: bucket lives in [0, 2^numPlanes)
+    val vb = victims.select(col("bucket")).distinct()
       .collect().map(_.getInt(0)).toSeq.sorted
-    if (vib.isEmpty) return
-    val victims = idsRel(spark, path).filter(col("ib").isin(vib: _*))
-      .join(idsB.select(col("id")), Seq("id"), "left_semi")
-      .select(col("id"), col("bucket"), col("ib"))
-      .localCheckpoint()
-    if (!victims.isEmpty) {
+    if (vb.nonEmpty) {
       java.nio.file.Files.createFile(intentFile(path))
       // LAZY remaining: each consumer prunes the node scan to its own
       // affected buckets BEFORE the anti-join applies (a checkpoint
@@ -775,23 +673,14 @@ object GraphAnnIndex {
           .flatMap(b => masks.map(b ^ _)).distinct.sorted.toSeq
       val victimsC = victims.filter(col("id") % m.sampleMod === 0)
       // node table: rewrite the victim buckets only (the other buckets'
-      // rows are untouched, emptied bucket dirs drop); sidecar: rewrite
-      // only the victims' OWN id-hash partitions. All relations stage
-      // whole and swap under ONE crash-safe commit, cf. appendImpl.
-      val vb = victims.select(col("bucket")).distinct()
-        .collect().map(_.getInt(0)).toSeq.sorted
+      // rows are untouched, emptied bucket dirs drop). All relations
+      // stage whole and swap under ONE crash-safe commit, cf. appendImpl.
       val keptRows = remaining.filter(col("bucket").isin(vb: _*))
-      val vibHit = victims.select(col("ib")).distinct()
-        .collect().map(_.getInt(0)).toSeq.sorted
-      val keptIds = idsRel(spark, path).filter(col("ib").isin(vibHit: _*))
-        .join(victims.select(col("id")), Seq("id"), "left_anti")
-        .select(col("id"), col("bucket"), col("ib"))
       val ops =
         rewriteLayerOps(remaining, affectedOf(victims), "base_adj", m) ++
         rewriteLayerOps(remaining.filter(col("id") % m.sampleMod === 0),
           affectedOf(victimsC), "coarse_adj", m) ++
-        Seq(graft.tables.Commit.Replace("nodes", "bucket", vb, keptRows),
-          graft.tables.Commit.Replace("ids", "ib", vibHit, keptIds))
+        Seq(graft.tables.Commit.Replace("nodes", "bucket", vb, keptRows))
       graft.tables.Commit.commit(path, ops)
       java.nio.file.Files.delete(intentFile(path))
       // count-hint decrement (victims is checkpointed — a cheap local
@@ -825,23 +714,20 @@ object GraphAnnIndex {
     * file. Each Replace's rows are the partition-pruned live read, so
     * the pass's cost is ∝ the fragmentation debt, not the index.
     * Results are invariant (AnnSpec asserts identical edges/nodes and
-    * query output); cost is one pruned rewrite, no re-ranking.
+    * query output); cost is one pruned rewrite, no re-ranking. An `ids/`
+    * sidecar left by an older build is removed here.
     */
   def compact(spark: SparkSession, path: String): Unit =
     graft.tables.WriterLock.withLock(path) {
       readMeta(path) // validates done marker + no torn maintenance
       import graft.tables.Staging.fragmentedPartitions
       val rels = Seq(("nodes", "bucket"), ("coarse_adj", "d_bucket"),
-        ("base_adj", "d_bucket"), ("ids", "ib"))
+        ("base_adj", "d_bucket"))
       val ops = rels.flatMap { case (rel, pc) =>
         val frag = fragmentedPartitions(s"$path/$rel", pc)
         if (frag.isEmpty) Nil
-        else {
-          val rows =
-            if (rel == "ids") idsRel(spark, path).filter(col(pc).isin(frag: _*))
-            else spark.read.parquet(s"$path/$rel").filter(col(pc).isin(frag: _*))
-          Seq(graft.tables.Commit.Replace(rel, pc, frag, rows))
-        }
+        else Seq(graft.tables.Commit.Replace(rel, pc, frag,
+          spark.read.parquet(s"$path/$rel").filter(col(pc).isin(frag: _*))))
       }
       if (ops.nonEmpty) {
         java.nio.file.Files.createFile(intentFile(path))
@@ -849,22 +735,23 @@ object GraphAnnIndex {
         java.nio.file.Files.delete(intentFile(path))
         bumpGen(path)
       }
+      graft.tables.Staging.deleteRec(s"$path/ids")
     }
 
   /** The WORST relation's mean parquet files per live partition across
-    * all four relations — the fragmentation streaming appends accrue
-    * (each append lands one new file per touched nodes/ids partition
-    * and rewrites its affected adjacency partitions to one; builds and
+    * the three relations — the fragmentation streaming appends accrue
+    * (each append lands one new file per touched nodes/ partition and
+    * rewrites its affected adjacency partitions to one; builds and
     * compacts leave exactly one everywhere): the graph twin of
     * IvfIndex.fragmentation, measuring walk-side read amplification.
     * Max, not a blended mean — each walk stage reads ONE relation, and
     * the adjacency relations' rewrite-to-one would otherwise dilute the
-    * nodes/ids debt below any threshold. Driver-side readdir only;
-    * refuses a torn stage via readMeta.
+    * nodes/ debt below any threshold. Driver-side readdir only; refuses
+    * a torn stage via readMeta.
     */
   def fragmentation(path: String): Double = {
     readMeta(path)
-    Seq("nodes", "base_adj", "coarse_adj", "ids").map(r =>
+    Seq("nodes", "base_adj", "coarse_adj").map(r =>
       graft.tables.Staging.filesPerPartition(Seq(s"$path/$r"))).max
   }
 

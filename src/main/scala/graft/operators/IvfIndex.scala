@@ -40,12 +40,9 @@ object IvfIndex {
   def exists(path: String): Boolean =
     java.nio.file.Files.exists(metaFile(path))
 
-  private def writeMeta(path: String, m: Meta): Unit = {
-    import java.nio.file.{Files, Paths, StandardCopyOption}
-    val tmp = Paths.get(path, "_IVF_META_TMP")
-    Files.writeString(tmp, s"${m.nlist} ${m.dim} ${m.idName} ${m.vecName}")
-    graft.tables.Staging.atomicPublish(tmp, metaFile(path))
-  }
+  private def writeMeta(path: String, m: Meta): Unit =
+    graft.tables.Staging.publishText(metaFile(path),
+      s"${m.nlist} ${m.dim} ${m.idName} ${m.vecName}")
 
   def readMeta(path: String): Meta = {
     require(exists(path), s"$path is not an IVF index (no _IVF_META)")

@@ -173,7 +173,7 @@ object Pq {
   def republish(emb: DataFrame, idCol: Column, vecCol: Column, m: Int,
                 subDim: Int, k: Int, iters: Int,
                 path: String): IndexedSeq[Codebook] = this.synchronized {
-    import java.nio.file.{Files, Paths, StandardCopyOption}
+    import java.nio.file.Paths
     val spark = emb.sparkSession
     val books = train(emb, idCol, vecCol, m, subDim, k, iters)
     val next = currentVersion(path) + 1
@@ -181,9 +181,8 @@ object Pq {
     books.flatMap(b => b.cents.map { case (cid, cv) => (b.sub, cid, cv) })
       .toDF("sub", "cid", "cvec")
       .coalesce(1).write.mode("overwrite").parquet(s"$path/v$next")
-    val tmp = Paths.get(path, "_CURRENT_TMP")
-    Files.writeString(tmp, next.toString)
-    graft.tables.Staging.atomicPublish(tmp, Paths.get(path, "_CURRENT"))
+    graft.tables.Staging.publishText(Paths.get(path, "_CURRENT"),
+      next.toString)
     val loaded = loadPublished(spark, path, m)
     bookCache.put(path, loaded)
     loaded
@@ -213,17 +212,15 @@ object Pq {
     * backward; the CURRENT publication is always retained (keep ≥ 1).
     */
   def retain(path: String, keep: Long): Unit = this.synchronized {
-    import java.nio.file.{Files, Paths, StandardCopyOption}
+    import java.nio.file.Paths
     require(keep >= 1, s"retain: keep must be ≥ 1, got $keep")
     val cur = currentVersion(path)
     require(cur >= 1,
       s"$path has no versioned publication to retain (republish first)")
     val floor = math.max(retentionFloor(path), cur - keep + 1)
-    if (floor > retentionFloor(path)) {
-      val tmp = Paths.get(path, "_FLOOR_TMP")
-      Files.writeString(tmp, floor.toString)
-      graft.tables.Staging.atomicPublish(tmp, Paths.get(path, "_FLOOR"))
-    }
+    if (floor > retentionFloor(path))
+      graft.tables.Staging.publishText(Paths.get(path, "_FLOOR"),
+        floor.toString)
     for (n <- 1L until retentionFloor(path))
       graft.tables.Staging.deleteRec(s"$path/v$n")
     // the legacy root publication (pre-versioning) is below every

@@ -98,10 +98,10 @@ object Retrieval {
   //   fwd/      db=N/ (doc_id, pb)                  forward sidecar: the
   //             token buckets each doc has postings in — [[deletePostings]]
   //             learns the victims' pb set from an id-hash-pruned lookup
-  //             instead of scanning the postings relation (the IvfIndex
-  //             ids/ discipline). Append-only SUPERSET: rows of deleted
-  //             docs are retained (they prune extra, empty buckets —
-  //             harmless) and GC'd by [[compactPostings]].
+  //             instead of scanning the postings relation. Append-only
+  //             SUPERSET: rows of deleted docs are retained (they prune
+  //             extra, empty buckets — harmless) and GC'd by
+  //             [[compactPostings]].
   //   _GEN            "G nDocs totalDl" — the COMMIT POINT (see below)
   //   _POSTINGS_DONE  done marker, written last at build via atomic rename
   //   _APPENDING      maintenance-intent marker (crash ⇒ detected, healed
@@ -179,12 +179,8 @@ object Retrieval {
     * reader sees either the whole pass or none of it.
     */
   private def writeCommitted(path: String, g: Long, nDocs: Long,
-                             total: Long): Unit = {
-    import java.nio.file.{Files, Paths, StandardCopyOption}
-    val tmp = Paths.get(path, "_GEN_TMP")
-    Files.writeString(tmp, s"$g $nDocs $total")
-    graft.tables.Staging.atomicPublish(tmp, genFile(path))
-  }
+                             total: Long): Unit =
+    graft.tables.Staging.publishText(genFile(path), s"$g $nDocs $total")
 
   private def requireGenCommitted(path: String, op: String): Unit =
     require(java.nio.file.Files.exists(genFile(path)),
@@ -333,12 +329,9 @@ object Retrieval {
   }
 
   private def writeDoneMarker(path: String,
-                              props: Seq[(String, String)]): Unit = {
-    import java.nio.file.{Files, Paths, StandardCopyOption}
-    val tmp = Paths.get(path, "_POSTINGS_DONE_TMP")
-    Files.writeString(tmp, props.map { case (k, v) => s"$k=$v" }.mkString("\n"))
-    graft.tables.Staging.atomicPublish(tmp, postingsMarker(path))
-  }
+                              props: Seq[(String, String)]): Unit =
+    graft.tables.Staging.publishText(postingsMarker(path),
+      props.map { case (k, v) => s"$k=$v" }.mkString("\n"))
 
   private def deleteStage(path: String): Unit =
     graft.tables.Staging.deleteRec(path)
@@ -1127,12 +1120,8 @@ object Retrieval {
       java.nio.file.Files.readString(genFile(path)).trim.toLong
     else 0L
 
-  private def writeWinGen(path: String, g: Long): Unit = {
-    import java.nio.file.{Files, Paths, StandardCopyOption}
-    val tmp = Paths.get(path, "_GEN_TMP")
-    Files.writeString(tmp, g.toString)
-    graft.tables.Staging.atomicPublish(tmp, genFile(path))
-  }
+  private def writeWinGen(path: String, g: Long): Unit =
+    graft.tables.Staging.publishText(genFile(path), g.toString)
 
   private def requireWinGenCommitted(path: String, op: String): Unit =
     require(java.nio.file.Files.exists(genFile(path)),
@@ -1247,21 +1236,17 @@ object Retrieval {
       () => writePartitioned(wembW, "wb", s"$path/wemb"),
       () => writePartitioned(wtokW, "pb", s"$path/wtok"))
     writeWinGen(path, 0L)
-    import java.nio.file.{Files, Paths, StandardCopyOption}
-    val tmp = Paths.get(path, "_WINDOWS_DONE_TMP")
     // the done marker records the build parameters (so maintenance and
     // query calls with DIFFERENT knobs are refused — requireWindowKnobs)
     // and each relation's written schema (so an emptied relation stays
     // readable — readRel)
-    Files.writeString(tmp, Seq(
+    writeWindowsMarker(path, Seq(
       "windowN" -> windowN.toString,
       "dim" -> dim.toString,
       "maxDocWindows" -> maxDocWindows.toString,
       "schema.dwin" -> dwinW.schema.json,
       "schema.wemb" -> wembW.schema.json,
-      "schema.wtok" -> wtokW.schema.json)
-      .map { case (k, v) => s"$k=$v" }.mkString("\n"))
-    graft.tables.Staging.atomicPublish(tmp, windowsMarker(path))
+      "schema.wtok" -> wtokW.schema.json))
   }
 
   /** Incremental doc-window maintenance: admit new documents into an
@@ -1550,13 +1535,9 @@ object Retrieval {
   }
 
   private def writeWindowsMarker(path: String,
-                                 props: Seq[(String, String)]): Unit = {
-    import java.nio.file.{Files, Paths, StandardCopyOption}
-    val tmp = Paths.get(path, "_WINDOWS_DONE_TMP")
-    Files.writeString(tmp,
+                                 props: Seq[(String, String)]): Unit =
+    graft.tables.Staging.publishText(windowsMarker(path),
       props.map { case (k, v) => s"$k=$v" }.mkString("\n"))
-    graft.tables.Staging.atomicPublish(tmp, windowsMarker(path))
-  }
 
   /** Heal the doc-window stage after a crashed writer — the window twin
     * of [[recoverPostings]]: stale lock cleared (pid-checked), a logged

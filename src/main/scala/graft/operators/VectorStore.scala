@@ -73,12 +73,9 @@ object VectorStore {
     java.nio.file.Files.readString(
       java.nio.file.Paths.get(path, "_VERSION")).trim.toLong
 
-  private def writeVersionFile(path: String, n: Long): Unit = {
-    import java.nio.file.{Files, Paths, StandardCopyOption}
-    val tmp = Paths.get(path, "_VERSION_TMP")
-    Files.writeString(tmp, n.toString)
-    graft.tables.Staging.atomicPublish(tmp, Paths.get(path, "_VERSION"))
-  }
+  private def writeVersionFile(path: String, n: Long): Unit =
+    graft.tables.Staging.publishText(
+      java.nio.file.Paths.get(path, "_VERSION"), n.toString)
 
   /** Oldest version still reconstructable (0 until [[retain]] first runs). */
   def retentionFloor(path: String): Long = {
@@ -88,12 +85,9 @@ object VectorStore {
     else 0L
   }
 
-  private def writeFloorFile(path: String, n: Long): Unit = {
-    import java.nio.file.{Files, Paths, StandardCopyOption}
-    val tmp = Paths.get(path, "_RETAIN_FLOOR_TMP")
-    Files.writeString(tmp, n.toString)
-    graft.tables.Staging.atomicPublish(tmp, Paths.get(path, "_RETAIN_FLOOR"))
-  }
+  private def writeFloorFile(path: String, n: Long): Unit =
+    graft.tables.Staging.publishText(
+      java.nio.file.Paths.get(path, "_RETAIN_FLOOR"), n.toString)
 
   /** Delete every `_history/<n>` with n ≤ floor. Only called AFTER the
     * floor file durably points past those commits, so a crash mid-delete

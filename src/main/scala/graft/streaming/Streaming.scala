@@ -684,7 +684,7 @@ object Streaming {
           graft.operators.GraphAnnIndex.append(batch, col(idName),
             col(vecColName), idxPath)
         // FRAGMENTATION POLICY per batch: every append lands one new
-        // file per touched nodes/ids partition, so a long-running drain
+        // file per touched nodes/ partition, so a long-running drain
         // would otherwise accrue unbounded walk-side read amplification
         // between manual compacts; the policy (driver readdir + a
         // row-invariant rewrite past the threshold) bounds it while the

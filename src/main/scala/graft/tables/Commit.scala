@@ -86,7 +86,7 @@ object Commit {
     * no caller-side localCheckpoint is needed for that.
     */
   def commit(root: String, ops: Seq[Op]): Unit = {
-    import java.nio.file.{Files, Paths, StandardCopyOption}
+    import java.nio.file.{Files, Paths}
     require(!pending(root),
       s"$root has an unfinished commit (stale _COMMIT intent) — a writer " +
         "crashed mid-apply or is still running; run Commit.recover first")
@@ -128,10 +128,7 @@ object Commit {
       }
       s"$i\t${op.rel}\t${op.partCol}\t$mode\t$parts"
     }
-    val tmp = Paths.get(root, "_COMMIT_TMP")
-    Files.writeString(tmp, lines.mkString("\n"))
-    Files.move(tmp, intentFile(root),
-      StandardCopyOption.ATOMIC_MOVE, StandardCopyOption.REPLACE_EXISTING)
+    Staging.publishText(intentFile(root), lines.mkString("\n"))
     applyIntent(root)
     cleanup(root)
   }

@@ -109,6 +109,16 @@ object Staging {
       java.nio.file.StandardCopyOption.ATOMIC_MOVE,
       java.nio.file.StandardCopyOption.REPLACE_EXISTING)
 
+  /** Publish `text` as the marker file `dst`: written to the sibling
+    * `<name>_TMP`, then [[atomicPublish]]ed over `dst`. A crash leaves at
+    * most that `_TMP` file, which no reader consults.
+    */
+  def publishText(dst: java.nio.file.Path, text: String): Unit = {
+    val tmp = dst.resolveSibling(s"${dst.getFileName}_TMP")
+    java.nio.file.Files.writeString(tmp, text)
+    atomicPublish(tmp, dst)
+  }
+
   /** [[atomicPublish]] refusing to replace: intent publishes, where an
     * already-present `dst` means unfinished maintenance and must fail
     * loudly rather than be silently overwritten.

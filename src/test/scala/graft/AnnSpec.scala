@@ -345,60 +345,59 @@ class AnnSpec extends SparkSpec {
       s"stale cache served pre-rebuild ids: ${v1.filter(_ < 128)}")
   }
 
-  test("graph-ANN admission is id-bucket-pruned via the ids/ sidecar; " +
-      "a changed-vector re-append is still refused; backfill heals a " +
-      "pre-sidecar index") {
+  test("graph-ANN keeps no ids/ sidecar: admission and delete read nodes/") {
     import graft.operators.GraphAnnIndex
+    import scala.jdk.CollectionConverters._
     val idx = java.nio.file.Files.createTempDirectory("graft_gann_adm").toString
-    GraphAnnIndex.build(emb.filter(col("vec_id") =!= 1),
+    def noIds(step: String): Unit = assert(
+      !java.nio.file.Files.exists(java.nio.file.Paths.get(idx, "ids")),
+      s"$step created ids/")
+    def nodeIds(): Seq[Long] = spark.read.parquet(s"$idx/nodes")
+      .collect().map(_.getAs[Long]("id")).toSeq
+    def nodeFiles(): Set[String] = {
+      val root = java.nio.file.Paths.get(idx, "nodes")
+      val walk = java.nio.file.Files.walk(root)
+      try walk.iterator().asScala.filter(java.nio.file.Files.isRegularFile(_))
+        .map(f => root.relativize(f).toString).toSet
+      finally walk.close()
+    }
+    GraphAnnIndex.build(emb.filter(col("vec_id") >= 8),
       col("vec_id"), col("embedding"), idx, sampleMod = 16, edgesPerBucket = 3)
-    // the sidecar mirrors the node table's ids
-    def sidecarIds(): Set[Long] = spark.read.parquet(s"$idx/ids")
-      .collect().map(_.getAs[Long]("id")).toSet
-    def nodeIds(): Set[Long] = spark.read.parquet(s"$idx/nodes")
-      .collect().map(_.getAs[Long]("id")).toSet
-    assert(sidecarIds() == nodeIds())
-    // 1. PRUNING is physical: plant an unreadable file in every ids
-    //    partition EXCEPT the batch id's own bucket — a full-relation
-    //    admission scan trips over it, a pruned one never opens it
-    val ib1 = {
-      val c = new java.util.zip.CRC32()
-      c.update("1".getBytes("UTF-8"))
-      (c.getValue % 64).toInt
-    }
-    for (b <- 0 until 64 if b != ib1) {
-      val d = java.nio.file.Paths.get(s"$idx/ids/ib=$b")
-      if (java.nio.file.Files.isDirectory(d))
-        java.nio.file.Files.write(d.resolve("corrupt.parquet"),
-          "not a parquet file".getBytes("US-ASCII"))
-    }
-    GraphAnnIndex.append(emb.filter(col("vec_id") === 1),
-      col("vec_id"), col("embedding"), idx)
-    for (b <- 0 until 64)
-      java.nio.file.Files.deleteIfExists(
-        java.nio.file.Paths.get(s"$idx/ids/ib=$b/corrupt.parquet"))
-    assert(sidecarIds() == nodeIds() && nodeIds().contains(1L))
-    // 2. CHANGED-vector re-append is refused by id, not by vector
-    //    bucket: negating the vector flips every LSH hyperplane sign
-    //    (different bucket), so a vector-bucket prune of the node table
-    //    would miss the stored twin and insert a duplicate id
-    val before = nodeIds().size
-    GraphAnnIndex.append(
+    noIds("build")
+    // a small append lands exactly one node file per touched bucket
+    val batch = emb.filter(col("vec_id") < 8)
+    val touched = batch.select(Ann.bucketOf(col("embedding"), 4, 64))
+      .distinct().collect().map(r => s"bucket=${r.getInt(0)}").toSet
+    val before = nodeFiles()
+    GraphAnnIndex.append(batch, col("vec_id"), col("embedding"), idx)
+    noIds("append")
+    val added = nodeFiles() -- before
+    assert(added.size == touched.size &&
+      added.map(f => f.takeWhile(_ != '/')) == touched,
+      s"append added $added for touched buckets $touched")
+    assert(nodeIds().contains(1L))
+    // a CHANGED-vector re-append is refused by id, not by vector
+    // bucket: negating the vector flips every LSH hyperplane sign
+    // (different bucket), so a vector-bucket prune of the node table
+    // would miss the stored twin and insert a duplicate id
+    val negated = emb.filter(col("vec_id") === 1)
+      .select(col("vec_id"), transform(col("embedding"), x => -x).as("embedding"))
+    assert(negated.select(Ann.bucketOf(col("embedding"), 4, 64)).head().getInt(0) !=
       emb.filter(col("vec_id") === 1)
-        .select(col("vec_id"),
-          transform(col("embedding"), x => -x).as("embedding")),
-      col("vec_id"), col("embedding"), idx)
-    assert(nodeIds().size == before, "duplicate id admitted")
-    // 3. BACKFILL: a pre-sidecar index (ids/ gone) heals on first touch
-    graft.tables.Staging.deleteRec(s"$idx/ids")
-    GraphAnnIndex.append(emb.filter(col("vec_id") === 2)
-        .select(col("vec_id"), col("embedding")),
-      col("vec_id"), col("embedding"), idx)
-    assert(sidecarIds() == nodeIds())
-    // 4. delete maintains the sidecar
+        .select(Ann.bucketOf(col("embedding"), 4, 64)).head().getInt(0))
+    val n = nodeIds().size
+    GraphAnnIndex.append(negated, col("vec_id"), col("embedding"), idx)
+    assert(nodeIds().size == n, "duplicate id admitted")
     import spark.implicits._
     GraphAnnIndex.delete(Seq(1L).toDF("id"), idx)
-    assert(sidecarIds() == nodeIds() && !nodeIds().contains(1L))
+    assert(!nodeIds().contains(1L) && nodeIds().size == n - 1)
+    noIds("delete")
+    GraphAnnIndex.upsert(negated.withColumn("vec_id", lit(2L)),
+      col("vec_id"), col("embedding"), idx)
+    assert(nodeIds().count(_ == 2L) == 1 && nodeIds().size == n - 1)
+    noIds("upsert")
+    GraphAnnIndex.compact(spark, idx)
+    noIds("compact")
   }
 
   test("graph-ANN recover: a logged maintenance commit rolls forward " +

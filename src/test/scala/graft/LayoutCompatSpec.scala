@@ -53,20 +53,25 @@ class LayoutCompatSpec extends SparkSpec {
     assert(after == before)
   }
 
-  /** What an older IVF writer left beside cells/: the `ids/` sidecar,
-    * either the v2 layout (id, cell, ib) partitioned by id bucket with its
-    * `_IDS_V2` marker, or the pre-ib (id, cell) layout without one.
+  /** What an older writer left beside an index's data relation: the
+    * `ids/` sidecar, either the v2 layout (id, key, ib) partitioned by id
+    * bucket with its `_IDS_V2` marker, or the pre-ib layout without one —
+    * (id, cell) for the IVF index, (id) alone for the graph index.
+    * `key` is the IVF `cell` or the graph `bucket`.
     */
-  private def plantLegacyIvfIds(p: String, v2: Boolean): Unit = {
-    val ids = spark.read.parquet(s"$p/cells")
-      .select(col("vec_id").cast("long").as("id"), col("cell"))
+  private def plantLegacyIds(p: String, graph: Boolean, v2: Boolean): Unit = {
+    val (rel, id, key) =
+      if (graph) ("nodes", "id", "bucket") else ("cells", "vec_id", "cell")
+    val ids = spark.read.parquet(s"$p/$rel")
+      .select(col(id).cast("long").as("id"), col(key))
     if (v2) {
       ids.withColumn("ib",
           pmod(crc32(col("id").cast("string")), lit(64L)).cast("int"))
         .write.partitionBy("ib").parquet(s"$p/ids")
       java.nio.file.Files.createFile(
         java.nio.file.Paths.get(p, "ids", "_IDS_V2"))
-    } else ids.coalesce(1).write.parquet(s"$p/ids")
+    } else (if (graph) ids.select(col("id")) else ids)
+      .coalesce(1).write.parquet(s"$p/ids")
   }
 
   test("ivf: an index carrying an older build's ids/ sidecar (with or " +
@@ -84,7 +89,7 @@ class LayoutCompatSpec extends SparkSpec {
         .collect().map(_.toString).sorted.toSeq
       val before = probe()
       val stored = rows(p)
-      plantLegacyIvfIds(p, v2)
+      plantLegacyIds(p, graph = false, v2)
       assert(probe() == before, s"legacy ids/ (v2=$v2) must not change a probe")
       IvfIndex.append(emb.limit(64), p)
       assert(rows(p) == stored,
@@ -103,7 +108,7 @@ class LayoutCompatSpec extends SparkSpec {
       val probe = () => IvfIndex.probe(spark, p, QueryVec.values, nprobe = 2)
         .collect().map(_.toString).sorted.toSeq
       val before = probe()
-      plantLegacyIvfIds(p, v2)
+      plantLegacyIds(p, graph = false, v2)
       IvfIndex.compact(spark, p)
       assert(!java.nio.file.Files.exists(
         java.nio.file.Paths.get(p, "_APPENDING")),
@@ -117,31 +122,58 @@ class LayoutCompatSpec extends SparkSpec {
     }
   }
 
-  test("graph-ann: a pre-bucket sidecar (no _IDS_V2 marker) rebuilds " +
-      "whole from the node table on first maintenance touch") {
-    import spark.implicits._
-    val p = tmp("gann")
-    GraphAnnIndex.build(emb.filter(col("vec_id") < 192), col("vec_id"),
-      col("embedding"), p, sampleMod = 4, edgesPerBucket = 8)
-    // degrade: strip the marker and the bucket column, as an old writer
-    // left it
-    val old = spark.read.parquet(s"$p/ids").select(col("id")).collect()
-      .map(_.getLong(0))
-    graft.tables.Staging.deleteRec(s"$p/ids")
-    old.toSeq.toDF("id").coalesce(1).write.mode("overwrite")
-      .parquet(s"$p/ids")
-    // append through the migrated sidecar: stays idempotent on stored
-    // ids, admits the genuinely new ones
-    val nNodes = spark.read.parquet(s"$p/nodes").count()
-    GraphAnnIndex.append(emb.filter(col("vec_id") < 64), col("vec_id"),
-      col("embedding"), p)
-    assert(spark.read.parquet(s"$p/nodes").count() == nNodes,
-      "re-admitting stored ids after sidecar rebuild must be a no-op")
-    assert(java.nio.file.Files.exists(
-      java.nio.file.Paths.get(p, "ids", "_IDS_V2")))
-    GraphAnnIndex.append(emb.filter(col("vec_id") >= 192 &&
-      col("vec_id") < 256), col("vec_id"), col("embedding"), p)
-    assert(spark.read.parquet(s"$p/nodes").count() > nNodes)
+  test("graph-ann: an index carrying an older build's ids/ sidecar (with " +
+      "or without _IDS_V2) walks identically — re-appending stored ids " +
+      "is a no-op, delete ≡ rebuild-on-remaining") {
+    val corpus = emb.filter(col("vec_id") < 192)
+    val rem = tmp("gannrem")
+    GraphAnnIndex.build(corpus.filter(col("vec_id") % 3 =!= 0),
+      col("vec_id"), col("embedding"), rem, sampleMod = 4, edgesPerBucket = 8)
+    def rows(path: String): Seq[Seq[String]] =
+      Seq("nodes", "base_adj", "coarse_adj").map(r => spark.read
+        .parquet(s"$path/$r").collect().map(_.toString).sorted.toSeq)
+    for (v2 <- Seq(true, false)) {
+      val p = tmp(s"gann$v2")
+      GraphAnnIndex.build(corpus, col("vec_id"), col("embedding"), p,
+        sampleMod = 4, edgesPerBucket = 8)
+      val walk = () => GraphAnnIndex.query(spark, p, QueryVec.values)
+        .collect().map(_.toString).sorted.toSeq
+      val before = walk()
+      val stored = rows(p)
+      plantLegacyIds(p, graph = true, v2)
+      assert(walk() == before, s"legacy ids/ (v2=$v2) must not change a walk")
+      GraphAnnIndex.append(corpus.limit(64), col("vec_id"), col("embedding"), p)
+      assert(rows(p) == stored,
+        s"re-admitting stored ids beside a legacy ids/ (v2=$v2) must be a no-op")
+      GraphAnnIndex.delete(corpus.filter(col("vec_id") % 3 === 0)
+        .select(col("vec_id")), p, idName = "vec_id")
+      assert(rows(p) == rows(rem), s"delete ≡ rebuild-on-remaining (v2=$v2)")
+    }
+  }
+
+  test("graph-ann: compact removes an older build's ids/ sidecar (with " +
+      "or without _IDS_V2) without stranding the intent marker") {
+    for (v2 <- Seq(true, false)) {
+      val p = tmp(s"gannc$v2")
+      GraphAnnIndex.build(emb.filter(col("vec_id") < 192), col("vec_id"),
+        col("embedding"), p, sampleMod = 4, edgesPerBucket = 8)
+      val walk = () => GraphAnnIndex.query(spark, p, QueryVec.values)
+        .collect().map(_.toString).sorted.toSeq
+      val before = walk()
+      plantLegacyIds(p, graph = true, v2)
+      GraphAnnIndex.compact(spark, p)
+      assert(!java.nio.file.Files.exists(
+        java.nio.file.Paths.get(p, "_APPENDING")),
+        s"compact must not strand the intent marker (v2=$v2)")
+      assert(!java.nio.file.Files.exists(java.nio.file.Paths.get(p, "ids")),
+        s"compact removes the legacy ids/ (v2=$v2)")
+      assert(walk() == before, s"compact is walk-invariant (v2=$v2)")
+      // and the compacted index still takes an append
+      val nNodes = spark.read.parquet(s"$p/nodes").count()
+      GraphAnnIndex.append(emb.filter(col("vec_id") >= 192 &&
+        col("vec_id") < 256), col("vec_id"), col("embedding"), p)
+      assert(spark.read.parquet(s"$p/nodes").count() > nNodes)
+    }
   }
 
   test("vector store: a pre-versioning store (no _VERSION/_RETAIN) " +
