@@ -3439,12 +3439,14 @@ object SparkEntry {
         .orderBy(col("distance").asc, col("vec_id").asc)
     }),
 
-    // Crash RECOVERY in the gate: stage a delete through the commit
-    // protocol but "die" right after logging the _COMMIT intent (zero
-    // buckets swapped), then VectorStore.recover rolls the logged commit
-    // forward. The probe must equal a CLEAN delete's — the oracle is the
-    // identical post-delete SQL, so a recovery that lost, duplicated, or
-    // tore a bucket hash-mismatches.
+    // Crash RECOVERY in the gate, through the LEGACY-intent roll-forward:
+    // stage a delete the way the store's pre-Commit writers did (a
+    // `__deleting` sibling stage dir plus a `_COMMIT` intent in their own
+    // layout) and "die" right after logging it (zero buckets swapped);
+    // VectorStore.recover hands the intent to tables.Commit, which rolls
+    // it forward. The probe must equal a CLEAN delete's — the oracle is
+    // the identical post-delete SQL, so a recovery that lost, duplicated,
+    // or tore a bucket hash-mismatches.
     "q_vector_store_recover" -> ((s, dir) => {
       val path = stagedPath("vector_store_rec_v2", dir)
       Staging.once(path)(Staging.written(path, "_GRAFT_RECOVERED")) {

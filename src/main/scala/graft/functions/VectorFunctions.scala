@@ -42,9 +42,6 @@ object VectorFunctions {
   /** L2 norm. */
   def norm(a: Column): Column = sqrt(dot(a, a))
 
-  /** Cosine distance (pgvector `<=>` semantics). */
-  def cosineDistance(a: Column, b: Column): Column = lit(1.0) - cosine(a, b)
-
   // ---- composed (built-in HOF) twins, for cross-checks and reference ----
 
   private def d(c: Column): Column = c.cast("double")
@@ -58,9 +55,6 @@ object VectorFunctions {
   def l2Composed(a: Column, b: Column): Column = sqrt(l2SqComposed(a, b))
 
   def dotComposed(a: Column, b: Column): Column = zipSum(a, b, (x, y) => x * y)
-
-  def cosineComposed(a: Column, b: Column): Column =
-    dotComposed(a, b) / (sqrt(dotComposed(a, a)) * sqrt(dotComposed(b, b)))
 
   /** L2-normalize a vector to unit length (elements widened to double;
     * zero vector stays zero). Single-pass expression — the composed

@@ -382,37 +382,22 @@ object Ann {
       .select(col("src"), col("dst"), col("d_bucket"))
   }
 
-  /** Deterministic beam search over a staged neighbour graph, with
-    * QUERY-LOCAL entry: seeds are the min-id node of each of the query's
-    * multi-probe LSH buckets (own + single-bit flips) — the LSH bucketing
-    * plays the role HNSW's upper layers play on one machine, an O(1)
-    * descent to the query's neighbourhood, and the graph walk refines
-    * recall from there (entry from GLOBAL fixed seeds measured 0.2–0.5
+  /** Deterministic beam search over a staged neighbour graph from an
+    * explicit seed id set. Seeding from the min-id node of each of the
+    * query's multi-probe LSH buckets (own + single-bit flips) is the
+    * O(1) descent to the query's neighbourhood that HNSW's upper layers
+    * give on one machine (entry from GLOBAL fixed seeds measured 0.2–0.5
     * recall@10: a fixed hop budget cannot navigate a local-edge graph
     * across the whole space; entry from the query's own buckets measures
-    * ≥0.9 at the same scan size). Each hop expands the current top-`beam`
-    * frontier's edges (both directions), scores only NEWLY reached ids
-    * (keyed vector fetch — the corpus is never scanned), and re-selects
-    * the frontier from everything visited. Returns the whole visited set
-    * as (id, distance) — bounded by numPlanes+1 + hops·2·beam·degree
-    * rows — so callers can top-k AND audit the scan fraction. Fully
-    * deterministic (ties by id everywhere), hence SQL-replayable hop by
-    * hop.
+    * ≥0.9 at the same scan size). Each hop expands the current
+    * top-`beam` frontier's edges (both directions), scores only NEWLY
+    * reached ids (keyed vector fetch — the corpus is never scanned), and
+    * re-selects the frontier from everything visited. Returns the whole
+    * visited set as (id, distance) — bounded by |seeds| +
+    * hops·2·beam·degree rows — so callers can top-k AND audit the scan
+    * fraction. Fully deterministic (ties by id everywhere), hence
+    * SQL-replayable hop by hop.
     */
-  def graphAnnBeam(graph: DataFrame, corpus: DataFrame, idCol: Column,
-                   vecCol: Column, query: Seq[Double], beam: Int = 8,
-                   hops: Int = 3, numPlanes: Int = 4): DataFrame = {
-    val dim = query.length
-    val probes = probesOf(query, numPlanes)
-    val seeds = corpus.select(idCol.as("id"),
-        bucketOf(vecCol, numPlanes, dim).as("bucket"))
-      .filter(col("bucket").isin(probes: _*))
-      .groupBy(col("bucket")).agg(min(col("id")).as("id"))
-      .select(col("id"))
-    graphAnnBeamFrom(graph, corpus, seeds, idCol, vecCol, query, beam, hops)
-  }
-
-  /** The beam-search core, from an explicit seed id set. */
   def graphAnnBeamFrom(graph: DataFrame, corpus: DataFrame, seeds: DataFrame,
                        idCol: Column, vecCol: Column, query: Seq[Double],
                        beam: Int, hops: Int,

@@ -64,8 +64,6 @@ object GraphAnnIndex {
 
   private def metaFile(path: String) =
     java.nio.file.Paths.get(path, "_INDEX_META")
-  private def intentFile(path: String) =
-    java.nio.file.Paths.get(path, "_APPENDING")
   private def genFile(path: String) =
     java.nio.file.Paths.get(path, "_GEN")
 
@@ -127,8 +125,7 @@ object GraphAnnIndex {
     */
   def readMeta(path: String): Meta = {
     require(exists(path), s"$path is not a graph-ANN index (no _INDEX_META)")
-    if (java.nio.file.Files.exists(intentFile(path)) ||
-        graft.tables.Commit.pending(path))
+    if (graft.tables.Commit.maintenancePending(path))
       throw new IllegalStateException(
         s"$path has unfinished maintenance (intent marker present) — a " +
           "writer crashed or is still running; heal with recover()")
@@ -461,7 +458,7 @@ object GraphAnnIndex {
         .map(_.toLong).getOrElse(8L)
       val prior = readCountHint(path)
       val incremental = prior.exists(_ >= minRatio * waveRows)
-      java.nio.file.Files.createFile(intentFile(path))
+      graft.tables.Commit.beginMaintenance(path)
       // EVERY relation's mutation — both layers' replaced/added edge
       // partitions and the node rows — stages whole and applies under ONE
       // crash-safe commit: a crash leaves the index either fully
@@ -476,7 +473,7 @@ object GraphAnnIndex {
           "coarse_adj", m, incremental) ++
         Seq(graft.tables.Commit.Add("nodes", "bucket", fresh))
       graft.tables.Commit.commit(path, ops)
-      java.nio.file.Files.delete(intentFile(path))
+      graft.tables.Commit.endMaintenance(path)
       prior.foreach(p => writeCountHint(path, p + waveRows))
       bumpGen(path)
     }
@@ -490,7 +487,7 @@ object GraphAnnIndex {
   def recover(path: String): Unit = {
     graft.tables.WriterLock.clearStale(path)
     graft.tables.Commit.recover(path)
-    java.nio.file.Files.deleteIfExists(intentFile(path))
+    graft.tables.Commit.endMaintenance(path)
     // recovery may have rolled a logged commit forward — the committed
     // relations changed without the crashed writer's own gen bump
     if (exists(path)) bumpGen(path)
@@ -661,7 +658,7 @@ object GraphAnnIndex {
     val vb = victims.select(col("bucket")).distinct()
       .collect().map(_.getInt(0)).toSeq.sorted
     if (vb.nonEmpty) {
-      java.nio.file.Files.createFile(intentFile(path))
+      graft.tables.Commit.beginMaintenance(path)
       // LAZY remaining: each consumer prunes the node scan to its own
       // affected buckets BEFORE the anti-join applies (a checkpoint
       // here materialized the whole table per delete)
@@ -682,7 +679,7 @@ object GraphAnnIndex {
           affectedOf(victimsC), "coarse_adj", m) ++
         Seq(graft.tables.Commit.Replace("nodes", "bucket", vb, keptRows))
       graft.tables.Commit.commit(path, ops)
-      java.nio.file.Files.delete(intentFile(path))
+      graft.tables.Commit.endMaintenance(path)
       // count-hint decrement (victims is checkpointed — a cheap local
       // count); see readCountHint for why staleness is harmless
       readCountHint(path).foreach(p =>
@@ -730,9 +727,9 @@ object GraphAnnIndex {
           spark.read.parquet(s"$path/$rel").filter(col(pc).isin(frag: _*))))
       }
       if (ops.nonEmpty) {
-        java.nio.file.Files.createFile(intentFile(path))
+        graft.tables.Commit.beginMaintenance(path)
         graft.tables.Commit.commit(path, ops)
-        java.nio.file.Files.delete(intentFile(path))
+        graft.tables.Commit.endMaintenance(path)
         bumpGen(path)
       }
       graft.tables.Staging.deleteRec(s"$path/ids")

@@ -34,8 +34,6 @@ object IvfIndex {
 
   private def metaFile(path: String) =
     java.nio.file.Paths.get(path, "_IVF_META")
-  private def intentFile(path: String) =
-    java.nio.file.Paths.get(path, "_APPENDING")
 
   def exists(path: String): Boolean =
     java.nio.file.Files.exists(metaFile(path))
@@ -46,8 +44,7 @@ object IvfIndex {
 
   def readMeta(path: String): Meta = {
     require(exists(path), s"$path is not an IVF index (no _IVF_META)")
-    if (java.nio.file.Files.exists(intentFile(path)) ||
-        graft.tables.Commit.pending(path))
+    if (graft.tables.Commit.maintenancePending(path))
       throw new IllegalStateException(
         s"$path has unfinished maintenance (intent marker present) — a " +
           "writer crashed or is still running; heal with recover()")
@@ -62,7 +59,7 @@ object IvfIndex {
   def recover(path: String): Unit = {
     graft.tables.WriterLock.clearStale(path)
     graft.tables.Commit.recover(path)
-    java.nio.file.Files.deleteIfExists(intentFile(path))
+    graft.tables.Commit.endMaintenance(path)
   }
 
   /** The cells relation read with the schema RECORDED AT BUILD TIME
@@ -122,12 +119,12 @@ object IvfIndex {
         Seq(m.idName), "left_anti")
       .localCheckpoint() // feeds the emptiness check AND the write
     if (fresh.isEmpty) return
-    java.nio.file.Files.createFile(intentFile(path))
+    graft.tables.Commit.beginMaintenance(path)
     // the rows stage whole and move in under a crash-safe commit — a
     // crash leaves the index fully pre- or fully post-append
     graft.tables.Commit.commit(path, Seq(
       graft.tables.Commit.Add("cells", "cell", fresh)))
-    java.nio.file.Files.delete(intentFile(path))
+    graft.tables.Commit.endMaintenance(path)
   }
 
   /** Incremental delete: a semi-join on the cells relation's (column-
@@ -149,7 +146,7 @@ object IvfIndex {
     val vcells = victims.select(col("cell")).distinct()
       .collect().map(_.getInt(0)).toSeq.sorted
     if (vcells.isEmpty) return
-    java.nio.file.Files.createFile(intentFile(path))
+    graft.tables.Commit.beginMaintenance(path)
     val keptRows = cellsRel(spark, path)
       .filter(col("cell").isin(vcells: _*))
       .join(victims.select(col(m.idName)), Seq(m.idName), "left_anti")
@@ -158,7 +155,7 @@ object IvfIndex {
     // needed for the read-from-overwritten-dir hazard)
     graft.tables.Commit.commit(path, Seq(
       graft.tables.Commit.Replace("cells", "cell", vcells, keptRows)))
-    java.nio.file.Files.delete(intentFile(path))
+    graft.tables.Commit.endMaintenance(path)
   }
 
   /** Replace changed rows (and insert unseen ids): delete-then-append,
@@ -180,12 +177,12 @@ object IvfIndex {
   def compact(spark: SparkSession, path: String): Unit =
     graft.tables.WriterLock.withLock(path) {
       val m = readMeta(path)
-      java.nio.file.Files.createFile(intentFile(path))
+      graft.tables.Commit.beginMaintenance(path)
       graft.tables.Commit.commit(path, Seq(
         graft.tables.Commit.Replace("cells", "cell",
           (0 until m.nlist).toSeq, cellsRel(spark, path))))
       graft.tables.Staging.deleteRec(s"$path/ids")
-      java.nio.file.Files.delete(intentFile(path))
+      graft.tables.Commit.endMaintenance(path)
     }
 
   /** Mean parquet files per live cell partition — the fragmentation

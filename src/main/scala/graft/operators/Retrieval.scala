@@ -153,8 +153,6 @@ object Retrieval {
 
   private def postingsMarker(path: String) =
     java.nio.file.Paths.get(path, "_POSTINGS_DONE")
-  private def intentFile(path: String) =
-    java.nio.file.Paths.get(path, "_APPENDING")
   private def genFile(path: String) =
     java.nio.file.Paths.get(path, "_GEN")
 
@@ -406,7 +404,7 @@ object Retrieval {
       .withColumn("pb", pbCol(col("tok")))
     val touched = freshPost.select(col("pb")).distinct()
       .collect().map(_.getInt(0)).toSeq.sorted
-    java.nio.file.Files.createFile(intentFile(path))
+    graft.tables.Commit.beginMaintenance(path)
     val g = st.gen + 1
     // the pass's jobs are mutually independent (pinned or static inputs,
     // distinct target dirs, all invisible until the _GEN rename) — run
@@ -474,7 +472,7 @@ object Retrieval {
     // above was invisible until this rename
     writeCommitted(path, g, st.nDocs + bg.getLong(0),
       st.totalDl + bg.getLong(1))
-    java.nio.file.Files.delete(intentFile(path))
+    graft.tables.Commit.endMaintenance(path)
   }
 
   /** Incremental DELETION — the corpus-refresh path (GDPR delete,
@@ -514,7 +512,7 @@ object Retrieval {
       .join(idsB.select(col("doc_id")), Seq("doc_id"), "left_semi")
       .localCheckpoint()
     if (victims.isEmpty) return
-    java.nio.file.Files.createFile(intentFile(path))
+    graft.tables.Commit.beginMaintenance(path)
     val g = st.gen + 1
     val vg = victims.agg(count(lit(1)).cast("long"),
       coalesce(sum(col("dl")), lit(0L))).collect().head
@@ -578,7 +576,7 @@ object Retrieval {
       "db", s"$path/doclens", "append")
     writeCommitted(path, g, st.nDocs - vg.getLong(0),
       st.totalDl - vg.getLong(1))
-    java.nio.file.Files.delete(intentFile(path))
+    graft.tables.Commit.endMaintenance(path)
   }
 
   /** Re-index UPSERT — replace changed documents (and insert unseen
@@ -620,7 +618,7 @@ object Retrieval {
                       path: String): Unit =
     graft.tables.WriterLock.withLock(path) {
       val st = readStage(spark, path) // validates marker + resolves rows
-      java.nio.file.Files.createFile(intentFile(path))
+      graft.tables.Commit.beginMaintenance(path)
       val allB = (0 until NumTokBuckets).toSeq
       val p0 = st.postings // resolved: current-generation rows only
         .select(col("tok"), col("doc_id"), col("tf"), col("rank"),
@@ -646,7 +644,7 @@ object Retrieval {
         "schema.dfreq" -> d0.schema.json,
         "schema.doclens" -> l0.schema.json,
         "schema.fwd" -> f0.schema.json))
-      java.nio.file.Files.delete(intentFile(path))
+      graft.tables.Commit.endMaintenance(path)
     }
 
   /** The stage's STALE-ROW FRACTION: the share of on-disk postings rows
@@ -687,8 +685,7 @@ object Retrieval {
 
   private def refuseTornPostings(path: String): Unit = {
     require(postingsExist(path), s"$path is not a postings stage")
-    if (java.nio.file.Files.exists(intentFile(path)) ||
-        graft.tables.Commit.pending(path))
+    if (graft.tables.Commit.maintenancePending(path))
       throw new IllegalStateException(
         s"$path has unfinished maintenance — heal with recoverPostings()")
   }
@@ -753,7 +750,7 @@ object Retrieval {
     // unpromoted remainder is pre-visibility garbage; the promoted part
     // is orphan-gen rows the GC below reclaims)
     graft.tables.Staging.deleteRec(s"$path/_APPEND_STAGE_postings")
-    if (java.nio.file.Files.exists(intentFile(path))) {
+    if (graft.tables.Commit.maintenanceMarked(path)) {
       val (gc, _, _) = readCommitted(spark, path)
       val mk = postingsMarker(path)
       val ops = Seq(("postings", "pb"), ("dfreq", "pb"), ("doclens", "db"))
@@ -771,7 +768,7 @@ object Retrieval {
       if (ops.nonEmpty) graft.tables.Commit.commit(path, ops)
       // fwd rows carry no generation: an interrupted append's entries
       // are a harmless prune superset, GC'd at the next compaction
-      java.nio.file.Files.delete(intentFile(path))
+      graft.tables.Commit.endMaintenance(path)
     }
   }
 
@@ -793,7 +790,7 @@ object Retrieval {
   def readStage(spark: org.apache.spark.sql.SparkSession,
                 path: String): PostingsStage = {
     require(postingsExist(path), s"$path is not a postings stage")
-    if (java.nio.file.Files.exists(intentFile(path)))
+    if (graft.tables.Commit.maintenanceMarked(path))
       throw new IllegalStateException(
         s"$path has unfinished maintenance (_APPENDING intent present) — a " +
           "writer crashed mid-append/delete; heal with recoverPostings()")
@@ -854,13 +851,6 @@ object Retrieval {
         .select(col("doc_id"), col("m.dl").as("dl"), col("db"))
       PostingsStage(resolved, dres, lres, nDocs, totalDl, g)
     }
-  }
-
-  /** Back-compat accessor: (postings, doclens). */
-  def readPostings(spark: org.apache.spark.sql.SparkSession,
-                   path: String): (DataFrame, DataFrame) = {
-    val st = readStage(spark, path)
-    (st.postings, st.doclens)
   }
 
   /** [[bm25]] served from a staged postings index — row-identical to the
@@ -1194,7 +1184,7 @@ object Retrieval {
 
   private def refuseTornWindows(path: String): Unit = {
     require(windowsExist(path), s"$path is not a doc-window stage")
-    if (java.nio.file.Files.exists(intentFile(path)))
+    if (graft.tables.Commit.maintenanceMarked(path))
       throw new IllegalStateException(
         s"$path has unfinished maintenance (_APPENDING intent present) — a " +
           "writer crashed mid-append/delete; heal with recoverWindows()")
@@ -1302,7 +1292,7 @@ object Retrieval {
         "left_anti")
       .localCheckpoint() // feeds dwin append AND the new-window derivation
     if (fresh.isEmpty) return
-    java.nio.file.Files.createFile(intentFile(path))
+    graft.tables.Commit.beginMaintenance(path)
     val g = readWinGen(path) + 1
     // the three writes are independent and ALL invisible until the
     // atomic _GEN rename: vocabulary rows without a live dwin row are
@@ -1344,7 +1334,7 @@ object Retrieval {
       "db", s"$path/dwin", "append")
     concurrently(writeWemb, writeWtok, writeDwin)
     writeWinGen(path, g)
-    java.nio.file.Files.delete(intentFile(path))
+    graft.tables.Commit.endMaintenance(path)
   }
 
   /** Incremental doc-window DELETION — the corpus-refresh path the
@@ -1383,7 +1373,7 @@ object Retrieval {
       .select(col("doc_id"), col("db")).distinct()
       .localCheckpoint()
     if (victims.isEmpty) return
-    java.nio.file.Files.createFile(intentFile(path))
+    graft.tables.Commit.beginMaintenance(path)
     val g = readWinGen(path) + 1
     // one doc-level TOMBSTONE row per victim — nothing is rewritten; the
     // victims' dwin rows (gen < g) die at the atomic _GEN commit, their
@@ -1391,7 +1381,7 @@ object Retrieval {
     writePartitioned(victims.select(col("doc_id"), lit(g).as("gen"),
         col("db")), "db", s"$path/tombs", "append")
     writeWinGen(path, g)
-    java.nio.file.Files.delete(intentFile(path))
+    graft.tables.Commit.endMaintenance(path)
   }
 
   /** Re-index UPSERT for the doc-window stage — replace changed
@@ -1428,7 +1418,7 @@ object Retrieval {
                      path: String, gcOrphans: Boolean = true): Unit =
     graft.tables.WriterLock.withLock(path) {
       refuseTornWindows(path)
-      java.nio.file.Files.createFile(intentFile(path))
+      graft.tables.Commit.beginMaintenance(path)
       val allB = (0 until NumTokBuckets).toSeq
       val dwin = resolvedDwin(spark, path) // tombstoned + superseded gone
       val d0 = dwin.select(col("doc_id"), col("win"), lit(0L).as("gen"),
@@ -1466,7 +1456,7 @@ object Retrieval {
           "schema.dwin" -> d0.schema.json,
           "schema.wemb" -> readWin(spark, path, "wemb").schema.json,
           "schema.wtok" -> readWin(spark, path, "wtok").schema.json))
-      java.nio.file.Files.delete(intentFile(path))
+      graft.tables.Commit.endMaintenance(path)
     }
 
   /** The window stage's STALE-ROW FRACTION — the share of on-disk dwin
@@ -1552,7 +1542,7 @@ object Retrieval {
                      path: String): Unit = {
     graft.tables.WriterLock.clearStale(path)
     graft.tables.Commit.recover(path)
-    if (java.nio.file.Files.exists(intentFile(path))) {
+    if (graft.tables.Commit.maintenanceMarked(path)) {
       val g = readWinGen(path)
       val dwin = readWin(spark, path, "dwin")
       val ops = scala.collection.mutable.ArrayBuffer.empty[graft.tables.Commit.Op]
@@ -1572,7 +1562,7 @@ object Retrieval {
             tombs.filter(col("db").isin(bad: _*) && col("gen") <= g))
       }
       if (ops.nonEmpty) graft.tables.Commit.commit(path, ops.toSeq)
-      java.nio.file.Files.delete(intentFile(path))
+      graft.tables.Commit.endMaintenance(path)
     }
   }
 

@@ -42,8 +42,6 @@ object StageAdmin {
     "vector_store", "signatures", "pq")
 
   private def fexists(p: java.nio.file.Path) = java.nio.file.Files.exists(p)
-  private def marker(path: String, name: String) =
-    java.nio.file.Paths.get(path, name)
 
   /** One health row per probe:
     * (name, kind, stage_exists, torn_commit, writer_locked,
@@ -74,10 +72,9 @@ object StageAdmin {
       // the PQ layout publishes by atomic _CURRENT pointer swap — no
       // intent or lock file ever exists in it, so it can't be torn
       val torn = exists && pr.kind != "pq" &&
-        (fexists(marker(pr.path, "_APPENDING")) ||
-          graft.tables.Commit.pending(pr.path))
+        graft.tables.Commit.maintenancePending(pr.path)
       val locked = exists && pr.kind != "pq" &&
-        fexists(marker(pr.path, "_WRITER_LOCK"))
+        graft.tables.WriterLock.held(pr.path)
       val threshold = (kind: String) =>
         if (!pr.compactThreshold.isNaN) pr.compactThreshold
         else if (kind == "ivf" || kind == "graph_ann") 2.0

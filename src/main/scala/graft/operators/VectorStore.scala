@@ -68,22 +68,40 @@ object VectorStore {
   private def isVersioned(path: String): Boolean =
     java.nio.file.Files.exists(java.nio.file.Paths.get(path, "_RETAIN"))
 
-  /** Latest committed version of a versioned store. */
+  /** A marker file's number, 0 when the file is absent. */
+  private def readLong(path: String, name: String): Long = {
+    val f = java.nio.file.Paths.get(path, name)
+    if (java.nio.file.Files.exists(f))
+      java.nio.file.Files.readString(f).trim.toLong
+    else 0L
+  }
+
+  /** The `_history/<n>` commit numbers present on disk. */
+  private def historyVersions(path: String): Seq[Long] =
+    Option(new java.io.File(path, "_history").listFiles())
+      .getOrElse(Array.empty[java.io.File]).toSeq
+      .filter(d => d.isDirectory && d.getName.nonEmpty &&
+        d.getName.forall(_.isDigit))
+      .map(_.getName.toLong)
+
+  /** Latest committed version of a versioned store, worked out from
+    * durable state: commit n's parked buckets land in `_history/<n>`
+    * before its `_VERSION` publish, and [[retain]] only reclaims
+    * `_history/<n>` below its durable `_RETAIN_FLOOR`, so the newest of
+    * the three is the version even when a writer died between its commit
+    * and its `_VERSION` publish — and the next commit never reuses a
+    * history slot that already holds parked buckets.
+    */
   def currentVersion(path: String): Long =
-    java.nio.file.Files.readString(
-      java.nio.file.Paths.get(path, "_VERSION")).trim.toLong
+    (readLong(path, "_VERSION") +: retentionFloor(path) +:
+      historyVersions(path)).max
 
   private def writeVersionFile(path: String, n: Long): Unit =
     graft.tables.Staging.publishText(
       java.nio.file.Paths.get(path, "_VERSION"), n.toString)
 
   /** Oldest version still reconstructable (0 until [[retain]] first runs). */
-  def retentionFloor(path: String): Long = {
-    val f = java.nio.file.Paths.get(path, "_RETAIN_FLOOR")
-    if (java.nio.file.Files.exists(f))
-      java.nio.file.Files.readString(f).trim.toLong
-    else 0L
-  }
+  def retentionFloor(path: String): Long = readLong(path, "_RETAIN_FLOOR")
 
   private def writeFloorFile(path: String, n: Long): Unit =
     graft.tables.Staging.publishText(
@@ -94,13 +112,9 @@ object VectorStore {
     * leaves directories no read path can reach; [[recover]] and the next
     * [[retain]] finish the job.
     */
-  private def gcHistory(path: String, floor: Long): Unit = {
-    val histRoot = new java.io.File(path, "_history")
-    Option(histRoot.listFiles()).getOrElse(Array.empty)
-      .filter(d => d.isDirectory && d.getName.forall(_.isDigit))
-      .filter(_.getName.toLong <= floor)
-      .foreach(d => deleteRec(d.toPath))
-  }
+  private def gcHistory(path: String, floor: Long): Unit =
+    historyVersions(path).filter(_ <= floor).foreach(n =>
+      graft.tables.Staging.deleteRec(s"$path/_history/$n"))
 
   /** HISTORY RETENTION GC: keep the newest `keep` versions reconstructable
     * ([cur − keep + 1, cur]) and reclaim the history older versions pin —
@@ -117,43 +131,40 @@ object VectorStore {
     * directories no read path consults — recover()/the next retain
     * finishes deleting them. The floor never moves backward.
     */
-  def retain(path: String, keep: Long): Unit = withWriterLock(path) {
-    requireNoPendingCommit(path)
-    require(keep >= 1, s"retain: keep must be ≥ 1, got $keep")
-    require(isVersioned(path), s"$path is not a versioned store " +
-      "(write(..., retainHistory = true))")
-    val floor = math.max(0L, currentVersion(path) - keep + 1)
-    if (floor > retentionFloor(path)) writeFloorFile(path, floor)
-    gcHistory(path, retentionFloor(path))
-  }
+  def retain(path: String, keep: Long): Unit =
+    graft.tables.WriterLock.withLock(path) {
+      graft.tables.Commit.requireNoPending(path)
+      require(keep >= 1, s"retain: keep must be ≥ 1, got $keep")
+      require(isVersioned(path), s"$path is not a versioned store " +
+        "(write(..., retainHistory = true))")
+      val floor = math.max(0L, currentVersion(path) - keep + 1)
+      if (floor > retentionFloor(path)) writeFloorFile(path, floor)
+      gcHistory(path, retentionFloor(path))
+    }
 
   /** Append new vectors into an existing store, idempotent on `idName`:
     * rows whose id is already present are dropped (anti-join against the
     * store's id projection — a column-pruned scan that never touches the
-    * vectors), the rest land in their bucket partitions via dynamic
-    * partition append. The reference's store is append-on-add
-    * (`email_fetching.py:54-57`, `rag.py:52-59`); this is that ingest
-    * path against the partitioned layout. The layout invariant (bucket =
-    * partition directory) is preserved, so probes against an appended
-    * store prune exactly like against a fresh write; periodic compaction
-    * (rewrite of a bucket's small files) is an orthogonal maintenance
-    * pass that never changes results.
+    * vectors), the rest land in their bucket partitions. The reference's
+    * store is append-on-add (`email_fetching.py:54-57`, `rag.py:52-59`);
+    * this is that ingest path against the partitioned layout. The layout
+    * invariant (bucket = partition directory) is preserved, so probes
+    * against an appended store prune exactly like against a fresh write;
+    * periodic compaction (rewrite of a bucket's small files) is an
+    * orthogonal maintenance pass that never changes results.
     *
-    * Committed via the same stage/intent/swap protocol as upsert/delete/
+    * Committed as a rewrite of the affected buckets like upsert/delete/
     * compact — on versioned stores because a raw dynamic-partition append
     * would surface the new rows in every historical version and leave
     * currentVersion behind, and on UNVERSIONED stores because a crash
-    * mid-append would otherwise strand partial row files with no _COMMIT
-    * intent for [[recover]] to heal (the one mutating entry point outside
-    * the protocol would be the one that can tear). Cost is a rewrite of
-    * the affected buckets rather than a pure row append — the price every
-    * other writer already pays for atomicity, bounded by the buckets the
-    * batch actually lands in.
+    * mid-append would otherwise strand partial row files with no intent
+    * for [[recover]] to heal. Cost is a rewrite of the affected buckets
+    * rather than a pure row append, bounded by the buckets the batch
+    * actually lands in.
     */
   def append(df: DataFrame, vecCol: Column, path: String,
              idName: String = "vec_id", numPlanes: Int = 4,
-             dim: Int = 64): Unit = withWriterLock(path) {
-    requireNoPendingCommit(path)
+             dim: Int = 64): Unit = graft.tables.WriterLock.withLock(path) {
     val spark = df.sparkSession
     val existing = readStore(spark, path).select(col(idName))
     // Materialize the admitted rows ONCE (lineage cut, cf. Stage.Local)
@@ -166,226 +177,83 @@ object VectorStore {
       .localCheckpoint()
     val affected = fresh.select(col("bucket")).distinct()
       .collect().map(_.getInt(0)).toSet
+    commitBuckets(path, affected, readStore(spark, path)
+      .filter(col("bucket").isin(affected.toSeq: _*))
+      .unionByName(fresh))
+  }
+
+  /** Every mutation (append/upsert/delete/compact) commits through
+    * [[graft.tables.Commit]] as ONE Replace of the `affected` buckets of
+    * the store root, under the writer's [[graft.tables.WriterLock]]; see
+    * Commit for the stage/intent/apply protocol and its crash recovery.
+    * On a versioned store the replaced buckets park in `_history/<n>` for
+    * the commit's version n, which is then published as `_VERSION`.
+    * Nothing to commit when no bucket is affected.
+    */
+  private def commitBuckets(path: String, affected: Set[Int],
+                            rows: DataFrame): Unit =
     if (affected.nonEmpty) {
-      val sfx = "__appending"
-      graft.tables.Staging.writePartitioned(readStore(spark, path)
-          .filter(col("bucket").isin(affected.toSeq: _*))
-          .unionByName(fresh),
-        "bucket", path + sfx)
-      commitSwap(path, sfx, affected.toSeq.sorted)
+      val version = if (isVersioned(path)) Some(currentVersion(path) + 1) else None
+      graft.tables.Commit.commit(path, Seq(graft.tables.Commit.Replace("",
+        "bucket", affected.toSeq.sorted, rows, version.map(n => s"_history/$n"))))
+      version.foreach(writeVersionFile(path, _))
     }
-  }
 
-  // ---- crash-safe commit protocol (shared by upsert/delete/compact) ----
-  //
-  // A bucket rewrite never deletes live data in place. The writer:
-  //  1. STAGES the affected buckets into a sibling directory via Spark
-  //     (whose _SUCCESS marker certifies the stage is complete), creating
-  //     an explicit EMPTY bucket dir for any affected bucket the rewrite
-  //     emptied;
-  //  2. writes a _COMMIT intent file into the store root via atomic
-  //     rename (underscore-prefixed → invisible to Spark readers),
-  //     recording the stage suffix and the affected bucket list;
-  //  3. SWAPS each affected bucket with two atomic same-FS renames: the
-  //     old bucket dir moves INTO the stage dir, the staged dir moves to
-  //     its place — a reader never observes a HALF-WRITTEN bucket, only a
-  //     complete old or complete new directory (a reader racing the
-  //     instant between a bucket's two renames can see that bucket
-  //     absent — rename pairs are not jointly atomic; readers that must
-  //     not miss rows serialize against writers like writers do);
-  //  4. deletes the stage dir, then the intent file.
-  //
-  // A crash at any point leaves a deterministically recoverable state:
-  // no _COMMIT → at worst an orphan stage to discard (store untouched);
-  // _COMMIT present → the stage was complete, so [[recover]] ROLLS the
-  // commit FORWARD by re-running the idempotent swap (a bucket already
-  // swapped has no staged dir left and is skipped) and cleaning up.
-  // Single-writer-at-a-time is still assumed (one _COMMIT slot); what the
-  // protocol adds is that a crashed writer can no longer lose or tear a
-  // bucket for the readers and writers that come after it.
-
-  /** Fail fast BEFORE any staging work if the store carries an unfinished
-    * commit. Checked at the START of every writer — a later check (inside
-    * commitSwap) would come after the new stage write had already
-    * overwritten the crashed writer's certified stage directory, making
-    * the prescribed recover() roll the WRONG data forward.
+  /** The stage-dir suffixes of the store's commit protocol before it
+    * moved onto [[graft.tables.Commit]]: a `path + sfx` sibling dir,
+    * certified by a `_COMMIT` intent of `sfx`, then `v<N>` (versioned) or
+    * `-`, then the affected bucket ids — or, older still, `sfx` then the
+    * bucket ids alone.
     */
-  private def requireNoPendingCommit(path: String): Unit = {
-    if (java.nio.file.Files.exists(java.nio.file.Paths.get(path, "_COMMIT")))
-      throw new IllegalStateException(
-        s"$path has an unfinished commit (stale _COMMIT intent) — a writer " +
-          "crashed mid-swap or is still running; run VectorStore.recover " +
-          "before writing (single-writer-at-a-time store)")
-  }
+  private val LegacyStages =
+    Seq("__upserting", "__deleting", "__compacting", "__appending")
 
-  /** WRITER EXCLUSION: the single-writer-at-a-time assumption the commit
-    * protocol documents, now ENFORCED. Every mutating entry point
-    * (append/upsert/delete/compact) runs under an exclusive `_WRITER_LOCK`
-    * acquired with an atomic create-if-absent; a second writer REFUSES
-    * immediately (no queueing — the caller owns retry policy, and a
-    * refused writer has done zero staging work). The lock body carries
-    * pid + timestamp for diagnostics only. A writer that dies with the
-    * lock held leaves a stale lock exactly like it leaves a stale
-    * _COMMIT; [[recover]] clears both — the one heal path for every
-    * crashed-writer artifact. Underscore prefix keeps it invisible to
-    * Spark readers, like every other protocol file.
+  /** Hand a legacy intent (see [[LegacyStages]]) over to Commit, which
+    * then rolls it forward like its own. An unrecognized layout refuses:
+    * misreading a bucket line as a version marker would silently drop
+    * that bucket from the roll-forward.
     */
-  private def withWriterLock[T](path: String)(body: => T): T = {
+  private def adoptLegacyIntent(path: String): Unit = {
     import java.nio.file.{Files, Paths}
-    val lock = Paths.get(path, "_WRITER_LOCK")
-    try Files.createFile(lock)
-    catch {
-      case _: java.nio.file.FileAlreadyExistsException =>
-        throw new IllegalStateException(
-          s"$path is being written by another writer (_WRITER_LOCK held) — " +
-            "refusing (single-writer-at-a-time store); retry after it " +
-            "finishes, or run VectorStore.recover if its holder crashed")
-    }
-    try {
-      Files.writeString(lock,
-        s"${ProcessHandle.current.pid}@${System.currentTimeMillis}")
-      body
-    } finally Files.deleteIfExists(lock)
-  }
-
-  private def deleteRec(p: java.nio.file.Path): Unit =
-    graft.tables.Staging.deleteRec(p.toString)
-
-  /** Idempotent per-bucket swap: for each affected bucket, park the old
-    * dir — into `_history/<version>/` on a versioned store (time travel
-    * retention), into the doomed stage dir otherwise — and rename the
-    * staged dir into place. All renames are atomic same-filesystem
-    * moves; a re-run (recovery) skips buckets whose staged dir is
-    * already gone, and a bucket already parked (history entry present,
-    * live dir gone) just completes its swap-in. A bucket BORN at this
-    * commit parks an explicit empty history dir, recording that it did
-    * not exist before — readAsOf of an earlier version excludes it.
-    */
-  private def completeSwap(path: String, tmp: String, affected: Seq[Int],
-                           history: Option[String]): Unit = {
-    import java.nio.file.{Files, Paths}
-    history.foreach(h => Files.createDirectories(Paths.get(h)))
-    affected.foreach { b =>
-      val dst = Paths.get(path, s"bucket=$b")
-      val src = Paths.get(tmp, s"bucket=$b")
-      if (Files.exists(src)) {
-        history match {
-          case Some(h) =>
-            val park = Paths.get(h, s"bucket=$b")
-            if (!Files.exists(park)) {
-              if (Files.exists(dst)) graft.tables.Staging.moveFile(dst, park)
-              else Files.createDirectories(park)
-            }
-          case None =>
-            if (Files.exists(dst))
-              graft.tables.Staging.moveFile(dst, Paths.get(tmp, s"old_bucket=$b"))
+    import scala.jdk.CollectionConverters._
+    val intent = Paths.get(path, "_COMMIT")
+    val lines =
+      if (Files.exists(intent)) Files.readAllLines(intent).asScala.toSeq
+      else Nil
+    def digits(s: String) = s.nonEmpty && s.forall(_.isDigit)
+    lines match {
+      case sfx +: rest if LegacyStages.contains(sfx) =>
+        val (version, buckets) = rest match {
+          case v +: bs if v.startsWith("v") && digits(v.tail) =>
+            (Some(v.tail.toLong), bs)
+          case "-" +: bs => (None, bs)
+          case bs => (None, bs)
         }
-        graft.tables.Staging.moveFile(src, dst)
-      }
-    }
-  }
-
-  /** Steps 2-4 of the protocol: intent, swap, cleanup. `sfx` is the stage
-    * directory's suffix relative to `path` (stage dir = path + sfx).
-    */
-  private def commitSwap(path: String, sfx: String, affected: Seq[Int]): Unit = {
-    import java.nio.file.{Files, Paths, StandardCopyOption}
-    import scala.jdk.CollectionConverters._
-    val tmp = path + sfx
-    // any affected bucket the staged rewrite emptied still needs a (now
-    // empty) directory to swap in over the old data
-    affected.foreach { b =>
-      val src = Paths.get(tmp, s"bucket=$b")
-      if (!Files.exists(src)) Files.createDirectories(src)
-    }
-    val intent = Paths.get(path, "_COMMIT")
-    // defense in depth: the writer entry points already refused over a
-    // pending commit BEFORE staging (requireNoPendingCommit)
-    if (Files.exists(intent))
-      throw new IllegalStateException(
-        s"$path has an unfinished commit (stale _COMMIT intent) — a writer " +
-          "crashed mid-swap or is still running; run VectorStore.recover " +
-          "before writing (single-writer-at-a-time store)")
-    // versioned store: this commit's number rides in the intent so a
-    // crashed swap recovers into the SAME history slot
-    val versionOpt = if (isVersioned(path)) Some(currentVersion(path) + 1) else None
-    val vLine = versionOpt.map(n => s"v$n").getOrElse("-")
-    val intentTmp = Paths.get(path, "_COMMIT_STAGING")
-    Files.write(intentTmp, (sfx +: vLine +: affected.map(_.toString)).asJava)
-    graft.tables.Staging.atomicPublishFresh(intentTmp, intent)
-    completeSwap(path, tmp, affected,
-      versionOpt.map(n => s"$path/_history/$n"))
-    versionOpt.foreach(n => writeVersionFile(path, n))
-    deleteRec(Paths.get(tmp))
-    Files.deleteIfExists(intent)
-  }
-
-  /** Recover a store from a crashed writer: roll a logged commit forward
-    * (the _COMMIT intent certifies its stage completed), then discard any
-    * orphan stage directories from writers that died before logging
-    * intent. Idempotent; a no-op on a healthy store. Run before reading
-    * or writing a store whose last writer may have died mid-commit.
-    */
-  def recover(path: String): Unit = {
-    import java.nio.file.{Files, Paths}
-    import scala.jdk.CollectionConverters._
-    val intent = Paths.get(path, "_COMMIT")
-    if (Files.exists(intent)) {
-      val lines = Files.readAllLines(intent).asScala.toSeq
-      val tmp = path + lines.head
-      // Three intent layouts exist in the wild: current versioned
-      // ("v<N>" then buckets), current unversioned ("-" then buckets), and
-      // the pre-versioning legacy format whose second line is already the
-      // first bucket id. Misreading a legacy bucket line as a version
-      // marker would silently drop that bucket from the swap list, so an
-      // unrecognized layout refuses rather than partially applies.
-      val (versionOpt, affected) = lines.tail match {
-        case v +: rest if v.startsWith("v") && v.tail.nonEmpty &&
-            v.tail.forall(_.isDigit) =>
-          (Some(v.tail.toLong), rest.map(_.toInt))
-        case "-" +: rest => (None, rest.map(_.toInt))
-        case rest if rest.forall(s => s.nonEmpty && s.forall(_.isDigit)) =>
-          (None, rest.map(_.toInt)) // legacy intent: no version line
-        case _ => throw new IllegalStateException(
+        if (!buckets.forall(digits)) throw new IllegalStateException(
           s"$path/_COMMIT has an unrecognized intent layout — refusing to " +
             "recover (a partial roll-forward could drop a bucket); inspect " +
             "the intent file and stage directory by hand")
-      }
-      if (Files.exists(Paths.get(tmp))) {
-        completeSwap(path, tmp, affected,
-          versionOpt.map(n => s"$path/_history/$n"))
-        deleteRec(Paths.get(tmp))
-      }
-      versionOpt.foreach(n => writeVersionFile(path, n))
-      Files.deleteIfExists(intent)
+        graft.tables.Commit.adoptReplace(path, Paths.get(path + sfx), "",
+          "bucket", buckets.map(_.toInt), version.map(n => s"_history/$n"))
+      case _ => () // none, or Commit's own layout
     }
+  }
+
+  /** Recover a store from a crashed writer: a stale writer lock clears
+    * (pid-checked), a logged commit rolls forward — including one a
+    * writer of the store's older protocol logged — and an unlogged one is
+    * discarded ([[graft.tables.Commit.recover]]). Idempotent; a no-op on a
+    * healthy store. Run before reading or writing a store whose last
+    * writer may have died mid-commit.
+    */
+  def recover(path: String): Unit = {
+    import java.nio.file.{Files, Paths}
+    graft.tables.WriterLock.clearStale(path)
+    adoptLegacyIntent(path)
+    graft.tables.Commit.recover(path)
     Files.deleteIfExists(Paths.get(path, "_COMMIT_STAGING"))
-    // a writer that died lock-in-hand left a stale _WRITER_LOCK — the
-    // same class of artifact as a stale stage dir; recovery clears it.
-    // Staleness is CHECKED, not assumed: the lock body carries the
-    // holder's pid, and a pid that is still alive (same-host best
-    // effort — ProcessHandle cannot see across hosts) means the holder
-    // is merely slow, not crashed; clearing would let a second writer
-    // in mid-commit and defeat the exclusion. A lock with no parseable
-    // pid (legacy/empty body, or written by a remote host) is treated
-    // as stale, as before.
-    val lock = Paths.get(path, "_WRITER_LOCK")
-    if (Files.exists(lock)) {
-      val holderPid = scala.util.Try(
-        new String(Files.readAllBytes(lock), "UTF-8")
-          .takeWhile(_ != '@').trim.toLong).toOption
-      val holderAlive = holderPid.exists { p =>
-        val h = ProcessHandle.of(p)
-        h.isPresent && h.get.isAlive
-      }
-      if (holderAlive) throw new IllegalStateException(
-        s"$path/_WRITER_LOCK is held by LIVE process ${holderPid.get} — " +
-          "refusing to clear it (the writer may be slow, not crashed); " +
-          "wait for it to finish or stop it before running recover")
-      Files.deleteIfExists(lock)
-    }
-    Seq("__upserting", "__deleting", "__compacting", "__appending")
-      .foreach(sfx => deleteRec(Paths.get(path + sfx)))
+    LegacyStages.foreach(sfx => graft.tables.Staging.deleteRec(path + sfx))
+    if (isVersioned(path)) writeVersionFile(path, currentVersion(path))
     // a retain() that died mid-GC advanced the floor durably but may have
     // left partially-deleted (already unreachable) history dirs — finish
     // reclaiming them
@@ -401,13 +269,12 @@ object VectorStore {
     * to the driver), untouched bucket directories are never read or
     * written — at 100 TB an update wave that lands in 3 of 16 buckets
     * costs 3/16 of a rewrite, not a full-store pass. `df` must carry the
-    * store's data columns (id, vector, carried metadata). Committed via
-    * the crash-safe stage/intent/swap protocol above.
+    * store's data columns (id, vector, carried metadata). Committed like
+    * every store mutation ([[commitBuckets]]).
     */
   def upsert(df: DataFrame, vecCol: Column, path: String,
              idName: String = "vec_id", numPlanes: Int = 4,
-             dim: Int = 64): Unit = withWriterLock(path) {
-    requireNoPendingCommit(path)
+             dim: Int = 64): Unit = graft.tables.WriterLock.withLock(path) {
     val spark = df.sparkSession
     val updates = df.withColumn("bucket", Ann.bucketOf(vecCol, numPlanes, dim))
     val store = readStore(spark, path)
@@ -418,15 +285,10 @@ object VectorStore {
     val affected = bucketsOf(
       store.join(updates.select(col(idName)), Seq(idName), "left_semi")) ++
       bucketsOf(updates)
-    if (affected.nonEmpty) {
-      val sfx = "__upserting"
-      graft.tables.Staging.writePartitioned(
-        store.filter(col("bucket").isin(affected.toSeq: _*))
-          .join(updates.select(col(idName)), Seq(idName), "left_anti")
-          .unionByName(updates),
-        "bucket", path + sfx)
-      commitSwap(path, sfx, affected.toSeq.sorted)
-    }
+    commitBuckets(path, affected,
+      store.filter(col("bucket").isin(affected.toSeq: _*))
+        .join(updates.select(col(idName)), Seq(idName), "left_anti")
+        .unionByName(updates))
   }
 
   /** Partition-targeted delete — the tombstoning path a corpus refresh
@@ -437,48 +299,38 @@ object VectorStore {
     * driver), untouched bucket directories are never read or written —
     * the same cost shape as [[upsert]]. A delete wave hitting 3 of 16
     * buckets costs 3/16 of a rewrite, never a full-store pass. Committed
-    * via the crash-safe stage/intent/swap protocol (a fully emptied
-    * bucket swaps in an explicit empty directory).
+    * like every store mutation ([[commitBuckets]]); a fully emptied
+    * bucket's directory is removed.
     */
   def delete(spark: SparkSession, path: String, ids: DataFrame,
-             idName: String = "vec_id"): Unit = withWriterLock(path) {
-    requireNoPendingCommit(path)
-    val store = readStore(spark, path)
-    val victims = ids.select(col(idName))
-    val affected = store.join(victims, Seq(idName), "left_semi")
-      .select(col("bucket")).distinct().collect().map(_.getInt(0)).toSet
-    if (affected.nonEmpty) {
-      val sfx = "__deleting"
-      graft.tables.Staging.writePartitioned(
+             idName: String = "vec_id"): Unit =
+    graft.tables.WriterLock.withLock(path) {
+      val store = readStore(spark, path)
+      val victims = ids.select(col(idName))
+      val affected = store.join(victims, Seq(idName), "left_semi")
+        .select(col("bucket")).distinct().collect().map(_.getInt(0)).toSet
+      commitBuckets(path, affected,
         store.filter(col("bucket").isin(affected.toSeq: _*))
-          .join(victims, Seq(idName), "left_anti"),
-        "bucket", path + sfx)
-      commitSwap(path, sfx, affected.toSeq.sorted)
+          .join(victims, Seq(idName), "left_anti"))
     }
-  }
 
   /** Compact a store in place: rewrite every bucket partition into one
-    * file per bucket ([[graft.tables.Staging.writePartitioned]]). Results and partition pruning are invariant — this is the
-    * maintenance pass that keeps probe cost flat as streaming appends
-    * accumulate small files; per-row work is zero (no re-hash, the bucket
-    * is already a column). Committed per bucket via the crash-safe
-    * stage/intent/swap protocol — unlike the former whole-directory swap,
-    * the store path never disappears, and because compaction is
-    * row-identical, even the mid-swap states a crash can expose are
-    * correct stores (some buckets compacted, some not); [[recover]]
-    * finishes the rest.
+    * file per bucket ([[graft.tables.Staging.writePartitioned]]). Results
+    * and partition pruning are invariant — this is the maintenance pass
+    * that keeps probe cost flat as streaming appends accumulate small
+    * files; per-row work is zero (no re-hash, the bucket is already a
+    * column). Committed per bucket like every store mutation
+    * ([[commitBuckets]]): the store path never disappears, and because
+    * compaction is row-identical, even the mid-apply states a crash can
+    * expose are correct stores (some buckets compacted, some not);
+    * [[recover]] finishes the rest.
     */
-  def compact(spark: SparkSession, path: String): Unit = withWriterLock(path) {
-    requireNoPendingCommit(path)
-    val store = readStore(spark, path)
-    val affected = store.select(col("bucket")).distinct()
-      .collect().map(_.getInt(0)).toSeq.sorted
-    if (affected.nonEmpty) {
-      val sfx = "__compacting"
-      graft.tables.Staging.writePartitioned(store, "bucket", path + sfx)
-      commitSwap(path, sfx, affected)
+  def compact(spark: SparkSession, path: String): Unit =
+    graft.tables.WriterLock.withLock(path) {
+      val store = readStore(spark, path)
+      commitBuckets(path, store.select(col("bucket")).distinct()
+        .collect().map(_.getInt(0)).toSet, store)
     }
-  }
 
   /** Read a versioned store AS OF committed `version` (time travel).
     *
@@ -509,19 +361,16 @@ object VectorStore {
       .filter(f => f.isDirectory && f.getName.startsWith("bucket="))
       .map(f => bucketId(f.getName)).toSet
     // (bucket, earliest parking commit > version) → that commit's parked dir
-    val histRoot = new java.io.File(path, "_history")
     val parked = scala.collection.mutable.Map.empty[Int, Long]
-    Option(histRoot.listFiles()).getOrElse(Array.empty)
-      .filter(_.isDirectory).foreach { nDir =>
-        val n = nDir.getName.toLong
-        if (n > version)
-          Option(nDir.listFiles()).getOrElse(Array.empty)
-            .filter(d => d.isDirectory && d.getName.startsWith("bucket="))
-            .foreach { d =>
-              val b = bucketId(d.getName)
-              if (!parked.get(b).exists(_ <= n)) parked(b) = n
-            }
-      }
+    historyVersions(path).filter(_ > version).foreach { n =>
+      Option(new java.io.File(path, s"_history/$n").listFiles())
+        .getOrElse(Array.empty)
+        .filter(d => d.isDirectory && d.getName.startsWith("bucket="))
+        .foreach { d =>
+          val b = bucketId(d.getName)
+          if (!parked.get(b).exists(_ <= n)) parked(b) = n
+        }
+    }
     val all = (live ++ parked.keys).toSeq.sorted
     val wanted = buckets match {
       case Some(bs) => all.filter(bs.toSet)

@@ -1201,24 +1201,6 @@ object Streaming {
   def checkpointDir(name: String): String =
     sys.props("java.io.tmpdir") + "/graft_stream_ckpt_" + name
 
-  /** Drain a streaming DataFrame to completion over its (bounded) source:
-    * Trigger.AvailableNow processes everything currently available, the
-    * memory sink in Complete mode holds the final state, and the result
-    * comes back as a batch DataFrame. Verification harness only — a real
-    * deployment writes append-mode to a durable sink and the memory sink's
-    * driver-side materialization would be the anti-pattern (the declared
-    * driver queries use drainToParquet above instead).
-    */
-  def runToCompletion(stream: DataFrame, name: String): DataFrame = {
-    val q = stream.writeStream
-      .format("memory").queryName(name)
-      .outputMode(OutputMode.Complete())
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    stream.sparkSession.table(name)
-  }
-
   /** Streaming ingest-and-embed: stateless narrow pipeline — the streaming
     * form of Rag.embedCorpus (works identically on readStream inputs).
     */

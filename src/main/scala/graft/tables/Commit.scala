@@ -1,12 +1,13 @@
 package graft.tables
 
+import java.nio.file.{Files, Path, Paths}
+
 import org.apache.spark.sql.DataFrame
 
 /** Crash-safe multi-relation partition commit — the ONE write protocol
-  * every persisted stage's REWRITING maintenance uses (graph-ANN, IVF,
-  * signature stage, and the compaction passes of the postings/window
-  * stages; the vector store predates it and keeps its own equivalent
-  * protocol, VectorStore.scala's stage/intent/swap).
+  * every persisted stage's REWRITING maintenance uses (vector store,
+  * graph-ANN, IVF, signature stage, and the compaction passes of the
+  * postings/window stages).
   *
   * A bare `write.mode("overwrite")` (even dynamic-partition overwrite)
   * deletes live partition directories before the replacement lands — a
@@ -22,14 +23,14 @@ import org.apache.spark.sql.DataFrame
   *     overwrite cannot erase a partition it writes no rows into —
   *     the staged empty dir CAN swap one away);
   *  2. INTENT: `root/_COMMIT` lands via atomic rename, recording every
-  *     op (relation, partition column, mode, affected partitions) — the
-  *     done-marker certifying the stage is complete;
+  *     op (relation, partition column, mode, affected partitions, park
+  *     dir) — the done-marker certifying the stage is complete;
   *  3. APPLY, idempotently per op per partition: Replace swaps the live
   *     partition dir with the staged one via two atomic same-FS renames
-  *     (old parks INTO the stage dir, staged moves into place); Add
-  *     moves the staged part-files into the live partition dir (Spark
-  *     part-file names are globally unique, so a re-run skips files
-  *     already moved);
+  *     (old parks INTO the stage dir — or into the op's `park` dir, where
+  *     it outlives the commit — and staged moves into place); Add moves
+  *     the staged part-files into the live partition dir (Spark part-file
+  *     names are globally unique, so a re-run skips files already moved);
   *  4. CLEANUP: stage dir, then intent, are deleted.
   *
   * A crash at any point recovers deterministically via [[recover]]:
@@ -41,14 +42,14 @@ import org.apache.spark.sql.DataFrame
   * Single-writer-at-a-time per `root` is assumed (one `_COMMIT` slot)
   * and enforced by callers via [[WriterLock]]. Readers racing the apply
   * window can see a partition mid-swap; stages whose readers must never
-  * race a writer exclude them with their own maintenance-intent marker
-  * (the `_APPENDING` discipline), as before.
+  * race a writer exclude them with the maintenance-intent marker
+  * ([[beginMaintenance]]).
   */
 object Commit {
 
   /** One relation mutation inside a commit. `rel` is the relation's
     * subdirectory under the stage root ("" when the root itself is the
-    * relation, e.g. the dedup signature stage).
+    * relation, e.g. the dedup signature stage or the vector store).
     */
   sealed trait Op {
     def rel: String; def partCol: String; def rows: DataFrame
@@ -57,10 +58,15 @@ object Commit {
   /** Replace the `affected` integer partitions of `root/rel` with
     * `rows`' partitions: after the commit those directories hold exactly
     * `rows`, including ERASING any affected partition `rows` carries no
-    * rows for.
+    * rows for. With `park` (a dir relative to `root`), every replaced
+    * partition dir is kept there instead of deleted — an affected
+    * partition that did not exist parks as an empty dir, and one already
+    * parked is not parked again — which is how a versioned vector store
+    * keeps `_history/<n>`.
     */
   final case class Replace(rel: String, partCol: String, affected: Seq[Int],
-                           rows: DataFrame) extends Op
+                           rows: DataFrame,
+                           park: Option[String] = None) extends Op
 
   /** Append `rows` as new files into their partitions of `root/rel`
     * without touching anything that exists (the LSM-append write,
@@ -70,15 +76,46 @@ object Commit {
                        rows: DataFrame) extends Op
 
   private def stageDir(root: String) = s"$root/_COMMIT_STAGE"
-  private def intentFile(root: String) =
-    java.nio.file.Paths.get(root, "_COMMIT")
+  private def intentFile(root: String) = Paths.get(root, "_COMMIT")
 
   /** True iff `root` carries an unfinished commit (writer running or
     * crashed mid-apply) — stage readers that must not observe a torn
     * apply refuse on this and prescribe [[recover]].
     */
-  def pending(root: String): Boolean =
-    java.nio.file.Files.exists(intentFile(root))
+  def pending(root: String): Boolean = Files.exists(intentFile(root))
+
+  /** Refuse to start a write over an unfinished commit — checked before
+    * any staging work, so the crashed writer's certified stage survives
+    * for the recover() this prescribes.
+    */
+  def requireNoPending(root: String): Unit =
+    if (pending(root)) throw new IllegalStateException(
+      s"$root has an unfinished commit (stale _COMMIT intent) — a writer " +
+        "crashed mid-apply or is still running; run the stage's recover " +
+        "first")
+
+  // ---- the maintenance-intent marker ----
+  //
+  // `_APPENDING` brackets a stage's whole maintenance pass (often several
+  // commits, or writes a later marker rename makes visible): created
+  // before the first write, deleted after the last — never in a
+  // `finally`, so a crashed pass leaves it behind, readers refuse on it,
+  // and the stage's recover() heals and clears it.
+
+  private def markerFile(root: String) = Paths.get(root, "_APPENDING")
+
+  def beginMaintenance(root: String): Unit = Files.createFile(markerFile(root))
+
+  def endMaintenance(root: String): Unit = Files.deleteIfExists(markerFile(root))
+
+  /** True iff a maintenance pass on `root` started and has not finished. */
+  def maintenanceMarked(root: String): Boolean = Files.exists(markerFile(root))
+
+  /** True iff readers must refuse `root`: unfinished maintenance or an
+    * unfinished commit.
+    */
+  def maintenancePending(root: String): Boolean =
+    maintenanceMarked(root) || pending(root)
 
   /** Run the full protocol for `ops` against `root`. Each op's `rows`
     * may read from the very directories being replaced: the stage write
@@ -86,10 +123,16 @@ object Commit {
     * no caller-side localCheckpoint is needed for that.
     */
   def commit(root: String, ops: Seq[Op]): Unit = {
-    import java.nio.file.{Files, Paths}
-    require(!pending(root),
-      s"$root has an unfinished commit (stale _COMMIT intent) — a writer " +
-        "crashed mid-apply or is still running; run Commit.recover first")
+    stageAndLog(root, ops)
+    applyIntent(root)
+    cleanup(root)
+  }
+
+  /** Steps 1-2 alone: the state a writer that dies right after logging
+    * its intent leaves behind (crash specs start from it).
+    */
+  private[graft] def stageAndLog(root: String, ops: Seq[Op]): Unit = {
+    requireNoPending(root)
     val stg = stageDir(root)
     Staging.deleteRec(stg)
     // the STAGE writes run CONCURRENTLY: each op stages into its own
@@ -106,7 +149,7 @@ object Commit {
       val staged = ops.zipWithIndex.map { case (op, i) => Future {
         Staging.writePartitioned(op.rows, op.partCol, s"$stg/$i")
         op match {
-          case Replace(_, pc, affected, _) =>
+          case Replace(_, pc, affected, _, _) =>
             // explicit empty dir for every affected partition the rewrite
             // emptied — swapping it in is how a partition is erased
             affected.foreach { p =>
@@ -120,17 +163,41 @@ object Commit {
         scala.util.Try(Await.result(f, Duration.Inf)))
       settled.collectFirst { case scala.util.Failure(e) => throw e }
     }
-    val lines = "v1" +: ops.zipWithIndex.map { case (op, i) =>
-      val mode = op match { case _: Replace => "replace"; case _: Add => "add" }
-      val parts = op match {
-        case Replace(_, _, affected, _) => affected.mkString(",")
-        case _ => "-"
-      }
-      s"$i\t${op.rel}\t${op.partCol}\t$mode\t$parts"
+    publishIntent(root, ops.zipWithIndex.map {
+      case (Replace(rel, pc, affected, _, park), i) =>
+        intentLine(i, rel, pc, "replace", affected.mkString(","), park)
+      case (Add(rel, pc, _), i) => intentLine(i, rel, pc, "add", "-", None)
+    })
+  }
+
+  /** Intent layout `v2`: one tab-separated line per op — index,
+    * relation, partition column, mode, affected partitions, park dir
+    * ("" for none). A `v1` intent is the same without the park field.
+    */
+  private def intentLine(i: Int, rel: String, pc: String, mode: String,
+                         parts: String, park: Option[String]): String =
+    Seq(i.toString, rel, pc, mode, parts, park.getOrElse("")).mkString("\t")
+
+  private def publishIntent(root: String, lines: Seq[String]): Unit =
+    Staging.publishText(intentFile(root), ("v2" +: lines).mkString("\n"))
+
+  /** Log, as `root`'s pending commit, one Replace that an older protocol
+    * staged at `staged` and certified with an intent of its own in the
+    * same `_COMMIT` slot (the vector store's pre-Commit writers): the
+    * stage moves into op 0's slot, then this protocol's intent is
+    * published over the old one, after which [[recover]] rolls it
+    * forward. Running it again after a crash between the two steps is
+    * safe: a stage already moved is not looked for again.
+    */
+  def adoptReplace(root: String, staged: Path, rel: String, partCol: String,
+                   affected: Seq[Int], park: Option[String]): Unit = {
+    if (Files.exists(staged)) {
+      Staging.deleteRec(stageDir(root))
+      Files.createDirectories(Paths.get(stageDir(root)))
+      Staging.moveFile(staged, Paths.get(stageDir(root), "0"))
     }
-    Staging.publishText(intentFile(root), lines.mkString("\n"))
-    applyIntent(root)
-    cleanup(root)
+    publishIntent(root, Seq(intentLine(0, rel, partCol, "replace",
+      affected.mkString(","), park)))
   }
 
   /** Heal `root` after a crashed writer: a logged commit rolls FORWARD
@@ -145,31 +212,40 @@ object Commit {
       applyIntent(root)
       cleanup(root)
     } else Staging.deleteRec(stageDir(root))
-    java.nio.file.Files.deleteIfExists(
-      java.nio.file.Paths.get(root, "_COMMIT_TMP"))
+    Files.deleteIfExists(Paths.get(root, "_COMMIT_TMP"))
   }
 
   /** The idempotent apply (step 3), driven from the INTENT file so the
     * crash-recovery path replays exactly what the writer logged.
     */
   private def applyIntent(root: String): Unit = {
-    import java.nio.file.{Files, Paths}
     val lines = Files.readString(intentFile(root)).linesIterator.toSeq
-    require(lines.headOption.contains("v1"),
-      s"$root/_COMMIT has an unrecognized intent layout — refusing to " +
-        "recover (a partial roll-forward could drop a partition)")
+    if (!lines.headOption.exists(h => h == "v1" || h == "v2"))
+      throw new IllegalStateException(s"$root/_COMMIT has an unrecognized " +
+        "intent layout — refusing to recover (a partial roll-forward " +
+        "could drop a partition)")
     lines.tail.foreach { ln =>
-      val Array(i, rel, pc, mode, parts) = ln.split("\t", 5)
+      val f = ln.split("\t", -1)
+      val (i, rel, pc, mode, parts) = (f(0), f(1), f(2), f(3), f(4))
+      val park = f.lift(5).filter(_.nonEmpty).map(Paths.get(root, _))
       val src = Paths.get(stageDir(root), i)
       val dstRoot = if (rel.isEmpty) Paths.get(root) else Paths.get(root, rel)
       mode match {
         case "replace" =>
+          park.foreach(Files.createDirectories(_))
           parts.split(",").filter(_.nonEmpty).map(_.toInt).foreach { p =>
             val s = src.resolve(s"$pc=$p")
             val d = dstRoot.resolve(s"$pc=$p")
             if (Files.exists(s)) { // already swapped on a re-run → skip
-              if (Files.exists(d))
-                Files.move(d, src.resolve(s"old_$pc=$p"))
+              park.map(_.resolve(s"$pc=$p")) match {
+                // parked once: a re-run after the park keeps the first copy
+                case Some(pk) => if (!Files.exists(pk)) {
+                  if (Files.exists(d)) Files.move(d, pk)
+                  else Files.createDirectories(pk) // born at this commit
+                }
+                case None =>
+                  if (Files.exists(d)) Files.move(d, src.resolve(s"old_$pc=$p"))
+              }
               Files.createDirectories(dstRoot)
               Files.move(s, d)
               // an ERASED partition (explicit empty staged dir) ends as
@@ -201,25 +277,28 @@ object Commit {
 
   private def cleanup(root: String): Unit = {
     Staging.deleteRec(stageDir(root))
-    java.nio.file.Files.deleteIfExists(intentFile(root))
+    Files.deleteIfExists(intentFile(root))
   }
 }
 
-/** WRITER EXCLUSION shared by every persisted stage's mutators (the
-  * VectorStore `_WRITER_LOCK` discipline, factored out): an exclusive
-  * lock acquired with an atomic create-if-absent; a second writer
-  * REFUSES immediately with a clean error (no queueing — the caller owns
-  * retry policy, and a refused writer has done zero staging work),
-  * instead of the accidental uncaught FileAlreadyExistsException two
-  * colliding intent-marker creates used to throw. The lock body carries
-  * pid + timestamp; a holder that died lock-in-hand leaves a stale lock
-  * which [[clearStale]] (called from each stage's recover) removes after
-  * CHECKING the pid is actually dead — a live pid means the writer is
-  * slow, not crashed, and clearing would defeat the exclusion.
+/** WRITER EXCLUSION shared by every persisted stage's mutators: an
+  * exclusive `_WRITER_LOCK` acquired with an atomic create-if-absent; a
+  * second writer REFUSES immediately with a clean error (no queueing —
+  * the caller owns retry policy, and a refused writer has done zero
+  * staging work), instead of the accidental uncaught
+  * FileAlreadyExistsException two colliding intent-marker creates used
+  * to throw. The lock body carries pid + timestamp; a holder that died
+  * lock-in-hand leaves a stale lock which [[clearStale]] (called from
+  * each stage's recover) removes after CHECKING the pid is actually
+  * dead — a live pid means the writer is slow, not crashed, and
+  * clearing would defeat the exclusion.
   */
 object WriterLock {
   private def lockFile(root: String) =
     java.nio.file.Paths.get(root, "_WRITER_LOCK")
+
+  /** True iff a writer holds the lock (or died holding it). */
+  def held(root: String): Boolean = java.nio.file.Files.exists(lockFile(root))
 
   def withLock[T](root: String)(body: => T): T = {
     import java.nio.file.Files

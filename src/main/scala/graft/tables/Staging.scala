@@ -324,22 +324,4 @@ object Staging {
     }
     if (parts == 0L) 0.0 else files.toDouble / parts
   }
-
-  /** A dynamic [[writePartitioned]] plus the drop-empty audit every exact
-    * partition rewrite needs: dynamic overwrite cannot ERASE a partition
-    * it writes no rows into, so any of the `affected` integer partitions
-    * the rewrite left empty is deleted explicitly — after this, the
-    * `affected` dirs hold exactly `df`'s rows. `df` must be
-    * materialized (localCheckpoint) by the caller: it is consumed twice
-    * (the write and the written-partition audit), and it usually reads
-    * from the very directory being overwritten.
-    */
-  def overwritePartitionsExact(df: DataFrame,
-                               partCol: String, dir: String,
-                               affected: Seq[Int]): Unit = {
-    writePartitioned(df, partCol, dir, "dynamic")
-    val written = df.select(col(partCol))
-      .distinct().collect().map(_.getInt(0)).toSet
-    affected.filterNot(written).foreach(b => deleteRec(s"$dir/$partCol=$b"))
-  }
 }

@@ -22,13 +22,6 @@ object Tables {
     StructField("description", StringType)
   ))
 
-  /** reference `rag.py:30-37` — product_embeddings(product_id, content, embedding vector(dim)) */
-  def productEmbeddingsSchema(dim: Int): StructType = StructType(Seq(
-    StructField("product_id", LongType),
-    StructField("content", StringType),
-    StructField("embedding", ArrayType(FloatType, containsNull = false))
-  ))
-
   /** reference `email_fetching.py:54-57` — email_texts(id, document, embedding) */
   val emailTextsSchema: StructType = StructType(Seq(
     StructField("id", StringType),

@@ -83,6 +83,67 @@ class CommitSpec extends SparkSpec {
     assert(readRel(root, "a") == Set((9L, 0), (8L, 1)))
   }
 
+  test("recover: an intent in the five-field v1 layout (no park field) " +
+      "still rolls forward, Replace and Add alike") {
+    val root = java.nio.file.Files.createTempDirectory("graft_cmt_v1").toString
+    mkRel(root, "a", Seq((1L, 0), (2L, 1)))
+    mkRel(root, "b", Seq((10L, 0)))
+    mkRel(s"$root/_COMMIT_STAGE", "0", Seq((9L, 0)))
+    mkRel(s"$root/_COMMIT_STAGE", "1", Seq((11L, 3)))
+    // p=1 was emptied by the rewrite: its staged dir is the empty one
+    java.nio.file.Files.createDirectories(
+      java.nio.file.Paths.get(root, "_COMMIT_STAGE", "0", "p=1"))
+    java.nio.file.Files.writeString(java.nio.file.Paths.get(root, "_COMMIT"),
+      "v1\n0\ta\tp\treplace\t0,1\n1\tb\tp\tadd\t-")
+    Commit.recover(root)
+    assert(readRel(root, "a") == Set((9L, 0)))
+    assert(!java.nio.file.Files.exists(java.nio.file.Paths.get(root, "a", "p=1")))
+    assert(readRel(root, "b") == Set((10L, 0), (11L, 3)))
+    assert(!Commit.pending(root))
+  }
+
+  test("commit: Replace with a park dir keeps every replaced partition " +
+      "there; a partition born at the commit parks empty, and a re-run " +
+      "does not park twice") {
+    import java.nio.file.{Files, Paths}
+    val root = Files.createTempDirectory("graft_cmt_park").toString
+    mkRel(root, "", Seq((1L, 0), (2L, 1)))
+    Commit.stageAndLog(root, Seq(Commit.Replace("", "p", Seq(1, 2),
+      Seq((20L, 1), (30L, 2)).toDF("v", "p"), Some("_hist/1"))))
+    // the writer dies after applying p=1 only; recover finishes p=2
+    Files.createDirectories(Paths.get(root, "_hist", "1"))
+    Files.move(Paths.get(root, "p=1"), Paths.get(root, "_hist", "1", "p=1"))
+    Files.move(Paths.get(root, "_COMMIT_STAGE", "0", "p=1"),
+      Paths.get(root, "p=1"))
+    Commit.recover(root)
+    assert(readRel(root, "") == Set((1L, 0), (20L, 1), (30L, 2)))
+    assert(spark.read.parquet(s"$root/_hist/1/p=1").count() == 1,
+      "the replaced partition is parked once, with its old rows")
+    val born = Paths.get(root, "_hist", "1", "p=2")
+    assert(Files.isDirectory(born) && Files.list(born).count() == 0,
+      "a partition born at the commit parks as an empty dir")
+    assert(!Files.exists(Paths.get(root, "_hist", "1", "p=0")))
+    assert(!Commit.pending(root))
+  }
+
+  test("commit: refuses to start over a pending intent with " +
+      "IllegalStateException, leaving the crashed writer's stage intact") {
+    import java.nio.file.{Files, Paths}
+    val root = Files.createTempDirectory("graft_cmt_pend").toString
+    mkRel(root, "a", Seq((1L, 0)))
+    mkRel(s"$root/_COMMIT_STAGE", "0", Seq((9L, 0)))
+    Files.writeString(Paths.get(root, "_COMMIT"), "v1\n0\ta\tp\treplace\t0")
+    val e = intercept[IllegalStateException] {
+      Commit.commit(root, Seq(
+        Commit.Replace("a", "p", Seq(0), Seq((5L, 0)).toDF("v", "p"))))
+    }
+    assert(e.getMessage.contains("recover"))
+    assert(readRel(s"$root/_COMMIT_STAGE", "0") == Set((9L, 0)))
+    assert(readRel(root, "a") == Set((1L, 0)))
+    Commit.recover(root)
+    assert(readRel(root, "a") == Set((9L, 0)))
+  }
+
   test("recover: an orphan stage WITHOUT intent is discarded — the " +
       "operation never happened, live relations untouched") {
     val root = java.nio.file.Files.createTempDirectory("graft_cmt_rb").toString

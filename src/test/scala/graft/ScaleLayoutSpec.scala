@@ -648,6 +648,109 @@ class ScaleLayoutSpec extends SparkSpec {
     assert(!NF.exists(Paths.get(out, "_COMMIT")) && !NF.exists(Paths.get(tmp)))
   }
 
+  test("VectorStore time travel: a versioned upsert crashed at any point " +
+      "of its commit recovers to the no-crash history, and the next writer " +
+      "takes a fresh _history slot") {
+    import java.nio.file.{Files => NF, Paths}
+    import graft.operators.VectorStore
+    import graft.tables.Commit
+    val emb = Tables.embeddings(spark, sf0001)
+    val reemb = emb.filter(col("vec_id") % 3 === 0)
+      .select(col("vec_id"), (col("label") + lit(1000)).as("label"),
+        transform(col("embedding"), x => (x * lit(0.5)).cast("float"))
+          .as("embedding"))
+    val victims = emb.filter(col("vec_id") % 4 === 0).select(col("vec_id"))
+    def versionedStore(tag: String): String = {
+      val out = Files.createTempDirectory(s"graft_vs_$tag").toFile
+        .getAbsolutePath + "/store"
+      VectorStore.write(emb, col("embedding"), out, retainHistory = true)
+      out
+    }
+    def history(out: String): Seq[Set[(Long, Int)]] =
+      (0L to VectorStore.currentVersion(out)).map(v =>
+        VectorStore.readAsOf(spark, out, v).select(col("vec_id"), col("label"))
+          .collect().map(r => (r.getLong(0), r.getInt(1))).toSet)
+    // the same sequence with no crash: v1 = upsert, v2 = delete
+    val ref = versionedStore("ttref")
+    VectorStore.upsert(reemb, col("embedding"), ref)
+    VectorStore.delete(spark, ref, victims)
+    val expected = history(ref)
+    assert(expected.size == 3)
+
+    for (point <- Seq("intent logged", "one bucket applied", "cleaned up")) {
+      val out = versionedStore("ttcrash")
+      // the upsert's v1 commit, staged and logged as VectorStore.upsert
+      // stages it
+      val updates = reemb.withColumn("bucket",
+        Ann.bucketOf(col("embedding"), 4, 64))
+      val store = spark.read.parquet(out)
+      val affected = store.join(reemb.select(col("vec_id")), Seq("vec_id"),
+          "left_semi").select(col("bucket"))
+        .union(updates.select(col("bucket"))).distinct()
+        .collect().map(_.getInt(0)).toSeq.sorted
+      Commit.stageAndLog(out, Seq(Commit.Replace("", "bucket", affected,
+        store.filter(col("bucket").isin(affected: _*))
+          .join(reemb.select(col("vec_id")), Seq("vec_id"), "left_anti")
+          .unionByName(updates),
+        Some("_history/1"))))
+      point match {
+        case "intent logged" => ()
+        case "one bucket applied" =>
+          val b = s"bucket=${affected.head}"
+          val park = Paths.get(out, "_history", "1", b)
+          NF.createDirectories(park.getParent)
+          if (NF.exists(Paths.get(out, b))) NF.move(Paths.get(out, b), park)
+          else NF.createDirectories(park)
+          NF.move(Paths.get(out, "_COMMIT_STAGE", "0", b), Paths.get(out, b))
+        case "cleaned up" =>
+          Commit.recover(out) // applied and cleaned up, _VERSION still 0
+          assert(NF.readString(Paths.get(out, "_VERSION")).trim == "0")
+          assert(VectorStore.currentVersion(out) == 1L,
+            "the parked history, not _VERSION, dates the commit")
+      }
+      VectorStore.recover(out)
+      assert(!Commit.pending(out), point)
+      assert(VectorStore.currentVersion(out) == 1L, point)
+      assert(history(out) == expected.take(2), point)
+      VectorStore.delete(spark, out, victims) // the next writer
+      assert(VectorStore.currentVersion(out) == 2L, point)
+      assert(NF.isDirectory(Paths.get(out, "_history", "2")),
+        s"$point: the next writer parks into a fresh slot")
+      assert(history(out) == expected, point)
+    }
+  }
+
+  test("VectorStore: a legacy-intent hand-over that crashed between its " +
+      "stage move and its intent publish finishes on the next recover") {
+    import java.nio.file.{Files => NF, Paths, StandardCopyOption}
+    import scala.jdk.CollectionConverters._
+    import graft.operators.VectorStore
+    val out = Files.createTempDirectory("graft_vs_adopt").toFile
+      .getAbsolutePath + "/store"
+    val emb = Tables.embeddings(spark, sf0001)
+    VectorStore.write(emb, col("embedding"), out)
+    val victims = emb.filter(col("vec_id") % 4 === 0).select(col("vec_id"))
+    val store = spark.read.parquet(out)
+    val affected = store.join(victims, Seq("vec_id"), "left_semi")
+      .select(col("bucket")).distinct().collect().map(_.getInt(0)).toSeq.sorted
+    // the legacy stage, already moved into Commit's op-0 slot; the legacy
+    // intent is still the one on disk
+    val stage0 = out + "/_COMMIT_STAGE/0"
+    store.filter(col("bucket").isin(affected: _*))
+      .join(victims, Seq("vec_id"), "left_anti")
+      .write.mode("overwrite").partitionBy("bucket").parquet(stage0)
+    affected.foreach(b => NF.createDirectories(Paths.get(stage0, s"bucket=$b")))
+    val intentTmp = Paths.get(out, "_COMMIT_STAGING")
+    NF.write(intentTmp, ("__deleting" +: "-" +: affected.map(_.toString)).asJava)
+    NF.move(intentTmp, Paths.get(out, "_COMMIT"), StandardCopyOption.ATOMIC_MOVE)
+    VectorStore.recover(out)
+    assert(spark.read.parquet(out).filter(col("vec_id") % 4 === 0).count() == 0)
+    assert(spark.read.parquet(out).count() ==
+      emb.filter(col("vec_id") % 4 =!= 0).count())
+    assert(!NF.exists(Paths.get(out, "_COMMIT")) &&
+      !NF.exists(Paths.get(out, "_COMMIT_STAGE")))
+  }
+
   test("VectorStore: an orphan stage with no logged intent is discarded") {
     import java.nio.file.{Files => NF, Paths}
     import graft.operators.VectorStore
