@@ -1,8 +1,8 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{OutputMode, Trigger}
+import org.apache.spark.sql.streaming.OutputMode
 
 /** Measured scale proof (BENCH_SCALE.json): runs the heavy dedup / ANN /
   * graph queries on SELF-GENERATED corpora at 1× and 10× the sf0.1 row
@@ -316,13 +316,8 @@ object ScaleBench {
     graft.tables.Staging.deleteRec(ckptDir)
     val rows = new java.util.concurrent.atomic.AtomicLong(0L)
     val t0 = System.nanoTime()
-    val q = df.writeStream
-      .outputMode(OutputMode.Append())
-      .option("checkpointLocation", ckptDir)
-      .foreachBatch((b: Dataset[Row], _: Long) => { rows.addAndGet(b.count()); () })
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
+    val q = graft.streaming.Streaming.runBatches(df, OutputMode.Append(),
+      Some(ckptDir))((b, _) => rows.addAndGet(b.count()))
     val t = (System.nanoTime() - t0) / 1e9
     val progress = q.recentProgress.toSeq
     val peakState = progress

@@ -21,9 +21,9 @@ import org.apache.spark.sql.types._
   * Arithmetic contract (bit-identical to the SQL oracle's unrolled CTE
   * replay and to the previous composed-column formulation):
   * score = λ·(−dist) − (1−λ)·max_sel dot(vec, svec), the dot accumulating
-  * left-to-right from 0.0 exactly like VectorFunctions.dotComposed's
-  * aggregate(zip_with(...)) chain; the first pick (empty selection) scores
-  * λ·(−dist) with NO redundancy term. Ties break on lowest id, which also
+  * left-to-right from 0.0, ((0.0 + a0·b0) + a1·b1)…, the order the
+  * oracle's aggregate(zip_with(...)) chain sums in; the first pick
+  * (empty selection) scores λ·(−dist) with NO redundancy term. Ties break on lowest id, which also
   * makes the selection a pure function of the row SET — buffer
   * concatenation order (partitioning, merge order) cannot change it. Two
   * preconditions keep that true: rows whose score evaluates to NaN (NaN
@@ -81,7 +81,7 @@ case class MmrGreedy(
                      other: ArrayBuffer[(Long, Array[Double], Double)]): ArrayBuffer[(Long, Array[Double], Double)] =
     buf ++= other
 
-  /** Same left-associated chain as dotComposed: ((0.0 + a0·b0) + a1·b1)… */
+  /** Left-associated from 0.0: ((0.0 + a0·b0) + a1·b1)… */
   private def dot(a: Array[Double], b: Array[Double]): Double = {
     val n = math.min(a.length, b.length)
     var s = 0.0

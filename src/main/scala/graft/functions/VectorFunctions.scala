@@ -54,8 +54,6 @@ object VectorFunctions {
 
   def l2Composed(a: Column, b: Column): Column = sqrt(l2SqComposed(a, b))
 
-  def dotComposed(a: Column, b: Column): Column = zipSum(a, b, (x, y) => x * y)
-
   /** L2-normalize a vector to unit length (elements widened to double;
     * zero vector stays zero). Single-pass expression — the composed
     * `transform(a, _ / norm(a))` form is O(d²) per row.

@@ -165,6 +165,7 @@ object VectorStore {
   def append(df: DataFrame, vecCol: Column, path: String,
              idName: String = "vec_id", numPlanes: Int = 4,
              dim: Int = 64): Unit = graft.tables.WriterLock.withLock(path) {
+    graft.tables.Commit.requireNoPending(path)
     val spark = df.sparkSession
     val existing = readStore(spark, path).select(col(idName))
     // Materialize the admitted rows ONCE (lineage cut, cf. Stage.Local)
@@ -188,7 +189,10 @@ object VectorStore {
     * Commit for the stage/intent/apply protocol and its crash recovery.
     * On a versioned store the replaced buckets park in `_history/<n>` for
     * the commit's version n, which is then published as `_VERSION`.
-    * Nothing to commit when no bucket is affected.
+    * Nothing to commit when no bucket is affected. Each writer first
+    * refuses a pending `_COMMIT` ([[graft.tables.Commit.requireNoPending]])
+    * under its lock, so a writer over an unfinished commit fails before
+    * it runs any Spark job.
     */
   private def commitBuckets(path: String, affected: Set[Int],
                             rows: DataFrame): Unit =
@@ -275,6 +279,7 @@ object VectorStore {
   def upsert(df: DataFrame, vecCol: Column, path: String,
              idName: String = "vec_id", numPlanes: Int = 4,
              dim: Int = 64): Unit = graft.tables.WriterLock.withLock(path) {
+    graft.tables.Commit.requireNoPending(path)
     val spark = df.sparkSession
     val updates = df.withColumn("bucket", Ann.bucketOf(vecCol, numPlanes, dim))
     val store = readStore(spark, path)
@@ -305,6 +310,7 @@ object VectorStore {
   def delete(spark: SparkSession, path: String, ids: DataFrame,
              idName: String = "vec_id"): Unit =
     graft.tables.WriterLock.withLock(path) {
+      graft.tables.Commit.requireNoPending(path)
       val store = readStore(spark, path)
       val victims = ids.select(col(idName))
       val affected = store.join(victims, Seq(idName), "left_semi")
@@ -327,6 +333,7 @@ object VectorStore {
     */
   def compact(spark: SparkSession, path: String): Unit =
     graft.tables.WriterLock.withLock(path) {
+      graft.tables.Commit.requireNoPending(path)
       val store = readStore(spark, path)
       commitBuckets(path, store.select(col("bucket")).distinct()
         .collect().map(_.getInt(0)).toSet, store)

@@ -2,7 +2,8 @@ package graft.streaming
 
 import org.apache.spark.sql.{Column, DataFrame, Dataset}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, Trigger}
+import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode,
+  StreamingQuery, StreamingQueryException, Trigger}
 
 import graft.functions.TextFunctions
 import graft.tables.Staging
@@ -310,6 +311,29 @@ object Streaming {
     Files.createFile(outP.resolve(Done))
   }
 
+  /** THE micro-batch runner every drain goes through: `stream` runs in
+    * `mode` as AvailableNow micro-batches (everything available when the
+    * query starts, then it stops), `each` runs once per micro-batch with
+    * the batch id, and the finished query comes back (its
+    * `recentProgress` holds the per-batch metrics). `checkpoint` pins the
+    * query's checkpoint location, which a restarted query resumes from;
+    * without one Spark uses a throwaway location. A failure inside
+    * `each` ends the query and is rethrown as a StreamingQueryException.
+    */
+  private[graft] def runBatches(stream: DataFrame, mode: OutputMode,
+                                checkpoint: Option[String] = None)
+                               (each: (DataFrame, Long) => Unit): StreamingQuery = {
+    val w = stream.writeStream.outputMode(mode)
+    val q = checkpoint.fold(w)(c => w.option("checkpointLocation", c))
+      .foreachBatch(each).trigger(Trigger.AvailableNow()).start()
+    q.awaitTermination()
+    q
+  }
+
+  /** The sink directory of the drain `name`. */
+  private def sinkDir(name: String): String =
+    sys.props("java.io.tmpdir") + "/graft_stream_out_" + name
+
   /** Drain a streaming DataFrame to completion through a DISTRIBUTED sink:
     * Trigger.AvailableNow processes everything currently available, and
     * each micro-batch's foreachBatch writes the full Complete-mode state to
@@ -320,15 +344,9 @@ object Streaming {
     * state, but the sink path is identical.
     */
   def drainToParquet(stream: DataFrame, name: String): DataFrame = {
-    val out = sys.props("java.io.tmpdir") + "/graft_stream_out_" + name
-    val writeBatch: (Dataset[org.apache.spark.sql.Row], Long) => Unit =
-      (batch, _) => batch.write.mode("overwrite").parquet(out)
-    val q = stream.writeStream
-      .outputMode(OutputMode.Complete())
-      .foreachBatch(writeBatch)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
+    val out = sinkDir(name)
+    runBatches(stream, OutputMode.Complete())((batch, _) =>
+      batch.write.mode("overwrite").parquet(out))
     stream.sparkSession.read.parquet(out)
   }
 
@@ -341,16 +359,9 @@ object Streaming {
     */
   def drainTopK(stream: DataFrame, name: String, k: Int,
                 order: Seq[Column]): DataFrame = {
-    val out = sys.props("java.io.tmpdir") + "/graft_stream_out_" + name
-    val writeBatch: (Dataset[org.apache.spark.sql.Row], Long) => Unit =
-      (batch, _) => batch.orderBy(order: _*).limit(k)
-        .write.mode("overwrite").parquet(out)
-    val q = stream.writeStream
-      .outputMode(OutputMode.Complete())
-      .foreachBatch(writeBatch)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
+    val out = sinkDir(name)
+    runBatches(stream, OutputMode.Complete())((batch, _) =>
+      batch.orderBy(order: _*).limit(k).write.mode("overwrite").parquet(out))
     stream.sparkSession.read.parquet(out)
   }
 
@@ -415,7 +426,7 @@ object Streaming {
       "drainRetrieveFromStage serves STREAMING micro-batches (its " +
         "declared terms broadcast assumes request-sized batches); batch " +
         "callers must use retrieveForTurnsFromStage's counted decision")
-    val out = sys.props("java.io.tmpdir") + "/graft_stream_out_" + name
+    val out = sinkDir(name)
     Staging.deleteRec(out)
     // the static serving side (capped posting list + idf table) is
     // materialized ONCE before the stream starts — without the pin each
@@ -431,36 +442,22 @@ object Streaming {
       resolved.sparkSession, stagePath, maxPostings = maxPostings)
     val plist = plist0.localCheckpoint()
     val dfreq = dfreq0.localCheckpoint()
-    val writeBatch: (Dataset[org.apache.spark.sql.Row], Long) => Unit =
-      (batch, _) =>
-        graft.operators.Conversation.retrieveWithServingSide(
-            // a micro-batch's terms side is request-sized by the drain's
-            // declaration — declare the broadcast instead of paying a
-            // checkpoint + count per batch to re-learn it (r20)
-            batch.toDF(), plist, dfreq, k, broadcastTerms = Some(true))
-          .write.mode("append").parquet(out)
-    val q = resolved.writeStream
-      .outputMode(OutputMode.Append())
-      .foreachBatch(writeBatch)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
+    runBatches(resolved, OutputMode.Append())((batch, _) =>
+      graft.operators.Conversation.retrieveWithServingSide(
+          // a micro-batch's terms side is request-sized by the drain's
+          // declaration — declare the broadcast instead of paying a
+          // checkpoint + count per batch to re-learn it (r20)
+          batch, plist, dfreq, k, broadcastTerms = Some(true))
+        .write.mode("append").parquet(out))
     resolved.sparkSession.read.parquet(out)
   }
 
   private def drainAccumulating(stream: DataFrame, name: String,
                                 mode: OutputMode): DataFrame = {
-    val out = sys.props("java.io.tmpdir") + "/graft_stream_out_" + name
+    val out = sinkDir(name)
     Staging.deleteRec(out)
-    val writeBatch: (Dataset[org.apache.spark.sql.Row], Long) => Unit =
-      (batch, bid) => batch.withColumn("_batch_id", lit(bid))
-        .write.mode("append").parquet(out)
-    val q = stream.writeStream
-      .outputMode(mode)
-      .foreachBatch(writeBatch)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
+    runBatches(stream, mode)((batch, bid) =>
+      batch.withColumn("_batch_id", lit(bid)).write.mode("append").parquet(out))
     stream.sparkSession.read.parquet(out)
   }
 
@@ -478,22 +475,16 @@ object Streaming {
   def drainBatchAudit(stream: DataFrame,
                       rules: Seq[graft.operators.DataQuality.RowRule],
                       name: String): DataFrame = {
-    val out = sys.props("java.io.tmpdir") + "/graft_stream_out_" + name
+    val out = sinkDir(name)
     Staging.deleteRec(out)
     // foreachBatch is at-least-once: a retried micro-batch must replace
     // its own ledger rows, not append duplicates. Each batch overwrites a
     // directory keyed by its batch id (the id is deterministic across
     // retries), which makes the sink idempotent per batch.
-    val writeBatch: (Dataset[org.apache.spark.sql.Row], Long) => Unit =
-      (batch, bid) => graft.operators.DataQuality.rowAudit(batch, rules)
+    runBatches(stream, OutputMode.Append())((batch, bid) =>
+      graft.operators.DataQuality.rowAudit(batch, rules)
         .withColumn("b", lit(bid))
-        .write.mode("overwrite").parquet(s"$out/bid_$bid")
-    val q = stream.writeStream
-      .outputMode(OutputMode.Append())
-      .foreachBatch(writeBatch)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
+        .write.mode("overwrite").parquet(s"$out/bid_$bid"))
     stream.sparkSession.read
       .option("recursiveFileLookup", "true").parquet(out)
   }
@@ -514,27 +505,20 @@ object Streaming {
     */
   def drainDedupGate(docs: DataFrame, sigStagePath: String, name: String,
                      threshold: Double, maxBucket: Int = 50): DataFrame = {
-    val out = freshDir(sys.props("java.io.tmpdir") + "/graft_stream_out_" + name)
-    val writeBatch: (Dataset[org.apache.spark.sql.Row], Long) => Unit =
-      (batch, bid) => {
-        val b = batch.select(col("id"), col("text"))
-        val dup = graft.operators.Dedup.incrementalPairs(b, col("id"),
-            col("text"), sigStagePath, maxBucket = maxBucket)
-          .filter(col("est_jaccard") >= threshold)
-          .select(col("new_id").as("id"), lit(1).as("_dup")).distinct()
-        b.join(dup, Seq("id"), "left")
-          .select(col("id"),
-            when(col("_dup").isNull, "accepted").otherwise("rejected")
-              .as("status"),
-            lit(bid).as("_batch_id"))
-          .write.mode("append").parquet(out)
-      }
-    val q = docs.writeStream
-      .outputMode(OutputMode.Append())
-      .foreachBatch(writeBatch)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
+    val out = freshDir(sinkDir(name))
+    runBatches(docs, OutputMode.Append()) { (batch, bid) =>
+      val b = batch.select(col("id"), col("text"))
+      val dup = graft.operators.Dedup.incrementalPairs(b, col("id"),
+          col("text"), sigStagePath, maxBucket = maxBucket)
+        .filter(col("est_jaccard") >= threshold)
+        .select(col("new_id").as("id"), lit(1).as("_dup")).distinct()
+      b.join(dup, Seq("id"), "left")
+        .select(col("id"),
+          when(col("_dup").isNull, "accepted").otherwise("rejected")
+            .as("status"),
+          lit(bid).as("_batch_id"))
+        .write.mode("append").parquet(out)
+    }
     readGateSink(docs, out)
   }
 
@@ -570,37 +554,30 @@ object Streaming {
     */
   def drainDedupGateGrowing(docs: DataFrame, refStagePath: String,
                             name: String, threshold: Double): DataFrame = {
-    val out = freshDir(sys.props("java.io.tmpdir") + "/graft_stream_out_" + name)
+    val out = freshDir(sinkDir(name))
     val run = freshDir(sys.props("java.io.tmpdir") + "/graft_gate_grow_" + name)
-    val writeBatch: (Dataset[org.apache.spark.sql.Row], Long) => Unit =
-      (batch, bid) => {
-        val s = batch.sparkSession
-        val b = batch.select(col("id"), col("text"))
-        val corpus = graft.operators.Dedup.readSigStage(s, refStagePath)
-          .select(col("id"), col("sig"))
-          .union(graft.operators.Dedup.readSigRun(s, run))
-        val dup = graft.operators.Dedup.screenPairs(b, col("id"),
-            col("text"), corpus)
-          .filter(col("est_jaccard") >= threshold)
-          .select(col("new_id").as("id"), lit(1).as("_dup")).distinct()
-        val verdict = b.join(dup, Seq("id"), "left")
-          .select(col("id"), col("text"),
-            when(col("_dup").isNull, "accepted").otherwise("rejected")
-              .as("status"),
-            lit(bid).as("_batch_id"))
-          .localCheckpoint() // one evaluation feeds both the sink and the absorb
-        verdict.select(col("id"), col("status"), col("_batch_id"))
-          .write.mode("append").parquet(out)
-        graft.operators.Dedup.appendSigRun(
-          verdict.filter(col("status") === "accepted"), col("id"), col("text"),
-          run)
-      }
-    val q = docs.writeStream
-      .outputMode(OutputMode.Append())
-      .foreachBatch(writeBatch)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
+    runBatches(docs, OutputMode.Append()) { (batch, bid) =>
+      val s = batch.sparkSession
+      val b = batch.select(col("id"), col("text"))
+      val corpus = graft.operators.Dedup.readSigStage(s, refStagePath)
+        .select(col("id"), col("sig"))
+        .union(graft.operators.Dedup.readSigRun(s, run))
+      val dup = graft.operators.Dedup.screenPairs(b, col("id"),
+          col("text"), corpus)
+        .filter(col("est_jaccard") >= threshold)
+        .select(col("new_id").as("id"), lit(1).as("_dup")).distinct()
+      val verdict = b.join(dup, Seq("id"), "left")
+        .select(col("id"), col("text"),
+          when(col("_dup").isNull, "accepted").otherwise("rejected")
+            .as("status"),
+          lit(bid).as("_batch_id"))
+        .localCheckpoint() // one evaluation feeds both the sink and the absorb
+      verdict.select(col("id"), col("status"), col("_batch_id"))
+        .write.mode("append").parquet(out)
+      graft.operators.Dedup.appendSigRun(
+        verdict.filter(col("status") === "accepted"), col("id"), col("text"),
+        run)
+    }
     readGateSink(docs, out)
   }
 
@@ -640,20 +617,13 @@ object Streaming {
                          numPlanes: Int = 4, dim: Int = 64): Unit = {
     import java.nio.file.{Files, Paths}
     Staging.deleteRec(storePath)
-    val writeBatch: (Dataset[org.apache.spark.sql.Row], Long) => Unit =
-      (batch, _) =>
-        if (!Files.exists(Paths.get(storePath, "_SUCCESS")))
-          graft.operators.VectorStore.write(batch, col(vecColName), storePath,
-            numPlanes, dim)
-        else
-          graft.operators.VectorStore.append(batch, col(vecColName), storePath,
-            idName, numPlanes, dim)
-    val q = stream.writeStream
-      .outputMode(OutputMode.Append())
-      .foreachBatch(writeBatch)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
+    runBatches(stream, OutputMode.Append())((batch, _) =>
+      if (!Files.exists(Paths.get(storePath, "_SUCCESS")))
+        graft.operators.VectorStore.write(batch, col(vecColName), storePath,
+          numPlanes, dim)
+      else
+        graft.operators.VectorStore.append(batch, col(vecColName), storePath,
+          idName, numPlanes, dim))
   }
 
   /** Drain a stateless stream of (id, vector) rows INTO the persisted
@@ -675,37 +645,30 @@ object Streaming {
                            sampleMod: Int = 16,
                            edgesPerBucket: Int = 3): Unit = {
     Staging.deleteRec(idxPath)
-    val writeBatch: (Dataset[org.apache.spark.sql.Row], Long) => Unit =
-      (batch, _) => {
-        if (!graft.operators.GraphAnnIndex.exists(idxPath))
-          graft.operators.GraphAnnIndex.build(batch, col(idName),
-            col(vecColName), idxPath, sampleMod, edgesPerBucket)
-        else
-          graft.operators.GraphAnnIndex.append(batch, col(idName),
-            col(vecColName), idxPath)
-        // FRAGMENTATION POLICY per batch: every append lands one new
-        // file per touched nodes/ partition, so a long-running drain
-        // would otherwise accrue unbounded walk-side read amplification
-        // between manual compacts; the policy (driver readdir + a
-        // row-invariant rewrite past the threshold) bounds it while the
-        // index stays query-ready throughout the drain. Threshold 3.0
-        // (vs the operator default 2.0): mid-drain the walk tolerates
-        // ≤4 files/partition easily (beam reads are bucket-pruned), and
-        // each avoided fire saves one whole-debt rewrite — compaction
-        // debt is byte-identical either way, so firing every 3rd append
-        // instead of every 2nd pays the pass's fixed cost 1.5x less
-        // often for the same amortized bytes (guide §6 small-files:
-        // bound, don't eliminate). Results are compaction-invariant
-        // (q_graph_ann_autocompact proves it).
-        graft.operators.GraphAnnIndex.compactIfFragmented(
-          batch.sparkSession, idxPath, maxFilesPerPartition = 3.0)
-      }
-    val q = stream.writeStream
-      .outputMode(OutputMode.Append())
-      .foreachBatch(writeBatch)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
+    runBatches(stream, OutputMode.Append()) { (batch, _) =>
+      if (!graft.operators.GraphAnnIndex.exists(idxPath))
+        graft.operators.GraphAnnIndex.build(batch, col(idName),
+          col(vecColName), idxPath, sampleMod, edgesPerBucket)
+      else
+        graft.operators.GraphAnnIndex.append(batch, col(idName),
+          col(vecColName), idxPath)
+      // FRAGMENTATION POLICY per batch: every append lands one new
+      // file per touched nodes/ partition, so a long-running drain
+      // would otherwise accrue unbounded walk-side read amplification
+      // between manual compacts; the policy (driver readdir + a
+      // row-invariant rewrite past the threshold) bounds it while the
+      // index stays query-ready throughout the drain. Threshold 3.0
+      // (vs the operator default 2.0): mid-drain the walk tolerates
+      // ≤4 files/partition easily (beam reads are bucket-pruned), and
+      // each avoided fire saves one whole-debt rewrite — compaction
+      // debt is byte-identical either way, so firing every 3rd append
+      // instead of every 2nd pays the pass's fixed cost 1.5x less
+      // often for the same amortized bytes (guide §6 small-files:
+      // bound, don't eliminate). Results are compaction-invariant
+      // (q_graph_ann_autocompact proves it).
+      graft.operators.GraphAnnIndex.compactIfFragmented(
+        batch.sparkSession, idxPath, maxFilesPerPartition = 3.0)
+    }
   }
 
   /** Streaming ingest INTO the persisted IVF index — the cell-partitioned
@@ -724,22 +687,15 @@ object Streaming {
                       idName: String, vecColName: String,
                       nlist: Int = 8, dim: Int = 64): Unit = {
     Staging.deleteRec(idxPath)
-    val writeBatch: (Dataset[org.apache.spark.sql.Row], Long) => Unit =
-      (batch, _) => {
-        if (!graft.operators.IvfIndex.exists(idxPath))
-          graft.operators.IvfIndex.build(batch.toDF(), idName, vecColName,
-            idxPath, nlist, dim)
-        else
-          graft.operators.IvfIndex.append(batch.toDF(), idxPath)
-        graft.operators.IvfIndex.compactIfFragmented(
-          batch.sparkSession, idxPath)
-      }
-    val q = stream.writeStream
-      .outputMode(OutputMode.Append())
-      .foreachBatch(writeBatch)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
+    runBatches(stream, OutputMode.Append()) { (batch, _) =>
+      if (!graft.operators.IvfIndex.exists(idxPath))
+        graft.operators.IvfIndex.build(batch, idName, vecColName,
+          idxPath, nlist, dim)
+      else
+        graft.operators.IvfIndex.append(batch, idxPath)
+      graft.operators.IvfIndex.compactIfFragmented(
+        batch.sparkSession, idxPath)
+    }
   }
 
   /** Streaming ingest INTO the persisted postings index — the lexical
@@ -772,46 +728,39 @@ object Streaming {
   def drainToPostingsStage(stream: DataFrame, stagePath: String,
                            idName: String, textName: String): Unit = {
     Staging.deleteRec(stagePath)
-    val writeBatch: (Dataset[org.apache.spark.sql.Row], Long) => Unit =
-      (batch, _) => {
-        if (!graft.operators.Retrieval.postingsExist(stagePath))
-          graft.operators.Retrieval.stagePostings(batch.toDF(), col(idName),
-            col(textName), stagePath)
-        else
-          graft.operators.Retrieval.appendPostings(batch.toDF(), col(idName),
-            col(textName), stagePath)
-        // gen-gated: the stale probe costs a resolution-sized count, so
-        // it runs only once the stage is ≥4 committed generations past
-        // its last compact (generation reads are one marker-file stat —
-        // free per batch), and then only every 4th generation: a fire
-        // resets G to 0 and re-arms naturally, but when the stale
-        // fraction plateaus BELOW the threshold (append-dominated
-        // stream) the modulo keeps the probe at once per gate-width
-        // instead of every batch past the gate
-        val gen = graft.operators.Retrieval.committedGen(
-          batch.sparkSession, stagePath)
-        val staleFired =
-          if (gen >= 4 && gen % 4 == 0)
-            graft.operators.Retrieval.compactIfStale(
-              batch.sparkSession, stagePath)
-          else false
-        // FILE-fragmentation policy (r21): staleness never fires on an
-        // append-only stream (nothing superseded), yet every append
-        // lands one new file per touched partition — unbounded resolved-
-        // read file counts on a long drain. The probe is a driver
-        // readdir (free per batch); the 4.0 threshold never fires at
-        // ≤4-batch fixture drains, and bounds a long drain's read
-        // amplification at amortized-constant rewrite cost.
-        if (!staleFired)
-          graft.operators.Retrieval.compactPostingsIfFragmented(
+    runBatches(stream, OutputMode.Append()) { (batch, _) =>
+      if (!graft.operators.Retrieval.postingsExist(stagePath))
+        graft.operators.Retrieval.stagePostings(batch, col(idName),
+          col(textName), stagePath)
+      else
+        graft.operators.Retrieval.appendPostings(batch, col(idName),
+          col(textName), stagePath)
+      // gen-gated: the stale probe costs a resolution-sized count, so
+      // it runs only once the stage is ≥4 committed generations past
+      // its last compact (generation reads are one marker-file stat —
+      // free per batch), and then only every 4th generation: a fire
+      // resets G to 0 and re-arms naturally, but when the stale
+      // fraction plateaus BELOW the threshold (append-dominated
+      // stream) the modulo keeps the probe at once per gate-width
+      // instead of every batch past the gate
+      val gen = graft.operators.Retrieval.committedGen(
+        batch.sparkSession, stagePath)
+      val staleFired =
+        if (gen >= 4 && gen % 4 == 0)
+          graft.operators.Retrieval.compactIfStale(
             batch.sparkSession, stagePath)
-      }
-    val q = stream.writeStream
-      .outputMode(OutputMode.Append())
-      .foreachBatch(writeBatch)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
+        else false
+      // FILE-fragmentation policy (r21): staleness never fires on an
+      // append-only stream (nothing superseded), yet every append
+      // lands one new file per touched partition — unbounded resolved-
+      // read file counts on a long drain. The probe is a driver
+      // readdir (free per batch); the 4.0 threshold never fires at
+      // ≤4-batch fixture drains, and bounds a long drain's read
+      // amplification at amortized-constant rewrite cost.
+      if (!staleFired)
+        graft.operators.Retrieval.compactPostingsIfFragmented(
+          batch.sparkSession, stagePath)
+    }
   }
 
   /** Streaming ingest INTO the persisted doc-window (MaxSim) index — the
@@ -833,40 +782,56 @@ object Streaming {
   def drainToWindowsStage(stream: DataFrame, stagePath: String,
                           idName: String, textName: String): Unit = {
     Staging.deleteRec(stagePath)
-    val writeBatch: (Dataset[org.apache.spark.sql.Row], Long) => Unit =
-      (batch, _) => {
-        if (!graft.operators.Retrieval.windowsExist(stagePath))
-          graft.operators.Retrieval.stageWindows(batch.toDF(), col(idName),
-            col(textName), stagePath)
-        else
-          graft.operators.Retrieval.appendWindows(batch.toDF(), col(idName),
-            col(textName), stagePath)
-        // the per-batch policy every ingest drain now carries, behind
-        // the same gen-and-modulo gate as the postings drain: free for
-        // an append-only stream either way (no tombs dir -> the probe
-        // answers 0.0 without counting anything), and the right wiring
-        // the moment a delete wave lands between batches of a
-        // long-running drain; the modulo bounds the probe to once per
-        // gate-width even when the fraction never crosses the threshold
-        val winGen = graft.operators.Retrieval.committedWinGen(stagePath)
-        val staleFired =
-          if (winGen >= 4 && winGen % 4 == 0)
-            graft.operators.Retrieval.compactWindowsIfStale(
-              batch.sparkSession, stagePath)
-          else false
-        // FILE-fragmentation policy (r21), cf. drainToPostingsStage: the
-        // purely additive drain never crosses the stale threshold, so
-        // without this probe its per-batch file debt is unbounded
-        if (!staleFired)
-          graft.operators.Retrieval.compactWindowsIfFragmented(
+    runBatches(stream, OutputMode.Append()) { (batch, _) =>
+      if (!graft.operators.Retrieval.windowsExist(stagePath))
+        graft.operators.Retrieval.stageWindows(batch, col(idName),
+          col(textName), stagePath)
+      else
+        graft.operators.Retrieval.appendWindows(batch, col(idName),
+          col(textName), stagePath)
+      // the per-batch policy every ingest drain now carries, behind
+      // the same gen-and-modulo gate as the postings drain: free for
+      // an append-only stream either way (no tombs dir -> the probe
+      // answers 0.0 without counting anything), and the right wiring
+      // the moment a delete wave lands between batches of a
+      // long-running drain; the modulo bounds the probe to once per
+      // gate-width even when the fraction never crosses the threshold
+      val winGen = graft.operators.Retrieval.committedWinGen(stagePath)
+      val staleFired =
+        if (winGen >= 4 && winGen % 4 == 0)
+          graft.operators.Retrieval.compactWindowsIfStale(
             batch.sparkSession, stagePath)
-      }
-    val q = stream.writeStream
-      .outputMode(OutputMode.Append())
-      .foreachBatch(writeBatch)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
+        else false
+      // FILE-fragmentation policy (r21), cf. drainToPostingsStage: the
+      // purely additive drain never crosses the stale threshold, so
+      // without this probe its per-batch file debt is unbounded
+      if (!staleFired)
+        graft.operators.Retrieval.compactWindowsIfFragmented(
+          batch.sparkSession, stagePath)
+    }
+  }
+
+  /** The serve drains' shared body: the sink `name` is cleared, every
+    * Append-mode micro-batch of `queries` is served by `serve` and
+    * appended to the sink, and the sink is read back. A micro-batch with
+    * no query rows goes through `serve` like any other (it appends no
+    * rows), so no batch pays a probe-only emptiness job. When no
+    * micro-batch ran at all nothing ever wrote and the sink does not
+    * exist: the drained union is then `serve` over an empty frame with
+    * the queries' schema, returned as that plan (same columns) rather
+    * than a read crash.
+    */
+  private def serveEach(queries: DataFrame, name: String)
+                       (serve: DataFrame => DataFrame): DataFrame = {
+    val out = sinkDir(name)
+    Staging.deleteRec(out)
+    runBatches(queries, OutputMode.Append())((batch, _) =>
+      serve(batch).write.mode("append").parquet(out))
+    val spark = queries.sparkSession
+    if (java.nio.file.Files.exists(java.nio.file.Paths.get(out)))
+      spark.read.parquet(out)
+    else serve(spark.createDataFrame(
+      new java.util.ArrayList[org.apache.spark.sql.Row](), queries.schema))
   }
 
   /** Streaming SERVING loop against the persisted vector store — the
@@ -876,40 +841,12 @@ object Streaming {
     * top-k window), never one scan per query. Per-query results are
     * independent of batching, so the drained union must equal a
     * one-shot batched probe over all queries — the oracle replays every
-    * query's multi-probe chain. Batches with no query rows are skipped
-    * (they would contribute nothing either way).
+    * query's multi-probe chain.
     */
   def drainServeFromStore(queries: DataFrame, storePath: String, k: Int,
-                          name: String): DataFrame = {
-    val out = sys.props("java.io.tmpdir") + "/graft_stream_out_" + name
-    Staging.deleteRec(out)
-    val writeBatch: (Dataset[org.apache.spark.sql.Row], Long) => Unit =
-      (batch, _) => {
-        val b = batch.toDF()
-        if (!b.isEmpty)
-          graft.operators.VectorStore.queryL2Batch(b.sparkSession, storePath,
-              "embedding", "vec_id", b, k)
-            .write.mode("append").parquet(out)
-      }
-    val q = queries.writeStream
-      .outputMode(OutputMode.Append())
-      .foreachBatch(writeBatch)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    val spark = queries.sparkSession
-    if (java.nio.file.Files.exists(java.nio.file.Paths.get(out)))
-      spark.read.parquet(out)
-    else {
-      // every batch was empty, so nothing ever wrote and the output dir
-      // does not exist — the drained union is the empty batched probe,
-      // returned as that plan (same columns) rather than a read crash
-      val none = spark.createDataFrame(
-        new java.util.ArrayList[org.apache.spark.sql.Row](), queries.schema)
-      graft.operators.VectorStore.queryL2Batch(spark, storePath,
-        "embedding", "vec_id", none, k)
-    }
-  }
+                          name: String): DataFrame =
+    serveEach(queries, name)(b => graft.operators.VectorStore.queryL2Batch(
+      b.sparkSession, storePath, "embedding", "vec_id", b, k))
 
   /** Streaming SERVING against the persisted doc-window (MaxSim) stage
     * — the late-interaction twin of [[drainServeFromStore]], closing
@@ -924,35 +861,9 @@ object Streaming {
     * queries — the oracle replays every query's pruned MaxSim.
     */
   def drainServeFromWindows(queries: DataFrame, stagePath: String, k: Int,
-                            name: String): DataFrame = {
-    val out = sys.props("java.io.tmpdir") + "/graft_stream_out_" + name
-    Staging.deleteRec(out)
-    val writeBatch: (Dataset[org.apache.spark.sql.Row], Long) => Unit =
-      (batch, _) => {
-        val b = batch.toDF()
-        if (!b.isEmpty)
-          graft.operators.Retrieval.maxSimBatchFromStage(b.sparkSession,
-              stagePath, b, k)
-            .write.mode("append").parquet(out)
-      }
-    val q = queries.writeStream
-      .outputMode(OutputMode.Append())
-      .foreachBatch(writeBatch)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    val spark = queries.sparkSession
-    if (java.nio.file.Files.exists(java.nio.file.Paths.get(out)))
-      spark.read.parquet(out)
-    else {
-      // every batch was empty — return the empty batched pass (same
-      // columns) rather than a read crash, cf. drainServeFromStore
-      val none = spark.createDataFrame(
-        new java.util.ArrayList[org.apache.spark.sql.Row](), queries.schema)
-      graft.operators.Retrieval.maxSimBatchFromStage(spark, stagePath,
-        none, k)
-    }
-  }
+                            name: String): DataFrame =
+    serveEach(queries, name)(b => graft.operators.Retrieval
+      .maxSimBatchFromStage(b.sparkSession, stagePath, b, k))
 
   /** Streaming SERVING against the persisted graph-ANN index — the
     * navigable-graph twin of [[drainServeFromStore]]: queries (q_id,
@@ -966,33 +877,9 @@ object Streaming {
     */
   def drainServeFromGraphAnn(queries: DataFrame, indexPath: String,
                              name: String, beam: Int = 16,
-                             hops: Int = 6): DataFrame = {
-    val out = sys.props("java.io.tmpdir") + "/graft_stream_out_" + name
-    Staging.deleteRec(out)
-    val writeBatch: (Dataset[org.apache.spark.sql.Row], Long) => Unit =
-      (batch, _) => {
-        val b = batch.toDF()
-        if (!b.isEmpty)
-          graft.operators.GraphAnnIndex.queryBatch(b.sparkSession, indexPath,
-              b, beam, hops)
-            .write.mode("append").parquet(out)
-      }
-    val q = queries.writeStream
-      .outputMode(OutputMode.Append())
-      .foreachBatch(writeBatch)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    val spark = queries.sparkSession
-    if (java.nio.file.Files.exists(java.nio.file.Paths.get(out)))
-      spark.read.parquet(out)
-    else {
-      val none = spark.createDataFrame(
-        new java.util.ArrayList[org.apache.spark.sql.Row](), queries.schema)
-      graft.operators.GraphAnnIndex.queryBatch(spark, indexPath, none,
-        beam, hops)
-    }
-  }
+                             hops: Int = 6): DataFrame =
+    serveEach(queries, name)(b => graft.operators.GraphAnnIndex.queryBatch(
+      b.sparkSession, indexPath, b, beam, hops))
 
   /** Streaming SERVING against the persisted IVF index — the
     * inverted-file twin of [[drainServeFromStore]], closing the last
@@ -1006,34 +893,9 @@ object Streaming {
     * probe chain.
     */
   def drainServeFromIvf(queries: DataFrame, indexPath: String, k: Int,
-                        nprobe: Int, name: String): DataFrame = {
-    val out = sys.props("java.io.tmpdir") + "/graft_stream_out_" + name
-    Staging.deleteRec(out)
-    val writeBatch: (Dataset[org.apache.spark.sql.Row], Long) => Unit =
-      (batch, _) => {
-        val b = batch.toDF()
-        if (!b.isEmpty)
-          graft.operators.IvfIndex.probeBatch(b.sparkSession, indexPath,
-              b, k, nprobe)
-            .write.mode("append").parquet(out)
-      }
-    val q = queries.writeStream
-      .outputMode(OutputMode.Append())
-      .foreachBatch(writeBatch)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    val spark = queries.sparkSession
-    if (java.nio.file.Files.exists(java.nio.file.Paths.get(out)))
-      spark.read.parquet(out)
-    else {
-      // every batch was empty — return the empty batched probe (same
-      // columns) rather than a read crash, cf. drainServeFromStore
-      val none = spark.createDataFrame(
-        new java.util.ArrayList[org.apache.spark.sql.Row](), queries.schema)
-      graft.operators.IvfIndex.probeBatch(spark, indexPath, none, k, nprobe)
-    }
-  }
+                        nprobe: Int, name: String): DataFrame =
+    serveEach(queries, name)(b => graft.operators.IvfIndex.probeBatch(
+      b.sparkSession, indexPath, b, k, nprobe))
 
   /** Drain a keyed change-log stream into a maintained snapshot: every
     * micro-batch is first collapsed to its latest row per key (largest
@@ -1055,32 +917,64 @@ object Streaming {
     import java.nio.file.{Files, Paths}
     import org.apache.spark.sql.expressions.Window
     Staging.deleteRec(snapshotPath)
-    val writeBatch: (Dataset[org.apache.spark.sql.Row], Long) => Unit =
-      (batch, _) => {
-        val s = batch.sparkSession
-        val w = Window.partitionBy(keys.map(col): _*)
-          .orderBy(orderCols.map(c => col(c).desc): _*)
-        val latest = batch.withColumn("_rn", row_number().over(w))
-          .filter(col("_rn") === 1).drop("_rn")
-        val merged =
-          if (Files.exists(Paths.get(snapshotPath, "_SUCCESS")))
-            graft.operators.Merge.merge(
-              s.read.parquet(snapshotPath).select(batch.columns.map(col): _*),
-              latest, keys)
-          else latest
-        val next = snapshotPath + "_next"
-        Staging.deleteRec(next)
-        merged.write.mode("overwrite").parquet(next) // materializes before swap
-        Staging.deleteRec(snapshotPath)
-        Staging.moveFile(Paths.get(next), Paths.get(snapshotPath))
-      }
-    val q = stream.writeStream
-      .outputMode(OutputMode.Append())
-      .foreachBatch(writeBatch)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
+    runBatches(stream, OutputMode.Append()) { (batch, _) =>
+      val s = batch.sparkSession
+      val w = Window.partitionBy(keys.map(col): _*)
+        .orderBy(orderCols.map(c => col(c).desc): _*)
+      val latest = batch.withColumn("_rn", row_number().over(w))
+        .filter(col("_rn") === 1).drop("_rn")
+      val merged =
+        if (Files.exists(Paths.get(snapshotPath, "_SUCCESS")))
+          graft.operators.Merge.merge(
+            s.read.parquet(snapshotPath).select(batch.columns.map(col): _*),
+            latest, keys)
+        else latest
+      val next = snapshotPath + "_next"
+      Staging.deleteRec(next)
+      merged.write.mode("overwrite").parquet(next) // materializes before swap
+      Staging.deleteRec(snapshotPath)
+      Staging.moveFile(Paths.get(next), Paths.get(snapshotPath))
+    }
     stream.sparkSession.read.parquet(snapshotPath)
+  }
+
+  /** The restart drains' shared kill-and-resume body. The sink `name`
+    * and its checkpoint are reset; run 1 drives `mkStream()` in `mode`
+    * with the checkpoint and kills it (exception out of the batch
+    * function, before `write`) when `failAtBatch` arrives; run 2 resumes
+    * a freshly built plan from the same checkpoint, and `write` sinks
+    * every batch that runs. Refuses when the source ended before
+    * `failAtBatch` (no mid-stream failure to recover from), and audits
+    * the commit log: restart must RESUME, not start from scratch.
+    */
+  private def killAndResume(mkStream: () => DataFrame, name: String,
+                            failAtBatch: Long, mode: OutputMode)
+                           (write: (DataFrame, Long) => Unit): Unit = {
+    val ckpt = checkpointDir(name)
+    Staging.deleteRec(sinkDir(name)); Staging.deleteRec(ckpt)
+    @volatile var planted = false
+    def run(plantFailure: Boolean): Unit =
+      try runBatches(mkStream(), mode, Some(ckpt)) { (batch, bid) =>
+        if (plantFailure && bid >= failAtBatch) {
+          planted = true
+          throw new RuntimeException(s"planted failure at micro-batch $bid")
+        }
+        write(batch, bid)
+      } catch {
+        case _: StreamingQueryException if plantFailure && planted => () // the planned kill
+      }
+    run(plantFailure = true)
+    require(planted,
+      s"source produced fewer than ${failAtBatch + 1} micro-batches — " +
+        "the restart proof needs a failure strictly mid-stream")
+    run(plantFailure = false)
+    // the commit log holds every committed batch id, so batch
+    // `failAtBatch` must have committed exactly once across the two runs
+    // and batch 0 only in run 1
+    val commits = Option(new java.io.File(ckpt, "commits").list())
+      .getOrElse(Array.empty[String]).filter(_.forall(_.isDigit)).map(_.toLong)
+    require(commits.contains(0L) && commits.contains(failAtBatch),
+      s"checkpoint commit log must span the failure: ${commits.sorted.mkString(",")}")
   }
 
   /** Checkpointed Complete-mode drain with a PLANTED mid-stream failure and
@@ -1102,45 +996,10 @@ object Streaming {
     */
   def drainWithRestart(mkStream: () => DataFrame, name: String,
                        failAtBatch: Long = 1L): DataFrame = {
-    val out = sys.props("java.io.tmpdir") + "/graft_stream_out_" + name
-    val ckpt = checkpointDir(name)
-    Staging.deleteRec(out); Staging.deleteRec(ckpt)
-    @volatile var planted = false
-    def run(plantFailure: Boolean): Unit = {
-      val writeBatch: (Dataset[org.apache.spark.sql.Row], Long) => Unit =
-        (batch, bid) => {
-          if (plantFailure && bid >= failAtBatch) {
-            planted = true
-            throw new RuntimeException(s"planted failure at micro-batch $bid")
-          }
-          batch.write.mode("overwrite").parquet(out)
-        }
-      val q = mkStream().writeStream
-        .outputMode(OutputMode.Complete())
-        .option("checkpointLocation", ckpt)
-        .foreachBatch(writeBatch)
-        .trigger(Trigger.AvailableNow())
-        .start()
-      try q.awaitTermination()
-      catch {
-        case e: org.apache.spark.sql.streaming.StreamingQueryException
-          if plantFailure && planted => () // the planned kill
-      }
-    }
-    run(plantFailure = true)
-    require(planted,
-      s"source produced fewer than ${failAtBatch + 1} micro-batches — " +
-        "the restart proof needs a failure strictly mid-stream")
-    run(plantFailure = false)
-    val recovered = mkStream().sparkSession.read.parquet(out)
-    // restart must RESUME, not restart from scratch: the commit log holds
-    // every committed batch id, so batch `failAtBatch` must have committed
-    // exactly once across the two runs and batch 0 only in run 1
-    val commits = Option(new java.io.File(ckpt, "commits").list())
-      .getOrElse(Array.empty[String]).filter(_.forall(_.isDigit)).map(_.toLong)
-    require(commits.contains(0L) && commits.contains(failAtBatch),
-      s"checkpoint commit log must span the failure: ${commits.sorted.mkString(",")}")
-    recovered
+    val out = sinkDir(name)
+    killAndResume(mkStream, name, failAtBatch, OutputMode.Complete())(
+      (batch, _) => batch.write.mode("overwrite").parquet(out))
+    mkStream().sparkSession.read.parquet(out)
   }
 
   /** [[drainWithRestart]] for APPEND-mode stateful queries (dedup and
@@ -1157,40 +1016,9 @@ object Streaming {
     */
   def drainAppendWithRestart(mkStream: () => DataFrame, name: String,
                              failAtBatch: Long = 1L): DataFrame = {
-    val out = sys.props("java.io.tmpdir") + "/graft_stream_out_" + name
-    val ckpt = checkpointDir(name)
-    Staging.deleteRec(out); Staging.deleteRec(ckpt)
-    @volatile var planted = false
-    def run(plantFailure: Boolean): Unit = {
-      val writeBatch: (Dataset[org.apache.spark.sql.Row], Long) => Unit =
-        (batch, bid) => {
-          if (plantFailure && bid >= failAtBatch) {
-            planted = true
-            throw new RuntimeException(s"planted failure at micro-batch $bid")
-          }
-          batch.write.mode("overwrite").parquet(s"$out/bid_$bid")
-        }
-      val q = mkStream().writeStream
-        .outputMode(OutputMode.Append())
-        .option("checkpointLocation", ckpt)
-        .foreachBatch(writeBatch)
-        .trigger(Trigger.AvailableNow())
-        .start()
-      try q.awaitTermination()
-      catch {
-        case _: org.apache.spark.sql.streaming.StreamingQueryException
-          if plantFailure && planted => () // the planned kill
-      }
-    }
-    run(plantFailure = true)
-    require(planted,
-      s"source produced fewer than ${failAtBatch + 1} micro-batches — " +
-        "the restart proof needs a failure strictly mid-stream")
-    run(plantFailure = false)
-    val commits = Option(new java.io.File(ckpt, "commits").list())
-      .getOrElse(Array.empty[String]).filter(_.forall(_.isDigit)).map(_.toLong)
-    require(commits.contains(0L) && commits.contains(failAtBatch),
-      s"checkpoint commit log must span the failure: ${commits.sorted.mkString(",")}")
+    val out = sinkDir(name)
+    killAndResume(mkStream, name, failAtBatch, OutputMode.Append())(
+      (batch, bid) => batch.write.mode("overwrite").parquet(s"$out/bid_$bid"))
     mkStream().sparkSession.read
       .option("recursiveFileLookup", "true").parquet(out)
   }

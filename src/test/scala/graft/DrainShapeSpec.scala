@@ -50,6 +50,12 @@ class DrainShapeSpec extends SparkSpec {
       val complete = body(src, name).contains("OutputMode.Complete()")
       assert(complete == (shape == CompleteMode), s"$name is classified $shape")
     }
+    // every drain runs through the one micro-batch runner: a drain that
+    // forks its own runner fails the listing
+    Seq(".writeStream", "Trigger.AvailableNow()").foreach { call =>
+      assert(src.split(java.util.regex.Pattern.quote(call), -1).length - 1 == 1,
+        s"$call must appear exactly once in Streaming.scala (its runner)")
+    }
   }
 
   /** (query name, its registration's text) for every registration in

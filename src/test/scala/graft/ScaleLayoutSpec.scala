@@ -14,6 +14,35 @@ import graft.tables.Tables
   */
 class ScaleLayoutSpec extends SparkSpec {
 
+  /** `body`'s result and the number of Spark jobs started while it ran.
+    * Listener events arrive in order on an async bus, so a fence job run
+    * after `body` flushes it: once the fence's start is seen, every
+    * earlier job start was counted.
+    */
+  private def jobsDuring[A](body: => A): (A, Int) = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val fence = s"fence-${java.util.UUID.randomUUID}"
+    val started = new java.util.concurrent.atomic.AtomicInteger
+    val fenced = new java.util.concurrent.CountDownLatch(1)
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (Option(e.properties).exists(
+            _.getProperty("spark.jobGroup.id") == fence)) fenced.countDown()
+        else started.incrementAndGet()
+    }
+    val sc = spark.sparkContext
+    sc.addSparkListener(listener)
+    val result = try {
+      val r = body
+      sc.setJobGroup(fence, "listener fence")
+      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
+      assert(fenced.await(10, java.util.concurrent.TimeUnit.SECONDS),
+        "listener events did not drain")
+      r
+    } finally sc.removeSparkListener(listener)
+    (result, started.get())
+  }
+
   test("bucketed tables join without an exchange (co-located join)") {
     val wh = Files.createTempDirectory("graft_bucketed").toFile.getAbsolutePath
     val o = Tables.orders(spark, sf0001)
@@ -554,12 +583,21 @@ class ScaleLayoutSpec extends SparkSpec {
     // guard has to fire BEFORE the new writer's stage write would clobber it
     NF.createDirectories(Paths.get(out + "__deleting"))
     NF.write(Paths.get(out + "__deleting", "sentinel"), Array[Byte](42))
-    val e = intercept[IllegalStateException] {
-      VectorStore.delete(spark, out, emb.limit(5).select(col("vec_id")))
+    val writers: Seq[(String, () => Unit)] = Seq(
+      "delete" -> (() =>
+        VectorStore.delete(spark, out, emb.limit(5).select(col("vec_id")))),
+      "append" -> (() => VectorStore.append(
+        emb.limit(5).withColumn("vec_id", col("vec_id") + 1000000L),
+        col("embedding"), out)),
+      "compact" -> (() => VectorStore.compact(spark, out)))
+    writers.foreach { case (name, write) =>
+      // the refusal comes first: no store scan, no checkpoint
+      val (e, jobs) = jobsDuring(intercept[IllegalStateException](write()))
+      assert(jobs == 0, s"$name ran $jobs Spark jobs before refusing")
+      assert(e.getMessage.contains("recover"), name)
+      assert(NF.exists(Paths.get(out + "__deleting", "sentinel")),
+        s"refused $name must not touch the pending stage")
     }
-    assert(e.getMessage.contains("recover"))
-    assert(NF.exists(Paths.get(out + "__deleting", "sentinel")),
-      "refused writer must not touch the pending stage")
     VectorStore.recover(out) // clears the (tmp-less) stale intent
     VectorStore.delete(spark, out, emb.limit(5).select(col("vec_id")))
     assert(spark.read.parquet(out).count() == emb.count() - 5)

@@ -3,6 +3,7 @@ package graft
 import java.sql.Timestamp
 
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 import graft.streaming.Streaming
@@ -376,26 +377,58 @@ class StreamingSpec extends SparkSpec {
     } finally q.stop()
   }
 
-  test("drainServeFromStore with zero query rows returns an empty result, " +
-      "not a missing-path crash") {
+  test("every serve drain with zero query rows returns an empty result") {
+    import graft.operators.{GraphAnnIndex, IvfIndex, Retrieval, VectorStore}
     val sf = sf0001
     val emb = graft.tables.Tables.embeddings(spark, sf)
-    val store = java.nio.file.Files.createTempDirectory("graft_serve_none")
-      .toString + "/store"
-    graft.operators.VectorStore.write(emb, col("embedding"), store)
-    val srcDir = Streaming.stageSplitSource(spark, sf, "embeddings", "vec_id")
-    val src = spark.readStream.schema(emb.schema)
-      .option("maxFilesPerTrigger", "1").parquet(srcDir)
-    // a predicate no row satisfies: every micro-batch is empty, so the
-    // serve loop never writes — the drain must still come back empty
-    // with the serving columns instead of crashing on the absent dir
-    val queries = src.filter(col("vec_id") < 0)
-      .select(col("vec_id").as("q_id"), col("embedding").as("q_vec"))
-    val out = Streaming.drainServeFromStore(queries, store, k = 5,
-      "spec_serve_none")
-    assert(out.columns.toSeq ==
-      Seq("q_id", "rn", "vec_id", "bucket", "distance"))
-    assert(out.count() == 0)
+    def tmp(tag: String) =
+      java.nio.file.Files.createTempDirectory(tag).toString + "/idx"
+    val store = tmp("graft_serve_none")
+    VectorStore.write(emb, col("embedding"), store)
+    val windows = tmp("graft_serve_none_win")
+    Retrieval.stageWindows(graft.tables.Tables.documents(spark, sf),
+      col("doc_id"), col("text"), windows)
+    val graph = tmp("graft_serve_none_gann")
+    GraphAnnIndex.build(emb, col("vec_id"), col("embedding"), graph,
+      sampleMod = 16, edgesPerBucket = 3)
+    val ivf = tmp("graft_serve_none_ivf")
+    IvfIndex.build(emb, "vec_id", "embedding", ivf, nlist = 8, dim = 64)
+    // (drain, its query column beside q_id, served columns)
+    val drains: Seq[(String, (DataFrame, String) => DataFrame, Column,
+        Seq[String])] = Seq(
+      ("drainServeFromStore",
+        (q, n) => Streaming.drainServeFromStore(q, store, k = 5, n),
+        col("embedding").as("q_vec"),
+        Seq("q_id", "rn", "vec_id", "bucket", "distance")),
+      ("drainServeFromWindows",
+        (q, n) => Streaming.drainServeFromWindows(q, windows, k = 5, n),
+        array(lit("order")).as("terms"),
+        Seq("q_id", "rank", "doc_id", "n_qt", "maxsim_fp")),
+      ("drainServeFromGraphAnn",
+        (q, n) => Streaming.drainServeFromGraphAnn(q, graph, n),
+        col("embedding").as("q_vec"), Seq("q_id", "id", "distance")),
+      ("drainServeFromIvf",
+        (q, n) => Streaming.drainServeFromIvf(q, ivf, k = 5, nprobe = 2, n),
+        col("embedding").as("q_vec"),
+        Seq("q_id", "rn", "vec_id", "cell", "distance")))
+    // two sources with no query rows: micro-batches that all come out
+    // empty (a predicate no row satisfies), and no micro-batch at all (an
+    // empty landing directory), after which the sink does not exist
+    val splitDir = Streaming.stageSplitSource(spark, sf, "embeddings", "vec_id")
+    val emptyDir = java.nio.file.Files.createTempDirectory("graft_serve_none_src")
+    val sources = Seq(
+      "empty batches" -> (() => spark.readStream.schema(emb.schema)
+        .option("maxFilesPerTrigger", "1").parquet(splitDir)
+        .filter(col("vec_id") < 0)),
+      "no batch" -> (() => spark.readStream.schema(emb.schema)
+        .option("maxFilesPerTrigger", "1").parquet(emptyDir.toString)))
+    for ((name, drain, query, served) <- drains;
+         (srcName, src) <- sources) {
+      val queries = src().select(col("vec_id").as("q_id"), query)
+      val out = drain(queries, s"spec_serve_none_${name}_${srcName.take(2)}")
+      assert(out.columns.toSeq == served, s"$name, $srcName")
+      assert(out.count() == 0, s"$name, $srcName")
+    }
   }
 
   test("drainServeFromGraphAnn: micro-batched serving ≡ one-shot batched walk") {
